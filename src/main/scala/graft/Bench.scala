@@ -18,16 +18,10 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // Default to every core on the box: the driver runs this without
-    // SPARK_GRAFT_CPUS set and expects local[32]-class parallelism.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
     val nRuns = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // every core on the box unless SPARK_GRAFT_CPUS says otherwise: the
+    // driver runs this without it and expects local[32]-class parallelism
+    val spark = graft.util.LocalSession()
     spark.sparkContext.setLogLevel("WARN")
     // warm-up: run every query once at the smallest SF so the timed passes
     // measure steady-state execution (plans/codegen JIT'd, classes
@@ -37,8 +31,9 @@ object Bench {
     // SPARK_GRAFT_BENCH_FILTER narrows to a regex for targeted probes
     // (the 100× scale probe times the top-cost subset, not all 93)
     val filter = sys.env.get("SPARK_GRAFT_BENCH_FILTER").map(_.r)
-    val timed = (SparkEntry.queries ++ SparkEntry.benchOnly)
-      .filter { case (name, _) => filter.forall(_.findFirstIn(name).isDefined) }
+    val timed = SparkEntry.entries
+      .filter(e => filter.forall(_.findFirstIn(e.name).isDefined))
+      .map(e => e.name -> e).toMap
     val warmDir = "/root/testdata/sf0.001"
     // the timing action: a noop-sink write forces FULL evaluation of
     // every output column. `count()` let Catalyst prune computed
@@ -51,12 +46,12 @@ object Bench {
             dir: String): Unit =
       fn(spark, dir).write.mode("overwrite").format("noop").save()
     if (new java.io.File(warmDir).exists() && warmDir != sfDir)
-      timed.foreach { case (_, fn) =>
-        try run(fn, warmDir) catch { case _: Throwable => () }
+      timed.values.foreach { e =>
+        try run(e.build, warmDir) catch { case _: Throwable => () }
         spark.catalog.clearCache()
       }
-    // the multimodal codec family JIT-compiles slowly (MediaBenchAb,
-    // round 11: sample 1 carried 14 s of compilation on q34, 5.7 s on
+    // the multimodal codec family (Kind.Media) JIT-compiles slowly
+    // (round 11: sample 1 carried 14 s of compilation on q34, 5.7 s on
     // q134, zero GC — the mapPartitions codec bodies are large and the
     // 500-doc sf0.001 warm pass leaves them interpreted), and under a
     // busy suite the compiler backlog bled into the timed medians
@@ -71,11 +66,8 @@ object Bench {
     // entry's sample 1 warms the same page cache for samples 2+, so
     // the asymmetry is one first-sample read of a table the whole
     // bench re-reads anyway; accepted, r11 ADVICE.)
-    val mediaFamily = Seq("q34_multimodal_decode", "q35_media_features",
-      "q102_video_frame_stats", "q134_image_ahash_dups", "q86_wav_pcm_stats",
-      "q168_audio_segments")
-    mediaFamily.filter(timed.contains).foreach { name =>
-      try run(timed(name), sfDir) catch { case _: Throwable => () }
+    timed.values.filter(_.kind == SparkEntry.Kind.Media).foreach { e =>
+      try run(e.build, sfDir) catch { case _: Throwable => () }
       spark.catalog.clearCache()
     }
     val names = timed.keys.toSeq.sorted
@@ -100,10 +92,9 @@ object Bench {
     val setups = scala.collection.mutable.Map[String, List[Double]]().withDefaultValue(Nil)
     val errors = scala.collection.mutable.Map[String, String]()
     def samplePass(pass: Seq[String]): Unit = for (name <- pass) {
-      val fn = timed(name)
       val t0 = System.nanoTime()
       try {
-        val df = fn(spark, sfDir)
+        val df = timed(name).build(spark, sfDir)
         val t1 = System.nanoTime()
         df.write.mode("overwrite").format("noop").save()
         samples(name) = ((System.nanoTime() - t0) / 1e9) :: samples(name)
@@ -149,43 +140,9 @@ object Bench {
     val setupJson = setupMed.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     // per-entry setup SEMANTICS, machine-readable (the reader rule above
-    // as data, VERDICT r8 item 5): `queries − setup` is meaningful ONLY
-    // for "fixture" (TxTable/lifecycle churn — setup builds throwaway
-    // state) and "streaming" (micro-batch run in the constructor; the
-    // returned plan is a trivial memory/derived-table read). For
-    // "query-work" entries the eager constructor work IS the dominant
-    // pipeline — subtracting it understates the query. Classified from
-    // the entry IMPLEMENTATIONS (the prose list was imprecise: q135 and
-    // q173 are BATCH stateful operators, not streams).
-    val fixtureKind = Set("q40_ingestion_lifecycle", "q65_orchestrated_runs",
-      "q66_compaction", "q67_jdbc_roundtrip", "q68_file_drop", "q69_tx_table",
-      "q73_tx_ingestion", "q75_stats_pruned_read", "q78_time_travel",
-      "q104_jsonl_quarantine", "q115_tx_merge", "q116_tx_delete",
-      "q119_tx_changes", "q120_incremental_view", "q121_idempotent_append",
-      "q125_stream_ivm", "q126_join_ivm", "q152_jdbc_upsert",
-      "q154_snapshot_diff", "q161_table_checksum", "q177_incremental_index",
-      "q193_tx_restore", "q226_config_autogen_roundtrip",
-      "q227_log_state_rollup", "q228_schema_catalog", "q229_object_listing",
-      "q235_ann_index_at_rest", "b119_cdf_read", "b120_ivm_refresh",
-      "b126_join_ivm_refresh", "b235_ann_index_auto", "b239_margin_at_rest",
-      "q239_ann_index_imi",
-      // r12: the orchestrated-tick gate builds BOTH indexes (incl. the
-      // margin self-kNN leg) and runs two full ticks inside the lambda —
-      // the q40 lifecycle class; steady-state tick cost is priced by the
-      // b242/b243/b244 twins
-      "q245_semantic_tick",
-      // r13: the rebuild-lifecycle gate is a build + 3 appends + a
-      // RETRAIN + parity legs inside the lambda — same lifecycle class;
-      // steady-state search/append economics are priced by b242/b243
-      "q246_rebuild_lifecycle")
-    val streamingKind = Set("q41_stream_hourly", "q54_stream_distinct_pairs",
-      "q63_stream_static_join", "q84_stream_stream_join", "q93_stream_neardup",
-      "q155_stream_dedup", "q176_stream_trending", "q186_stream_jdbc_once",
-      "q203_stream_left_outer", "q224_stream_hll_uniques")
-    def setupKind(n: String): String =
-      if (fixtureKind(n)) "fixture"
-      else if (streamingKind(n)) "streaming"
-      else "query-work"
+    // as data, VERDICT r8 item 5): each entry's SparkEntry.Kind says
+    // whether `queries − setup` is meaningful
+    def setupKind(n: String): String = timed(n).kind.setupKind
     val setupKindJson = setupMed.map { case (k, _) =>
       s"\"" + k + "\":\"" + setupKind(k) + "\"" }.mkString("{", ",", "}")
     // [min, max, n] for the n=5 entries — the noise band around each

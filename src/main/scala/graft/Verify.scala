@@ -1,7 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
+/** Driver-run correctness dump: each gate entry's result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
@@ -9,24 +8,17 @@ object Verify {
     // (the driver always passes exactly two)
     val Array(sfDir, outDir) = args.take(2)
     val nameFilter = args.lift(2).map(_.r)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.util.LocalSession()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // tamper-evident gate: a query that throws must surface as an explicit
     // red entry in failed.json, not as a silent absence from CORRECTNESS
     // (round 5 lost 8 event-time queries exactly this way)
     val failed = scala.collection.mutable.LinkedHashMap[String, String]()
-    SparkEntry.queries
-      .filter { case (name, _) => nameFilter.forall(_.findFirstIn(name).isDefined) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+    val gates = SparkEntry.entries.filter(e =>
+      e.oracle.isDefined && nameFilter.forall(_.findFirstIn(e.name).isDefined))
+    gates.foreach { case SparkEntry.Entry(name, build, _, _) =>
+      try build(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         val msg = Option(e.getMessage).getOrElse(e.getClass.getName).take(300)
@@ -49,9 +41,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => nameFilter.forall(_.findFirstIn(k).isDefined) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = gates.map(e => s"${q(e.name)}: ${q(e.oracle.get)}").mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     val failedJson = failed.map { case (k, v) => s"${q(k)}: ${q(v)}" }
       .mkString("{", ",", "}")

@@ -314,16 +314,16 @@ object AnnIndex {
     * probe recall degrade from there. The stat is recorded, never
     * enforced: rebuild cadence is the operator's call.
     *
-    * How to read it under GRADUAL shift (tools.DriftShiftAb, round
-    * 11): for a batch mixing fraction α of a new mode into the
-    * trained distribution, TV grows ≈ α · TV(pure new mode) — the
-    * stat is a per-batch MIXTURE ESTIMATE, linear in α. On the
-    * measured curve, new-data ADC recall had already fallen ~50% from
-    * its peak by TV ≈ 0.45, so waiting for a single batch to cross
+    * How to read it under GRADUAL shift (SCALE.md round 11, "Drift vs
+    * recall under gradual mixture shift"): for a batch mixing fraction α
+    * of a new mode into the trained distribution, TV grows ≈ α · TV(pure
+    * new mode) — the stat is a per-batch MIXTURE ESTIMATE, linear in α.
+    * On the measured curve, new-data ADC recall had already fallen ~50%
+    * from its peak by TV ≈ 0.45, so waiting for a single batch to cross
     * 0.5 reads the alarm late: treat 0.5 as the one-batch alarm (a
-    * mostly-shifted batch) and a SUSTAINED trailing mean ≥ ~0.3 —
-    * above the measured 0.23-0.26 in-distribution noise floor — as
-    * the rebuild trigger for slow mixture rotation.
+    * mostly-shifted batch) and a SUSTAINED trailing mean ≥ ~0.3 — above
+    * the measured 0.23-0.26 in-distribution noise floor — as the rebuild
+    * trigger for slow mixture rotation.
     */
   val DriftThreshold: Double = 0.5
 
@@ -395,10 +395,10 @@ object AnnIndex {
   /** The recorded (version, tv, batchRows) drift stats, commit order.
     * `batchRows` lets the rebuild fold weigh the EVIDENCE: a tiny
     * batch's occupancy histogram is sampling noise, not distribution
-    * shift (round-12 IndexGcAb: 5-row twin batches read TV ≈ 0.5 on a
-    * 16-cell grid purely from small-sample concentration). Pre-round-12
-    * sidecars carry no `n` — read as Long.MaxValue (trusted; they were
-    * recorded by probes with real batch sizes).
+    * shift (SCALE.md round 12 index GC: 5-row twin batches read TV ≈ 0.5
+    * on a 16-cell grid purely from small-sample concentration).
+    * Pre-round-12 sidecars carry no `n` — read as Long.MaxValue (trusted;
+    * they were recorded by probes with real batch sizes).
     */
   def driftStats(spark: SparkSession, table: String): Seq[(Long, Double, Long)] = {
     val fs = fsFor(spark, table)
@@ -436,9 +436,10 @@ object AnnIndex {
   }
 
   /** GC for the table's NON-DATA sidecars, with the liveness rule
-    * [[graft.sink.TxTable.vacuum]] cannot know (round-12 IndexGcAb
-    * finding: vacuum's !live test reaped a live index's codebooks, so
-    * vacuum now skips `_graft_*` metadata entirely and THIS owns it):
+    * [[graft.sink.TxTable.vacuum]] cannot know (SCALE.md round 12,
+    * "Index-table GC at fleet cadence": vacuum's !live test reaped a live
+    * index's codebooks, so vacuum now skips `_graft_*` metadata entirely
+    * and THIS owns it):
     *
     *  - meta sidecars (`_graft_*_meta.<hash>.json`, any family prefix)
     *    whose hash is NOT the current generation's
@@ -499,15 +500,16 @@ object AnnIndex {
     deleted.toList
   }
 
-  /** The in-distribution TV noise floor DriftShiftAb measured (0.23 —
-    * 0.26 across unshifted appends at the probe geometry): a trailing
-    * mean must clear it decisively before a rebuild is worth its cost.
+  /** The in-distribution TV noise floor the round-11 drift probe
+    * (SCALE.md) measured (0.23 — 0.26 across unshifted appends at the
+    * probe geometry): a trailing mean must clear it decisively before a
+    * rebuild is worth its cost.
     */
   val SustainedDriftThreshold: Double = 0.3
 
   /** The sustained-drift rebuild rule as a PURE fold, spec-pinnable
-    * against the measured DriftShiftAb mixture curve without a table:
-    * warranted iff (a) any recorded batch TV reaches
+    * against the measured mixture curve (SCALE.md round 11) without a
+    * table: warranted iff (a) any recorded batch TV reaches
     * [[DriftThreshold]] — the one-batch alarm, a mostly-shifted batch
     * — or (b) the trailing mean of the last `window` stats reaches
     * [[SustainedDriftThreshold]] — the gradual-rotation trigger the
@@ -534,9 +536,9 @@ object AnnIndex {
     *
     * Batches below `minBatchRows` are NOT evidence: a 5-row batch on a
     * 16-cell grid reads TV ≈ 0.5 from small-sample concentration alone
-    * (IndexGcAb, round 12), so tiny maintenance appends would ring the
-    * alarm forever. Size it to at least a few rows per list; the
-    * DriftShiftAb calibration used 400-row batches on 16 lists.
+    * (SCALE.md round 12 index GC), so tiny maintenance appends would ring
+    * the alarm forever. Size it to at least a few rows per list; the
+    * round-11 drift calibration used 400-row batches on 16 lists.
     */
   def rebuildWarranted(spark: SparkSession, table: String,
                        window: Int = 3,
@@ -683,10 +685,11 @@ object AnnIndex {
   }
 
   /** Compact when the index carries more than `maxFilesPerList` files
-    * per live list — the AnnChurnAb-measured cadence (each append adds
-    * up to one file per touched list, so a probe opens
-    * ≈ appends-since-compaction × probed lists; at ~3 files/list the
-    * probe pays triple its post-compaction opens). The check is
+    * per live list — the append-churn cadence (SCALE.md round 10,
+    * "At-rest index under append churn"; each append adds up to one file
+    * per touched list, so a probe opens ≈ appends-since-compaction ×
+    * probed lists; at ~3 files/list the probe pays triple its
+    * post-compaction opens). The check is
     * commit-log-only (driver-side file names + cid stats, no data IO);
     * the compaction keeps the Hive `cid=` layout and clusters by id.
     * Returns the compaction commit version, or None when the ratio is

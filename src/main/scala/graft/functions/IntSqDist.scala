@@ -16,7 +16,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * whole-stage codegen, allocates the zipped array, and boxes each
   * element. The integer IVF/PQ paths evaluate it n·nCentroids times
   * per Lloyd round and once per (candidate, codebook entry) in ADC —
-  * the ArgminAb bake-off (SCALE.md round 8) measured the float twins
+  * the coarse-shape bake-off (SCALE.md round 8) measured the float twins
   * of these shapes ~4× faster purely because their distance kernel is
   * codegen'd. This expression is the same primitive-typed loop for the
   * integer side.

@@ -351,9 +351,10 @@ object Similarity {
     * constant. The cap bounds BOTH the driver's centroid collect and the
     * per-row argmin expression (which is a literal tree of nCentroids
     * dot products). Explicit counts override — the gate queries pin
-    * (16, 8, 3), the tools.IvfSweep knee on the 500-vector fixture:
-    * recall@10 = 0.9238 (sf0.001) / 0.9190 (sf0.01), floor-pinned at
-    * 0.85 by AnnRecallSpec (which also pins the DERIVED sizing at 1×
+    * (16, 8, 3), the IVF-sweep knee on the 500-vector fixture (SCALE.md,
+    * "100× scaling probe (round 5)"): recall@10 = 0.9238 (sf0.001) /
+    * 0.9190 (sf0.01), floor-pinned at 0.85 by AnnRecallSpec (which also
+    * pins the DERIVED sizing at 1×
     * and 10× the fixture). The fixture's probed fraction (8/16) is an
     * artifact of 31-vector lists — at corpus scale nCentroids grows ~√n
     * with nProbe held, so the probed fraction collapses while per-list
@@ -381,12 +382,12 @@ object Similarity {
   // interpreted aggregate(zip_with) lambda (36.3 s at 200k×448); with
   // DotProduct in the lambda it is the fastest float shape at every
   // probed geometry (f-matrixK 3.24 s vs chained 5.27 / table 3.67 at
-  // 200k×448; 0.28 vs 0.71 / 0.46 at 20k×142 — ArgminAb, SCALE.md
-  // round 9) AND O(1) plan size, so the √n list sizing runs past the
-  // chained-literal cap with no broadcast-join materialization.
+  // 200k×448; 0.28 vs 0.71 / 0.46 at 20k×142 — SCALE.md round 9) AND O(1)
+  // plan size, so the √n list sizing runs past the chained-literal cap
+  // with no broadcast-join materialization.
   // d = |c|² − 2⟨v,c⟩ is the exact IEEE negation of the chained form's
   // score, with the identical driver-side norm constant, so (dist, cid)
-  // ordering matches the chained tree bit for bit (ArgminAb parity: 0
+  // ordering matches the chained tree bit for bit (bake-off parity: 0
   // diffs at 142 and 448).
 
   private def floatDistStructsMatrix(centroids: Array[Array[Double]], v: Column): Column = {
@@ -702,8 +703,8 @@ object Similarity {
     * tie-break. The distance kernel is the codegen'd [[IntSqDist]]
     * expression (round 8 — the lambda composition it replaces was
     * CodegenFallback and interpreter cost dominated every integer
-    * ANN shape in the ArgminAb bake-off); exact integer arithmetic,
-    * so oracle-replayed values are unchanged.
+    * ANN shape in the SCALE.md round-8 bake-off); exact integer
+    * arithmetic, so oracle-replayed values are unchanged.
     */
   private def intSqDist(vi: Column, cArr: Array[Long]): Column =
     IntSqDist.intSqDist(vi, lit(cArr))
@@ -718,14 +719,14 @@ object Similarity {
   // integer arithmetic and (dist, cid) tie rule as the chained form,
   // but the plan carries a single Literal node instead of O(nCentroids)
   // expression subtrees — so it scales to any driver-held centroid
-  // count with zero shuffle and constant plan size. Measured (ArgminAb,
-  // SCALE.md round 8): fastest of the three assignment shapes at both
-  // 20k×142 and 200k×448 — it beats the chained tree (interpreter
-  // dispatch per subtree) AND the broadcast-join table path (which
-  // materializes n·nC skinny rows through a hash aggregate). The
-  // chained form stays the default below [[MaxLiteralCentroids]]
-  // because the oracle-replayed gates pin it and at tiny nC the two
-  // are equivalent.
+  // count with zero shuffle and constant plan size. Measured (SCALE.md,
+  // "Round 8 — IVFADC probes and the coarse-shape bake-off"): fastest of
+  // the three assignment shapes at both 20k×142 and 200k×448 — it beats
+  // the chained tree (interpreter dispatch per subtree) AND the
+  // broadcast-join table path (which materializes n·nC skinny rows
+  // through a hash aggregate). The chained form stays the default below
+  // [[MaxLiteralCentroids]] because the oracle-replayed gates pin it and
+  // at tiny nC the two are equivalent.
 
   private def intCentroidMatrix(centroids: Array[Array[Long]]): Column =
     typedLit(centroids.map(_.toSeq).toSeq)
@@ -1499,24 +1500,6 @@ object Similarity {
           imiPad(cb2, dim, padHead = true), col("v")).as("cluster_id"))
       .localCheckpoint(true)
     semDedupWithin(vecs, threshold)
-  }
-
-  /** (cluster_id, n) occupancy of the fixed-codebook IMI assignment —
-    * probe tooling (tools.ImiScaleAb) reports the within-cell pair
-    * volume Σ n·(n−1)/2 from it, the quantity the grid keeps LINEAR in
-    * the corpus where the sqrt(n) rule gives n^1.5.
-    */
-  private[graft] def imiCellCounts(df: DataFrame, idCol: String, vecCol: String,
-                                   kPerHalf: Int = 0,
-                                   targetClusterSize: Long = ImiTargetClusterSize): DataFrame = {
-    val c0 = df.select(col(idCol).cast("long").as("id"), asDouble(col(vecCol)).as("v"))
-    val k = if (kPerHalf > 0) kPerHalf
-      else imiHalfCentroids(c0.count(), targetClusterSize)
-    val (cb1, cb2) = imiFixedHalfCodebooks(c0, k)
-    val dim = cb1.head.length + cb2.head.length
-    c0.select(imiCellIdFrom(imiPad(cb1, dim, padHead = false),
-        imiPad(cb2, dim, padHead = true), col("v")).as("cluster_id"))
-      .groupBy(col("cluster_id")).count()
   }
 
   /** [[semDedupImi]] with TRAINED half codebooks (two bounded-sample
@@ -2329,7 +2312,7 @@ object Similarity {
     // form — one typedLit centroid array, O(1) plan size, zero shuffle
     // — so the √n rule runs to [[MaxTableCentroids]]. The matrix form
     // measured FASTER than both the chained tree and the broadcast-join
-    // table machinery at 20k×142 and 200k×448 (ArgminAb, SCALE.md).
+    // table machinery at 20k×142 and 200k×448 (SCALE.md round 8 bake-off).
     val n = c0.count()
     val nC = if (nCentroids > 0) nCentroids else autoCentroidsTable(n)
     val init: Array[Array[Long]] = c0.orderBy(col("id")).limit(nC)

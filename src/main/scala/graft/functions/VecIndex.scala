@@ -302,7 +302,8 @@ object VecIndex {
     * members through the pruned read — per-batch cost is
     * ~|batch| · targetClusterSize candidate pairs plus the batch's own
     * within-cell pairs; the corpus is never rescanned and nothing is
-    * O(corpus²) (churn measured by tools.SemDedupIncrAb).
+    * O(corpus²) (churn measured in SCALE.md, "Incremental semantic dedup
+    * against the at-rest corpus", round 11).
     */
   def dedupBatch(spark: SparkSession, table: String, batch: DataFrame,
                  idCol: String = "vec_id", vecCol: String = "embedding",

@@ -5,20 +5,18 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Batch sessionization: split each key's event stream into sessions at
-  * inactivity gaps > `gapUs` — the exact-batch analog of the streaming
-  * `session_window` path (EventsStream.sessionWindowsBatch), and the
+  * inactivity gaps ≥ `gapUs` — the one batch sessionization rule
+  * (EventsStream.sessionWindowsBatch is built on it), and the
   * other classic gaps-and-islands after Scd2's value-change islands:
   * here the island boundary is TIME (a gap), not a value change.
   * Batch sessionization is how clickstream/agent-trajectory corpora get
   * their training episodes cut.
   *
   * Mechanics: lag(ts) over (key ORDER BY ts, tie) → boundary flag
-  * (a gap ≥ `gapUs` opens a new session — the same rule as Spark's
-  * `session_window`, whose per-event windows [ts, ts+gap) merge only
-  * when they OVERLAP, so an exact-gap successor starts a new session;
-  * spec-pinned against that path) → running sum of flags = 0-based
-  * session index. `tie` must be unique per (key, ts) to pin the order
-  * when timestamps collide.
+  * (a gap ≥ `gapUs` opens a new session, so an exact-gap successor
+  * starts a new one; Spark 4.1's `session_window` would keep it in the
+  * session) → running sum of flags = 0-based session index. `tie` must
+  * be unique per (key, ts) to pin the order when timestamps collide.
   *
   * 100 TB shape: ONE shuffle on key; both windows and the per-session
   * aggregate ride the same (key) partitioning, so Catalyst plans a

@@ -1291,7 +1291,7 @@ object TxTable {
       // `._graft_*.tmp` staging) is NOT vacuum's domain: sidecars are
       // content-addressed and referenced through commit STATS, not the
       // live-file set, so the !live test would reap a LIVE index's
-      // codebooks (round-12 IndexGcAb finding — the first fleet-cadence
+      // codebooks (SCALE.md round 12, index GC — the first fleet-cadence
       // vacuum destroyed the VecIndex meta). Their own GC with the
       // right liveness rule is [[graft.functions.AnnIndex.vacuumSidecars]].
       val name = st.getPath.getName
@@ -1304,8 +1304,8 @@ object TxTable {
     }
     // retired batch/partition dirs: deleting a dir's last file leaves
     // an EMPTY directory forever — at fleet cadence that is one
-    // abandoned `batch-*` dir per append, unbounded (IndexGcAb, round
-    // 12: +1 top-level entry per cycle). Reap aged empty dirs
+    // abandoned `batch-*` dir per append, unbounded (SCALE.md round 12,
+    // index GC: +1 top-level entry per cycle). Reap aged empty dirs
     // bottom-up, never the root or the log dir. A dir emptied by the
     // pass above carries a fresh mtime (unlink updates it), so the
     // grace window keeps in-flight stagers safe; the non-recursive

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Regenerates [[graft.functions.Bpe.DefaultMerges]]: trains the merge
@@ -14,11 +13,7 @@ object BpeTrain {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val nMerges = if (args.length > 1) args(1).toInt else 64
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.util.LocalSession()
     spark.sparkContext.setLogLevel("WARN")
     val docs = graft.sources.Tables.load(spark, dir, "documents")
     val merges = graft.functions.Bpe.trainFromCorpus(docs, col("text"), nMerges)

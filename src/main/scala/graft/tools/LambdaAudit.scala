@@ -1,9 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-/** Print [[graft.plans.PlanAudit.repeatedLambdas]] findings for gate
-  * queries matching a name regex — the fast triage loop while fixing a
+/** Print [[graft.plans.PlanAudit.repeatedLambdas]] findings for registry
+  * entries matching a name regex — the fast triage loop while fixing a
   * flagged query (PlanShapeSpec runs the same audit over all of them).
   * Usage: `runMain graft.tools.LambdaAudit <regex> [sfDir]`.
   */
@@ -11,20 +9,15 @@ object LambdaAudit {
   def main(args: Array[String]): Unit = {
     val pat = args.headOption.getOrElse(".").r
     val dir = args.lift(1).getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.util.LocalSession()
     spark.sparkContext.setLogLevel("ERROR")
     var n = 0
-    (graft.SparkEntry.queries ++ graft.SparkEntry.benchOnly).toSeq.sortBy(_._1)
-      .filter { case (name, _) => pat.findFirstIn(name).isDefined }
-      .foreach { case (name, fn) =>
+    graft.SparkEntry.entries.sortBy(_.name)
+      .filter(e => pat.findFirstIn(e.name).isDefined)
+      .foreach { case graft.SparkEntry.Entry(name, build, _, _) =>
         val findings =
           try {
-            val df = fn(spark, dir)
+            val df = build(spark, dir)
             graft.plans.PlanAudit.repeatedLambdas(df) ++
               graft.plans.PlanAudit.codegenFallbacks(df)
                 .map("[fallback] " + _) ++

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Job/stage-level profile of selected gate queries — answers "is this
   * entry slow because of one big stage or death by a hundred tiny
@@ -9,16 +8,13 @@ import org.apache.spark.sql.SparkSession
   * query: runs constructor + noop write twice (first = warm-up), then
   * prints per-job wall clock, task counts, and the constructor/execute
   * split of the SECOND pass.
-  * Usage: `runMain graft.tools.OptProf <sfDir> <cpus> q1,q2,...`
+  * Usage: `runMain graft.tools.OptProf <sfDir> q1,q2,...`
   */
 object OptProf {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = args.lift(1).getOrElse("32")
-    val names = args.lift(2).map(_.split(",").toSeq).getOrElse(Seq("q201_dedup_pr_sweep"))
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val names = args.lift(1).map(_.split(",").toSeq).getOrElse(Seq("q201_dedup_pr_sweep"))
+    val spark = graft.util.LocalSession()
     spark.sparkContext.setLogLevel("WARN")
 
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
@@ -48,9 +44,8 @@ object OptProf {
                 .take(2).map(_.trim).mkString(" <- ")).take(200)))
     })
 
-    val all = graft.SparkEntry.queries ++ graft.SparkEntry.benchOnly
     names.foreach { name =>
-      all.get(name).foreach { fn =>
+      graft.SparkEntry.entries.find(_.name == name).map(_.build).foreach { fn =>
         // warm pass
         try fn(spark, sfDir).write.mode("overwrite").format("noop").save()
         catch { case e: Throwable => println(s"[optprof] $name warm failed: ${e.getMessage}") }

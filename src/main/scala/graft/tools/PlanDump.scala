@@ -2,7 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dump `.explain("formatted")` output of selected gate queries to one
@@ -10,26 +9,22 @@ import org.apache.spark.sql.execution.ExplainMode
   * rounds (plans/rNN/<query>_<tag>.txt). Usage:
   * `runMain graft.tools.PlanDump <sfDir> <outDir> <tag> [q1,q2,...]`.
   *
-  * Formatted mode (vs [[ExplainDump]]'s executedPlan.toString) numbers
-  * the operators and prints per-scan PushedFilters/ReadSchema — the
-  * details a plan-shape claim is checked against.
+  * Formatted mode (vs `executedPlan.toString`) numbers the operators
+  * and prints per-scan PushedFilters/ReadSchema — the details a
+  * plan-shape claim is checked against.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val outDir = args.lift(1).getOrElse("plans/r13")
     val tag = args.lift(2).getOrElse("before")
-    val names = args.lift(3).map(_.split(",").toSeq)
-      .getOrElse((graft.SparkEntry.queries ++ graft.SparkEntry.benchOnly).keys.toSeq.sorted)
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val byName = graft.SparkEntry.entries.map(e => e.name -> e.build).toMap
+    val names = args.lift(3).map(_.split(",").toSeq).getOrElse(byName.keys.toSeq.sorted)
+    val spark = graft.util.LocalSession()
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
-    val all = graft.SparkEntry.queries ++ graft.SparkEntry.benchOnly
     names.foreach { name =>
-      all.get(name).foreach { fn =>
+      byName.get(name).foreach { fn =>
         val txt = try fn(spark, sfDir).queryExecution
           .explainString(ExplainMode.fromString("formatted"))
           catch { case e: Throwable => s"<failed: ${e.getMessage}>" }

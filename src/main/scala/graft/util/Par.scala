@@ -23,7 +23,7 @@ object Par {
 
   /** `-Dgraft.par.sequential=true` degrades both/all to plain
     * sequential evaluation — the measurement escape hatch that lets a
-    * one-JVM A/B (tools.ParAb style) alternate overlapped vs serial
+    * one-JVM A/B ([[graft.tools.Ab]]) alternate overlapped vs serial
     * execution of IDENTICAL code, and a falsification lever should an
     * overlap ever need to be backed out in production config.
     */

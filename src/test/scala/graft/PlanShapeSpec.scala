@@ -11,16 +11,41 @@ class PlanShapeSpec extends SparkSpec {
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, SfDir).queryExecution.executedPlan.toString
 
-  /** Bench-only twins under the plan audits — the analytics production
-    * paths (b153/b24/b61/b169/b232…). The three TxTable-fixture READER
-    * twins (b119/b120/b126) are excluded: their constructors need the
-    * multi-version bench fixture that only Bench's lifecycle run
-    * builds, and their plans are trivial change-feed reads.
+  /** The three whole-registry audits' findings, from ONE sweep: each
+    * entry is built once (fixture entries do their lifecycle work inside
+    * the constructor) and all three audits read that plan. Keyed by
+    * audit; each finding is "name: detail", in name order. Covers every
+    * gate query and the bench-only twins, which ARE the shipped
+    * production paths (b153/b24/b61/b169/b232…), except the three
+    * TxTable-fixture READER twins (b119/b120/b126): their constructors
+    * need the multi-version bench fixture that only Bench's lifecycle
+    * run builds, and their plans are trivial change-feed reads.
     */
-  private def auditableBenchOnly =
-    SparkEntry.benchOnly.filterNot { case (name, _) =>
-      Set("b119_cdf_read", "b120_ivm_refresh", "b126_join_ivm_refresh")(name)
-    }
+  private lazy val auditFindings: Map[String, Seq[String]] = {
+    import graft.plans.PlanAudit
+    val audits = Seq[(String, org.apache.spark.sql.DataFrame => Seq[String])](
+      "repeatedLambdas" -> (PlanAudit.repeatedLambdas(_)),
+      "recomputedLambdaSubplans" -> (PlanAudit.recomputedLambdaSubplans(_)),
+      "codegenFallbacks" -> (PlanAudit.codegenFallbacks(_)))
+    val unaudited = Set("b119_cdf_read", "b120_ivm_refresh", "b126_join_ivm_refresh")
+    val findings = SparkEntry.entries.filterNot(e => unaudited(e.name)).sortBy(_.name)
+      .flatMap { e =>
+        val found = try {
+          val df = e.build(spark, SfDir)
+          audits.map { case (audit, run) => audit -> run(df) }
+        } catch { case ex: Throwable =>
+          val msg = s"query construction failed: ${ex.getMessage}".take(200)
+          audits.map { case (audit, _) => audit -> Seq(msg) }
+        }
+        spark.catalog.clearCache()
+        for ((audit, fs) <- found; f <- fs) yield audit -> s"${e.name}: $f"
+      }
+    findings.groupMap(_._1)(_._2).withDefaultValue(Nil)
+  }
+
+  /** Findings of one audit, minus whitelisted entries. */
+  private def offenders(audit: String, whitelist: Set[String] = Set.empty): Seq[String] =
+    auditFindings(audit).filterNot(f => whitelist(f.takeWhile(_ != ':')))
 
   test("q02 filter+projection reach the scan: PushedFilters populated, ReadSchema pruned") {
     val p = plan("q02_filter_project")
@@ -70,17 +95,9 @@ class PlanShapeSpec extends SparkSpec {
     // a new query that inlines tokens()/shingles() twice (the
     // q204/q153/q185 pathology) fails the build here instead of
     // burning CPU quietly at 100 TB
-    val offenders = (SparkEntry.queries ++ auditableBenchOnly).toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        val findings =
-          try graft.plans.PlanAudit.repeatedLambdas(fn(spark, SfDir))
-          catch { case e: Throwable =>
-            Seq(s"query construction failed: ${e.getMessage}".take(200)) }
-        spark.catalog.clearCache()
-        findings.map(f => s"$name: $f")
-    }
-    assert(offenders.isEmpty,
-      s"repeated-lambda plans:\n${offenders.mkString("\n")}")
+    val found = offenders("repeatedLambdas")
+    assert(found.isEmpty,
+      s"repeated-lambda plans:\n${found.mkString("\n")}")
   }
 
   test("no gate query recomputes a shared lambda-bearing subplan (cross-branch class)") {
@@ -100,19 +117,10 @@ class PlanShapeSpec extends SparkSpec {
       // same PrefixJoin verify-side by-design recompute as q153, on the
       // xxhash production twin
       "b153_prefix_fast")
-    val offenders = (SparkEntry.queries ++ auditableBenchOnly).toSeq.sortBy(_._1)
-      .filterNot { case (name, _) => whitelist(name) }
-      .flatMap { case (name, fn) =>
-        val findings =
-          try graft.plans.PlanAudit.recomputedLambdaSubplans(fn(spark, SfDir))
-          catch { case e: Throwable =>
-            Seq(s"query construction failed: ${e.getMessage}".take(200)) }
-        spark.catalog.clearCache()
-        findings.map(f => s"$name: $f")
-      }
-    assert(offenders.isEmpty,
+    val found = offenders("recomputedLambdaSubplans", whitelist)
+    assert(found.isEmpty,
       s"recomputed lambda subplans (materialize the shared relation, or " +
-        s"whitelist with a by-design justification):\n${offenders.mkString("\n")}")
+        s"whitelist with a by-design justification):\n${found.mkString("\n")}")
   }
 
   test("no gate query evaluates an interpreted kernel under a join (the IntSqDist class, gated)") {
@@ -135,20 +143,11 @@ class PlanShapeSpec extends SparkSpec {
     //    rows per query).
     val whitelist = Set("q123_scrub_dup_spans", "q192_embedding_drift",
       "q233_ivfpq_rerank")
-    val offenders = (SparkEntry.queries ++ auditableBenchOnly).toSeq.sortBy(_._1)
-      .filterNot { case (name, _) => whitelist(name) }
-      .flatMap { case (name, fn) =>
-        val findings =
-          try graft.plans.PlanAudit.codegenFallbacks(fn(spark, SfDir))
-          catch { case e: Throwable =>
-            Seq(s"query construction failed: ${e.getMessage}".take(200)) }
-        spark.catalog.clearCache()
-        findings.map(f => s"$name: $f")
-      }
-    assert(offenders.isEmpty,
+    val found = offenders("codegenFallbacks", whitelist)
+    assert(found.isEmpty,
       s"interpreted kernels in hot positions (swap in a codegen " +
         s"Expression — DotProduct/IntSqDist/EqCount pattern — or " +
-        s"whitelist with a boundedness justification):\n${offenders.mkString("\n")}")
+        s"whitelist with a boundedness justification):\n${found.mkString("\n")}")
   }
 
   test("the fallback audit flags the pre-round-8 lambda kernel shapes (canary)") {

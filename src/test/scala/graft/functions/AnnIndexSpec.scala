@@ -278,7 +278,7 @@ class AnnIndexSpec extends SparkSpec {
   }
 
   test("tiny batches are not drift evidence: rebuildWarranted ignores them") {
-    // IndexGcAb round 12: a 5-row twin batch on a 16-cell grid reads
+    // SCALE.md round 12, index GC: a 5-row twin batch on a 16-cell grid reads
     // TV ≈ 0.5 from small-sample concentration alone — maintenance
     // appends must not ring the alarm forever
     val dir = tmp("tinydrift")
@@ -358,7 +358,7 @@ class AnnIndexSpec extends SparkSpec {
     java.nio.file.Files.write(tmpFile.toPath, "crash".getBytes)
     def names() = new java.io.File(dir).listFiles().map(_.getName).toSet
     // TxTable.vacuum (grace 0) reclaims retired DATA but leaves every
-    // `_graft_*` sidecar alone — the round-12 IndexGcAb finding
+    // `_graft_*` sidecar alone — the SCALE.md round-12 index-GC finding
     graft.sink.TxTable.vacuum(spark, dir, minAgeMs = 0L)
     assert(names().exists(_.contains(gen0)), "vacuum must not eat old metas")
     assert(names().exists(_.contains(gen1)), "vacuum must NEVER eat the live meta")

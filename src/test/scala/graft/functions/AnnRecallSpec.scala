@@ -52,7 +52,8 @@ class AnnRecallSpec extends SparkSpec {
 
   test("IVF ivfTopK recall@10 against exact top-k stays above its pinned floor") {
     // measured 0.9238 at the swept (16, 8, 3) gate pin (sf0.001, fixed
-    // seeds; 0.9190 at sf0.01 — tools.IvfSweep); was 0.8095 at nProbe=4
+    // seeds; 0.9190 at sf0.01 — the IVF sweep in SCALE.md, "100× scaling
+    // probe (round 5)"); was 0.8095 at nProbe=4
     val r = recallAt10(topSets(Similarity.ivfTopK(queries, emb, k = 10,
       nCentroids = 16, nProbe = 8)))
     info(f"IVF recall@10 = $r%.4f")

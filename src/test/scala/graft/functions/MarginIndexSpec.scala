@@ -159,7 +159,7 @@ class MarginIndexSpec extends SparkSpec {
     // appends add files per batch (data cells + probe partitions);
     // TxTable.compact(partitionBy = cid) folds them back while keeping
     // the Hive layout, the displacement-bound columns, and bit-exact
-    // search — the AnnChurnAb cadence applied to the margin index
+    // search — the append-churn cadence (SCALE.md round 10) applied to the margin index
     val ev = emb.select($"vec_id", $"embedding")
     val corpus = ev.filter($"vec_id" < 400)
     val dir = tmp("compact")

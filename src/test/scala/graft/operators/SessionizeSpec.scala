@@ -7,8 +7,8 @@ import graft.SparkSpec
 class SessionizeSpec extends SparkSpec {
   import spark.implicits._
 
-  // (key, us, tie): gap threshold 100 — an exact-100 gap SPLITS
-  // (session_window semantics: [ts, ts+gap) windows merge only on overlap)
+  // (key, us, tie): gap threshold 100 — an exact-100 gap SPLITS (the
+  // DuckDB oracle's `>=` rule; Spark 4.1's session_window would merge it)
   private val events = Seq(
     (1L, 0L, 1L), (1L, 50L, 2L), (1L, 149L, 3L),   // gap 99 → same session
     (1L, 249L, 4L),                                  // gap exactly 100 → new

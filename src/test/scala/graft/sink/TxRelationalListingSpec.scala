@@ -129,7 +129,7 @@ class TxRelationalListingSpec extends SparkSpec {
 
   test("the relational plan PUSHES the stat predicates into the parquet scan") {
     // the sargability claim behind the flat ~20 MB driver profile
-    // (LogListAb): the (scol, lo) predicates must reach the
+    // (SCALE.md round 13, "The listing wall"): the (scol, lo) predicates must reach the
     // files-checkpoint scan as PushedFilters, so parquet row-group
     // stats — the checkpoint is written sorted by (scol, lo) — prune
     // before any row is materialized

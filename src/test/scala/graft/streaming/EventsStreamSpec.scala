@@ -260,9 +260,11 @@ class EventsStreamSpec extends SparkSpec {
       (1L, "2024-01-01 10:00:00"), (1L, "2024-01-01 10:10:00"),
       (1L, "2024-01-01 12:00:00"),
       (2L, "2024-01-01 09:00:00"),
+      // exactly the gap apart: two sessions (gap >= 30 min splits)
+      (3L, "2024-01-01 08:00:00"), (3L, "2024-01-01 08:30:00"),
     ).toDF("user_id", "s").select($"user_id", to_timestamp($"s").as("ts"))
     val got = EventsStream.sessionWindowsBatch(df, gapMinutes = 30)
       .select($"user_id", $"n_events").as[(Long, Long)].collect().toSeq.sorted
-    assert(got == Seq((1L, 1L), (1L, 2L), (2L, 1L)))
+    assert(got == Seq((1L, 1L), (1L, 2L), (2L, 1L), (3L, 1L), (3L, 1L)))
   }
 }

@@ -97,7 +97,8 @@ class SemDedupStreamSpec extends SparkSpec {
   test("the maintainer compacts at cadence: files per cell AND verdict files stay bounded") {
     // VERDICT r11 watch #1: the ANN maintainer compacts in-loop (r10
     // item 4) but the semantic twin never did — dedupBatch's pruned
-    // reads degrade linearly in files-per-cell (the AnnChurnAb curve).
+    // reads degrade linearly in files-per-cell (the SCALE.md round-10
+    // append-churn curve).
     // Twelve single-file micro-batches of corpus twins land in the SAME
     // few cells; the post-append ratio check must fold both the index
     // (cid layout) and the flat verdict table — and every verdict must
