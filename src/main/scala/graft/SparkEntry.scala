@@ -6,7 +6,6 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
 
 import graft.functions.TextFunctions
 import graft.operators.{LatestRowView, Transforms}
-import graft.sources.Incremental
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -7895,7 +7894,6 @@ object SparkEntry {
     // oracle recomputes the same roll-up straight from orders, so a
     // hash match proves the log roundtrip loses nothing.
     Entry("q227_log_state_rollup", (s, dir) => {
-      import s.implicits._
       val months = t(s, dir, "orders")
         .filter(col("o_orderdate") >= lit("1995-01-01")
           && col("o_orderdate") < lit("1995-07-01"))
@@ -8170,44 +8168,21 @@ object SparkEntry {
           expr("(10000 * n_hits) div 10").as("recall_bp"))
     }, Some(q233OracleSql)),
 
-    // V — the IVFADC production coarse shapes under the oracle: at
-    // nCentroids = 130 (> MaxLiteralCentroids = 128) the default path
-    // takes the one-Literal MATRIX argmin/probe form (O(1) plan size,
-    // zero shuffle — the fastest measured shape, SCALE.md round 8) and
-    // Some(true) forces the centroid-TABLE machinery; the gate runs
-    // BOTH at the same geometry and returns the size of their symmetric
-    // difference over (query_id, neighbor_id, adc_q) — pinned to the
-    // oracle's constant 0. With IvfPqSpec's table ≡ chained pin at
-    // nC=16, every coarse shape is proven equal to the chained form the
-    // q232/q233 oracles replay bit for bit.
-    Entry("q234_ivfpq_table_parity", (s, dir) => {
+    // V — the IVFADC MATRIX coarse form under the oracle: at
+    // nCentroids = 130 (> MaxLiteralCentroids = 128) the coarse argmin,
+    // probe and centroid lookup take the one-Literal MATRIX form (O(1)
+    // plan size, zero shuffle — the fastest measured shape, SCALE.md
+    // round 8), and the oracle replays the whole chain at that geometry
+    // — 130 lowest-id seeds, one coarse and one PQ Lloyd round (a
+    // per-shape claim gains nothing from extra rounds) — exactly as
+    // q232 replays the chained form at 16 lists.
+    Entry("q234_ivfpq_matrix_coarse", (s, dir) => {
       val emb = t(s, dir, "embeddings")
-      // both shapes consume the query relation — materialize once
       val queries = emb.filter(col("vec_id") <= 20)
         .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"))
-        .localCheckpoint(true)
-      // single training round per quantizer: parity is a per-shape
-      // claim about the SAME trained geometry, so extra Lloyd rounds
-      // add gate cost without strengthening it
-      def run(tablesOpt: Option[Boolean]) =
-        functions.Similarity.ivfPqTopKPortable(queries, emb, k = 10,
-          dim = 64, nCentroids = 130, coarseIters = 1, pqIters = 1,
-          useTablesOpt = tablesOpt)
-      // each leg feeds BOTH sides of the symmetric difference —
-      // materialize the (≤ |queries|·k)-row results once (the
-      // recompute-detector gate flags the unmaterialized form: the
-      // whole IVFADC pipeline would execute twice per leg)
-      // the two shapes train/build independently and deterministically
-      // from the same inputs — overlap them (guide §2.6, graft.util.Par)
-      val (matrix, table) = graft.util.Par.both(
-        run(None).localCheckpoint(true),       // nC > cap → matrix form
-        run(Some(true)).localCheckpoint(true)) // forced table machinery
-      matrix.exceptAll(table).union(table.exceptAll(matrix))
-        .agg(count(lit(1)).cast("long").as("n_diff"))
-    },
-      // the parity gate's contract IS the constant: both plan shapes of
-      // the same exact-integer ranking must agree row for row
-      Some("SELECT CAST(0 AS BIGINT) AS n_diff")),
+      functions.Similarity.ivfPqTopKPortable(queries, emb, k = 10,
+        dim = 64, nCentroids = 130, coarseIters = 1, pqIters = 1)
+    }, Some(q234OracleSql)),
 
     // V — the IVFADC index AT REST (round 9): build lands the encoded
     // corpus as a cid-partitioned TxTable (one commit, per-file cid
@@ -8302,7 +8277,7 @@ object SparkEntry {
       // q61's integer-Lloyd CTEs (16 seeds, 3 unrolled iterations) reused
       // verbatim; the final integer-argmin assignment a4 becomes the
       // cluster id and q156's within-cluster cosine prune replays on it
-      Some(s"""WITH $ivfOracleCtes,
+      Some(s"""WITH ${ivfOracleCtes()},
          a AS (SELECT vec_id, CAST(cid AS BIGINT) AS cluster_id FROM a4),
          losers AS (
            SELECT DISTINCT y.vec_id
@@ -8549,9 +8524,9 @@ object SparkEntry {
     // inverted partitions, recomputed over the exact candidate pool),
     // then compare search over queries spanning original AND appended
     // rows against the full in-session marginTopKImi at the frozen
-    // codebooks. The q234 self-parity pattern: the gate's contract IS
-    // the constant 0 — the margin computation itself is independently
-    // oracle-replayed by q241 at this geometry.
+    // codebooks. A self-parity gate: its contract IS the constant 0 —
+    // the margin computation itself is independently oracle-replayed
+    // by q241 at this geometry.
     Entry("q244_margin_incr_parity", (s, dir) => {
       val ev = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
       val corpus = ev.filter(col("vec_id") < 300)
@@ -8760,7 +8735,7 @@ object SparkEntry {
     },
       // the rebuild lifecycle's observable outcomes are booleans/counts a
       // correct walk of signal → retrain → swap → queued appends → parity
-      // determines exactly (the q244/q234 constant-pin pattern; the
+      // determines exactly (the q244 constant-pin pattern; the
       // underlying search/dedup math is independently hash-replayed by
       // q242/q243, and the at-rest↔in-session parity leg inside this gate
       // is itself the q243 shape on the REBUILT generation)
@@ -8852,9 +8827,9 @@ object SparkEntry {
     // fastest measured shape — SCALE.md round 8). At sf0.1 (2k
     // vectors) this derives 45 chained lists; at the organic 10×
     // corpus (20k) it derives 142 lists and exercises the matrix path
-    // end to end. Parity across all three coarse shapes is pinned by
-    // IvfPqSpec + the q234 oracle gate; q232 times the (16, 8)-pinned
-    // oracle twin.
+    // end to end. Both coarse shapes are oracle-replayed (q232 chained
+    // at 16 lists, q234 matrix at 130) and IvfPqSpec pins matrix ≡
+    // chained; q232 times the (16, 8)-pinned oracle twin.
     Entry("b232_ivfpq_auto", (s, dir) => {
       val emb = t(s, dir, "embeddings")
       val queries = emb.filter(col("vec_id") <= 20)
@@ -9193,17 +9168,15 @@ object SparkEntry {
                 list_transform(v, x -> CAST(round(x * 1048576) AS BIGINT)) AS vi
               FROM e)"""
 
-  private val ivfOracleCtes: String =
+  private def ivfOracleCtes(seeds: Int = 16, iters: Int = 3): String =
     s"""$eiCtes,
        c0 AS (
          SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS BIGINT) AS cid, vi AS c
-         FROM (SELECT vec_id, vi FROM ei ORDER BY vec_id LIMIT 16)),
-       ${ivfIteration(1)},
-       ${ivfIteration(2)},
-       ${ivfIteration(3)},
-       a4 AS (
+         FROM (SELECT vec_id, vi FROM ei ORDER BY vec_id LIMIT $seeds)),
+       ${(1 to iters).map(ivfIteration).mkString(",\n       ")},
+       a${iters + 1} AS (
          SELECT ei.vec_id, (min([${ivfDist("ei.vi", "c.c")}, c.cid]))[2] AS cid
-         FROM ei CROSS JOIN c3 c GROUP BY ei.vec_id)"""
+         FROM ei CROSS JOIN c$iters c GROUP BY ei.vec_id)"""
 
   /** Full relational replay of [[functions.Similarity.ivfTopKPortable]]:
     * fixed-point quantization, three UNROLLED Lloyd iterations (argmin by
@@ -9212,7 +9185,7 @@ object SparkEntry {
     * integer op the Spark side computes, re-derived in DuckDB.
     */
   private val q61OracleSql: String =
-    s"""WITH $ivfOracleCtes,
+    s"""WITH ${ivfOracleCtes()},
        qp AS (
          SELECT ei.vec_id AS query_id, c.cid, ${ivfDist("ei.vi", "c.c")} AS d
          FROM ei CROSS JOIN c3 c WHERE ei.vec_id <= 20),
@@ -9249,7 +9222,7 @@ object SparkEntry {
     val cosOf = (a: String, b: String) =>
       s"""list_dot_product($a, $b)
              / (sqrt(list_dot_product($a, $a)) * sqrt(list_dot_product($b, $b)))"""
-    s"""WITH $ivfOracleCtes,
+    s"""WITH ${ivfOracleCtes()},
        selfqp AS (
          SELECT ei.vec_id AS sid, c.cid, ${ivfDist("ei.vi", "c.c")} AS d
          FROM ei CROSS JOIN c3 c),
@@ -9329,33 +9302,36 @@ object SparkEntry {
        GROUP BY 1"""
   }
 
-  /** The IVFADC chain replayed end to end, shared by q232/q233's
-    * oracles: the coarse-IVF CTEs (16 centroids, 3 Lloyd rounds,
-    * assignment a4), EXACT integer residuals against c3, per-subspace
-    * residual codebooks by the q188 PQ training chain (2 rounds,
-    * lowest-id seeds), candidate codes, and the asymmetric distance as
-    * a direct join against the codebook entry each code names
-    * (arithmetically identical to the Spark side's table lookup).
-    * Ends at `adc(query_id, neighbor_id, adc_q)`.
-    */
   private def pqDist(vi: String, c: String): String =
     s"CAST(list_sum(list_transform(range(1, 17), j -> ($vi[j] - $c[j]) * ($vi[j] - $c[j]))) AS BIGINT)"
 
-  private lazy val ivfPqOracleCtes: String =
-    s"""$ivfOracleCtes,
+  /** The IVFADC chain replayed end to end, shared by q232/q233's
+    * oracles (defaults) and q234's (130 centroids, one round each):
+    * the coarse-IVF CTEs (`seeds` centroids, `coarseIters` Lloyd
+    * rounds, final assignment), EXACT integer residuals against the
+    * last centroids, per-subspace residual codebooks by the q188 PQ
+    * training chain (`pqIters` rounds, lowest-id seeds), candidate
+    * codes, and the asymmetric distance as a direct join against the
+    * codebook entry each code names (arithmetically identical to the
+    * Spark side's table lookup). Ends at
+    * `adc(query_id, neighbor_id, adc_q)`.
+    */
+  private def ivfPqOracleCtes(seeds: Int = 16, coarseIters: Int = 3,
+                              pqIters: Int = 2): String =
+    s"""${ivfOracleCtes(seeds, coarseIters)},
        res AS MATERIALIZED (
          SELECT a.vec_id, a.cid,
            list_transform(range(1, 65), j -> ei.vi[j] - c.c[j]) AS ri
-         FROM a4 a JOIN ei ON ei.vec_id = a.vec_id
-         JOIN c3 c ON c.cid = a.cid),
-       $pqFromResidualsSql,
-       ${adcQuerySql("c3")}"""
+         FROM a${coarseIters + 1} a JOIN ei ON ei.vec_id = a.vec_id
+         JOIN c$coarseIters c ON c.cid = a.cid),
+       ${pqFromResidualsSql(pqIters)},
+       ${adcQuerySql(s"c$coarseIters", pqIters)}"""
 
   /** residual -> per-subspace PQ training -> codes, shared by the
     * single-level (c3) and IMI (cells) coarse oracles: expects a
     * `res(vec_id, cid, ri)` CTE upstream. Ends at `codes`.
     */
-  private lazy val pqFromResidualsSql: String = {
+  private def pqFromResidualsSql(iters: Int = 2): String = {
     def pqIteration(i: Int): String = {
       val prev = s"p${i - 1}"
       s"""pa$i AS MATERIALIZED (
@@ -9383,20 +9359,20 @@ object SparkEntry {
            SELECT vec_id, s, vi,
              row_number() OVER (PARTITION BY s ORDER BY vec_id) AS rn
            FROM ris) WHERE rn <= 8),
-       ${pqIteration(1)},
-       ${pqIteration(2)},
+       ${(1 to iters).map(pqIteration).mkString(",\n       ")},
        codes AS MATERIALIZED (
          SELECT r.vec_id, r.s, (min([${pqDist("r.vi", "c.c")}, c.cid]))[2] AS code
-         FROM ris r JOIN p2 c ON c.s = r.s GROUP BY r.vec_id, r.s)"""
+         FROM ris r JOIN p$iters c ON c.s = r.s GROUP BY r.vec_id, r.s)"""
   }
 
   /** Query probe + ADC scoring against the centroid relation
     * `$cents(cid, c)` (single-level lists or IMI product cells — for
     * cells, ORDER BY the full distance replays the Spark side's padded
     * d1+d2 cell ranking exactly: they differ by the row-constant
-    * |vi|²). Ends at `adc(query_id, neighbor_id, adc_q)`.
+    * |vi|²); `pqIters` names the final codebook relation. Ends at
+    * `adc(query_id, neighbor_id, adc_q)`.
     */
-  private def adcQuerySql(cents: String): String =
+  private def adcQuerySql(cents: String, pqIters: Int = 2): String =
     s"""qp AS (
          SELECT ei.vec_id AS query_id, c.cid, ${ivfDist("ei.vi", "c.c")} AS d
          FROM ei CROSS JOIN $cents c WHERE ei.vec_id <= 20),
@@ -9419,12 +9395,22 @@ object SparkEntry {
          FROM qsub qs
          JOIN res r ON r.cid = qs.pcid AND r.vec_id <> qs.query_id
          JOIN codes k ON k.vec_id = r.vec_id AND k.s = qs.s
-         JOIN p2 pc ON pc.s = qs.s AND pc.cid = k.code
+         JOIN p$pqIters pc ON pc.s = qs.s AND pc.cid = k.code
          GROUP BY 1, 2)"""
 
   /** q232: plain ADC ranking — (adc asc, id asc), top-10. */
   private val q232OracleSql: String =
-    s"""WITH $ivfPqOracleCtes
+    s"""WITH ${ivfPqOracleCtes()}
+       SELECT query_id, neighbor_id, adc_q FROM (
+         SELECT *, row_number() OVER (PARTITION BY query_id
+                     ORDER BY adc_q, neighbor_id) AS rn
+         FROM adc) WHERE rn <= 10"""
+
+  /** q234: q232's replay at the matrix-form geometry — 130 coarse
+    * lists (past MaxLiteralCentroids), one coarse and one PQ round.
+    */
+  private val q234OracleSql: String =
+    s"""WITH ${ivfPqOracleCtes(seeds = 130, coarseIters = 1, pqIters = 1)}
        SELECT query_id, neighbor_id, adc_q FROM (
          SELECT *, row_number() OVER (PARTITION BY query_id
                      ORDER BY adc_q, neighbor_id) AS rn
@@ -9436,7 +9422,7 @@ object SparkEntry {
     * brute-force integer-L2 gold. Hash-exact on both legs.
     */
   private val q233OracleSql: String =
-    s"""WITH $ivfPqOracleCtes,
+    s"""WITH ${ivfPqOracleCtes()},
        cand AS MATERIALIZED (
          SELECT query_id, neighbor_id FROM (
            SELECT *, row_number() OVER (PARTITION BY query_id
@@ -9544,7 +9530,7 @@ object SparkEntry {
            list_transform(range(1, 65), j -> ei.vi[j] - c.c[j]) AS ri
          FROM acell a JOIN ei ON ei.vec_id = a.vec_id
          JOIN cells c ON c.cid = a.cid),
-       $pqFromResidualsSql,
+       ${pqFromResidualsSql()},
        ${adcQuerySql("cells")}"""
 
   /** q241's oracle: q225's end-to-end margin replay with the coarse

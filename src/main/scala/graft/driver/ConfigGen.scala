@@ -1,6 +1,6 @@
 package graft.driver
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Config autogeneration (SURVEY.md §3.3; reference update_config.py):

@@ -201,6 +201,9 @@ object AnnIndex {
     }
     val (index, coarse, codebooks) = Similarity.ivfPqBuildIndex(corpus, dim,
       m, kCentroids, nCentroids, coarseIters, pqIters, cId, cVec, maxTrainRows)
+    // an index with no rows carries no quantizer tag in its commit
+    // stats, so nothing could ever read it back
+    require(coarse.nonEmpty, s"AnnIndex.build: empty corpus, nothing to index at $table")
     // REPLACE semantics over a live index: the prior state is captured
     // first and the one commit below swaps it out conflict-checked
     // (expectedHead), so a concurrent append can never be silently
@@ -267,8 +270,8 @@ object AnnIndex {
     */
   private def commitIndexRows(spark: SparkSession, index: DataFrame,
                               table: String, maxRecordsPerFile: Long,
-                              removed: Seq[String] = Nil,
-                              expectedHead: Option[Long] = None): Long = {
+                              removed: Seq[String],
+                              expectedHead: Option[Long]): Long = {
     val files = TxTable.stageBatch(spark,
       index.repartition(cidWriteParts(index), col("cid")), table,
       partitionBy = Seq("cid"), maxRecordsPerFile = maxRecordsPerFile)
@@ -282,29 +285,15 @@ object AnnIndex {
     */
   private def encodeWith(meta: Meta, hash: String, newRows: DataFrame,
                          cId: String, cVec: String): DataFrame = {
-    val subDim = meta.dim / meta.m
     val vi = newRows
       .select(col(cId).cast("long").as("id"), col(cVec).cast("array<double>").as("v"))
       .withColumn("vi", Similarity.toIntVec(col("v")))
     val base =
       if (meta.isImi)
         Similarity.intImiAssignResidual(vi, meta.coarse, meta.coarse2, meta.dim)
-      else vi
-        .withColumn("cid", Similarity.intNearestCid(meta.coarse, col("vi")))
-        .select(col("id"), col("cid"),
-          zip_with(col("vi"), Similarity.intCentroidOf(meta.coarse, col("cid")),
-            (a, b) => a - b).as("ri"))
-    val perSub = (0 until meta.m).map { s =>
-      val sl = slice(col("ri"), s * subDim + 1, subDim)
-      val cand = meta.codebooks(s).zipWithIndex.map { case (cA, i) =>
-        struct(IntSqDist.intSqDist(sl, lit(cA)).as("d"), lit(i).as("cid"))
-      }
-      if (cand.length < 2) cand.head else least(cand: _*)
-    }
-    base.select(
-      col("id") +: col("cid") +: col("ri") +:
-        (0 until meta.m).map(s => perSub(s).getField("cid").as(s"__c$s")) :+
-        lit(hash).as(QzCol): _*)
+      else Similarity.intAssignResidual(vi, meta.coarse)
+    Similarity.pqIndexRows(base, meta.codebooks, meta.dim / meta.m)
+      .withColumn(QzCol, lit(hash))
   }
 
   /** Rebuild-warranted drift signal: an appended batch whose
@@ -757,72 +746,66 @@ object AnnIndex {
     */
   def search(spark: SparkSession, table: String, queries: DataFrame, k: Int,
              nProbe: Int = 8, qId: String = "query_id",
-             qVec: String = "query_vec"): DataFrame = {
-    val meta = readMeta(spark, table)
-    val qint = Similarity.toQInt(queries, qId, qVec)
-    val probed = probedCids(spark, queries, meta, nProbe, qId, qVec)
-    if (probed.isEmpty) // empty query set: an empty RESULT, not an
-      return emptyResult(spark, qId, "adc_q") // unreadable-scan error
-    val pf = probedFiles(spark, table, probed)
-    // every probed list may be EMPTY (Lloyd keeps empty clusters'
-    // centroids): no committed file → a schemaless emptyDataFrame scan
-    // would fail the join on `cid`, so return the empty result directly
-    if (pf.isEmpty) return emptyResult(spark, qId, "adc_q")
-    val index = TxTable.readFiles(spark, table, pf)
-    val scored =
-      if (meta.isImi)
-        Similarity.adcProbeScoreImi(qint, index, meta.coarse, meta.coarse2,
-          meta.codebooks, meta.dim, meta.m, nProbe, qId)
-      else Similarity.adcProbeScore(qint, index, meta.coarse, meta.codebooks,
-        meta.dim, meta.m, nProbe, qId)
-    Similarity.topkByLowest(scored, k, qId, "adc_q")
-  }
-
-  private def emptyResult(spark: SparkSession, qId: String,
-                          valCol: String): DataFrame = {
-    import spark.implicits._
-    Seq.empty[(Long, Long, Long)].toDF(qId, "neighbor_id", valCol)
-  }
+             qVec: String = "query_vec"): DataFrame =
+    probedScores(spark, table, queries, Similarity.toQInt(queries, qId, qVec),
+        nProbe, qId, qVec)
+      .fold(emptyResult(spark, qId, "adc_q"))(p =>
+        Similarity.topkByLowest(p.scored, k, qId, "adc_q"))
 
   /** IVFADC+R against the at-rest index: ADC shortlist of `rerank`
     * candidates, exact integer vectors reconstructed from the PRUNED
     * read's own residuals (`vi = ri + coarse(cid)` — shortlist members
     * are by construction inside probed lists, so no second read), exact
-    * integer-L2 re-rank. Bit-identical to
-    * [[Similarity.ivfPqRerankTopK]] at the same geometry.
+    * integer-L2 re-rank by [[Similarity.rerankTopK]] — the definition
+    * [[Similarity.ivfPqRerankTopK]] uses, so the two are bit-identical
+    * at the same geometry.
     */
   def searchRerank(spark: SparkSession, table: String, queries: DataFrame,
                    k: Int, rerank: Int, nProbe: Int = 8,
                    qId: String = "query_id",
                    qVec: String = "query_vec"): DataFrame = {
     require(rerank >= k, s"rerank=$rerank must be >= k=$k")
-    val meta = readMeta(spark, table)
+    // converted once, eagerly: the ADC probes and the re-rank both read it
     val qint = Similarity.toQInt(queries, qId, qVec).localCheckpoint(true)
+    probedScores(spark, table, queries, qint, nProbe, qId, qVec)
+      .fold(emptyResult(spark, qId, "l2_q")) { case Probed(meta, index, scored) =>
+        Similarity.rerankTopK(qint, index, scored, k, rerank, qId, cid =>
+          if (meta.isImi) Similarity.intImiCellCentroid(meta.coarse, meta.coarse2, cid)
+          else Similarity.intCentroidOf(meta.coarse, cid))
+      }
+  }
+
+  /** The pruned read and its ADC candidates (qId, neighbor_id, adc_q). */
+  private final case class Probed(meta: Meta, index: DataFrame, scored: DataFrame)
+
+  /** The probe half both searches share: files pruned to the probed
+    * lists, then the exact [[Similarity.adcProbeScore]] (or its IMI
+    * form) over the pruned read. None when nothing can match — an
+    * empty query set, or probed lists that are all EMPTY (Lloyd keeps
+    * empty clusters' centroids, so there is no committed file, and a
+    * schemaless scan would fail the join on `cid`).
+    */
+  private def probedScores(spark: SparkSession, table: String,
+                           queries: DataFrame, qint: DataFrame, nProbe: Int,
+                           qId: String, qVec: String): Option[Probed] = {
+    val meta = readMeta(spark, table)
     val probed = probedCids(spark, queries, meta, nProbe, qId, qVec)
-    if (probed.isEmpty) return emptyResult(spark, qId, "l2_q")
-    val pf = probedFiles(spark, table, probed)
-    if (pf.isEmpty) return emptyResult(spark, qId, "l2_q")
-    val index = TxTable.readFiles(spark, table, pf)
-    val scored =
-      if (meta.isImi)
-        Similarity.adcProbeScoreImi(qint, index, meta.coarse, meta.coarse2,
-          meta.codebooks, meta.dim, meta.m, nProbe, qId)
-      else Similarity.adcProbeScore(qint, index, meta.coarse,
-        meta.codebooks, meta.dim, meta.m, nProbe, qId)
-    val cand = Similarity.topkByLowest(scored, rerank, qId, "adc_q")
-      .select(col(qId), col("neighbor_id"))
-    val recon = index.join(broadcast(cand), index("id") === cand("neighbor_id"))
-      .select(col(qId), col("neighbor_id"), col("cid"), col("ri"))
-      .select(col(qId), col("neighbor_id"), col("ri"),
-        (if (meta.isImi)
-          Similarity.intImiCellCentroid(meta.coarse, meta.coarse2, col("cid"))
-        else Similarity.intCentroidOf(meta.coarse, col("cid"))).as("civ"))
-    val rr = recon
-      .join(broadcast(qint), Seq(qId))
-      .select(col(qId), col("neighbor_id"),
-        IntSqDist.intSqDist(
-          zip_with(col("ri"), col("civ"), (r, c) => r + c),
-          col("__qvi")).as("l2_q"))
-    Similarity.topkByLowest(rr, k, qId, "l2_q")
+    val pf = if (probed.isEmpty) Nil else probedFiles(spark, table, probed)
+    if (pf.isEmpty) None
+    else {
+      val index = TxTable.readFiles(spark, table, pf)
+      Some(Probed(meta, index,
+        if (meta.isImi)
+          Similarity.adcProbeScoreImi(qint, index, meta.coarse, meta.coarse2,
+            meta.codebooks, meta.dim, meta.m, nProbe, qId)
+        else Similarity.adcProbeScore(qint, index, meta.coarse, meta.codebooks,
+          meta.dim, meta.m, nProbe, qId)))
+    }
+  }
+
+  private def emptyResult(spark: SparkSession, qId: String,
+                          valCol: String): DataFrame = {
+    import spark.implicits._
+    Seq.empty[(Long, Long, Long)].toDF(qId, "neighbor_id", valCol)
   }
 }

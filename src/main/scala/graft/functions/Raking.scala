@@ -53,7 +53,7 @@ object Raking {
     val rowTarget = total / rowKeys.length
     val colTarget = total / colKeys.length
     var w = cells.map(_ => Scale)
-    for (it <- 1 to iterations) {
+    for (_ <- 1 to iterations) {
       // row pass: w' = w · rowTarget·10⁶ div Σ_col n·w
       val rowSum = rowKeys.map(r =>
         r -> cells.indices.filter(i => cells(i)._1 == r)

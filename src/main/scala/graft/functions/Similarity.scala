@@ -13,6 +13,12 @@ import org.apache.spark.sql.functions._
   * the compared fraction to the bucket hit rate; both share the same
   * codegen'd dot-product kernel (higher-order functions, no UDF).
   * Embedding-cosine near-dup reuses the LSH signature as its bucket key.
+  *
+  * The IVF families assign and probe coarse lists in one of two
+  * expression shapes, picked from the centroid count: a chained literal
+  * tree up to [[Similarity.MaxLiteralCentroids]] centroids (the form
+  * the oracles replay), and one matrix literal with the codegen
+  * distance kernel in a lambda past it (O(1) plan size).
   */
 object Similarity {
 
@@ -23,9 +29,7 @@ object Similarity {
     * √n rule saturates here; beyond that [[marginTopKAnn]]'s helpers
     * switch to the one-Literal MATRIX form with the codegen dot
     * (round 9 — O(1) plan size, fastest measured float shape), so its
-    * √n sizing runs uncapped to [[MaxTableCentroids]]; the r7
-    * centroid-TABLE machinery (`tableNearestCids`/`tableProbeCids`/
-    * `lloydFloatTable`) stays behind `useTablesOpt = Some(true)`.
+    * √n sizing runs uncapped to [[MaxTableCentroids]].
     */
   val MaxAutoCentroids = 256
 
@@ -369,7 +373,7 @@ object Similarity {
     * lowest-cid tie-break; |v|² is constant per row so argmax over this
     * score is argmin of squared distance.
     */
-  private def floatScoredStructs(centroids: Array[Array[Double]], v: Column) =
+  private[functions] def floatScoredStructs(centroids: Array[Array[Double]], v: Column) =
     centroids.zipWithIndex.map { case (cArr, i) =>
       struct((dot(v, lit(cArr)) * 2 - lit(cArr.map(x => x * x).sum)).as("score"),
         lit(-i).as("negcid"))
@@ -390,7 +394,7 @@ object Similarity {
   // ordering matches the chained tree bit for bit (bake-off parity: 0
   // diffs at 142 and 448).
 
-  private def floatDistStructsMatrix(centroids: Array[Array[Double]], v: Column): Column = {
+  private[functions] def floatDistStructsMatrix(centroids: Array[Array[Double]], v: Column): Column = {
     val norms2 = typedLit(centroids.map(c => c.map(x => x * x).sum).toSeq)
     transform(typedLit(centroids.map(_.toSeq).toSeq), (c, i) =>
       struct((element_at(norms2, i + 1) - dot(v, c) * 2).as("d"), i.as("cid")))
@@ -452,11 +456,20 @@ object Similarity {
         .cast("long") < lit(thr))
     }
 
+  /** The `k` lowest-id rows' `vec` arrays of an (id, …) relation — the
+    * deterministic seed rule of every Lloyd build here (centroid index
+    * = rank − 1; an empty relation yields no seeds).
+    */
+  private def lowestIdSeeds[T: scala.reflect.ClassTag](df: DataFrame, vec: Column,
+                                                      k: Int): Array[Array[T]] =
+    df.orderBy(col("id")).limit(k).select(vec).collect()
+      .map(_.getAs[scala.collection.Seq[T]](0).toArray)
+
   /** `iters` Lloyd rounds over `c0` (columns id, v): assignment argmin
     * as DataFrame jobs, float means; only the nC×dim centroid table
     * reaches the driver. Empty clusters keep their previous centroid.
     */
-  private def lloydFloat(c0: DataFrame, init: Array[Array[Double]],
+  private[functions] def lloydFloat(c0: DataFrame, init: Array[Array[Double]],
                          iters: Int): Array[Array[Double]] = {
     var centroids = init
     (1 to iters).foreach { _ =>
@@ -472,97 +485,22 @@ object Similarity {
     centroids
   }
 
-  // ---- centroid-TABLE float-IVF internals: assignment and probe lists
-  // via a broadcast join + partial/bounded aggregation instead of a
-  // literal expression tree. The literal tree costs O(nCentroids)
-  // expression nodes per ROW and stops fitting whole-stage codegen past
-  // ~10² centroids; the table path expands n×nCentroids SKINNY rows
-  // map-side (id, cid, distance), partial-aggregates the argmin, and
-  // shuffles only n rows — the shape that carries IVF to thousands of
-  // lists, i.e. the √n sizing rule PAST the literal cap. This is the
-  // "centroid TABLES (broadcast join)" production path the
-  // MaxAutoCentroids scaladoc used to only document — now code, used by
-  // [[marginTopKAnn]] whenever the derived list count exceeds
-  // [[MaxLiteralCentroids]].
-
-  /** Largest centroid count evaluated as a literal argmin tree; beyond
-    * this the expression outgrows codegen and the table path wins.
+  /** Largest centroid count evaluated as a chained literal argmin tree;
+    * past it every argmin/probe/lookup helper takes the one-Literal
+    * MATRIX form (O(1) plan size — the tree outgrows codegen at ~10²
+    * centroids).
     */
   val MaxLiteralCentroids = 128
 
-  /** Driver-collect bound for table-path centroids (cap×dim doubles). */
+  /** Driver-collect bound for matrix-form centroids (cap×dim values). */
   val MaxTableCentroids = 4096
 
   /** ceil(√n) capped at [[MaxTableCentroids]] — the list-count rule for
-    * the table path, where the literal-tree cap no longer binds.
+    * the matrix form, where the literal-tree cap no longer binds.
     */
   private[graft] def autoCentroidsTable(n: Long): Int =
     math.min(MaxTableCentroids.toLong,
       math.max(1L, math.ceil(math.sqrt(n.toDouble)).toLong)).toInt
-
-  /** (cid, cv, cn2=|c|²) — tiny, broadcast into every distance join. */
-  private def centroidTable(spark: org.apache.spark.sql.SparkSession,
-                            centroids: Array[Array[Double]]): DataFrame = {
-    import spark.implicits._
-    centroids.zipWithIndex
-      .map { case (c, i) => (i, c.toSeq, c.map(x => x * x).sum) }
-      .toSeq.toDF("cid", "cv", "cn2")
-  }
-
-  /** Nearest-centroid id per corpus row, table form: skinny
-    * (id, min(struct(|c|²−2⟨v,c⟩, cid))) hash aggregate — |v|² is
-    * row-constant so this argmin matches the literal tree's, ties to
-    * the lowest cid. Output (id, cid); join it back for vectors.
-    */
-  private def tableNearestCids(c0: DataFrame, cents: DataFrame): DataFrame =
-    c0.crossJoin(broadcast(cents))
-      .select(col("id"),
-        struct((col("cn2") - dot(col("v"), col("cv")) * 2).as("d"),
-          col("cid")).as("__s"))
-      .groupBy(col("id")).agg(min(col("__s")).as("__m"))
-      .select(col("id"), col("__m.cid").as("cid"))
-
-  /** The `nProbe` nearest list ids per row, table form: the same skinny
-    * distance stream through the bounded TopKByScore aggregator
-    * (highest score = lowest distance; ties to the lowest cid), exploded
-    * to (id, cid) probe rows — never a window sort.
-    */
-  private def tableProbeCids(c0: DataFrame, cents: DataFrame,
-                             nProbe: Int): DataFrame = {
-    val spark = c0.sparkSession
-    import spark.implicits._
-    val agg = new TopKByScore(nProbe).toColumn
-    c0.crossJoin(broadcast(cents))
-      .select(col("id").cast("long"), col("cid").cast("long"),
-        (dot(col("v"), col("cv")) * 2 - col("cn2")).as("score"))
-      .as[(Long, Long, Double)]
-      .groupByKey(_._1)
-      .mapValues(r => (r._2, r._3))
-      .agg(agg)
-      .flatMap { case (id, top) => top.map(t => (id, t._1.toInt)) }
-      .toDF("id", "cid")
-  }
-
-  /** Lloyd rounds with table-form assignment — same means job as
-    * [[lloydFloat]], argmin via the broadcast join instead of the
-    * literal tree.
-    */
-  private def lloydFloatTable(c0: DataFrame, init: Array[Array[Double]],
-                              iters: Int): Array[Array[Double]] = {
-    var centroids = init
-    (1 to iters).foreach { _ =>
-      val cents = centroidTable(c0.sparkSession, centroids)
-      val means = c0.join(tableNearestCids(c0, cents), Seq("id"))
-        .select(col("cid"), posexplode(col("v")))
-        .toDF("cid", "pos", "x")
-        .groupBy(col("cid"), col("pos")).agg(avg(col("x")).as("m"))
-        .collect()
-      val next = centroids.map(_.clone())
-      means.foreach(r => next(r.getAs[Int]("cid"))(r.getAs[Int]("pos")) = r.getAs[Double]("m"))
-      centroids = next
-    }
-    centroids
-  }
 
   def ivfTopK(queries: DataFrame, corpus: DataFrame, k: Int,
               nCentroids: Int = 0, nProbe: Int = 8, iters: Int = 3,
@@ -586,9 +524,7 @@ object Similarity {
         maxTrainRows = maxTrainRows)
     }
     val nC = if (nCentroids > 0) nCentroids else autoCentroids(n)
-    val init: Array[Array[Double]] = c0.orderBy(col("id")).limit(nC)
-      .select(col("v")).collect()
-      .map(_.getAs[scala.collection.Seq[Double]](0).toArray)
+    val init = lowestIdSeeds[Double](c0, col("v"), nC)
     val centroids = lloydFloat(trainSample(c0, n, maxTrainRows), init, iters)
     // the cache only serves the Lloyd jobs; the final query re-reads the
     // source in ONE pass (assign → probe-join → top-k), which is exactly
@@ -709,7 +645,7 @@ object Similarity {
   private def intSqDist(vi: Column, cArr: Array[Long]): Column =
     IntSqDist.intSqDist(vi, lit(cArr))
 
-  private def intDistStructs(centroids: Array[Array[Long]], vi: Column) =
+  private[functions] def intDistStructs(centroids: Array[Array[Long]], vi: Column) =
     centroids.zipWithIndex.map { case (cArr, i) =>
       struct((-intSqDist(vi, cArr)).as("negd"), lit(-i).as("negcid"))
     }
@@ -721,17 +657,17 @@ object Similarity {
   // expression subtrees — so it scales to any driver-held centroid
   // count with zero shuffle and constant plan size. Measured (SCALE.md,
   // "Round 8 — IVFADC probes and the coarse-shape bake-off"): fastest of
-  // the three assignment shapes at both 20k×142 and 200k×448 — it beats
-  // the chained tree (interpreter dispatch per subtree) AND the
-  // broadcast-join table path (which materializes n·nC skinny rows
-  // through a hash aggregate). The chained form stays the default below
+  // the assignment shapes at both 20k×142 and 200k×448 — it beats the
+  // chained tree (interpreter dispatch per subtree) and a
+  // broadcast-join centroid table (n·nC skinny rows through a hash
+  // aggregate). The chained form stays the default below
   // [[MaxLiteralCentroids]] because the oracle-replayed gates pin it and
   // at tiny nC the two are equivalent.
 
   private def intCentroidMatrix(centroids: Array[Array[Long]]): Column =
     typedLit(centroids.map(_.toSeq).toSeq)
 
-  private def intDistStructsMatrix(centroids: Array[Array[Long]], vi: Column): Column =
+  private[functions] def intDistStructsMatrix(centroids: Array[Array[Long]], vi: Column): Column =
     transform(intCentroidMatrix(centroids), (c, i) =>
       struct(IntSqDist.intSqDist(vi, c).as("d"), i.as("cid")))
 
@@ -751,87 +687,6 @@ object Similarity {
     else transform(
       slice(reverse(array_sort(array(intDistStructs(centroids, vi): _*))), 1, nProbe),
       s => -s.getField("negcid"))
-
-  // ---- centroid-TABLE integer-IVF internals: the exact-arithmetic
-  // twins of centroidTable/tableNearestCids/tableProbeCids, used by the
-  // IVFADC coarse leg past [[MaxLiteralCentroids]] derived lists. Same
-  // shape argument as the float set (skinny broadcast-join rows +
-  // partial/bounded aggregation instead of an O(nCentroids)-node
-  // expression tree per row), and BIT-IDENTICAL semantics to the
-  // literal path: integer distances, lexicographic (dist, cid) argmin
-  // (min(struct) / TopKByScore both tie to the lowest cid), distances
-  // ≤ dim·(2·2²⁰)² < 2^49 so the aggregator's double carrier is exact.
-
-  /** (cid, civ) — the integer centroid table, tiny and broadcast. */
-  private def intCentroidTable(spark: org.apache.spark.sql.SparkSession,
-                               centroids: Array[Array[Long]]): DataFrame = {
-    import spark.implicits._
-    centroids.zipWithIndex.map { case (c, i) => (i.toLong, c.toSeq) }
-      .toSeq.toDF("cid", "civ")
-  }
-
-  /** Exact integer squared distance, column-column form (the table
-    * path's twin of [[intSqDist]]'s literal-array form) — the codegen
-    * [[IntSqDist]] kernel.
-    */
-  private def intSqDistCols(a: Column, b: Column): Column =
-    IntSqDist.intSqDist(a, b)
-
-  /** Nearest-centroid id per row, table form: (id, vi) × broadcast
-    * centroids → min(struct(d, cid)) hash aggregate. Output (id, cid).
-    */
-  private def tableNearestCidsInt(cv: DataFrame, cents: DataFrame): DataFrame =
-    cv.crossJoin(broadcast(cents))
-      .select(col("id"),
-        struct(intSqDistCols(col("vi"), col("civ")).as("d"),
-          col("cid")).as("__s"))
-      .groupBy(col("id")).agg(min(col("__s")).as("__m"))
-      .select(col("id"), col("__m.cid").as("cid"))
-
-  /** The `nProbe` nearest list ids per row, table form, through the
-    * bounded [[TopKByScore]] aggregator (score = −dist; exact — see the
-    * 2^49 bound above). Output (id, cid) probe rows, never a window sort.
-    */
-  private def tableProbeCidsInt(cv: DataFrame, cents: DataFrame,
-                                nProbe: Int): DataFrame = {
-    val spark = cv.sparkSession
-    import spark.implicits._
-    val agg = new TopKByScore(nProbe).toColumn
-    cv.crossJoin(broadcast(cents))
-      .select(col("id").cast("long"), col("cid"),
-        -intSqDistCols(col("vi"), col("civ")).cast("double"))
-      .as[(Long, Long, Double)]
-      .groupByKey(_._1)
-      .mapValues(r => (r._2, r._3))
-      .agg(agg)
-      .flatMap { case (id, top) => top.map(t => (id, t._1)) }
-      .toDF("id", "cid")
-  }
-
-  /** Lloyd rounds with table-form assignment — the same exact
-    * floor-division means job as [[lloydInt]], argmin via the broadcast
-    * centroid join instead of the literal tree.
-    */
-  private def lloydIntTable(c0: DataFrame, init: Array[Array[Long]],
-                            iters: Int): Array[Array[Long]] = {
-    var centroids = init
-    (1 to iters).foreach { _ =>
-      val cents = intCentroidTable(c0.sparkSession, centroids)
-      val sums = c0.join(tableNearestCidsInt(c0, cents), Seq("id"))
-        .select(col("cid"), posexplode(col("vi")))
-        .toDF("cid", "pos", "x")
-        .groupBy(col("cid"), col("pos"))
-        .agg(sum(col("x")).as("s"), count(lit(1)).as("n"))
-        .select(col("cid"), col("pos"),
-          expr("(s - pmod(s, n)) div n").as("m"))
-        .collect()
-      val next = centroids.map(_.clone()) // empty clusters keep previous
-      sums.foreach(r =>
-        next(r.getAs[Long]("cid").toInt)(r.getAs[Int]("pos")) = r.getAs[Long]("m"))
-      centroids = next
-    }
-    centroids
-  }
 
   /** `iters` exact-integer Lloyd rounds over `c0` (columns id, v, vi):
     * floor-division means (engine-portable pmod form), empty clusters
@@ -868,9 +723,7 @@ object Similarity {
     val n = c0.count()
     val nC = if (nCentroids > 0) nCentroids else autoCentroids(n)
 
-    val init: Array[Array[Long]] = c0.orderBy(col("id")).limit(nC)
-      .select(col("vi")).collect()
-      .map(_.getAs[scala.collection.Seq[Long]](0).toArray)
+    val init = lowestIdSeeds[Long](c0, col("vi"), nC)
     val centroids = lloydInt(trainSample(c0, n, maxTrainRows), init, iters)
     c0.unpersist()
 
@@ -916,35 +769,18 @@ object Similarity {
                        m: Int = 4, kCentroids: Int = 8,
                        iters: Int = 2,
                        maxTrainRows: Long = MaxTrainRows): DataFrame = {
-    require(m >= 1 && dim % m == 0, s"m=$m must divide dim=$dim")
-    require(kCentroids >= 1 && iters >= 0, "bad kCentroids/iters")
-    val subDim = dim / m
-    val Scale = 1L << 20
-    def sqDistTo(viCol: Column, cArr: Array[Long]): Column =
-      IntSqDist.intSqDist(viCol, lit(cArr)) // codegen kernel, exact
-
     val codebooks = pqTrain(df, idCol, vecCol, dim, m, kCentroids, iters, maxTrainRows)
-
-    // encoding: one zero-shuffle pass over the (re-read) source
-    val enc = df.select(col(idCol).cast("long").as("id"),
-        asDouble(col(vecCol)).as("v"))
-      .withColumn("vi", transform(col("v"),
-        x => round(x * Scale.toDouble).cast("long")))
-    val perSub = (0 until m).map { s =>
-      val sl = slice(col("vi"), s * subDim + 1, subDim)
-      val cand = codebooks(s).zipWithIndex.map { case (cA, i) =>
-        struct(sqDistTo(sl, cA).as("d"), lit(i.toLong).as("cid"))
-      }
-      if (cand.length < 2) cand.head else least(cand: _*)
-    }
-    // each subspace argmin STAGED as its own column: the final select
-    // reads both fields (cid for the code, d for the error), and an
-    // inline perSub expression would be duplicated per field — 2× every
-    // per-centroid distance lambda per row (repeated-lambda audit).
-    // greatest/least is opaque to extract-only project collapsing, so
-    // the stage survives and each distance evaluates once.
-    val staged = enc.select(
-      col("id") +: (0 until m).map(s => perSub(s).as(s"__ps$s")): _*)
+    val subDim = dim / m
+    // encoding: one zero-shuffle pass over the (re-read) source, each
+    // subspace argmin STAGED as its own column: the final select reads
+    // both fields (cid for the code, d for the error), and an inline
+    // argmin would be duplicated per field — 2× every per-centroid
+    // distance per row (repeated-lambda audit). greatest/least is
+    // opaque to extract-only project collapsing, so the stage survives
+    // and each distance evaluates once.
+    val staged = df.select(col(idCol).cast("long").as("id"), toIntVec(col(vecCol)).as("vi"))
+      .select(col("id") +: (0 until m).map(s =>
+        pqArgmin(codebooks(s), subSlice(col("vi"), s, subDim)).as(s"__ps$s")): _*)
     staged.select(col("id").as("vec_id"),
       concat_ws(",",
         (0 until m).map(s => col(s"__ps$s").getField("cid").cast("string")): _*)
@@ -971,51 +807,18 @@ object Similarity {
                 qId: String = "query_id", qVec: String = "query_vec",
                 cId: String = "vec_id", cVec: String = "embedding",
                 maxTrainRows: Long = MaxTrainRows): DataFrame = {
-    require(m >= 1 && dim % m == 0, s"m=$m must divide dim=$dim")
-    val subDim = dim / m
-    val Scale = 1L << 20
-    def toInt(v: Column): Column =
-      transform(asDouble(v), x => round(x * Scale.toDouble).cast("long"))
-    def sqDistTo(viCol: Column, cArr: Array[Long]): Column =
-      IntSqDist.intSqDist(viCol, lit(cArr)) // codegen kernel, exact
     val codebooks = pqTrain(corpus, cId, cVec, dim, m, kCentroids, iters, maxTrainRows)
+    val subDim = dim / m
     // corpus codes: per-subspace nearest centroid ids (one map pass)
     val coded = corpus.select(col(cId).cast("long").as("id"),
-        toInt(col(cVec)).as("vi"))
-      .select(col("id") +: (0 until m).map { s =>
-        val sl = slice(col("vi"), s * subDim + 1, subDim)
-        val cand = codebooks(s).zipWithIndex.map { case (cA, i) =>
-          struct(sqDistTo(sl, cA).as("d"), lit(i).as("cid"))
-        }
-        (if (cand.length < 2) cand.head else least(cand: _*))
-          .getField("cid").as(s"c$s")
-      }: _*)
-    // per-query ADC tables: distance to every codebook entry, as one
-    // array per subspace (lookup = element_at by code)
-    val q = queries.select(col(qId).cast("long").as(qId),
-        toInt(col(qVec)).as("__qvi"))
-      .select(col(qId) +: (0 until m).map { s =>
-        val sl = slice(col("__qvi"), s * subDim + 1, subDim)
-        array(codebooks(s).map(cA => sqDistTo(sl, cA)): _*).as(s"t$s")
-      }: _*)
-    val scored = coded.crossJoin(broadcast(q))
+        toIntVec(col(cVec)).as("vi"))
+      .select(col("id") +: pqCodes(col("vi"), codebooks, subDim): _*)
+    val q = toQInt(queries, qId, qVec)
+      .select(col(qId) +: adcTables(col("__qvi"), codebooks, subDim): _*)
+    topkByLowest(coded.crossJoin(broadcast(q))
       .filter(col(qId) =!= col("id"))
-      .select(col(qId), col("id").as("neighbor_id"),
-        (0 until m).map(s => element_at(col(s"t$s"), col(s"c$s") + 1))
-          .reduce(_ + _).as("adc_q"))
-    // bounded top-k by LOWEST distance: negate for the aggregator's
-    // highest-wins rule (distances < 2^53, double-exact)
-    val spark = scored.sparkSession
-    import spark.implicits._
-    val agg = new TopKByScore(k).toColumn
-    scored.select(col(qId).cast("long"), col("neighbor_id").cast("long"),
-        col("adc_q").cast("double"))
-      .as[(Long, Long, Double)]
-      .groupByKey(_._1)
-      .mapValues(r => (r._2, -r._3))
-      .agg(agg)
-      .flatMap { case (qid, top) => top.map(t => (qid, t._1, (-t._2).toLong)) }
-      .toDF(qId, "neighbor_id", "adc_q")
+      .select(col(qId), col("id").as("neighbor_id"), adcLookup(m).as("adc_q")),
+      k, qId, "adc_q")
   }
 
   /** The per-subspace integer-Lloyd codebooks of [[pqEncodePortable]],
@@ -1026,52 +829,69 @@ object Similarity {
               maxTrainRows: Long = MaxTrainRows): Array[Array[Array[Long]]] = {
     require(m >= 1 && dim % m == 0, s"m=$m must divide dim=$dim")
     require(kCentroids >= 1 && iters >= 0, "bad kCentroids/iters")
-    val subDim = dim / m
-    val Scale = 1L << 20
-    val c0full = df.select(col(idCol).cast("long").as("id"),
-        asDouble(col(vecCol)).as("v"))
-      .withColumn("vi", transform(col("v"),
-        x => round(x * Scale.toDouble).cast("long")))
+    val full = df.select(col(idCol).cast("long").as("id"), toIntVec(col(vecCol)).as("vi"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // every Lloyd aggregate below runs on the bounded hash sample; the
-    // init seeds stay the full relation's lowest ids (identical below
-    // the threshold, deterministic either way)
-    val c0 = trainSample(c0full, c0full.count(), maxTrainRows)
-    def sqDistTo(viCol: Column, cArr: Array[Long]): Column =
-      IntSqDist.intSqDist(viCol, lit(cArr)) // codegen kernel, exact
-    // per-subspace trainings are independent (disjoint slices of the
-    // persisted-and-counted relation, thread-local `cents` state) —
-    // overlap them (guide §2.6 via graft.util.Par.all, ordered output)
-    val out = graft.util.Par.all((0 until m).map(s => () => {
-      val sl = slice(col("vi"), s * subDim + 1, subDim)
-      var cents: Array[Array[Long]] = c0full.orderBy(col("id")).limit(kCentroids)
-        .select(sl.as("c")).collect()
-        .map(_.getAs[scala.collection.Seq[Long]](0).toArray)
-      def structs(viCol: Column) = cents.zipWithIndex.map { case (cA, i) =>
-        struct((-sqDistTo(viCol, cA)).as("negd"), lit(-i).as("negcid"))
-      }
-      def nearest(viCol: Column): Column =
-        if (cents.length < 2) lit(0)
-        else -greatest(structs(viCol): _*).getField("negcid")
-      (1 to iters).foreach { _ =>
-        val sums = c0.withColumn("cid", nearest(sl))
-          .select(col("cid"), posexplode(sl))
-          .toDF("cid", "pos", "x")
-          .groupBy(col("cid"), col("pos"))
-          .agg(sum(col("x")).as("s"), count(lit(1)).as("n"))
-          .select(col("cid"), col("pos"),
-            expr("(s - pmod(s, n)) div n").as("m"))
-          .collect()
-        val next = cents.map(_.clone())
-        sums.foreach(r =>
-          next(r.getAs[Int]("cid"))(r.getAs[Int]("pos")) = r.getAs[Long]("m"))
-        cents = next
-      }
-      cents
-    })).toArray
-    c0full.unpersist()
+    val out = pqCodebooks(full, "vi", m, dim / m, kCentroids, iters,
+      full.count(), maxTrainRows)
+    full.unpersist()
     out
   }
+
+  private def subSlice(v: Column, s: Int, subDim: Int): Column =
+    slice(v, s * subDim + 1, subDim)
+
+  /** Per-subspace PQ codebooks over an (id, `vec`) relation — the one
+    * trainer of [[pqTrain]] and the IVFADC residual builds: seeds are
+    * the FULL relation's lowest ids, [[lloydInt]] iterates on its
+    * bounded hash sample (identical below the threshold, deterministic
+    * either way). The m trainings read disjoint coordinate slices of
+    * `full` with subspace-local state only, so they overlap (guide §2.6
+    * via graft.util.Par.all; output order is subspace order). `full`
+    * should be materialized — each subspace reads it 1 + iters times.
+    */
+  private def pqCodebooks(full: DataFrame, vec: String, m: Int, subDim: Int,
+                          kCentroids: Int, iters: Int, n: Long,
+                          maxTrainRows: Long): Array[Array[Array[Long]]] =
+    graft.util.Par.all((0 until m).map(s => () => {
+      val sub = full.select(col("id"), subSlice(col(vec), s, subDim).as("vi"))
+      lloydInt(trainSample(sub, n, maxTrainRows),
+        lowestIdSeeds[Long](sub, col("vi"), kCentroids), iters)
+    })).toArray
+
+  /** The one PQ argmin: the nearest entry of one subspace's codebook as
+    * struct(d, cid) — exact integer distance, ties to the lowest cid.
+    * An empty codebook (trained on an empty corpus) is a typed null, so
+    * encoding zero rows still plans.
+    */
+  private def pqArgmin(codebook: Array[Array[Long]], sl: Column): Column = {
+    val cand = codebook.zipWithIndex.map { case (cA, i) =>
+      struct(intSqDist(sl, cA).as("d"), lit(i).as("cid"))
+    }
+    if (cand.isEmpty) lit(null).cast("struct<d:bigint,cid:int>")
+    else if (cand.length < 2) cand.head
+    else least(cand: _*)
+  }
+
+  /** The m code columns `__c0..__c{m-1}` of an integer vector column. */
+  private def pqCodes(vi: Column, codebooks: Array[Array[Array[Long]]],
+                      subDim: Int): Seq[Column] =
+    codebooks.indices.map(s =>
+      pqArgmin(codebooks(s), subSlice(vi, s, subDim)).getField("cid").as(s"__c$s"))
+
+  /** Per-query ADC tables `__t0..__t{m-1}`: the exact integer distance
+    * of each query (residual) slice to every codebook entry, one array
+    * per subspace (lookup = element_at by code).
+    */
+  private def adcTables(qv: Column, codebooks: Array[Array[Array[Long]]],
+                        subDim: Int): Seq[Column] =
+    codebooks.indices.map { s =>
+      val sl = subSlice(qv, s, subDim)
+      array(codebooks(s).map(cA => intSqDist(sl, cA)): _*).as(s"__t$s")
+    }
+
+  /** The asymmetric distance: Σ_s __t<s>[__c<s>] — m table lookups. */
+  private def adcLookup(m: Int): Column =
+    (0 until m).map(s => element_at(col(s"__t$s"), col(s"__c$s") + 1)).reduce(_ + _)
 
   /** Embedding-cosine near-dup pairs: MULTI-TABLE sign-bit LSH candidate
     * generation (a pair is a candidate if its b-bit signature matches in
@@ -1284,9 +1104,7 @@ object Similarity {
     // costs at k = sqrt(n); the LINEAR-volume shape is the IMI route
     // above, which takes over once sqrt(n) can no longer grow.
     val nC = if (nClusters > 0) nClusters else autoCentroidsTable(n)
-    val init: Array[Array[Double]] = c0.orderBy(col("id")).limit(nC)
-      .select(col("v")).collect()
-      .map(_.getAs[scala.collection.Seq[Double]](0).toArray)
+    val init = lowestIdSeeds[Double](c0, col("v"), nC)
     val centroids = lloydFloat(trainSample(c0, n, maxTrainRows), init, iters)
     // assignment materialized ONCE (eager, GC-released): three plan
     // branches consume it (both self-join sides + the left_anti base)
@@ -1322,9 +1140,7 @@ object Similarity {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val n = c0.count()
     val nC = if (nClusters > 0) nClusters else autoCentroidsTable(n)
-    val init: Array[Array[Long]] = c0.orderBy(col("id")).limit(nC)
-      .select(col("vi")).collect()
-      .map(_.getAs[scala.collection.Seq[Long]](0).toArray)
+    val init = lowestIdSeeds[Long](c0, col("vi"), nC)
     val centroids = lloydInt(trainSample(c0, n, maxTrainRows), init, iters)
     val vecs = c0
       .select(col("id").as("vec_id"), col("v").as("__v"),
@@ -1385,9 +1201,7 @@ object Similarity {
     */
   private[functions] def imiFixedHalfCodebooks(c0: DataFrame,
                                     k: Int): (Array[Array[Double]], Array[Array[Double]]) = {
-    val rows = c0.orderBy(col("id")).limit(k)
-      .select(col("v")).collect()
-      .map(_.getAs[scala.collection.Seq[Double]](0).toArray)
+    val rows = lowestIdSeeds[Double](c0, col("v"), k)
     require(rows.nonEmpty, "imi codebooks: empty corpus")
     val h = (rows.head.length + 1) / 2
     (rows.map(_.take(h)), rows.map(_.drop(h)))
@@ -1684,9 +1498,7 @@ object Similarity {
     *    (one typedLit centroid array + codegen DotProduct in the
     *    lambda — round 9's fastest measured float shape at every probed
     *    geometry), so the √n sizing runs uncapped to
-    *    [[MaxTableCentroids]] at O(1) plan size; the r7 centroid-TABLE
-    *    machinery (broadcast join + partial/bounded aggregation) stays
-    *    behind `useTablesOpt = Some(true)`, spec-pinned bit-identical;
+    *    [[MaxTableCentroids]] at O(1) plan size;
     *  - the pair-scoring leg is the standard broadcast-query IVF probe
     *    ([[ivfTopK]]'s shape) over the same assignment;
     *  - margin arithmetic is unchanged except the a-sum becomes a MEAN
@@ -1703,8 +1515,7 @@ object Similarity {
                     nCentroids: Int = 0, nProbe: Int = 8, iters: Int = 3,
                     qId: String = "query_id", qVec: String = "query_vec",
                     cId: String = "vec_id", cVec: String = "embedding",
-                    maxTrainRows: Long = MaxTrainRows,
-                    useTablesOpt: Option[Boolean] = None): DataFrame = {
+                    maxTrainRows: Long = MaxTrainRows): DataFrame = {
     val c0 = corpus.select(col(cId).cast("long").as("id"), asDouble(col(cVec)).as("v"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val n = c0.count()
@@ -1713,24 +1524,14 @@ object Similarity {
     // instead of saturating at the literal cap (200k vectors: 448
     // lists, not 256). Past [[MaxLiteralCentroids]] the literal helpers
     // take the MATRIX form with the codegen dot (round 9 — fastest
-    // measured float shape, replacing the r7 broadcast-join table
-    // default, which stays behind `useTablesOpt = Some(true)` and is
-    // spec-pinned bit-identical at nC=150).
+    // measured float shape; MarginSpec pins it bit-identical to the
+    // chained tree at nC=150).
     val nC = if (nCentroids > 0) nCentroids else autoCentroidsTable(n)
-    val useTables = useTablesOpt.getOrElse(false)
-    val init: Array[Array[Double]] = c0.orderBy(col("id")).limit(nC)
-      .select(col("v")).collect()
-      .map(_.getAs[scala.collection.Seq[Double]](0).toArray)
-    val train = trainSample(c0, n, maxTrainRows)
-    val centroids =
-      if (useTables) lloydFloatTable(train, init, iters)
-      else lloydFloat(train, init, iters)
-    lazy val cents = centroidTable(corpus.sparkSession, centroids)
-    val assigned =
-      (if (useTables) c0.join(tableNearestCids(c0, cents), Seq("id"))
-       else c0.withColumn("cid", floatNearestCid(centroids, col("v"))))
-        .withColumn("__cn", l2norm(col("v")))
-        .localCheckpoint(true)
+    val centroids = lloydFloat(trainSample(c0, n, maxTrainRows),
+      lowestIdSeeds[Double](c0, col("v"), nC), iters)
+    val assigned = c0.withColumn("cid", floatNearestCid(centroids, col("v")))
+      .withColumn("__cn", l2norm(col("v")))
+      .localCheckpoint(true)
     c0.unpersist()
 
     // self-kNN leg: each vector's nProbe probe rows CARRY its vector
@@ -1742,17 +1543,11 @@ object Similarity {
     // n·nProbe·(n/nC) pair stream never materializes or shuffles (the
     // reattach form sorted pair+vector rows: ~380 GB of spill at 200k
     // vectors; this shape shuffles ~nProbe× the corpus, full stop)
-    val probesV =
-      (if (useTables)
-        tableProbeCids(assigned.select(col("id"), col("v")), cents, nProbe)
-          .join(assigned.select(col("id"), col("v").as("__qv"),
-            col("__cn").as("__qn")), Seq("id"))
-          .select(col("cid"), col("id").as("__qid"), col("__qv"), col("__qn"))
-      else assigned
-        .select(col("id").as("__qid"), col("v").as("__qv"),
-          col("__cn").as("__qn"),
-          explode_outer(floatProbeCids(centroids, col("v"), nProbe)).as("cid"))
-        .filter(col("cid").isNotNull))
+    val probesV = assigned
+      .select(col("id").as("__qid"), col("v").as("__qv"),
+        col("__cn").as("__qn"),
+        explode_outer(floatProbeCids(centroids, col("v"), nProbe)).as("cid"))
+      .filter(col("cid").isNotNull)
     // cell-partitioned pair join (the imiKnnAMeansOver idiom, r13):
     // AQE's bytes-proxy coalescing serializes this small-input/
     // huge-output join otherwise
@@ -1776,17 +1571,10 @@ object Similarity {
       .localCheckpoint(true)
 
     // pair-scoring leg: broadcast-query IVF probe over the same assignment
-    val qBase = queries.select(col(qId).cast("long").as(qId), asDouble(col(qVec)).as("__qv"))
+    val q = queries.select(col(qId).cast("long").as(qId), asDouble(col(qVec)).as("__qv"))
       .withColumn("__qn", l2norm(col("__qv")))
-    val q =
-      if (useTables)
-        qBase.join(
-          tableProbeCids(qBase.select(col(qId).as("id"), col("__qv").as("v")),
-            cents, nProbe).withColumnRenamed("id", qId),
-          Seq(qId))
-      else qBase
-        .withColumn("cid", explode_outer(floatProbeCids(centroids, col("__qv"), nProbe)))
-        .filter(col("cid").isNotNull)
+      .withColumn("cid", explode_outer(floatProbeCids(centroids, col("__qv"), nProbe)))
+      .filter(col("cid").isNotNull)
     val candScored = assigned.join(broadcast(q), Seq("cid"))
       .filter(col(qId) =!= col("id"))
       .select(col(qId), col("id").as("neighbor_id"),
@@ -2007,9 +1795,7 @@ object Similarity {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val n = c0.count()
     val nC = if (nCentroids > 0) nCentroids else autoCentroids(n)
-    val init: Array[Array[Long]] = c0.orderBy(col("id")).limit(nC)
-      .select(col("vi")).collect()
-      .map(_.getAs[scala.collection.Seq[Long]](0).toArray)
+    val init = lowestIdSeeds[Long](c0, col("vi"), nC)
     val centroids = lloydInt(trainSample(c0, n, maxTrainRows), init, iters)
     // vi is a MATERIALIZED checkpoint column, so the probe leg reads it
     // instead of re-quantizing per centroid (the q61 staging rule)
@@ -2178,46 +1964,14 @@ object Similarity {
         round(col("cos"), 4).as("margin_r"))
   }
 
-  /** IVFADC (Jégou, Douze & Schmid, TPAMI 2011 §IV) — the billion-scale
-    * index shape that combines both quantizers: a coarse IVF restricts
-    * each query to `nProbe` inverted lists, and candidates inside a list
-    * are scored from their `m`-byte PQ codes trained on RESIDUALS
-    * (v − coarse centroid), where residual codebooks are far tighter
-    * than whole-vector ones. The asymmetric distance is
-    * Σ_s dist(query_residual_s, codebook_s[code_s]) — m table lookups
-    * per candidate, never a d-dimensional computation.
-    *
-    * ENGINE-PORTABLE form, the [[ivfTopKPortable]] discipline end to
-    * end: 2²⁰ fixed-point vectors, integer Lloyd for BOTH quantizers
-    * (lexicographic (dist, cid) argmin, floor-division means,
-    * empty-cluster carry), integer residuals (exact — no rounding
-    * enters between the two quantizers), integer ADC. Every value
-    * replays bit for bit in SQL (gate q232).
-    *
-    * Shape: both trainings are bounded aggregate loops (centroid/
-    * codebook literals on the driver); the corpus is touched by ONE
-    * assign+encode pass whose output is |corpus| rows of (cid, m
-    * small ids); the probe join shuffles each query to `nProbe` lists
-    * and scores |list| candidates by code lookups — the corpus
-    * vectors themselves never reach the scoring join. The COARSE leg
-    * auto-switches to the integer centroid-TABLE machinery past
-    * [[MaxLiteralCentroids]] derived lists (broadcast join + partial/
-    * bounded aggregation — [[marginTopKAnn]]'s discipline), so the √n
-    * list sizing runs uncapped to [[MaxTableCentroids]]; the PQ side
-    * stays literal by construction (kCentroids ≤ 2^code_bits, a
-    * constant — its trees never grow with the corpus). At 100 TB both
-    * quantizers train on the bounded [[MaxTrainRows]] hash sample (in
-    * code, not by caller discipline), the one assign+encode pass is
-    * the only full-corpus work, and the index (8-ish bytes/vector) is
-    * what shuffles — or lands at rest as [[AnnIndex]]'s
-    * cid-partitioned TxTable.
-    */
   /** Literal lookup cid → centroid array: chained when below
     * [[MaxLiteralCentroids]] (the oracle-replayed gate form), one
-    * element_at into the matrix literal past it (O(1) plan size).
+    * element_at into the matrix literal past it (O(1) plan size). No
+    * centroids (an empty corpus) is a typed null.
     */
   private[functions] def intCentroidOf(coarse: Array[Array[Long]], cid: Column): Column =
-    if (coarse.length > MaxLiteralCentroids)
+    if (coarse.isEmpty) lit(null).cast("array<bigint>")
+    else if (coarse.length > MaxLiteralCentroids)
       element_at(intCentroidMatrix(coarse), cid.cast("int") + 1)
     else {
       val cases = coarse.zipWithIndex.map { case (cA, i) =>
@@ -2252,15 +2006,39 @@ object Similarity {
     queries.select(col(qId).cast("long").as(qId),
       toIntVec(asDouble(col(qVec))).as("__qvi"))
 
-  /** `useTablesOpt`: None/Some(false) (default) — the literal family,
-    * whose argmin/probe/lookup helpers switch from chained expression
-    * trees to the one-Literal MATRIX form past [[MaxLiteralCentroids]]
-    * derived lists (fastest measured shape at every probed geometry,
-    * O(1) plan size). Some(true) forces the centroid-TABLE machinery
-    * (broadcast join + partial/bounded aggregation). All shapes are the
-    * same exact integer argmin with lowest-cid ties — a plan change,
-    * never a semantics change: the spec pins table ≡ chained at nC=16
-    * and the q234 gate pins matrix ≡ table at nC=130 under the oracle.
+  /** IVFADC (Jégou, Douze & Schmid, TPAMI 2011 §IV) — the billion-scale
+    * index shape that combines both quantizers: a coarse IVF restricts
+    * each query to `nProbe` inverted lists, and candidates inside a list
+    * are scored from their `m`-byte PQ codes trained on RESIDUALS
+    * (v − coarse centroid), where residual codebooks are far tighter
+    * than whole-vector ones. The asymmetric distance is
+    * Σ_s dist(query_residual_s, codebook_s[code_s]) — m table lookups
+    * per candidate, never a d-dimensional computation.
+    *
+    * ENGINE-PORTABLE form, the [[ivfTopKPortable]] discipline end to
+    * end: 2²⁰ fixed-point vectors, integer Lloyd for BOTH quantizers
+    * (lexicographic (dist, cid) argmin, floor-division means,
+    * empty-cluster carry), integer residuals (exact — no rounding
+    * enters between the two quantizers), integer ADC. Every value
+    * replays bit for bit in SQL (gate q232; q234 replays the matrix
+    * coarse form at 130 lists).
+    *
+    * Shape: both trainings are bounded aggregate loops (centroid/
+    * codebook literals on the driver); the corpus is touched by ONE
+    * assign+encode pass whose output is |corpus| rows of (cid, m
+    * small ids); the probe join shuffles each query to `nProbe` lists
+    * and scores |list| candidates by code lookups — the corpus
+    * vectors themselves never reach the scoring join. The COARSE leg
+    * switches from the chained literal tree to the one-Literal MATRIX
+    * form past [[MaxLiteralCentroids]] lists, so the √n list sizing
+    * runs uncapped to [[MaxTableCentroids]]; the PQ side stays small by
+    * construction (kCentroids ≤ 2^code_bits, a constant — its trees
+    * never grow with the corpus). At 100 TB both quantizers train on
+    * the bounded [[MaxTrainRows]] hash sample (in code, not by caller
+    * discipline), the one assign+encode pass is the only full-corpus
+    * work, and the index (8-ish bytes/vector) is what shuffles — or
+    * lands at rest as [[AnnIndex]]'s cid-partitioned TxTable, which
+    * shares [[ivfPqBuildIndex]] and [[adcProbeScore]] with this path.
     */
   def ivfPqTopKPortable(queries: DataFrame, corpus: DataFrame, k: Int,
                         dim: Int, m: Int = 4, kCentroids: Int = 8,
@@ -2268,40 +2046,29 @@ object Similarity {
                         coarseIters: Int = 3, pqIters: Int = 2,
                         qId: String = "query_id", qVec: String = "query_vec",
                         cId: String = "vec_id", cVec: String = "embedding",
-                        useTablesOpt: Option[Boolean] = None,
                         maxTrainRows: Long = MaxTrainRows): DataFrame = {
-    val (scored, _, _) = ivfPqAdcCore(toQInt(queries, qId, qVec), corpus,
-      dim, m, kCentroids, nCentroids, nProbe, coarseIters, pqIters, qId,
-      cId, cVec, useTablesOpt, maxTrainRows)
-    topkByLowest(scored, k, qId, "adc_q")
+    val (index, coarse, codebooks) = ivfPqBuildIndex(corpus, dim, m,
+      kCentroids, nCentroids, coarseIters, pqIters, cId, cVec, maxTrainRows)
+    topkByLowest(adcProbeScore(toQInt(queries, qId, qVec), index, coarse,
+      codebooks, dim, m, nProbe, qId), k, qId, "adc_q")
   }
 
-  /** The IVFADC machinery shared by [[ivfPqTopKPortable]] (plain ADC
-    * ranking) and [[ivfPqRerankTopK]] (ADC shortlist → exact re-rank).
-    * Returns (scored ADC candidates (qId, neighbor_id, adc_q), the
-    * checkpointed residual relation (id, cid, ri), the coarse
-    * centroids) — the residual relation IS the index's storage, and
-    * `vi = ri + coarse(cid)` reconstructs the exact integer vector
-    * from it (residuals are exact integers, so reconstruction is
-    * lossless — no second corpus scan is ever needed downstream).
-    */
-  /** INDEX CONSTRUCTION — the train+encode half of IVFADC in its
-    * default literal/matrix coarse form, shared by the in-session
-    * search paths and [[AnnIndex]]'s at-rest materialization. Returns
-    * `(index, coarse, codebooks)` where `index` is the relation
-    * (id, cid, ri, __c0..__c{m-1}): the checkpointed residual rows
-    * with their PQ codes projected on lazily — this relation IS the
-    * index's storage (`vi = ri + coarse(cid)` reconstructs every exact
-    * integer vector from it). Both quantizers train on the bounded
-    * [[MaxTrainRows]] hash sample; the one full-corpus pass is the
-    * assign+residual job that lands in the checkpoint.
+  /** INDEX CONSTRUCTION — the train+encode half of IVFADC, shared by the
+    * in-session search paths and [[AnnIndex]]'s at-rest
+    * materialization. Returns `(index, coarse, codebooks)` where `index`
+    * is the relation (id, cid, ri, __c0..__c{m-1}): the checkpointed
+    * residual rows with their PQ codes projected on lazily — this
+    * relation IS the index's storage (`vi = ri + coarse(cid)`
+    * reconstructs every exact integer vector from it, losslessly).
+    * Both quantizers train on the bounded [[MaxTrainRows]] hash sample;
+    * the one full-corpus pass is the assign+residual job that lands in
+    * the checkpoint.
     */
   private[functions] def ivfPqBuildIndex(corpus: DataFrame, dim: Int, m: Int,
       kCentroids: Int, nCentroids: Int, coarseIters: Int, pqIters: Int,
       cId: String, cVec: String,
       maxTrainRows: Long): (DataFrame, Array[Array[Long]], Array[Array[Array[Long]]]) = {
     require(m >= 1 && dim % m == 0, s"m=$m must divide dim=$dim")
-    val subDim = dim / m
     val c0 = corpus.select(col(cId).cast("long").as("id"),
         asDouble(col(cVec)).as("v"))
       .withColumn("vi", toIntVec(col("v")))
@@ -2310,70 +2077,53 @@ object Similarity {
     // past [[MaxLiteralCentroids]] derived lists the literal helpers
     // (intNearestCid/intProbeCids/intCentroidOf) switch to the MATRIX
     // form — one typedLit centroid array, O(1) plan size, zero shuffle
-    // — so the √n rule runs to [[MaxTableCentroids]]. The matrix form
-    // measured FASTER than both the chained tree and the broadcast-join
-    // table machinery at 20k×142 and 200k×448 (SCALE.md round 8 bake-off).
+    // — so the √n rule runs to [[MaxTableCentroids]] (SCALE.md round 8
+    // bake-off: the fastest measured coarse shape at 20k×142 and 200k×448).
     val n = c0.count()
     val nC = if (nCentroids > 0) nCentroids else autoCentroidsTable(n)
-    val init: Array[Array[Long]] = c0.orderBy(col("id")).limit(nC)
-      .select(col("vi")).collect()
-      .map(_.getAs[scala.collection.Seq[Long]](0).toArray)
-    val coarse = lloydInt(trainSample(c0, n, maxTrainRows), init, coarseIters)
-
-    // residual relation: integer vi − assigned coarse centroid. The
-    // relation feeds m·pqIters training aggregates plus the encode
-    // pass → checkpointed once.
-    val res = c0
-      .withColumn("cid", intNearestCid(coarse, col("vi")))
-      .select(col("id"), col("cid"),
-        zip_with(col("vi"), intCentroidOf(coarse, col("cid")), (a, b) => a - b).as("ri"))
-      .localCheckpoint(true)
+    val coarse = lloydInt(trainSample(c0, n, maxTrainRows),
+      lowestIdSeeds[Long](c0, col("vi"), nC), coarseIters)
+    // the residual relation feeds m·pqIters training aggregates plus
+    // the encode pass → checkpointed once
+    val res = intAssignResidual(c0, coarse).localCheckpoint(true)
     c0.unpersist()
-
-    val (index, codebooks) = pqOnResiduals(res, m, subDim, kCentroids,
+    val (index, codebooks) = pqOnResiduals(res, m, dim / m, kCentroids,
       pqIters, n, maxTrainRows)
     (index, coarse, codebooks)
   }
 
-  /** Per-subspace residual-codebook training + code assignment, shared
-    * by the single-level ([[ivfPqBuildIndex]]) and IMI
-    * ([[ivfPqBuildIndexImi]]) coarse forms — the coarse quantizer only
-    * changes WHICH residuals arrive here. `res` = (id, cid, ri).
-    * Same seeding rule as pqTrain (first kCentroids ids, index =
-    * rank − 1); trained on the bounded hash sample.
+  /** Coarse-list assignment + residual over (…, vi): adds the nearest
+    * list `cid` and ri = vi − coarse(cid) — the shared encode step of
+    * [[ivfPqBuildIndex]] and [[AnnIndex]]'s frozen-quantizer append
+    * (the single-level twin of [[intImiAssignResidual]]).
+    */
+  private[functions] def intAssignResidual(df: DataFrame,
+                                           coarse: Array[Array[Long]]): DataFrame =
+    df.withColumn("cid", intNearestCid(coarse, col("vi")))
+      .select(col("id"), col("cid"),
+        zip_with(col("vi"), intCentroidOf(coarse, col("cid")), (a, b) => a - b).as("ri"))
+
+  /** Residual-codebook training + code assignment, shared by the
+    * single-level ([[ivfPqBuildIndex]]) and IMI ([[ivfPqBuildIndexImi]])
+    * coarse forms — the coarse quantizer only changes WHICH residuals
+    * arrive here. `res` = (id, cid, ri), checkpointed by the caller.
     */
   private def pqOnResiduals(res: DataFrame, m: Int, subDim: Int,
                             kCentroids: Int, pqIters: Int, n: Long,
                             maxTrainRows: Long): (DataFrame, Array[Array[Array[Long]]]) = {
-    // the m subspace trainings are independent read-only consumers of
-    // the CHECKPOINTED residual relation (disjoint coordinate slices,
-    // per-subspace local state only) — overlap their init-collect +
-    // pqIters Lloyd round trips (guide §2.6 via graft.util.Par.all;
-    // output order is the input order, results identical)
-    val codebooks: Array[Array[Array[Long]]] = graft.util.Par.all(
-      (0 until m).map(s => () => {
-        val sub = res.select(col("id"),
-          slice(col("ri"), s * subDim + 1, subDim).as("vi"))
-        val initS: Array[Array[Long]] = sub.orderBy(col("id")).limit(kCentroids)
-          .select(col("vi")).collect()
-          .map(_.getAs[scala.collection.Seq[Long]](0).toArray)
-        lloydInt(trainSample(sub, n, maxTrainRows), initS, pqIters)
-      })).toArray
-
-    // encode: per-subspace argmin STAGED (the pqEncodePortable
-    // discipline — greatest/least is opaque to project collapsing)
-    val perSub = (0 until m).map { s =>
-      val sl = slice(col("ri"), s * subDim + 1, subDim)
-      val cand = codebooks(s).zipWithIndex.map { case (cA, i) =>
-        struct(intSqDist(sl, cA).as("d"), lit(i).as("cid"))
-      }
-      if (cand.length < 2) cand.head else least(cand: _*)
-    }
-    val index = res.select(
-      col("id") +: col("cid") +: col("ri") +:
-        (0 until m).map(s => perSub(s).getField("cid").as(s"__c$s")): _*)
-    (index, codebooks)
+    val codebooks = pqCodebooks(res, "ri", m, subDim, kCentroids, pqIters,
+      n, maxTrainRows)
+    (pqIndexRows(res, codebooks, subDim), codebooks)
   }
+
+  /** (id, cid, ri) → (id, cid, ri, __c0..__c{m-1}): the index row
+    * shape, shared by the in-session builds and [[AnnIndex]]'s append.
+    */
+  private[functions] def pqIndexRows(res: DataFrame,
+                                     codebooks: Array[Array[Array[Long]]],
+                                     subDim: Int): DataFrame =
+    res.select(col("id") +: col("cid") +: col("ri") +:
+      pqCodes(col("ri"), codebooks, subDim): _*)
 
   // ---- integer IMI coarse for the IVFADC family: the [[semDedupImi]]
   // product grid in EXACT integer arithmetic, so the at-rest ADC index
@@ -2426,8 +2176,7 @@ object Similarity {
     */
   private[functions] def intImiHalfCodebooks(c0: DataFrame, k: Int, iters: Int,
                                              n: Long, maxTrainRows: Long): (Array[Array[Long]], Array[Array[Long]]) = {
-    val rows = c0.orderBy(col("id")).limit(k).select(col("vi")).collect()
-      .map(_.getAs[scala.collection.Seq[Long]](0).toArray)
+    val rows = lowestIdSeeds[Long](c0, col("vi"), k)
     require(rows.nonEmpty, "int imi codebooks: empty corpus")
     val h = (rows.head.length + 1) / 2
     val h2 = rows.head.length - h
@@ -2481,7 +2230,6 @@ object Similarity {
       cb1: Array[Array[Long]], cb2: Array[Array[Long]],
       codebooks: Array[Array[Array[Long]]],
       dim: Int, m: Int, nProbe: Int, qId: String): DataFrame = {
-    val subDim = dim / m
     val cb1p = intImiPad(cb1, dim, padHead = false)
     val cb2p = intImiPad(cb2, dim, padHead = true)
     val k2 = cb2.length
@@ -2498,15 +2246,10 @@ object Similarity {
         zip_with(col("__qvi"), intImiCellCentroid(cb1, cb2, col("pcid")),
           (a, b) => a - b).as("qri"))
     val q = qResid
-      .select(col(qId) +: col("pcid") +: (0 until m).map { s =>
-        val sl = slice(col("qri"), s * subDim + 1, subDim)
-        array(codebooks(s).map(cA => intSqDist(sl, cA)): _*).as(s"__t$s")
-      }: _*)
+      .select(col(qId) +: col("pcid") +: adcTables(col("qri"), codebooks, dim / m): _*)
     index.join(broadcast(q), col("cid") === col("pcid"))
       .filter(col(qId) =!= col("id"))
-      .select(col(qId), col("id").as("neighbor_id"),
-        (0 until m).map(s => element_at(col(s"__t$s"), col(s"__c$s") + 1))
-          .reduce(_ + _).as("adc_q"))
+      .select(col(qId), col("id").as("neighbor_id"), adcLookup(m).as("adc_q"))
   }
 
   /** The concatenated centroid of a product cell — two O(1) lookups
@@ -2578,121 +2321,16 @@ object Similarity {
   private[functions] def adcProbeScore(qint: DataFrame, index: DataFrame,
       coarse: Array[Array[Long]], codebooks: Array[Array[Array[Long]]],
       dim: Int, m: Int, nProbe: Int, qId: String): DataFrame = {
-    val subDim = dim / m
     val qResid = qint
       .withColumn("pcid", explode_outer(intProbeCids(coarse, col("__qvi"), nProbe)))
       .filter(col("pcid").isNotNull)
       .select(col(qId), col("pcid"),
         zip_with(col("__qvi"), intCentroidOf(coarse, col("pcid")), (a, b) => a - b).as("qri"))
     val q = qResid
-      .select(col(qId) +: col("pcid") +: (0 until m).map { s =>
-        val sl = slice(col("qri"), s * subDim + 1, subDim)
-        array(codebooks(s).map(cA => intSqDist(sl, cA)): _*).as(s"__t$s")
-      }: _*)
+      .select(col(qId) +: col("pcid") +: adcTables(col("qri"), codebooks, dim / m): _*)
     index.join(broadcast(q), col("cid") === col("pcid"))
       .filter(col(qId) =!= col("id"))
-      .select(col(qId), col("id").as("neighbor_id"),
-        (0 until m).map(s => element_at(col(s"__t$s"), col(s"__c$s") + 1))
-          .reduce(_ + _).as("adc_q"))
-  }
-
-  private def ivfPqAdcCore(qint: DataFrame, corpus: DataFrame,
-                           dim: Int, m: Int, kCentroids: Int,
-                           nCentroids: Int, nProbe: Int,
-                           coarseIters: Int, pqIters: Int,
-                           qId: String,
-                           cId: String, cVec: String,
-                           useTablesOpt: Option[Boolean] = None,
-                           maxTrainRows: Long = MaxTrainRows): (DataFrame, DataFrame, Array[Array[Long]]) = {
-    require(m >= 1 && dim % m == 0, s"m=$m must divide dim=$dim")
-    val useTables = useTablesOpt.getOrElse(false)
-    // default: the literal/matrix index machinery ([[ivfPqBuildIndex]]
-    // + [[adcProbeScore]] — the fastest measured coarse shapes, shared
-    // verbatim with the at-rest [[AnnIndex]] path so in-session and
-    // at-rest search cannot drift); `useTablesOpt = Some(true)` forces
-    // the centroid-TABLE machinery below (broadcast join + partial/
-    // bounded aggregation — the shape to reach for if centroids ever
-    // outgrow a plan literal), and the q234 gate pins matrix ≡ table
-    // under the oracle at nC = 130.
-    if (!useTables) {
-      val (index, coarse, codebooks) = ivfPqBuildIndex(corpus, dim, m,
-        kCentroids, nCentroids, coarseIters, pqIters, cId, cVec, maxTrainRows)
-      val scored = adcProbeScore(qint, index, coarse, codebooks, dim, m, nProbe, qId)
-      return (scored, index.select(col("id"), col("cid"), col("ri")), coarse)
-    }
-    val subDim = dim / m
-    val c0 = corpus.select(col(cId).cast("long").as("id"),
-        asDouble(col(cVec)).as("v"))
-      .withColumn("vi", toIntVec(col("v")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = c0.count()
-    val nC = if (nCentroids > 0) nCentroids else autoCentroidsTable(n)
-    val init: Array[Array[Long]] = c0.orderBy(col("id")).limit(nC)
-      .select(col("vi")).collect()
-      .map(_.getAs[scala.collection.Seq[Long]](0).toArray)
-    val coarse = lloydIntTable(trainSample(c0, n, maxTrainRows), init, coarseIters)
-    val cents = intCentroidTable(corpus.sparkSession, coarse)
-
-    // residual relation: integer vi − assigned coarse centroid. The
-    // relation feeds m·pqIters training aggregates plus the encode
-    // pass → checkpointed once.
-    val res = c0.join(tableNearestCidsInt(c0, cents), Seq("id"))
-      .join(broadcast(cents), Seq("cid"))
-      .select(col("id"), col("cid"),
-        zip_with(col("vi"), col("civ"), (a, b) => a - b).as("ri"))
-      .localCheckpoint(true)
-    c0.unpersist()
-
-    // per-subspace residual codebooks (same seeding + sampling rule as
-    // the literal path)
-    // the m subspace trainings are independent read-only consumers of
-    // the CHECKPOINTED residual relation (disjoint coordinate slices,
-    // per-subspace local state only) — overlap their init-collect +
-    // pqIters Lloyd round trips (guide §2.6 via graft.util.Par.all;
-    // output order is the input order, results identical)
-    val codebooks: Array[Array[Array[Long]]] = graft.util.Par.all(
-      (0 until m).map(s => () => {
-        val sub = res.select(col("id"),
-          slice(col("ri"), s * subDim + 1, subDim).as("vi"))
-        val initS: Array[Array[Long]] = sub.orderBy(col("id")).limit(kCentroids)
-          .select(col("vi")).collect()
-          .map(_.getAs[scala.collection.Seq[Long]](0).toArray)
-        lloydInt(trainSample(sub, n, maxTrainRows), initS, pqIters)
-      })).toArray
-
-    // encode: per-subspace argmin STAGED (the pqEncodePortable
-    // discipline — greatest/least is opaque to project collapsing)
-    val perSub = (0 until m).map { s =>
-      val sl = slice(col("ri"), s * subDim + 1, subDim)
-      val cand = codebooks(s).zipWithIndex.map { case (cA, i) =>
-        struct(intSqDist(sl, cA).as("d"), lit(i).as("cid"))
-      }
-      if (cand.length < 2) cand.head else least(cand: _*)
-    }
-    val coded = res.select(
-      col("id") +: col("cid") +:
-        (0 until m).map(s => perSub(s).getField("cid").as(s"__c$s")): _*)
-
-    // queries: probe nProbe coarse lists via the table machinery; per
-    // probed list the query RESIDUAL yields the m ADC tables
-    val qResid = tableProbeCidsInt(
-        qint.select(col(qId).as("id"), col("__qvi").as("vi")), cents, nProbe)
-      .join(qint.withColumnRenamed(qId, "id"), Seq("id"))
-      .join(broadcast(cents), Seq("cid"))
-      .select(col("id").as(qId), col("cid").as("pcid"),
-        zip_with(col("__qvi"), col("civ"), (a, b) => a - b).as("qri"))
-    val q = qResid
-      .select(col(qId) +: col("pcid") +: (0 until m).map { s =>
-        val sl = slice(col("qri"), s * subDim + 1, subDim)
-        array(codebooks(s).map(cA => intSqDist(sl, cA)): _*).as(s"__t$s")
-      }: _*)
-
-    val scored = coded.join(broadcast(q), col("cid") === col("pcid"))
-      .filter(col(qId) =!= col("id"))
-      .select(col(qId), col("id").as("neighbor_id"),
-        (0 until m).map(s => element_at(col(s"__t$s"), col(s"__c$s") + 1))
-          .reduce(_ + _).as("adc_q"))
-    (scored, res, coarse)
+      .select(col(qId), col("id").as("neighbor_id"), adcLookup(m).as("adc_q"))
   }
 
   /** IVFADC with re-ranking (Jégou, Douze & Schmid, TPAMI 2011 §V —
@@ -2717,31 +2355,34 @@ object Similarity {
                       coarseIters: Int = 3, pqIters: Int = 2,
                       qId: String = "query_id", qVec: String = "query_vec",
                       cId: String = "vec_id", cVec: String = "embedding",
-                      useTablesOpt: Option[Boolean] = None,
                       maxTrainRows: Long = MaxTrainRows): DataFrame = {
     require(rerank >= k, s"rerank=$rerank must be >= k=$k")
     // convert ONCE, eagerly — the query side is broadcast-small by
     // contract and feeds two branches (ADC probes + re-rank scoring)
     val qint = toQInt(queries, qId, qVec).localCheckpoint(true)
-    val (scored, res, coarse) = ivfPqAdcCore(qint, corpus, dim, m,
-      kCentroids, nCentroids, nProbe, coarseIters, pqIters, qId, cId, cVec,
-      useTablesOpt, maxTrainRows)
+    val (index, coarse, codebooks) = ivfPqBuildIndex(corpus, dim, m,
+      kCentroids, nCentroids, coarseIters, pqIters, cId, cVec, maxTrainRows)
+    rerankTopK(qint, index,
+      adcProbeScore(qint, index, coarse, codebooks, dim, m, nProbe, qId),
+      k, rerank, qId, intCentroidOf(coarse, _))
+  }
+
+  /** The exact re-rank of IVFADC+R, SHARED by [[ivfPqRerankTopK]] and
+    * [[AnnIndex.searchRerank]] (in-session/at-rest parity is one
+    * definition): the ADC top-`rerank` shortlist from `scored`
+    * (qId, neighbor_id, adc_q), each member's exact integer vector
+    * rebuilt from the index's own rows (`ri + centroidOf(cid)`), exact
+    * integer L2 against `qint`'s `__qvi`, bounded top-k by lowest
+    * `l2_q`. `index` carries (id, cid, ri); `qint` is broadcast-small.
+    */
+  private[functions] def rerankTopK(qint: DataFrame, index: DataFrame,
+                                    scored: DataFrame, k: Int, rerank: Int,
+                                    qId: String,
+                                    centroidOf: Column => Column): DataFrame = {
     val cand = topkByLowest(scored, rerank, qId, "adc_q")
       .select(col(qId), col("neighbor_id"))
-    // reconstruct ONLY the shortlist rows' exact vectors, post-join;
-    // the default lookup is intCentroidOf (which is the one-Literal
-    // matrix element_at past the cap); Some(true) mirrors the core's
-    // forced table machinery with a shortlist-sized broadcast join
-    val useTables = useTablesOpt.getOrElse(false)
-    val recon = res.join(broadcast(cand), res("id") === cand("neighbor_id"))
-      .select(col(qId), col("neighbor_id"), col("cid"), col("ri"))
-    val withCv =
-      if (useTables)
-        recon.join(broadcast(intCentroidTable(res.sparkSession, coarse)), Seq("cid"))
-          .select(col(qId), col("neighbor_id"), col("ri"), col("civ"))
-      else recon.select(col(qId), col("neighbor_id"), col("ri"),
-        intCentroidOf(coarse, col("cid")).as("civ"))
-    val rr = withCv
+    val rr = index.join(broadcast(cand), index("id") === cand("neighbor_id"))
+      .select(col(qId), col("neighbor_id"), col("ri"), centroidOf(col("cid")).as("civ"))
       .join(broadcast(qint), Seq(qId))
       .select(col(qId), col("neighbor_id"),
         IntSqDist.intSqDist(

@@ -1,6 +1,6 @@
 package graft.sink
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
 /** Load rollback (SURVEY.md §2.2 K4): the reference deletes the

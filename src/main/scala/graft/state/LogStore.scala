@@ -272,7 +272,6 @@ object LogStore {
   private[state] def visibleFiles(fs: org.apache.hadoop.fs.FileSystem,
                                   p: org.apache.hadoop.fs.Path): Seq[String] = {
     val statuses = fs.listStatus(p).filter(st => !st.isDirectory)
-    val names = statuses.map(_.getPath.getName)
     val parsed = statuses
       .filter(st => st.getPath.getName.startsWith("_compact-") &&
         st.getPath.getName.endsWith(".json"))

@@ -134,24 +134,78 @@ class IvfPqSpec extends SparkSpec {
       (0L, 3L, 9L * s * s)))
   }
 
+  /** The `k` lowest-id vectors of the fixture in the 2^20 fixed-point form. */
+  private def intSeeds(k: Int): Array[Array[Long]] =
+    emb.orderBy($"vec_id").limit(k).select(Similarity.toIntVec($"embedding"))
+      .collect().map(_.getSeq[Long](0).toArray)
+
   test("centroid-TABLE coarse leg is bit-identical to the literal tree (ADC)") {
-    // the table path (used automatically past MaxLiteralCentroids
-    // derived lists) is a PLAN change only: same exact integer argmin,
-    // same lowest-cid ties — forced onto the same small geometry it
-    // must reproduce the literal path's every id and distance
-    def run(tables: Boolean) =
-      Similarity.ivfPqTopKPortable(queries, emb, k = 10, dim = 64,
-          nCentroids = 16, useTablesOpt = Some(tables))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(run(tables = true) === run(tables = false))
+    // the integer coarse argmin/probe shapes — chained literal tree vs
+    // one-Literal matrix — over 16 centroids plus a copy of centroid 3:
+    // same exact integer distances, same lowest-cid ties, so every
+    // argmin and every 8-deep probe list must match row for row
+    val seeds = intSeeds(16)
+    val cents = seeds :+ seeds(3)
+    val vi = Similarity.toIntVec($"embedding")
+    val chained = Similarity.intDistStructs(cents, $"vi")
+    val matrix = Similarity.intDistStructsMatrix(cents, $"vi")
+    val rows = emb.select($"vec_id".cast("long").as("id"), vi.as("vi"))
+      .select($"id",
+        (-greatest(chained: _*).getField("negcid")).as("a_chained"),
+        array_min(matrix).getField("cid").as("a_matrix"),
+        transform(slice(reverse(array_sort(array(chained: _*))), 1, 8),
+          s => -s.getField("negcid")).as("p_chained"),
+        transform(slice(array_sort(matrix), 1, 8), s => s.getField("cid")).as("p_matrix"))
+      .collect()
+    rows.foreach { r =>
+      assert(r.getInt(1) === r.getInt(2), s"argmin differs for row ${r.getLong(0)}")
+      assert(r.getSeq[Int](3) === r.getSeq[Int](4), s"probe list differs for row ${r.getLong(0)}")
+    }
+    // vector 3 IS centroid 3 and its copy 16: distance 0 to both, and
+    // the tie goes to the lower cid in both shapes
+    val seedRow = rows.find(_.getLong(0) == 3L).get
+    assert(seedRow.getInt(2) === 3)
+    assert(seedRow.getSeq[Int](4).take(2) === Seq(3, 16))
   }
 
   test("centroid-TABLE coarse leg is bit-identical to the literal tree (re-rank)") {
-    def run(tables: Boolean) =
-      Similarity.ivfPqRerankTopK(queries, emb, k = 10, rerank = 50,
-          dim = 64, nCentroids = 16, useTablesOpt = Some(tables))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(run(tables = true) === run(tables = false))
+    // intCentroidOf — the re-rank's cid → centroid lookup — as the
+    // one-Literal matrix (130 centroids, past MaxLiteralCentroids) and
+    // as the chained tree (the first 128 of them): both must return the
+    // same arrays, including the duplicated centroid at cid 100
+    val base = intSeeds(129)
+    val cents = base.take(100) ++ Array(base(3)) ++ base.drop(100)
+    val chainedCents = cents.take(Similarity.MaxLiteralCentroids)
+    val rows = spark.range(cents.length).select($"id".cast("int").as("cid"))
+      .select($"cid",
+        Similarity.intCentroidOf(cents, $"cid").as("m"),
+        Similarity.intCentroidOf(chainedCents, $"cid").as("c"))
+      .collect()
+    rows.foreach { r =>
+      val cid = r.getInt(0)
+      assert(r.getSeq[Long](1) === cents(cid).toSeq, s"matrix lookup of $cid")
+      if (cid < chainedCents.length)
+        assert(r.getSeq[Long](2) === r.getSeq[Long](1), s"chained lookup of $cid")
+    }
+    assert(rows(100).getSeq[Long](2) === rows(3).getSeq[Long](2))
+  }
+
+  test("an empty corpus gives empty IVF, IVFADC and PQ results") {
+    val empty = emb.filter(lit(false))
+    assert(Similarity.ivfTopK(queries, empty, k = 10).count() === 0)
+    assert(Similarity.ivfTopKPortable(queries, empty, k = 10).count() === 0)
+    assert(Similarity.ivfPqTopKPortable(queries, empty, k = 10, dim = 64).count() === 0)
+    assert(Similarity.ivfPqRerankTopK(queries, empty, k = 10, rerank = 50,
+      dim = 64).count() === 0)
+    assert(Similarity.pqAdcTopK(queries, empty, k = 10, dim = 64).count() === 0)
+    assert(Similarity.pqEncodePortable(empty, "vec_id", "embedding", dim = 64)
+      .count() === 0)
+    // an index with no rows could never be read back: build refuses it
+    val table = java.nio.file.Files.createTempDirectory("graft-empty-ann").toString + "/idx"
+    val e = intercept[IllegalArgumentException] {
+      AnnIndex.build(spark, empty, table, dim = 64)
+    }
+    assert(e.getMessage.contains("empty corpus"))
   }
 
   test("ADC distances are deterministic across runs") {

@@ -102,31 +102,56 @@ class MarginSpec extends SparkSpec {
   }
 
   test("ANN margin centroid-TABLE path (forced) recalls >= 0.8") {
-    // force the broadcast-join argmin machinery (round 9 moved the
-    // past-cap default to the matrix form; the table machinery stays
-    // behind useTablesOpt): 150 centroids on the 500-vector fixture
-    // exceeds MaxLiteralCentroids=128 either way, so training,
-    // assignment and both probe legs run at the past-cap geometry
+    // the past-cap geometry: 150 centroids on the 500-vector fixture
+    // exceeds MaxLiteralCentroids=128, so training, assignment and both
+    // probe legs run in the one-Literal MATRIX form. vec_id -1 is an
+    // exact copy of vec_id 0, so the two lowest-id seeds are one
+    // duplicated centroid: the first assignment must break every tie
+    // between them to the lower cid
     val (emb, queries) = realQueries
+    val dup = emb.unionByName(
+      emb.filter(col("vec_id") === 0).withColumn("vec_id", lit(-1L)))
     val r = recallVsBrute(
-      Similarity.marginTopKAnn(queries, emb, k = 5, nCentroids = 150,
-        nProbe = 24, useTablesOpt = Some(true)),
-      emb, queries)
-    assert(r >= 0.8, s"table-path ANN margin recall@5 $r below floor 0.8")
+      Similarity.marginTopKAnn(queries, dup, k = 5, nCentroids = 150,
+        nProbe = 24),
+      dup, queries)
+    assert(r >= 0.8, s"matrix-form ANN margin recall@5 $r below floor 0.8")
   }
 
   test("ANN margin matrix (past-cap default) is bit-identical to the forced-table path") {
-    // the round-9 default swap (table -> matrix with codegen dot past
-    // MaxLiteralCentroids) is a PLAN change only: d = |c|^2 - 2<v,c> is
-    // the exact IEEE negation of the chained score with the identical
-    // driver-side norm constant, and both argmins tie to the lowest
-    // cid — so every id and every rounded margin must match
-    val (emb, queries) = realQueries
-    def run(tables: Option[Boolean]) =
-      Similarity.marginTopKAnn(queries, emb, k = 5, nCentroids = 150,
-          nProbe = 24, useTablesOpt = tables)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(run(None) === run(Some(true)))
+    // the two float argmin/probe shapes over the SAME trained 150
+    // centroids: d = |c|^2 - 2<v,c> is the exact IEEE negation of the
+    // chained score with the identical driver-side norm constant, and
+    // both tie to the lowest cid — so every argmin and every probe list
+    // must match row for row. One centroid is appended twice (the one
+    // row 0 lands in), so the tie rule decides real rows.
+    val (emb, _) = realQueries
+    val c0 = emb.select(col("vec_id").cast("long").as("id"),
+      col("embedding").cast("array<double>").as("v"))
+    val seeds = c0.orderBy(col("id")).limit(150).select(col("v")).collect()
+      .map(_.getSeq[Double](0).toArray)
+    val trained = Similarity.lloydFloat(c0, seeds, 3)
+    val v = col("v")
+    val j = c0.filter(col("id") === 0)
+      .select(array_min(Similarity.floatDistStructsMatrix(trained, v)).getField("cid"))
+      .head().getInt(0)
+    val cents = trained :+ trained(j)
+    val chained = Similarity.floatScoredStructs(cents, v)
+    val matrix = Similarity.floatDistStructsMatrix(cents, v)
+    val rows = c0.select(col("id"),
+        (-greatest(chained: _*).getField("negcid")).as("a_chained"),
+        array_min(matrix).getField("cid").as("a_matrix"),
+        transform(slice(reverse(array_sort(array(chained: _*))), 1, 24),
+          s => -s.getField("negcid")).as("p_chained"),
+        transform(slice(array_sort(matrix), 1, 24), s => s.getField("cid")).as("p_matrix"))
+      .collect()
+    rows.foreach { r =>
+      assert(r.getInt(1) === r.getInt(2), s"argmin differs for row ${r.getLong(0)}")
+      assert(r.getSeq[Int](3) === r.getSeq[Int](4), s"probe list differs for row ${r.getLong(0)}")
+    }
+    val row0 = rows.find(_.getLong(0) == 0L).get
+    assert(row0.getInt(2) === j, "the duplicated centroid's tie goes to the lower cid")
+    assert(row0.getSeq[Int](4).take(2) === Seq(j, cents.length - 1))
   }
 
   test("IMI margin (product cells) recalls >= 0.8 of the brute top-5") {
