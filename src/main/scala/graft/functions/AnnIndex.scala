@@ -51,6 +51,10 @@ object AnnIndex {
                         codebooks: Array[Array[Array[Long]]],
                         coarse2: Array[Array[Long]] = Array.empty) {
     def isImi: Boolean = coarse2.nonEmpty
+    /** The frozen coarse quantizer this sidecar encodes. */
+    private[functions] def quant: Similarity.Coarse[Long] =
+      if (isImi) Similarity.Imi(Similarity.IntKernel, coarse, coarse2)
+      else Similarity.Flat(Similarity.IntKernel, coarse)
   }
 
   /** Sidecars are CONTENT-ADDRESSED (`_graft_ann_meta.<md5-prefix>.json`,
@@ -188,9 +192,7 @@ object AnnIndex {
     // IMI product grid — list size must not grow linearly just because
     // the caller kept the default (the semDedup/marginTopK discipline).
     // The sizing count collapses to a footer-level count(*); the
-    // derived half-k is FORWARDED so the grid build never re-derives
-    // (the dispatcher discipline — its own persisted count still runs,
-    // doubling as the training cache's materialization).
+    // derived half-k is FORWARDED so the grid build never re-derives.
     if (nCentroids <= 0) {
       val n = corpus.count()
       if (n > imiCutoverRows)
@@ -199,26 +201,12 @@ object AnnIndex {
           coarseIters = coarseIters, pqIters = pqIters, cId = cId, cVec = cVec,
           maxTrainRows = maxTrainRows, maxRecordsPerFile = maxRecordsPerFile)
     }
-    val (index, coarse, codebooks) = Similarity.ivfPqBuildIndex(corpus, dim,
-      m, kCentroids, nCentroids, coarseIters, pqIters, cId, cVec, maxTrainRows)
-    // an index with no rows carries no quantizer tag in its commit
-    // stats, so nothing could ever read it back
-    require(coarse.nonEmpty, s"AnnIndex.build: empty corpus, nothing to index at $table")
-    // REPLACE semantics over a live index: the prior state is captured
-    // first and the one commit below swaps it out conflict-checked
-    // (expectedHead), so a concurrent append can never be silently
-    // resurrected with stale codebooks
-    val head = TxTable.headVersion(spark, table)
-    val prior = TxTable.currentFiles(spark, table)
-    val hash = writeMeta(spark, table, Meta(dim, m, kCentroids, coarse, codebooks))
-    val v = commitIndexRows(spark, index.withColumn(QzCol, lit(hash)), table,
-      maxRecordsPerFile, removed = prior, expectedHead = Some(head))
-    clearDriftStats(spark, table)
-    v
+    buildWith(spark, corpus, table, dim, m, kCentroids, coarseIters, pqIters,
+      cId, cVec, maxTrainRows, maxRecordsPerFile, imi = false,
+      n => if (nCentroids > 0) nCentroids else Similarity.autoCentroidsTable(n))
   }
 
-  /** [[build]] with the IMI PRODUCT coarse grid
-    * ([[Similarity.ivfPqBuildIndexImi]]): cell count derives as
+  /** [[build]] with the IMI PRODUCT coarse grid: cell count derives as
     * n / targetCellSize from two ≤4096-entry half codebooks, so list
     * size — and the per-query candidate volume nProbe·cellSize — stays
     * bounded at ANY corpus size (the single-level √n rule saturates at
@@ -232,14 +220,31 @@ object AnnIndex {
                cId: String = "vec_id", cVec: String = "embedding",
                maxTrainRows: Long = Similarity.MaxTrainRows,
                targetCellSize: Long = Similarity.ImiTargetClusterSize,
-               maxRecordsPerFile: Long = 5000000L): Long = {
-    val (index, cb1, cb2, codebooks) = Similarity.ivfPqBuildIndexImi(corpus,
-      dim, m, kCentroids, kPerHalf, coarseIters, pqIters, cId, cVec,
-      maxTrainRows, targetCellSize)
+               maxRecordsPerFile: Long = 5000000L): Long =
+    buildWith(spark, corpus, table, dim, m, kCentroids, coarseIters, pqIters,
+      cId, cVec, maxTrainRows, maxRecordsPerFile, imi = true,
+      n => if (kPerHalf > 0) kPerHalf else Similarity.imiHalfCentroids(n, targetCellSize))
+
+  /** The one build body: [[Similarity.ivfPqBuildIndex]] over either
+    * layout, then ONE replacing commit. REPLACE semantics over a live
+    * index: the prior state is captured first and the commit swaps it
+    * out conflict-checked (expectedHead), so a concurrent append can
+    * never be silently resurrected with stale codebooks.
+    */
+  private def buildWith(spark: SparkSession, corpus: DataFrame, table: String,
+                        dim: Int, m: Int, kCentroids: Int, coarseIters: Int,
+                        pqIters: Int, cId: String, cVec: String,
+                        maxTrainRows: Long, maxRecordsPerFile: Long,
+                        imi: Boolean, cells: Long => Int): Long = {
+    val (index, quant, codebooks) = Similarity.ivfPqBuildIndex(corpus, dim, m,
+      kCentroids, coarseIters, pqIters, cId, cVec, maxTrainRows, imi, cells)
+    // an index with no rows carries no quantizer tag in its commit
+    // stats, so nothing could ever read it back
+    require(quant.nCells > 0, s"AnnIndex: empty corpus, nothing to index at $table")
     val head = TxTable.headVersion(spark, table)
     val prior = TxTable.currentFiles(spark, table)
-    val hash = writeMeta(spark, table,
-      Meta(dim, m, kCentroids, cb1, codebooks, coarse2 = cb2))
+    val (coarse, coarse2) = quant.parts
+    val hash = writeMeta(spark, table, Meta(dim, m, kCentroids, coarse, codebooks, coarse2))
     val v = commitIndexRows(spark, index.withColumn(QzCol, lit(hash)), table,
       maxRecordsPerFile, removed = prior, expectedHead = Some(head))
     clearDriftStats(spark, table)
@@ -288,11 +293,8 @@ object AnnIndex {
     val vi = newRows
       .select(col(cId).cast("long").as("id"), col(cVec).cast("array<double>").as("v"))
       .withColumn("vi", Similarity.toIntVec(col("v")))
-    val base =
-      if (meta.isImi)
-        Similarity.intImiAssignResidual(vi, meta.coarse, meta.coarse2, meta.dim)
-      else Similarity.intAssignResidual(vi, meta.coarse)
-    Similarity.pqIndexRows(base, meta.codebooks, meta.dim / meta.m)
+    Similarity.pqIndexRows(Similarity.assignResidual(vi, meta.quant),
+        meta.codebooks, meta.dim / meta.m)
       .withColumn(QzCol, lit(hash))
   }
 
@@ -709,17 +711,9 @@ object AnnIndex {
     */
   def probedCids(spark: SparkSession, queries: DataFrame, meta: Meta,
                  nProbe: Int, qId: String = "query_id",
-                 qVec: String = "query_vec"): Set[Long] = {
-    val qint = Similarity.toQInt(queries, qId, qVec)
-    if (meta.isImi)
-      Similarity.intImiQueryProbeCells(qint, meta.coarse, meta.coarse2,
-          meta.dim, nProbe)
-        .distinct().collect().map(_.getLong(0)).toSet
-    else qint.select(explode_outer(
-        Similarity.intProbeCids(meta.coarse, col("__qvi"), nProbe)).as("cid"))
-      .filter(col("cid").isNotNull)
-      .distinct().collect().map(_.getInt(0).toLong).toSet
-  }
+                 qVec: String = "query_vec"): Set[Long] =
+    meta.quant.probeRows(Similarity.toQInt(queries, qId, qVec), "__qvi", nProbe, Nil)
+      .distinct().collect().map(_.getAs[Number](0).longValue).toSet
 
   /** Committed files whose cid stats may hold a probed list — under the
     * Hive layout each file's stat is lo = hi = its dir's cid, so this
@@ -769,9 +763,7 @@ object AnnIndex {
     val qint = Similarity.toQInt(queries, qId, qVec).localCheckpoint(true)
     probedScores(spark, table, queries, qint, nProbe, qId, qVec)
       .fold(emptyResult(spark, qId, "l2_q")) { case Probed(meta, index, scored) =>
-        Similarity.rerankTopK(qint, index, scored, k, rerank, qId, cid =>
-          if (meta.isImi) Similarity.intImiCellCentroid(meta.coarse, meta.coarse2, cid)
-          else Similarity.intCentroidOf(meta.coarse, cid))
+        Similarity.rerankTopK(qint, index, scored, k, rerank, qId, meta.quant.centroidOf)
       }
   }
 
@@ -779,8 +771,8 @@ object AnnIndex {
   private final case class Probed(meta: Meta, index: DataFrame, scored: DataFrame)
 
   /** The probe half both searches share: files pruned to the probed
-    * lists, then the exact [[Similarity.adcProbeScore]] (or its IMI
-    * form) over the pruned read. None when nothing can match — an
+    * lists, then the exact [[Similarity.adcProbeScore]] over the pruned
+    * read. None when nothing can match — an
     * empty query set, or probed lists that are all EMPTY (Lloyd keeps
     * empty clusters' centroids, so there is no committed file, and a
     * schemaless scan would fail the join on `cid`).
@@ -794,12 +786,8 @@ object AnnIndex {
     if (pf.isEmpty) None
     else {
       val index = TxTable.readFiles(spark, table, pf)
-      Some(Probed(meta, index,
-        if (meta.isImi)
-          Similarity.adcProbeScoreImi(qint, index, meta.coarse, meta.coarse2,
-            meta.codebooks, meta.dim, meta.m, nProbe, qId)
-        else Similarity.adcProbeScore(qint, index, meta.coarse, meta.codebooks,
-          meta.dim, meta.m, nProbe, qId)))
+      Some(Probed(meta, index, Similarity.adcProbeScore(qint, index, meta.quant,
+        meta.codebooks, meta.dim, meta.m, nProbe, qId)))
     }
   }
 

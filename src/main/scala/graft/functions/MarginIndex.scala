@@ -28,7 +28,7 @@ import graft.sink.TxTable
   * Bit-parity with the in-session path is STRUCTURAL: the self-kNN
   * a-mean leg, the query probe staging, and the margin/top-k tail are
   * the same definitions [[Similarity.marginTopKImi]] runs
-  * ([[Similarity.imiSelfKnnAMeans]] / [[Similarity.imiQueryProbes]] /
+  * ([[Similarity.imiSelfKnnAMeans]] / [[Similarity.queryProbes]] /
   * [[Similarity.marginNormalizeTopK]]); the candidate cosine join is
   * the one deliberate divergence (a-means ride the pruned read instead
   * of an in-session join). MarginIndexSpec pins `search` ≡
@@ -72,7 +72,10 @@ object MarginIndex {
 
   /** Frozen build state: margin fold width, probe depth, half codebooks. */
   final case class Meta(knn: Int, nProbe: Int,
-                        cb1: Array[Array[Double]], cb2: Array[Array[Double]])
+                        cb1: Array[Array[Double]], cb2: Array[Array[Double]]) {
+    private[functions] def quant: Similarity.Coarse[Double] =
+      Similarity.Imi(Similarity.FloatKernel, cb1, cb2)
+  }
 
   /** Rows carry their codebook generation like [[AnnIndex.QzCol]]. */
   val QzCol: String = AnnIndex.QzCol
@@ -169,28 +172,23 @@ object MarginIndex {
         Similarity.asDouble(col(cVec)).as("v"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val n = c0.count()
+    // an index with no rows carries no codebook tag in its commit
+    // stats, so nothing could ever read it back
+    require(n > 0, s"MarginIndex.build: empty corpus, nothing to index at $table")
     val kH = if (kPerHalf > 0) kPerHalf
       else Similarity.imiHalfCentroids(n, targetClusterSize)
-    val (cb1, cb2) = Similarity.imiTrainedHalfCodebooks(c0, kH, iters, n, maxTrainRows)
-    val dim = cb1.head.length + cb2.head.length
-    val cb1p = Similarity.imiPad(cb1, dim, padHead = false)
-    val cb2p = Similarity.imiPad(cb2, dim, padHead = true)
-    val assigned = c0
-      .select(col("id"), col("v"),
-        Similarity.imiCellIdFrom(cb1p, cb2p, col("v")).as("cid"),
-        Similarity.l2norm(col("v")).as("__cn"),
-        Similarity.imiHalfProbes(cb1p, col("v"), nProbe).as("__s1"),
-        Similarity.imiHalfProbes(cb2p, col("v"), nProbe).as("__s2"))
-      .localCheckpoint(true)
+    val quant = Similarity.trainCoarse(Similarity.FloatKernel, c0, n, imi = true,
+      kH, iters, maxTrainRows)
+    val assigned = Similarity.probeAssigned(c0, quant, nProbe).localCheckpoint(true)
     c0.unpersist()
     // the self-kNN a-mean leg IS marginTopKImi's — one shared
     // definition ([[Similarity.imiSelfKnnAMeans]]), so the at-rest
     // parity is structural, not copy-discipline
-    val nnMean = Similarity.imiSelfKnnAMeans(assigned, cb2p.length, nProbe,
-      knn, nCells = cb1p.length * cb2p.length)
+    val nnMean = Similarity.imiSelfKnnAMeans(assigned, quant, nProbe, knn)
 
     val head = TxTable.headVersion(spark, table)
     val prior = TxTable.currentFiles(spark, table)
+    val (cb1, cb2) = quant.parts
     val hash = writeMeta(spark, table, Meta(knn, nProbe, cb1, cb2))
     // LEFT join: a row whose probed cells hold no OTHER row gets no
     // a-mean group from the kNN leg. Dropping it (the pre-r12 inner
@@ -207,8 +205,7 @@ object MarginIndex {
       .join(nnMean, Seq("id"), "left_outer")
       .select(col("id"), col("v"), col("cn"), col("a"), col("ck"),
         coalesce(col("nk"), lit(0L)).as("nk"), col("cid"), col("cid").as("hc"))
-      .unionByName(probeRowsOf(assigned, cb2p.length,
-        cb1p.length.toLong * cb2p.length, nProbe))
+      .unionByName(probeRowsOf(assigned, quant, nProbe))
       .withColumn(QzCol, lit(hash))
     val files = TxTable.stageBatch(spark,
       rows.repartition(AnnIndex.cidWriteParts(rows), col("cid")), table,
@@ -218,23 +215,22 @@ object MarginIndex {
       expectedHead = Some(head), stats = stats)
   }
 
-  /** The probe INVERTED rows of an assigned relation (id, cid, __s1,
-    * __s2): one row per probed cell, Hive-partitioned PAST the real
+  /** The probe INVERTED rows of a [[Similarity.probeAssigned]]
+    * relation: one row per probed cell, Hive-partitioned PAST the real
     * cells (`cid = nCells + probed cell`) so an append can discover
     * "who probes these cells?" from a pruned read. Schema-aligned with
     * the data rows (null payload, `hc` = the row's home cell).
     */
-  private def probeRowsOf(assigned: DataFrame, k2: Int, nCells: Long,
+  private def probeRowsOf(assigned: DataFrame, quant: Similarity.Coarse[Double],
                           nProbe: Int): DataFrame =
     assigned
       .select(col("id"), col("cid").as("hc"),
-        explode_outer(Similarity.imiProbeCellsOf(col("__s1"), col("__s2"),
-          k2, nProbe)).as("pc"))
+        explode_outer(quant.probeCells(col("v"), nProbe)).as("pc"))
       .filter(col("pc").isNotNull)
       .select(col("id"), lit(null).cast("array<double>").as("v"),
         lit(null).cast("double").as("cn"), lit(null).cast("double").as("a"),
         lit(null).cast("double").as("ck"), lit(null).cast("long").as("nk"),
-        (col("pc") + lit(nCells)).as("cid"), col("hc"))
+        (col("pc") + lit(quant.nCells)).as("cid"), col("hc"))
 
   /** Incremental maintenance — the round-10 verdict's rebuild-only gap
     * closed: append `newRows` and repair EXACTLY the a-means the batch
@@ -288,23 +284,15 @@ object MarginIndex {
     val head = TxTable.headVersion(spark, table)
     val hash = AnnIndex.currentMetaHash(spark, table)
     val meta = readMeta(spark, table)
-    val dim = meta.cb1.head.length + meta.cb2.head.length
-    val cb1p = Similarity.imiPad(meta.cb1, dim, padHead = false)
-    val cb2p = Similarity.imiPad(meta.cb2, dim, padHead = true)
-    val k2 = cb2p.length
-    val nCells = cb1p.length.toLong * k2
+    val quant = meta.quant
+    val nCells = quant.nCells
 
     // 1. frozen map-only assignment of the batch, probe slices staged
     val batchAssigned = graft.util.JobLabel(spark.sparkContext,
-      "margin-append: assign batch") { newRows
-      .select(col(cId).cast("long").as("id"),
-        Similarity.asDouble(col(cVec)).as("v"))
-      .select(col("id"), col("v"),
-        Similarity.imiCellIdFrom(cb1p, cb2p, col("v")).as("cid"),
-        Similarity.l2norm(col("v")).as("__cn"),
-        Similarity.imiHalfProbes(cb1p, col("v"), meta.nProbe).as("__s1"),
-        Similarity.imiHalfProbes(cb2p, col("v"), meta.nProbe).as("__s2"))
-      .localCheckpoint(true) }
+      "margin-append: assign batch") {
+      Similarity.probeAssigned(newRows.select(col(cId).cast("long").as("id"),
+          Similarity.asDouble(col(cVec)).as("v")), quant, meta.nProbe)
+        .localCheckpoint(true) }
     val newCells = graft.util.JobLabel(spark.sparkContext,
       "margin-append: new cells") {
       batchAssigned.select(col("cid")).distinct().collect()
@@ -389,22 +377,18 @@ object MarginIndex {
     // as at their own insertion)
     val affRows = rewriteMembers
       .join(displaced.select(col("id")), Seq("id"))
-      .select(col("id"), col("v"), col("cn").as("__cn"),
-        Similarity.imiHalfProbes(cb1p, col("v"), meta.nProbe).as("__s1"),
-        Similarity.imiHalfProbes(cb2p, col("v"), meta.nProbe).as("__s2"))
+      .select(Seq(col("id"), col("v"), col("cn").as("__cn")) ++
+        quant.probeStage(col("v"), meta.nProbe): _*)
       .transform(d => graft.util.JobLabel(spark.sparkContext,
         "margin-append: displaced rows restage") { d.localCheckpoint(true) })
     val needA = affRows.unionByName(
-      batchAssigned.select(col("id"), col("v"), col("__cn"),
-        col("__s1"), col("__s2")))
+      batchAssigned.select(affRows.columns.toSeq.map(col): _*))
 
     // 6. the exact candidate pool: every probed cell of every needA
     // row — standing members from a pruned read, plus the batch itself
     val candCells = graft.util.JobLabel(spark.sparkContext,
       "margin-append: candidate cells") {
-      needA.select(explode_outer(
-          Similarity.imiProbeCellsOf(col("__s1"), col("__s2"), k2,
-            meta.nProbe)).as("cid"))
+      needA.select(explode_outer(quant.probeCells(col("v"), meta.nProbe)).as("cid"))
         .filter(col("cid").isNotNull)
         .distinct().collect().map(_.getLong(0)).toSet }
     val candFiles = AnnIndex.probedFiles(spark, table, candCells)
@@ -417,8 +401,8 @@ object MarginIndex {
         .select(col("cid"), col("id"), col("v"), col("__cn")))
     val newA = graft.util.JobLabel(spark.sparkContext,
       "margin-append: a-mean recompute") {
-      Similarity.imiKnnAMeansOver(needA, candMembers, k2,
-          meta.nProbe, meta.knn, nCells = cb1p.length * cb2p.length)
+      Similarity.imiKnnAMeansOver(needA, candMembers,
+          quant.probeCells(col("v"), meta.nProbe), meta.knn, nCells)
         .localCheckpoint(true) } // updated + newMain
 
     // 7. assemble the rewritten partitions + the batch's data/probe rows
@@ -446,7 +430,7 @@ object MarginIndex {
         coalesce(col("nk"), lit(0L)).as("nk"), col("cid"))
     val rows = keep.unionByName(updated).unionByName(newMain)
       .withColumn("hc", col("cid"))
-      .unionByName(probeRowsOf(batchAssigned, k2, nCells, meta.nProbe))
+      .unionByName(probeRowsOf(batchAssigned, quant, meta.nProbe))
       .withColumn(QzCol, lit(hash))
 
     // 7. one conflict-checked commit: touched partitions swap, batch
@@ -503,12 +487,9 @@ object MarginIndex {
   def search(spark: SparkSession, table: String, queries: DataFrame, k: Int,
              qId: String = "query_id", qVec: String = "query_vec"): DataFrame = {
     val meta = readMeta(spark, table)
-    val dim = meta.cb1.head.length + meta.cb2.head.length
-    val cb1p = Similarity.imiPad(meta.cb1, dim, padHead = false)
-    val cb2p = Similarity.imiPad(meta.cb2, dim, padHead = true)
-    // probe staging + cell explosion shared with marginTopKImi/
-    // ivfTopKImi ([[Similarity.imiQueryProbes]])
-    val q = Similarity.imiQueryProbes(queries, cb1p, cb2p, meta.nProbe, qId, qVec)
+    // probe staging + cell explosion shared with every in-session
+    // search ([[Similarity.queryProbes]])
+    val q = Similarity.queryProbes(meta.quant, queries, meta.nProbe, qId, qVec)
     val probed = q.select(col("cid")).distinct().collect()
       .map(_.getLong(0)).toSet // <= |queries|·nProbe ids, the pruning key
     if (probed.isEmpty) return emptyResult(spark, qId)

@@ -1,35 +1,51 @@
 package graft.functions
 
+import scala.reflect.ClassTag
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Vector similarity over an embedding column (`array<float>`):
-  * brute-force cosine top-k as the exact baseline, and a random-
-  * hyperplane-LSH bucketed variant as the scale path.
+  * brute-force cosine top-k as the exact baseline, random-hyperplane
+  * LSH, and the IVF family — inverted-file top-k, trained SemDeDup, the
+  * margin legs and IVFADC (Jégou, Douze & Schmid, TPAMI 2011) — as the
+  * scale paths.
   *
-  * Scale model: brute force is a broadcast of the (small) query set and
-  * ONE pass over the corpus — embarrassingly parallel, no corpus shuffle;
-  * the only shuffle is the per-query top-k (tiny). The LSH variant cuts
-  * the compared fraction to the bucket hit rate; both share the same
-  * codegen'd dot-product kernel (higher-order functions, no UDF).
-  * Embedding-cosine near-dup reuses the LSH signature as its bucket key.
+  * The IVF family is ONE algorithm over two independent axes, carried
+  * by one value, the coarse quantizer [[Similarity.Coarse]]:
   *
-  * The IVF families assign and probe coarse lists in one of two
-  * expression shapes, picked from the centroid count: a chained literal
-  * tree up to [[Similarity.MaxLiteralCentroids]] centroids (the form
-  * the oracles replay), and one matrix literal with the codegen
-  * distance kernel in a lambda past it (O(1) plan size).
+  *  - the distance KERNEL: float cosine-ranked L2 over doubles with the
+  *    codegen [[DotProduct]] ([[Similarity.FloatKernel]] — fast,
+  *    deterministic, spec-pinned), or fixed-point integer L2 with the
+  *    codegen [[IntSqDist]] ([[Similarity.IntKernel]] — every step
+  *    replays bit for bit in SQL, so the `*Portable` entry points are
+  *    oracle-gated);
+  *  - the codebook LAYOUT: a flat list of centroids
+  *    ([[Similarity.Flat]], √n lists) or the inverted multi-index grid
+  *    of two half codebooks ([[Similarity.Imi]], Babenko & Lempitsky,
+  *    CVPR 2012), which keeps cell size bounded past the 4096-list
+  *    driver-array ceiling.
+  *
+  * The quantizer owns training (one Lloyd loop whose kernel supplies
+  * the argmin and the mean), the cell id of a vector, the probe staging
+  * and probe cells, the cell centroid lookup and the cell count. Each
+  * public entry point picks a kernel and a layout and calls one body
+  * per family (`ivfOn`, `semDedupOn`, `marginOn`, [[Similarity.ivfPqBuildIndex]]
+  * + [[Similarity.adcProbeScore]]); the at-rest indexes ([[AnnIndex]],
+  * [[VecIndex]], [[MarginIndex]]) rebuild the same value from their
+  * sidecars. Argmins and probes take a chained literal tree up to
+  * [[Similarity.MaxLiteralCentroids]] centroids (the form the oracles
+  * replay) and one matrix literal with the kernel in a lambda past it
+  * (O(1) plan size); both order by (distance, cid), ties to the lowest
+  * cid, so they agree row for row.
   */
 object Similarity {
 
-  /** Cap for DERIVED IVF list counts on the CHAINED-LITERAL-TREE path:
-    * bounds the driver's centroid collect (cap×dim doubles) and — the
-    * binding constraint — the per-row argmin, which is a literal
-    * expression tree of nCentroids dot products. Past ~65k vectors the
-    * √n rule saturates here; beyond that [[marginTopKAnn]]'s helpers
-    * switch to the one-Literal MATRIX form with the codegen dot
-    * (round 9 — O(1) plan size, fastest measured float shape), so its
-    * √n sizing runs uncapped to [[MaxTableCentroids]].
+  /** Cap for DERIVED list counts of the [[ivfTopK]]/[[ivfTopKPortable]]/
+    * [[marginTopKAnnPortable]] rule ([[autoCentroids]]): bounds the
+    * driver's centroid collect (cap×dim values). The other derived
+    * counts ([[autoCentroidsTable]]) run to [[MaxTableCentroids]]; the
+    * two rules agree up to 65,536 rows.
     */
   val MaxAutoCentroids = 256
 
@@ -327,100 +343,224 @@ object Similarity {
         cosineWithNorms(col("__qv"), col("__cv"), col("__qn"), col("__cn")).as("cos")), k, qId)
   }
 
-  /** IVF (inverted-file) approximate top-k: k-means centroids partition
-    * the corpus into `nCentroids` lists; each query probes only its
-    * `nProbe` nearest lists. The LSH alternative (`annTopK`) needs no
-    * training but can't adapt bucket sizes to the data; IVF trades a few
-    * Lloyd iterations for data-shaped buckets.
-    *
-    * All distributed work is DataFrame jobs with codegen'd DotProduct —
-    * assignment is an argmin over centroid literals (no shuffle), the
-    * centroid update is one hash aggregate over (cluster, dim); only the
-    * nCentroids×dim centroid table ever reaches the driver. At corpus
-    * scale both halves of the index story are CODE: training runs on the
-    * bounded [[MaxTrainRows]] hash sample (assignment is the one pass
-    * that touches every row), and [[AnnIndex]] writes the encoded corpus
-    * as a cid-partitioned TxTable whose probes prune files at rest.
-    *
-    * Deterministic: init = lowest-id vectors; argmin ties → lowest
-    * cluster id; empty clusters keep their previous centroid. (Centroid
-    * means are float sums across partitions, so last-ulp centroid drift
-    * can reorder equal-distance probes — scores of RETURNED candidates
-    * are exact cosine regardless.)
-    *
-    * `nCentroids ≤ 0` (the DEFAULT) derives the list count from the
-    * corpus: ceil(√n) capped at [[MaxAutoCentroids]] — the standard IVF
-    * sizing rule, applied in code so a caller who keeps the default at a
-    * billion vectors gets ~√n lists (up to the cap), not a fixture
-    * constant. The cap bounds BOTH the driver's centroid collect and the
-    * per-row argmin expression (which is a literal tree of nCentroids
-    * dot products). Explicit counts override — the gate queries pin
-    * (16, 8, 3), the IVF-sweep knee on the 500-vector fixture (SCALE.md,
-    * "100× scaling probe (round 5)"): recall@10 = 0.9238 (sf0.001) /
-    * 0.9190 (sf0.01), floor-pinned at 0.85 by AnnRecallSpec (which also
-    * pins the DERIVED sizing at 1×
-    * and 10× the fixture). The fixture's probed fraction (8/16) is an
-    * artifact of 31-vector lists — at corpus scale nCentroids grows ~√n
-    * with nProbe held, so the probed fraction collapses while per-list
-    * statistics only improve.
+  // ---- the coarse quantizer: (kernel × layout), one algorithm.
+
+  /** A coarse-quantizer distance kernel over `Array[T]` centroids, in
+    * the two argmin shapes: [[chained]] — one struct per centroid whose
+    * greatest() is the nearest, lowest cid on ties — and [[matrix]] —
+    * the whole centroid set as ONE typedLit 2-D array with the codegen
+    * kernel INSIDE the transform lambda, struct(d, cid) per centroid,
+    * array_min = nearest. The chained tree outgrows codegen at ~10²
+    * centroids; the matrix form is O(1) plan size and the fastest
+    * measured shape once its kernel is codegen'd (SCALE.md rounds 8 and
+    * 9: an interpreted aggregate(zip_with) kernel made every shape
+    * equally wrong).
     */
-  // ---- float-IVF internals, parameterized by the trained centroid
-  // array so one training can serve several probe legs (marginTopKAnn
-  // trains ONCE and probes twice). Expression shapes identical to the
-  // pre-refactor inline defs — q61/b61 plans and outputs unchanged.
-
-  /** (2<v,c> − |c|², −cid) structs: greatest == nearest centroid with
-    * lowest-cid tie-break; |v|² is constant per row so argmax over this
-    * score is argmin of squared distance.
-    */
-  private[functions] def floatScoredStructs(centroids: Array[Array[Double]], v: Column) =
-    centroids.zipWithIndex.map { case (cArr, i) =>
-      struct((dot(v, lit(cArr)) * 2 - lit(cArr.map(x => x * x).sum)).as("score"),
-        lit(-i).as("negcid"))
-    }
-
-  // ---- float MATRIX-literal form (round 9): the whole centroid set as
-  // ONE typedLit 2-D array with the codegen DotProduct INSIDE the
-  // transform lambda — the integer family's matrix shape, floated. The
-  // r8 bake-off rejected the float matrix purely because its dot was an
-  // interpreted aggregate(zip_with) lambda (36.3 s at 200k×448); with
-  // DotProduct in the lambda it is the fastest float shape at every
-  // probed geometry (f-matrixK 3.24 s vs chained 5.27 / table 3.67 at
-  // 200k×448; 0.28 vs 0.71 / 0.46 at 20k×142 — SCALE.md round 9) AND O(1)
-  // plan size, so the √n list sizing runs past the chained-literal cap
-  // with no broadcast-join materialization.
-  // d = |c|² − 2⟨v,c⟩ is the exact IEEE negation of the chained form's
-  // score, with the identical driver-side norm constant, so (dist, cid)
-  // ordering matches the chained tree bit for bit (bake-off parity: 0
-  // diffs at 142 and 448).
-
-  private[functions] def floatDistStructsMatrix(centroids: Array[Array[Double]], v: Column): Column = {
-    val norms2 = typedLit(centroids.map(c => c.map(x => x * x).sum).toSeq)
-    transform(typedLit(centroids.map(_.toSeq).toSeq), (c, i) =>
-      struct((element_at(norms2, i + 1) - dot(v, c) * 2).as("d"), i.as("cid")))
+  private[functions] sealed abstract class Kernel[T](implicit val ct: ClassTag[T]) {
+    /** The kernel-space vector column of a corpus relation. */
+    val vec: String
+    /** A double-array column mapped into kernel space. */
+    def of(v: Column): Column
+    val zero: T
+    /** The SQL type of one kernel-space vector. */
+    val arrType: String
+    def chained(cents: Array[Array[T]], v: Column): Seq[Column]
+    def centMatrix(cents: Array[Array[T]]): Column
+    def matrix(cents: Array[Array[T]], v: Column): Column
+    /** (cid, pos, x) → (cid, pos, m): the Lloyd mean per coordinate. */
+    def means(x: DataFrame): DataFrame
   }
 
-  /** greatest() needs ≥2 args — one centroid (tiny corpus /
-    * nCentroids=1) means everything lives in list 0. Past
-    * [[MaxLiteralCentroids]] the matrix form takes over (O(1) plan
-    * size; fastest measured — see above).
+  /** Float kernel: (2⟨v,c⟩ − |c|², −cid) chained; the matrix d =
+    * |c|² − 2⟨v,c⟩ is its exact IEEE negation with the identical
+    * driver-side norm constant (|v|² is row-constant, so both rank L2).
+    * Means are distributed float averages — deterministic, but
+    * partition-order last-ulp drift keeps them out of SQL replay.
     */
-  private def floatNearestCid(centroids: Array[Array[Double]], v: Column): Column =
-    if (centroids.length < 2) lit(0)
-    else if (centroids.length > MaxLiteralCentroids)
-      array_min(floatDistStructsMatrix(centroids, v)).getField("cid")
-    else -greatest(floatScoredStructs(centroids, v): _*).getField("negcid")
+  private[functions] object FloatKernel extends Kernel[Double] {
+    val vec = "v"
+    def of(v: Column): Column = v
+    val zero = 0.0
+    val arrType = "array<double>"
+    def centMatrix(cents: Array[Array[Double]]): Column = typedLit(cents.map(_.toSeq).toSeq)
+    def chained(cents: Array[Array[Double]], v: Column): Seq[Column] =
+      cents.toSeq.zipWithIndex.map { case (c, i) =>
+        struct((dot(v, lit(c)) * 2 - lit(c.map(x => x * x).sum)).as("score"),
+          lit(-i).as("negcid"))
+      }
+    def matrix(cents: Array[Array[Double]], v: Column): Column = {
+      val norms2 = typedLit(cents.map(c => c.map(x => x * x).sum).toSeq)
+      transform(centMatrix(cents), (c, i) =>
+        struct((element_at(norms2, i + 1) - dot(v, c) * 2).as("d"), i.as("cid")))
+    }
+    def means(x: DataFrame): DataFrame =
+      x.groupBy(col("cid"), col("pos")).agg(avg(col("x")).as("m"))
+  }
 
-  private def floatProbeCids(centroids: Array[Array[Double]], v: Column,
-                             nProbe: Int): Column =
-    if (centroids.length < 2) array(lit(0))
-    else if (centroids.length > MaxLiteralCentroids)
-      transform(
-        slice(array_sort(floatDistStructsMatrix(centroids, v)), 1, nProbe),
+  /** Fixed-point integer kernel, the engine-portable discipline:
+    * `round(v·2²⁰)` longs (sub-ppm placement error), exact [[IntSqDist]]
+    * distances (≤ 2.7·10¹⁶ for 64 dims at |v| ≤ 10 — inside Long),
+    * (−d, −cid) chained, and exact floor-division means in the pmod
+    * form, so training, assignment and probing replay in any SQL engine.
+    */
+  private[functions] object IntKernel extends Kernel[Long] {
+    val vec = "vi"
+    def of(v: Column): Column = toIntVec(v)
+    val zero = 0L
+    val arrType = "array<bigint>"
+    def centMatrix(cents: Array[Array[Long]]): Column = typedLit(cents.map(_.toSeq).toSeq)
+    def chained(cents: Array[Array[Long]], v: Column): Seq[Column] =
+      cents.toSeq.zipWithIndex.map { case (c, i) =>
+        struct((-intSqDist(v, c)).as("negd"), lit(-i).as("negcid"))
+      }
+    def matrix(cents: Array[Array[Long]], v: Column): Column =
+      transform(centMatrix(cents), (c, i) =>
+        struct(IntSqDist.intSqDist(v, c).as("d"), i.as("cid")))
+    def means(x: DataFrame): DataFrame =
+      x.groupBy(col("cid"), col("pos"))
+        .agg(sum(col("x")).as("s"), count(lit(1)).as("n"))
+        // exact floor division, engine-portable: (s − pmod(s, n)) div n
+        .select(col("cid"), col("pos"), expr("(s - pmod(s, n)) div n").as("m"))
+  }
+
+  /** The nearest centroid's id (int): chained up to
+    * [[MaxLiteralCentroids]], matrix past it. greatest() needs ≥ 2
+    * args, so one centroid is list 0; no centroids (an empty corpus)
+    * is a typed null.
+    */
+  private[functions] def nearest[T](kern: Kernel[T], cents: Array[Array[T]],
+                                    v: Column): Column =
+    if (cents.isEmpty) lit(null).cast("int")
+    else if (cents.length < 2) lit(0)
+    else if (cents.length > MaxLiteralCentroids)
+      array_min(kern.matrix(cents, v)).getField("cid")
+    else -greatest(kern.chained(cents, v): _*).getField("negcid")
+
+  /** The `nProbe` nearest centroid ids, nearest first — [[nearest]]'s
+    * shapes and tie rule.
+    */
+  private[functions] def probeCids[T](kern: Kernel[T], cents: Array[Array[T]],
+                                      v: Column, nProbe: Int): Column =
+    if (cents.isEmpty) lit(null).cast("array<int>")
+    else if (cents.length < 2) array(lit(0))
+    else if (cents.length > MaxLiteralCentroids)
+      transform(slice(array_sort(kern.matrix(cents, v)), 1, nProbe),
         s => s.getField("cid"))
     else transform(
-      slice(reverse(array_sort(array(floatScoredStructs(centroids, v): _*))), 1, nProbe),
+      slice(reverse(array_sort(array(kern.chained(cents, v): _*))), 1, nProbe),
       s => -s.getField("negcid"))
+
+  /** The coarse quantizer: one [[Kernel]] over one codebook layout. It
+    * owns the cell id of a kernel-space vector, the probe staging and
+    * probe cells, the cell centroid lookup and the cell count — every
+    * IVF-family body runs against this value instead of a layout fork.
+    */
+  private[functions] sealed abstract class Coarse[T] {
+    def kernel: Kernel[T]
+    def nCells: Long
+    /** The cell id of a kernel-space vector column. */
+    def cellId(kv: Column): Column
+    /** Columns to stage (and materialize) before [[probeCells]] reads them. */
+    def probeStage(kv: Column, nProbe: Int): Seq[Column]
+    /** The `nProbe` nearest cells, nearest first. */
+    def probeCells(kv: Column, nProbe: Int): Column
+    /** The centroid of cell `cid`, in kernel space; typed null if no cells. */
+    def centroidOf(cid: Column): Column
+    /** The sidecar encoding: (list centroids, empty) or (cb1, cb2). */
+    def parts: (Array[Array[T]], Array[Array[T]])
+
+    /** `df` exploded to one row per probed cell (`cell`), keeping `keep`.
+      * Staged probe columns are materialized first (broadcast-small
+      * query sides by contract): the grid lambda must read attributes,
+      * never re-sort the codebook distances per outer element (the
+      * repeated-lambda audit). explode_outer + null filter: an inferred
+      * pre-Generate filter would recompute the distance array per row
+      * (graft.util.Explode).
+      */
+    def probeRows(df: DataFrame, kv: String, nProbe: Int, keep: Seq[String],
+                  cell: String = "cid"): DataFrame = {
+      val stage = probeStage(col(kv), nProbe)
+      val staged = if (stage.isEmpty) df
+        else df.select(keep.map(col) ++ stage: _*).localCheckpoint(true)
+      staged.select(keep.map(col) :+ explode_outer(probeCells(col(kv), nProbe)).as(cell): _*)
+        .filter(col(cell).isNotNull)
+    }
+  }
+
+  /** Single-level IVF lists; `cents` are the list centroids, cid int. */
+  private[functions] final case class Flat[T](kernel: Kernel[T],
+                                              cents: Array[Array[T]]) extends Coarse[T] {
+    def nCells: Long = cents.length.toLong
+    def cellId(kv: Column): Column = nearest(kernel, cents, kv)
+    def probeStage(kv: Column, nProbe: Int): Seq[Column] = Nil
+    def probeCells(kv: Column, nProbe: Int): Column = probeCids(kernel, cents, kv, nProbe)
+    /** Chained `when` lookup up to [[MaxLiteralCentroids]] (the oracle-
+      * replayed gate form), one element_at into the matrix past it.
+      */
+    def centroidOf(cid: Column): Column =
+      if (cents.isEmpty) lit(null).cast(kernel.arrType)
+      else if (cents.length > MaxLiteralCentroids)
+        element_at(kernel.centMatrix(cents), cid.cast("int") + 1)
+      else cents.indices.tail.foldLeft(when(cid === lit(0), lit(cents(0)))) {
+        (acc, i) => acc.when(cid === lit(i), lit(cents(i)))
+      }
+    def parts: (Array[Array[T]], Array[Array[T]]) =
+      (cents, Array.empty[Array[T]](kernel.ct.wrap))
+  }
+
+  /** The inverted multi-index PRODUCT grid: each vector half is
+    * quantized against its own ≤ 4096-entry codebook and the cell is the
+    * pair, cid = c1·k2 + c2 — k1·k2 (up to ~16.7M) effective lists from
+    * two argmins, while the driver only ever holds k1 + k2 half-width
+    * centroids. The half codebooks are ZERO-PADDED to full width (tail
+    * for the first half, head for the second): the padded distance
+    * differs from the half distance by a row constant, so every argmin
+    * and probe runs on the FULL vector column — no slice ever enters a
+    * matrix lambda (where CollapseProject would re-inline it per
+    * centroid), and a SQL oracle replays the unpadded half fold bit for
+    * bit. Cell distance d1 + d2 is EXACTLY the squared distance to the
+    * concatenated cell centroid, and any top-k cell has both half-ranks
+    * ≤ k, so the k × k grid of the per-half top-k contains the exact
+    * top-k cells (the multi-sequence property); ties go to the lowest
+    * composite cid both ways.
+    */
+  private[functions] final case class Imi[T](kernel: Kernel[T], cb1: Array[Array[T]],
+                                             cb2: Array[Array[T]]) extends Coarse[T] {
+    private val k2 = cb2.length
+    private val dim = cb1.headOption.fold(0)(_.length) + cb2.headOption.fold(0)(_.length)
+    private def pad(cb: Array[Array[T]], padHead: Boolean): Array[Array[T]] = {
+      implicit val ct: ClassTag[T] = kernel.ct
+      cb.map { c =>
+        val z = Array.fill(dim - c.length)(kernel.zero)
+        if (padHead) z ++ c else c ++ z
+      }
+    }
+    private val cb1p = pad(cb1, padHead = false)
+    private val cb2p = pad(cb2, padHead = true)
+    def nCells: Long = cb1.length.toLong * k2
+    def cellId(kv: Column): Column =
+      nearest(kernel, cb1p, kv).cast("long") * k2 + nearest(kernel, cb2p, kv).cast("long")
+    /** Per-half sorted (d, cid) slices of length `nProbe` (`__s1`/`__s2`). */
+    def probeStage(kv: Column, nProbe: Int): Seq[Column] = Seq(
+      slice(array_sort(kernel.matrix(cb1p, kv)), 1, nProbe).as("__s1"),
+      slice(array_sort(kernel.matrix(cb2p, kv)), 1, nProbe).as("__s2"))
+    /** The exact top-`nProbe` cells by d1 + d2 from the staged slices. */
+    def probeCells(kv: Column, nProbe: Int): Column =
+      transform(
+        slice(array_sort(flatten(transform(col("__s1"), a => transform(col("__s2"), b =>
+          struct((a.getField("d") + b.getField("d")).as("d"),
+            (a.getField("cid").cast("long") * k2 +
+              b.getField("cid").cast("long")).as("cid")))))), 1, nProbe),
+        s => s.getField("cid"))
+    /** c1 ‖ c2 — two O(1) lookups, never a k1·k2 materialization. */
+    def centroidOf(cid: Column): Column =
+      if (nCells == 0) lit(null).cast(kernel.arrType)
+      else concat(
+        element_at(kernel.centMatrix(cb1), (cid.cast("long") / k2).cast("int") + 1),
+        element_at(kernel.centMatrix(cb2),
+          pmod(cid.cast("long"), lit(k2.toLong)).cast("int") + 1))
+    def parts: (Array[Array[T]], Array[Array[T]]) = (cb1, cb2)
+  }
 
   /** Default training-corpus bound for every k-means build in this
     * family (float/int IVF coarse lists, PQ and IVFADC codebooks): past
@@ -460,29 +600,77 @@ object Similarity {
     * deterministic seed rule of every Lloyd build here (centroid index
     * = rank − 1; an empty relation yields no seeds).
     */
-  private def lowestIdSeeds[T: scala.reflect.ClassTag](df: DataFrame, vec: Column,
-                                                      k: Int): Array[Array[T]] =
+  private def lowestIdSeeds[T: ClassTag](df: DataFrame, vec: Column,
+                                         k: Int): Array[Array[T]] =
     df.orderBy(col("id")).limit(k).select(vec).collect()
       .map(_.getAs[scala.collection.Seq[T]](0).toArray)
 
-  /** `iters` Lloyd rounds over `c0` (columns id, v): assignment argmin
-    * as DataFrame jobs, float means; only the nC×dim centroid table
-    * reaches the driver. Empty clusters keep their previous centroid.
+  /** `iters` Lloyd rounds over `c0` (id and the kernel's vector column):
+    * the kernel's argmin and mean as DataFrame jobs; only the nC×dim
+    * centroid table reaches the driver. Empty clusters keep their
+    * previous centroid.
     */
-  private[functions] def lloydFloat(c0: DataFrame, init: Array[Array[Double]],
-                         iters: Int): Array[Array[Double]] = {
+  private[functions] def lloyd[T](kern: Kernel[T], c0: DataFrame,
+                                  init: Array[Array[T]], iters: Int): Array[Array[T]] = {
+    implicit val ct: ClassTag[T] = kern.ct
     var centroids = init
     (1 to iters).foreach { _ =>
-      val means = c0.withColumn("cid", floatNearestCid(centroids, col("v")))
-        .select(col("cid"), posexplode(col("v")))
-        .toDF("cid", "pos", "x")
-        .groupBy(col("cid"), col("pos")).agg(avg(col("x")).as("m"))
+      val means = kern.means(c0.withColumn("cid", nearest(kern, centroids, col(kern.vec)))
+          .select(col("cid"), posexplode(col(kern.vec)))
+          .toDF("cid", "pos", "x"))
         .collect()
       val next = centroids.map(_.clone())
-      means.foreach(r => next(r.getAs[Int]("cid"))(r.getAs[Int]("pos")) = r.getAs[Double]("m"))
+      means.foreach(r => next(r.getAs[Int]("cid"))(r.getAs[Int]("pos")) = r.getAs[T]("m"))
       centroids = next
     }
     centroids
+  }
+
+  /** Train a coarse quantizer over `c0` (id, v and the kernel's vector
+    * column; `n` rows): `k` flat lists, or `k` entries per IMI half.
+    * Seeds are the `k` lowest-id vectors; Lloyd iterates on the bounded
+    * [[MaxTrainRows]] hash sample. The IMI halves split at h = ⌈dim/2⌉
+    * and train independently over one eagerly-checkpointed half-width
+    * projection of the sample (so the argmin lambda reads real columns,
+    * never a re-inlined slice), overlapped via graft.util.Par — the
+    * halves never exchange state. `iters <= 0` keeps the lowest-id
+    * halves: the oracle-replayable fixed grid. An empty corpus gives a
+    * quantizer with no cells, whose cells are typed nulls.
+    */
+  private[functions] def trainCoarse[T](kern: Kernel[T], c0: DataFrame, n: => Long,
+                                        imi: Boolean, k: Int, iters: Int,
+                                        maxTrainRows: Long): Coarse[T] = {
+    implicit val ct: ClassTag[T] = kern.ct
+    val seeds = lowestIdSeeds[T](c0, col(kern.vec), k)
+    if (!imi) Flat(kern, lloyd(kern, trainSample(c0, n, maxTrainRows), seeds, iters))
+    else {
+      val h = seeds.headOption.fold(0)(r => (r.length + 1) / 2)
+      val (i1, i2) = (seeds.map(_.take(h)), seeds.map(_.drop(h)))
+      if (iters <= 0 || seeds.isEmpty) Imi(kern, i1, i2)
+      else {
+        val train = trainSample(c0, n, maxTrainRows)
+          .select(col("id"), slice(col(kern.vec), 1, h).as(kern.vec),
+            slice(col(kern.vec), h + 1, i2.head.length).as("__h2"))
+          .localCheckpoint(true) // both half-Lloyds iterate over it
+        val (cb1, cb2) = graft.util.Par.both(
+          lloyd(kern, train.select(col("id"), col(kern.vec)), i1, iters),
+          lloyd(kern, train.select(col("id"), col("__h2").as(kern.vec)), i2, iters))
+        Imi(kern, cb1, cb2)
+      }
+    }
+  }
+
+  /** The persisted (id, v[, vi]) relation every IVF-family body trains
+    * and assigns over; `fanOut` floors its parallelism (the per-row
+    * argmin/probe work and every downstream leg inherit it — a one-file
+    * corpus otherwise runs the whole path on one task, measured r13).
+    */
+  private def corpusOf(kern: Kernel[_], corpus: DataFrame, cId: String, cVec: String,
+                       fanOut: Boolean = false): DataFrame = {
+    val c = corpus.select(col(cId).cast("long").as("id"), asDouble(col(cVec)).as("v"))
+    (if (fanOut) graft.util.FanOut(c) else c)
+      .withColumn(kern.vec, kern.of(col("v")))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
   }
 
   /** Largest centroid count evaluated as a chained literal argmin tree;
@@ -502,63 +690,59 @@ object Similarity {
     math.min(MaxTableCentroids.toLong,
       math.max(1L, math.ceil(math.sqrt(n.toDouble)).toLong)).toInt
 
+  /** IVF (inverted-file) approximate top-k: k-means centroids partition
+    * the corpus into `nCentroids` lists; each query probes only its
+    * `nProbe` nearest lists. The LSH alternative (`annTopK`) needs no
+    * training but can't adapt bucket sizes to the data; IVF trades a few
+    * Lloyd iterations for data-shaped buckets.
+    *
+    * All distributed work is DataFrame jobs with codegen'd DotProduct —
+    * assignment is an argmin over centroid literals (no shuffle), the
+    * centroid update is one hash aggregate over (cluster, dim); only the
+    * nCentroids×dim centroid table ever reaches the driver. At corpus
+    * scale both halves of the index story are CODE: training runs on the
+    * bounded [[MaxTrainRows]] hash sample (assignment is the one pass
+    * that touches every row), and [[AnnIndex]] writes the encoded corpus
+    * as a cid-partitioned TxTable whose probes prune files at rest.
+    *
+    * Deterministic: init = lowest-id vectors; argmin ties → lowest
+    * cluster id; empty clusters keep their previous centroid. (Centroid
+    * means are float sums across partitions, so last-ulp centroid drift
+    * can reorder equal-distance probes — scores of RETURNED candidates
+    * are exact cosine regardless.)
+    *
+    * `nCentroids ≤ 0` (the DEFAULT) derives ceil(√n) capped at
+    * [[MaxAutoCentroids]], and past `imiCutoverRows` — where even the
+    * 4096-entry cap would let list size grow linearly — hands the
+    * persisted, counted corpus to the IMI grid ([[ivfTopKImi]]'s
+    * layout). Explicit counts override — the gate queries pin (16, 8,
+    * 3), the IVF-sweep knee on the 500-vector fixture (SCALE.md, "100×
+    * scaling probe (round 5)"): recall@10 = 0.9238 (sf0.001) / 0.9190
+    * (sf0.01), floor-pinned at 0.85 by AnnRecallSpec (which also pins
+    * the DERIVED sizing at 1× and 10× the fixture).
+    */
   def ivfTopK(queries: DataFrame, corpus: DataFrame, k: Int,
               nCentroids: Int = 0, nProbe: Int = 8, iters: Int = 3,
               qId: String = "query_id", qVec: String = "query_vec",
               cId: String = "vec_id", cVec: String = "embedding",
               maxTrainRows: Long = MaxTrainRows,
               imiCutoverRows: Long = MaxSingleLevelRows): DataFrame = {
-    val c0 = corpus.select(col(cId).as("id"), asDouble(col(cVec)).as("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val c0 = corpusOf(FloatKernel, corpus, cId, cVec)
     val n = c0.count()
-    if (nCentroids <= 0 && n > imiCutoverRows) {
-      // derived sizing saturates the 4096 driver-array cap here: list
-      // size — and the per-query candidate volume nProbe·(n/4096) —
-      // would grow linearly. Hand off to the IMI product grid (the
-      // same dispatcher rule as semDedup/semDedupTrained/marginTopK),
-      // HANDING THE CACHE THROUGH — the count just materialized it,
-      // and the grid trains over the same persisted relation.
-      return ivfTopKImiOn(queries, c0, n, k,
-        kPerHalf = imiHalfCentroids(n, ImiTargetClusterSize),
-        nProbe = nProbe, iters = iters, qId = qId, qVec = qVec,
-        maxTrainRows = maxTrainRows)
-    }
-    val nC = if (nCentroids > 0) nCentroids else autoCentroids(n)
-    val init = lowestIdSeeds[Double](c0, col("v"), nC)
-    val centroids = lloydFloat(trainSample(c0, n, maxTrainRows), init, iters)
-    // the cache only serves the Lloyd jobs; the final query re-reads the
-    // source in ONE pass (assign → probe-join → top-k), which is exactly
-    // the production shape where assignment lands in a cid-partitioned
-    // table instead of a cache
-    c0.unpersist()
-
-    val assigned = c0
-      .withColumn("cid", floatNearestCid(centroids, col("v")))
-      .withColumn("__cn", l2norm(col("v")))
-    val q = queries.select(col(qId), asDouble(col(qVec)).as("__qv"))
-      .withColumn("__qn", l2norm(col("__qv")))
-      // explode_outer: an inferred pre-Generate filter would recompute
-      // the all-centroid distance array per query row (graft.util.Explode)
-      .withColumn("cid", explode_outer(floatProbeCids(centroids, col("__qv"), nProbe)))
-      .filter(col("cid").isNotNull)
-    topkOf(assigned.join(broadcast(q), Seq("cid"))
-      .filter(col(qId) =!= col("id"))
-      .select(col(qId), col("id").as("neighbor_id"),
-        cosineWithNorms(col("__qv"), col("v"), col("__qn"), col("__cn")).as("cos")), k, qId)
+    val imi = nCentroids <= 0 && n > imiCutoverRows
+    val kk = if (imi) imiHalfCentroids(n, ImiTargetClusterSize)
+      else if (nCentroids > 0) nCentroids else autoCentroids(n)
+    ivfOn(queries, c0, trainCoarse(FloatKernel, c0, n, imi, kk, iters, maxTrainRows),
+      k, nProbe, qId, qVec)
   }
 
-  /** [[ivfTopK]] with the IMI PRODUCT coarse grid — the float cosine
-    * ANN family's escape from the min(√n, 4096) list ceiling, completing
-    * the dispatcher set (semDedup/semDedupTrained/marginTopK/
-    * AnnIndex.build): two trained ≤4096-entry half codebooks give
-    * ~n/targetClusterSize effective cells, so the per-query candidate
-    * volume nProbe·cellSize stays BOUNDED at any corpus size where the
-    * capped single-level rule degrades to nProbe·(n/4096) linearly.
-    * Probing is the exact multi-sequence top-nProbe cells by d1+d2;
-    * scores are exact cosine on the candidate set (candidate-recall
-    * approximation only, the [[marginTopKImi]] contract). The query
-    * side's per-half probe slices are staged + eagerly materialized so
-    * the grid lambda reads attributes (the repeated-lambda audit rule).
+  /** [[ivfTopK]] on the IMI product grid: two trained ≤ 4096-entry half
+    * codebooks give ~n/targetClusterSize cells, so the per-query
+    * candidate volume nProbe·cellSize stays BOUNDED where the capped
+    * single-level rule degrades to nProbe·(n/4096). Probing is the exact
+    * multi-sequence top-nProbe cells by d1+d2; scores are exact cosine
+    * on the candidate set. `codebooksOpt` runs against FROZEN half
+    * codebooks (the at-rest [[VecIndex]] parity seam).
     */
   def ivfTopKImi(queries: DataFrame, corpus: DataFrame, k: Int,
                  kPerHalf: Int = 0, nProbe: Int = 8, iters: Int = 3,
@@ -567,183 +751,86 @@ object Similarity {
                  targetClusterSize: Long = ImiTargetClusterSize,
                  maxTrainRows: Long = MaxTrainRows,
                  codebooksOpt: Option[(Array[Array[Double]], Array[Array[Double]])] = None): DataFrame = {
-    val c0 = corpus.select(col(cId).as("id"), asDouble(col(cVec)).as("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    ivfTopKImiOn(queries, c0, c0.count(), k, kPerHalf, nProbe, iters,
-      qId, qVec, maxTrainRows, targetClusterSize, codebooksOpt)
+    val c0 = corpusOf(FloatKernel, corpus, cId, cVec)
+    ivfOn(queries, c0, imiOrFrozen(FloatKernel, c0, kPerHalf, iters,
+      targetClusterSize, maxTrainRows, codebooksOpt), k, nProbe, qId, qVec)
   }
 
-  /** [[ivfTopKImi]] over an ALREADY-persisted, counted (id, v)
-    * relation — the [[ivfTopK]] dispatcher hands its cache through
-    * here. Unpersists `c0` after training.
+  /** The frozen half codebooks when given, else a grid trained over the
+    * counted `c0` (`kPerHalf <= 0` derives it from the target cell size).
     */
-  private def ivfTopKImiOn(queries: DataFrame, c0: DataFrame, n: Long, k: Int,
-                           kPerHalf: Int, nProbe: Int, iters: Int,
-                           qId: String, qVec: String,
-                           maxTrainRows: Long,
-                           targetClusterSize: Long = ImiTargetClusterSize,
-                           codebooksOpt: Option[(Array[Array[Double]], Array[Array[Double]])] = None): DataFrame = {
-    val kH = if (kPerHalf > 0) kPerHalf else imiHalfCentroids(n, targetClusterSize)
-    // codebooksOpt: run against FROZEN half codebooks (the at-rest
-    // [[VecIndex]] parity seam) instead of training in-session
-    val (cb1, cb2) = codebooksOpt.getOrElse(
-      imiTrainedHalfCodebooks(c0, kH, iters, n, maxTrainRows))
-    val dim = cb1.head.length + cb2.head.length
-    val cb1p = imiPad(cb1, dim, padHead = false)
-    val cb2p = imiPad(cb2, dim, padHead = true)
-    // the cache only serves the Lloyd jobs; the final query re-reads
-    // the source in ONE pass (assign → probe-join → top-k), the ivfTopK
-    // production shape
+  private def imiOrFrozen[T](kern: Kernel[T], c0: DataFrame, kPerHalf: Int, iters: Int,
+                             targetClusterSize: Long, maxTrainRows: Long,
+                             codebooksOpt: Option[(Array[Array[T]], Array[Array[T]])]): Coarse[T] =
+    codebooksOpt.fold[Coarse[T]] {
+      lazy val n = c0.count() // only training reads it
+      trainCoarse(kern, c0, n, imi = true,
+        if (kPerHalf > 0) kPerHalf else imiHalfCentroids(n, targetClusterSize),
+        iters, maxTrainRows)
+    } { case (cb1, cb2) => Imi(kern, cb1, cb2) }
+
+  /** The one IVF top-k body. The persisted `c0` only served training; the
+    * final query re-reads the source in ONE pass (assign → probe-join →
+    * top-k), the production shape where assignment lands in a
+    * cid-partitioned table instead of a cache.
+    */
+  private def ivfOn(queries: DataFrame, c0: DataFrame, quant: Coarse[_], k: Int,
+                    nProbe: Int, qId: String, qVec: String): DataFrame = {
     c0.unpersist()
-    val assigned = c0
-      .select(col("id"), col("v"),
-        imiCellIdFrom(cb1p, cb2p, col("v")).as("cid"),
-        l2norm(col("v")).as("__cn"))
-    val q = imiQueryProbes(queries, cb1p, cb2p, nProbe, qId, qVec)
-    topkOf(assigned.join(broadcast(q), Seq("cid"))
+    val assigned = c0.withColumn("cid", quant.cellId(col(quant.kernel.vec)))
+      .withColumn("__cn", l2norm(col("v")))
+    topkOf(assigned.join(broadcast(queryProbes(quant, queries, nProbe, qId, qVec)), Seq("cid"))
       .filter(col(qId) =!= col("id"))
       .select(col(qId), col("id").as("neighbor_id"),
         cosineWithNorms(col("__qv"), col("v"), col("__qn"), col("__cn")).as("cos")), k, qId)
   }
 
-  /** ENGINE-PORTABLE IVF top-k: the same inverted-file construction as
-    * [[ivfTopK]] with every Lloyd step in FIXED-POINT INTEGER arithmetic
-    * so any SQL engine replays training, assignment, probing and
-    * re-ranking bit for bit — the float variant's distributed means
-    * carry last-ulp partition-order drift that no oracle can reproduce.
-    *
-    *  - vectors quantize to `round(v · 2^20)` longs (sub-ppm centroid
-    *    placement error — recall is spec-pinned unchanged);
-    *  - assignment = argmin Σ(vᵢ−cᵢ)² over long diffs (≤ 2.7·10^16 for
-    *    64 dims at |v| ≤ 10 — safely inside Long), ties → lowest cid;
-    *  - centroid update = floor-division mean (pmod form, exact on any
-    *    engine), empty clusters keep their previous centroid;
-    *  - probes and final scores re-rank candidates with EXACT double
-    *    cosine (identical IEEE fold order both engines, as q27).
-    *
-    * Iterations unroll (no driver loop state beyond the centroid table,
-    * same as ivfTopK); all distributed work is DataFrame jobs.
-    * `nCentroids ≤ 0` (the default) derives ceil(√n) capped — see
-    * [[ivfTopK]]; the q61 gate pins (16, 8) explicitly for its oracle.
+  /** Query-side probe rows (qId long, __qv, __qn, cid), SHARED by every
+    * in-session search and the at-rest [[VecIndex]]/[[MarginIndex]]
+    * searches. The kernel-space query vector is staged as its own column
+    * (a probe reads it once per centroid — an inline conversion would
+    * re-run per centroid), then [[Coarse.probeRows]].
     */
-  // ---- integer-IVF internals (the engine-portable twin's building
-  // blocks), parameterized by the trained centroid table for the same
-  // train-once reuse as the float set.
+  private[functions] def queryProbes(quant: Coarse[_], queries: DataFrame, nProbe: Int,
+                                     qId: String, qVec: String): DataFrame =
+    quant.probeRows(queries
+        .select(col(qId).cast("long").as(qId), asDouble(col(qVec)).as("__qv"))
+        .select(col(qId), col("__qv"), l2norm(col("__qv")).as("__qn"),
+          quant.kernel.of(col("__qv")).as("__qk")),
+      "__qk", nProbe, Seq(qId, "__qv", "__qn"))
+
+  /** ENGINE-PORTABLE IVF top-k: [[ivfTopK]]'s construction over the
+    * [[IntKernel]], so any SQL engine replays training, assignment,
+    * probing and re-ranking bit for bit — the float variant's
+    * distributed means carry last-ulp partition-order drift that no
+    * oracle can reproduce. Probes and final scores re-rank candidates
+    * with EXACT double cosine (identical IEEE fold order both engines,
+    * as q27). `nCentroids ≤ 0` derives ceil(√n) capped; the q61 gate
+    * pins (16, 8) explicitly for its oracle.
+    */
+  def ivfTopKPortable(queries: DataFrame, corpus: DataFrame, k: Int,
+                      nCentroids: Int = 0, nProbe: Int = 8, iters: Int = 3,
+                      qId: String = "query_id", qVec: String = "query_vec",
+                      cId: String = "vec_id", cVec: String = "embedding",
+                      maxTrainRows: Long = MaxTrainRows): DataFrame = {
+    val c0 = corpusOf(IntKernel, corpus, cId, cVec)
+    val n = c0.count()
+    ivfOn(queries, c0, trainCoarse(IntKernel, c0, n, imi = false,
+      if (nCentroids > 0) nCentroids else autoCentroids(n), iters, maxTrainRows),
+      k, nProbe, qId, qVec)
+  }
 
   private val IntScale = 1L << 20
 
   private[functions] def toIntVec(v: Column): Column =
     transform(asDouble(v), x => round(x * IntScale.toDouble).cast("long"))
 
-  /** (−dist, −cid) structs: greatest == nearest with lowest-cid
-    * tie-break. The distance kernel is the codegen'd [[IntSqDist]]
-    * expression (round 8 — the lambda composition it replaces was
-    * CodegenFallback and interpreter cost dominated every integer
-    * ANN shape in the SCALE.md round-8 bake-off); exact integer
-    * arithmetic, so oracle-replayed values are unchanged.
+  /** Exact integer squared L2 to a literal centroid — the codegen'd
+    * [[IntSqDist]] expression (round 8: the lambda composition it
+    * replaces was CodegenFallback and dominated every integer ANN shape).
     */
   private def intSqDist(vi: Column, cArr: Array[Long]): Column =
     IntSqDist.intSqDist(vi, lit(cArr))
-
-  private[functions] def intDistStructs(centroids: Array[Array[Long]], vi: Column) =
-    centroids.zipWithIndex.map { case (cArr, i) =>
-      struct((-intSqDist(vi, cArr)).as("negd"), lit(-i).as("negcid"))
-    }
-
-  // ---- MATRIX-literal form: the whole centroid set as ONE typedLit
-  // 2-D array, argmin/probe as a lambda loop over it. Same exact
-  // integer arithmetic and (dist, cid) tie rule as the chained form,
-  // but the plan carries a single Literal node instead of O(nCentroids)
-  // expression subtrees — so it scales to any driver-held centroid
-  // count with zero shuffle and constant plan size. Measured (SCALE.md,
-  // "Round 8 — IVFADC probes and the coarse-shape bake-off"): fastest of
-  // the assignment shapes at both 20k×142 and 200k×448 — it beats the
-  // chained tree (interpreter dispatch per subtree) and a
-  // broadcast-join centroid table (n·nC skinny rows through a hash
-  // aggregate). The chained form stays the default below
-  // [[MaxLiteralCentroids]] because the oracle-replayed gates pin it and
-  // at tiny nC the two are equivalent.
-
-  private def intCentroidMatrix(centroids: Array[Array[Long]]): Column =
-    typedLit(centroids.map(_.toSeq).toSeq)
-
-  private[functions] def intDistStructsMatrix(centroids: Array[Array[Long]], vi: Column): Column =
-    transform(intCentroidMatrix(centroids), (c, i) =>
-      struct(IntSqDist.intSqDist(vi, c).as("d"), i.as("cid")))
-
-  private[functions] def intNearestCid(centroids: Array[Array[Long]], vi: Column): Column =
-    if (centroids.length < 2) lit(0)
-    else if (centroids.length > MaxLiteralCentroids)
-      array_min(intDistStructsMatrix(centroids, vi)).getField("cid")
-    else -greatest(intDistStructs(centroids, vi): _*).getField("negcid")
-
-  private[functions] def intProbeCids(centroids: Array[Array[Long]], vi: Column,
-                           nProbe: Int): Column =
-    if (centroids.length < 2) array(lit(0))
-    else if (centroids.length > MaxLiteralCentroids)
-      transform(
-        slice(array_sort(intDistStructsMatrix(centroids, vi)), 1, nProbe),
-        s => s.getField("cid"))
-    else transform(
-      slice(reverse(array_sort(array(intDistStructs(centroids, vi): _*))), 1, nProbe),
-      s => -s.getField("negcid"))
-
-  /** `iters` exact-integer Lloyd rounds over `c0` (columns id, v, vi):
-    * floor-division means (engine-portable pmod form), empty clusters
-    * keep their previous centroid.
-    */
-  private def lloydInt(c0: DataFrame, init: Array[Array[Long]],
-                       iters: Int): Array[Array[Long]] = {
-    var centroids = init
-    (1 to iters).foreach { _ =>
-      val sums = c0.withColumn("cid", intNearestCid(centroids, col("vi")))
-        .select(col("cid"), posexplode(col("vi")))
-        .toDF("cid", "pos", "x")
-        .groupBy(col("cid"), col("pos"))
-        .agg(sum(col("x")).as("s"), count(lit(1)).as("n"))
-        // exact floor division, engine-portable: (s − pmod(s, n)) div n
-        .select(col("cid"), col("pos"),
-          expr("(s - pmod(s, n)) div n").as("m"))
-        .collect()
-      val next = centroids.map(_.clone()) // empty clusters keep previous
-      sums.foreach(r => next(r.getAs[Int]("cid"))(r.getAs[Int]("pos")) = r.getAs[Long]("m"))
-      centroids = next
-    }
-    centroids
-  }
-
-  def ivfTopKPortable(queries: DataFrame, corpus: DataFrame, k: Int,
-                      nCentroids: Int = 0, nProbe: Int = 8, iters: Int = 3,
-                      qId: String = "query_id", qVec: String = "query_vec",
-                      cId: String = "vec_id", cVec: String = "embedding",
-                      maxTrainRows: Long = MaxTrainRows): DataFrame = {
-    val c0 = corpus.select(col(cId).as("id"), asDouble(col(cVec)).as("v"))
-      .withColumn("vi", toIntVec(col("v")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = c0.count()
-    val nC = if (nCentroids > 0) nCentroids else autoCentroids(n)
-
-    val init = lowestIdSeeds[Long](c0, col("vi"), nC)
-    val centroids = lloydInt(trainSample(c0, n, maxTrainRows), init, iters)
-    c0.unpersist()
-
-    val assigned = c0
-      .withColumn("cid", intNearestCid(centroids, col("vi")))
-      .withColumn("__cn", l2norm(col("v")))
-    val q = queries.select(col(qId), asDouble(col(qVec)).as("__qv"))
-      .withColumn("__qn", l2norm(col("__qv")))
-      // quantized query vector STAGED: probeCids references it once per
-      // CENTROID, so an inline toInt re-quantizes nCentroids times per
-      // query row (PlanAudit nested-subtree rule)
-      .withColumn("__qvi", toIntVec(col("__qv")))
-      // explode_outer: same InferFiltersFromGenerate dodge as above
-      .withColumn("cid", explode_outer(intProbeCids(centroids, col("__qvi"), nProbe)))
-      .filter(col("cid").isNotNull)
-    topkOf(assigned.join(broadcast(q), Seq("cid"))
-      .filter(col(qId) =!= col("id"))
-      .select(col(qId), col("id").as("neighbor_id"),
-        cosineWithNorms(col("__qv"), col("v"), col("__qn"), col("__cn")).as("cos")), k, qId)
-  }
 
   /** Product quantization (Jégou, Douze & Schmid, TPAMI 2011) — the
     * vector-compression workhorse behind billion-scale ANN: the vector
@@ -842,9 +929,9 @@ object Similarity {
 
   /** Per-subspace PQ codebooks over an (id, `vec`) relation — the one
     * trainer of [[pqTrain]] and the IVFADC residual builds: seeds are
-    * the FULL relation's lowest ids, [[lloydInt]] iterates on its
-    * bounded hash sample (identical below the threshold, deterministic
-    * either way). The m trainings read disjoint coordinate slices of
+    * the FULL relation's lowest ids, [[lloyd]] over the [[IntKernel]]
+    * iterates on its bounded hash sample (identical below the
+    * threshold, deterministic either way). The m trainings read disjoint coordinate slices of
     * `full` with subspace-local state only, so they overlap (guide §2.6
     * via graft.util.Par.all; output order is subspace order). `full`
     * should be materialized — each subspace reads it 1 + iters times.
@@ -854,7 +941,7 @@ object Similarity {
                           maxTrainRows: Long): Array[Array[Array[Long]]] =
     graft.util.Par.all((0 until m).map(s => () => {
       val sub = full.select(col("id"), subSlice(col(vec), s, subDim).as("vi"))
-      lloydInt(trainSample(sub, n, maxTrainRows),
+      lloyd(IntKernel, trainSample(sub, n, maxTrainRows),
         lowestIdSeeds[Long](sub, col("vi"), kCentroids), iters)
     })).toArray
 
@@ -1068,104 +1155,64 @@ object Similarity {
     * density, which tightens clusters around duplicate clumps: on the
     * planted-twin fixture the trained variant recovers MORE planted
     * near-dup drops than the fixed-centroid form at the same k
-    * (SemDedupTrainedSpec pins trained >= fixed). Deterministic
-    * (lowest-id init, hash sample, lowest-cid ties) — just not
-    * SQL-replayable, because distributed float means carry
-    * partition-order last-ulp drift; hence spec-pinned, not
-    * oracle-gated.
+    * (SemDedupTrainedSpec pins trained >= fixed). Spec-pinned, not
+    * oracle-gated (float means). Growth accounting: under the √n rule
+    * cluster size grows as √n and the within-cluster pair volume as
+    * n^1.5 (the measured 7.6× wall for 10× rows); past `imiCutoverRows`
+    * the persisted, counted corpus moves to the trained IMI grid, whose
+    * constant target cell size keeps pair volume linear.
     */
   def semDedupTrained(df: DataFrame, idCol: String, vecCol: String,
                       nClusters: Int = 0, threshold: Double = 0.95,
                       iters: Int = 2,
                       maxTrainRows: Long = MaxTrainRows,
                       imiCutoverRows: Long = MaxSingleLevelRows): DataFrame = {
-    val c0 = df.select(col(idCol).cast("long").as("id"), asDouble(col(vecCol)).as("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val c0 = corpusOf(FloatKernel, df, idCol, vecCol)
     val n = c0.count()
-    if (nClusters <= 0 && n > imiCutoverRows) {
-      // the sqrt(n) rule saturates the 4096 driver-array cap here and
-      // cluster size would grow linearly — hand off to the trained
-      // PRODUCT (IMI) grid, whose cell count keeps tracking n at a
-      // constant target cluster size. The cache the count just
-      // materialized is HANDED THROUGH (not discarded — the review's
-      // wasted-materialization find): the grid trains and assigns over
-      // the same persisted relation.
-      return semDedupTrainedImiOn(c0, n,
-        kPerHalf = imiHalfCentroids(n, ImiTargetClusterSize),
-        threshold = threshold, iters = iters,
-        targetClusterSize = ImiTargetClusterSize, maxTrainRows = maxTrainRows)
-    }
-    // sqrt(n) UNCAPPED by the literal tree (matrix argmin past 128).
-    // Growth accounting, honestly: cluster size grows as sqrt(n) under
-    // this rule (NOT "~constant" — the round-9 scaladoc's claim was
-    // wrong), so the within-cluster pair volume is sum(c^2) ~ n^1.5;
-    // the measured 7.6x wall for 10x rows between the organic decades
-    // is exactly that exponent. n^1.5 is what the published recipe
-    // costs at k = sqrt(n); the LINEAR-volume shape is the IMI route
-    // above, which takes over once sqrt(n) can no longer grow.
-    val nC = if (nClusters > 0) nClusters else autoCentroidsTable(n)
-    val init = lowestIdSeeds[Double](c0, col("v"), nC)
-    val centroids = lloydFloat(trainSample(c0, n, maxTrainRows), init, iters)
-    // assignment materialized ONCE (eager, GC-released): three plan
-    // branches consume it (both self-join sides + the left_anti base)
-    val vecs = c0
-      .select(col("id").as("vec_id"), col("v").as("__v"),
-        floatNearestCid(centroids, col("v")).cast("long").as("cluster_id"))
-      .localCheckpoint(true)
-    c0.unpersist()
-    semDedupWithin(vecs, threshold)
+    val imi = nClusters <= 0 && n > imiCutoverRows
+    val kk = if (imi) imiHalfCentroids(n, ImiTargetClusterSize)
+      else if (nClusters > 0) nClusters else autoCentroidsTable(n)
+    semDedupOn(c0, trainCoarse(FloatKernel, c0, n, imi, kk, iters, maxTrainRows), threshold)
   }
 
-  /** [[semDedupTrained]]'s ENGINE-PORTABLE twin — closes round 9's one
-    * oracle gap: TRAINED-cluster SemDeDup whose geometry a SQL engine
-    * replays bit for bit. Float Lloyd's distributed means carry
-    * partition-order last-ulp drift (why semDedupTrained is spec-pinned
-    * only); here every training step runs in the exact fixed-point
-    * arithmetic of [[ivfTopKPortable]] — `round(v·2²⁰)` longs,
-    * lexicographic (dist, cid) argmin, floor-division means (pmod
-    * form), empty-cluster carry — the final assignment is the integer
-    * argmin, and the within-cluster prune is the exact double cosine.
-    * Every step replays in DuckDB: gate q236 reuses q61's unrolled
-    * integer-Lloyd CTEs and hash-verifies the trained survivors.
-    * Training runs on the bounded [[MaxTrainRows]] hash sample like
-    * every other build (a no-op at gate SF, so the oracle needs no
-    * sampling CTE).
+  /** [[semDedupTrained]] over the [[IntKernel]] — TRAINED-cluster
+    * SemDeDup whose geometry a SQL engine replays bit for bit: gate
+    * q236 reuses q61's unrolled integer-Lloyd CTEs and hash-verifies
+    * the trained survivors; the within-cluster prune is the exact
+    * double cosine.
     */
   def semDedupTrainedPortable(df: DataFrame, idCol: String, vecCol: String,
                               nClusters: Int = 0, threshold: Double = 0.95,
                               iters: Int = 3,
                               maxTrainRows: Long = MaxTrainRows): DataFrame = {
-    val c0 = df.select(col(idCol).cast("long").as("id"), asDouble(col(vecCol)).as("v"))
-      .withColumn("vi", toIntVec(col("v")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val c0 = corpusOf(IntKernel, df, idCol, vecCol)
     val n = c0.count()
-    val nC = if (nClusters > 0) nClusters else autoCentroidsTable(n)
-    val init = lowestIdSeeds[Long](c0, col("vi"), nC)
-    val centroids = lloydInt(trainSample(c0, n, maxTrainRows), init, iters)
+    semDedupOn(c0, trainCoarse(IntKernel, c0, n, imi = false,
+      if (nClusters > 0) nClusters else autoCentroidsTable(n), iters, maxTrainRows),
+      threshold)
+  }
+
+  /** The one trained-SemDeDup body: assign every row to its cell,
+    * materialized ONCE (eager, GC-released — both self-join sides and
+    * the left_anti base consume it, and the assignment must not re-run
+    * per branch: PlanShapeSpec's recompute audit), then
+    * [[semDedupWithin]].
+    */
+  private def semDedupOn(c0: DataFrame, quant: Coarse[_], threshold: Double): DataFrame = {
     val vecs = c0
       .select(col("id").as("vec_id"), col("v").as("__v"),
-        intNearestCid(centroids, col("vi")).cast("long").as("cluster_id"))
+        quant.cellId(col(quant.kernel.vec)).cast("long").as("cluster_id"))
       .localCheckpoint(true)
     c0.unpersist()
     semDedupWithin(vecs, threshold)
   }
 
-  // ---- IMI: the PRODUCT coarse quantizer (Babenko & Lempitsky, CVPR
-  // 2012 — "The Inverted Multi-Index"). Every single-level list count
-  // in this file derives as min(sqrt n, 4096) because the centroids
-  // live as a driver array / plan literal; past MaxSingleLevelRows
-  // (~16.7M vectors) cluster size — and with it semDedup's
-  // within-cluster pair volume and the margin self-kNN candidate
-  // volume — grows LINEARLY. The IMI shape breaks the ceiling with two
-  // bounded quantizers instead of one unbounded one: split each vector
-  // into halves, quantize each half against its own <=4096-entry
-  // codebook, and let the CELL id be the pair (c1, c2) — k1·k2 (up to
-  // ~16.7M) effective lists from two matrix argmins, while the driver
-  // only ever holds k1 + k2 half-width centroids. Cell distance
-  // d1 + d2 is EXACTLY the squared L2 distance to the concatenated
-  // product centroid, and the top-k cells by d1+d2 all have both
-  // half-ranks <= k, so probing the k x k grid of per-half top-k is an
-  // EXACT top-k cell enumeration (the multi-sequence property).
+  // ---- IMI sizing: every single-level list count here derives as
+  // min(√n, 4096) because the centroids live as a driver array / plan
+  // literal; past MaxSingleLevelRows (~16.7M vectors) cluster size —
+  // and with it semDedup's within-cluster pair volume and the margin
+  // self-kNN candidate volume — would grow LINEARLY. The [[Imi]] grid
+  // breaks the ceiling with two bounded half codebooks.
 
   /** Target rows per IMI cell: the cell count derives as
     * ceil(n / target), so the within-cell quadratic work per row is a
@@ -1194,93 +1241,6 @@ object Similarity {
       math.max(1L, math.ceil(math.sqrt(cells.toDouble)).toLong)).toInt
   }
 
-  /** Deterministic (oracle-replayable) half codebooks: the k lowest-id
-    * vectors' halves — the [[assignToLowestIdCentroids]] discipline
-    * applied per half. `c0` = (id, v). Also derives the split point:
-    * h = dim/2 (first half gets the extra coordinate on odd dims).
-    */
-  private[functions] def imiFixedHalfCodebooks(c0: DataFrame,
-                                    k: Int): (Array[Array[Double]], Array[Array[Double]]) = {
-    val rows = lowestIdSeeds[Double](c0, col("v"), k)
-    require(rows.nonEmpty, "imi codebooks: empty corpus")
-    val h = (rows.head.length + 1) / 2
-    (rows.map(_.take(h)), rows.map(_.drop(h)))
-  }
-
-  /** Trained half codebooks: one bounded-sample Lloyd run PER HALF
-    * (init = the fixed lowest-id halves), each over the half-width
-    * projection of the same deterministic hash sample — training cost
-    * 2·iters·min(n, maxTrainRows)·k half-width distance evals. The
-    * half projections are eagerly checkpointed (bounded by the sample
-    * cap) so the Lloyd argmin lambda reads real columns, never a
-    * re-inlined slice.
-    */
-  private[functions] def imiTrainedHalfCodebooks(c0: DataFrame, k: Int, iters: Int,
-                                      n: Long, maxTrainRows: Long): (Array[Array[Double]], Array[Array[Double]]) = {
-    val (i1, i2) = imiFixedHalfCodebooks(c0, k)
-    val h = i1.head.length
-    val train = trainSample(c0, n, maxTrainRows)
-      .select(col("id"), slice(col("v"), 1, h).as("v"),
-        slice(col("v"), h + 1, i2.head.length).as("v2"))
-      .localCheckpoint(true) // both half-Lloyds iterate over it
-    // the two half-Lloyds are independent read-only consumers of the
-    // checkpointed sample — overlap their per-iteration collect round
-    // trips (guide §2.6 via graft.util.Par; identical results, the
-    // halves never exchange state)
-    graft.util.Par.both(
-      lloydFloat(train.select(col("id"), col("v")), i1, iters),
-      lloydFloat(train.select(col("id"), col("v2").as("v")), i2, iters))
-  }
-
-  /** A half codebook ZERO-PADDED to full width (tail-padded for the
-    * first half, head-padded for the second): the distance to the
-    * padded centroid, |c_h|² − 2⟨v, c_pad⟩, ranks half-h distances
-    * exactly (the padding contributes 0 to the dot and |v|² is
-    * row-constant either way), so the per-half argmin/probe runs on
-    * the FULL vector column — no slice ever enters the matrix lambda
-    * (where CollapseProject would re-inline it per centroid), and a
-    * SQL oracle replays the identical padded fold.
-    */
-  private[functions] def imiPad(cb: Array[Array[Double]], dim: Int,
-                     padHead: Boolean): Array[Array[Double]] =
-    cb.map { c =>
-      val pad = Array.fill(dim - c.length)(0.0)
-      if (padHead) pad ++ c else c ++ pad
-    }
-
-  /** Composite cell id over the full vector column via the padded
-    * half codebooks: cid = argmin1 · k2 + argmin2, each argmin the
-    * matrix-literal (d, cid) struct min with lowest-cid ties.
-    */
-  private[functions] def imiCellIdFrom(cb1p: Array[Array[Double]], cb2p: Array[Array[Double]],
-                            v: Column): Column =
-    array_min(floatDistStructsMatrix(cb1p, v)).getField("cid").cast("long") * cb2p.length +
-      array_min(floatDistStructsMatrix(cb2p, v)).getField("cid").cast("long")
-
-  /** Per-half sorted (d, cid) probe slice of length `nProbe` over the
-    * full vector column (padded codebook) — staged as its own column
-    * by corpus-side callers so [[imiProbeCellsOf]]'s nested lambda
-    * reads a materialized attribute instead of re-sorting the codebook
-    * distances per outer element.
-    */
-  private[functions] def imiHalfProbes(cbp: Array[Array[Double]], v: Column, nProbe: Int): Column =
-    slice(array_sort(floatDistStructsMatrix(cbp, v)), 1, nProbe)
-
-  /** EXACT top-`nProbe` cells by summed half-distance from two staged
-    * [[imiHalfProbes]] columns: any top-k cell has both half-ranks
-    * <= k, so the k x k grid of the per-half top-k contains the true
-    * top-k — sort the <=nProbe² candidates and slice. d1 + d2 is the
-    * exact squared distance to the product centroid.
-    */
-  private[functions] def imiProbeCellsOf(s1: Column, s2: Column, k2: Int,
-                              nProbe: Int): Column =
-    transform(
-      slice(array_sort(flatten(transform(s1, a => transform(s2, b =>
-        struct((a.getField("d") + b.getField("d")).as("d"),
-          (a.getField("cid").cast("long") * k2 +
-            b.getField("cid").cast("long")).as("cid")))))), 1, nProbe),
-      s => s.getField("cid"))
-
   /** SemDeDup over the IMI cell grid — [[semDedup]]'s within-cluster
     * prune with the cluster id the PRODUCT cell (c1, c2) of two fixed
     * lowest-id half codebooks. Deterministic and engine-replayable
@@ -1291,106 +1251,49 @@ object Similarity {
     * with it the per-row quadratic work) stays ~`targetClusterSize` at
     * ANY corpus size up to [[MaxTableCentroids]]² cells. Gate q237
     * pins kPerHalf = 4 (16 cells) against the DuckDB replay.
+    * `codebooksOpt` prunes against FROZEN half codebooks (the at-rest
+    * [[VecIndex.dedupBatch]] parity seam).
     */
   def semDedupImi(df: DataFrame, idCol: String, vecCol: String,
                   kPerHalf: Int = 0, threshold: Double = 0.95,
                   targetClusterSize: Long = ImiTargetClusterSize,
                   codebooksOpt: Option[(Array[Array[Double]], Array[Array[Double]])] = None): DataFrame = {
-    val c0 = df.select(col(idCol).cast("long").as("id"), asDouble(col(vecCol)).as("v"))
-    // codebooksOpt: prune against FROZEN half codebooks (the at-rest
-    // [[VecIndex.dedupBatch]] parity seam) instead of deriving in-run
-    val (cb1, cb2) = codebooksOpt.getOrElse {
-      val k = if (kPerHalf > 0) kPerHalf
-        else imiHalfCentroids(c0.count(), targetClusterSize)
-      imiFixedHalfCodebooks(c0, k)
-    }
-    val dim = cb1.head.length + cb2.head.length
-    // assignment materialized ONCE (eager, GC-released): three plan
-    // branches consume it and the two-argmin cell id must not re-run
-    // per branch (PlanShapeSpec recompute audit)
-    val vecs = c0
-      .select(col("id").as("vec_id"), col("v").as("__v"),
-        imiCellIdFrom(imiPad(cb1, dim, padHead = false),
-          imiPad(cb2, dim, padHead = true), col("v")).as("cluster_id"))
-      .localCheckpoint(true)
-    semDedupWithin(vecs, threshold)
+    val c0 = corpusOf(FloatKernel, df, idCol, vecCol)
+    semDedupOn(c0, imiOrFrozen(FloatKernel, c0, kPerHalf, iters = 0,
+      targetClusterSize, MaxTrainRows, codebooksOpt), threshold)
   }
 
   /** [[semDedupImi]] with TRAINED half codebooks (two bounded-sample
     * half-Lloyds) — the trained-cluster recipe at linear pair volume;
-    * [[semDedupTrained]] hands off here past [[MaxSingleLevelRows]].
-    * Deterministic but not SQL-replayable (distributed float means),
-    * same as [[semDedupTrained]] — spec-pinned + benched.
+    * [[semDedupTrained]] hands off to this grid past
+    * [[MaxSingleLevelRows]]. Spec-pinned + benched (float means).
     */
   def semDedupTrainedImi(df: DataFrame, idCol: String, vecCol: String,
                          kPerHalf: Int = 0, threshold: Double = 0.95,
                          iters: Int = 2,
                          targetClusterSize: Long = ImiTargetClusterSize,
                          maxTrainRows: Long = MaxTrainRows): DataFrame = {
-    val c0 = df.select(col(idCol).cast("long").as("id"), asDouble(col(vecCol)).as("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    semDedupTrainedImiOn(c0, c0.count(), kPerHalf, threshold, iters,
-      targetClusterSize, maxTrainRows)
+    val c0 = corpusOf(FloatKernel, df, idCol, vecCol)
+    semDedupOn(c0, imiOrFrozen(FloatKernel, c0, kPerHalf, iters,
+      targetClusterSize, maxTrainRows, None), threshold)
   }
 
-  /** [[semDedupTrainedImi]] over an ALREADY-persisted, counted (id, v)
-    * relation — the [[semDedupTrained]] dispatcher hands its cache
-    * through here, so the cutover costs neither a discarded cache
-    * materialization nor a duplicate corpus pass. Unpersists `c0`.
-    */
-  private def semDedupTrainedImiOn(c0: DataFrame, n: Long,
-                                   kPerHalf: Int, threshold: Double, iters: Int,
-                                   targetClusterSize: Long,
-                                   maxTrainRows: Long): DataFrame = {
-    val k = if (kPerHalf > 0) kPerHalf else imiHalfCentroids(n, targetClusterSize)
-    val (cb1, cb2) = imiTrainedHalfCodebooks(c0, k, iters, n, maxTrainRows)
-    val dim = cb1.head.length + cb2.head.length
-    // assignment materialized ONCE (eager, GC-released): three plan
-    // branches consume it (both self-join sides + the left_anti base)
-    val vecs = c0
-      .select(col("id").as("vec_id"), col("v").as("__v"),
-        imiCellIdFrom(imiPad(cb1, dim, padHead = false),
-          imiPad(cb2, dim, padHead = true), col("v")).as("cluster_id"))
-      .localCheckpoint(true)
-    c0.unpersist()
-    semDedupWithin(vecs, threshold)
-  }
-
-  /** [[semDedupTrainedImi]]'s ENGINE-PORTABLE twin — the q236
-    * fixed-point discipline applied to the PRODUCT grid, so the trained
-    * past-the-ceiling geometry is hash-replayable too: both half
-    * codebooks train with [[lloydInt]] (round(v·2²⁰) longs,
-    * lexicographic argmin, floor-division means, empty-cluster carry)
-    * over the bounded hash sample, the cluster id is the separable
-    * composite cell (argmin d1)·k2 + (argmin d2) — padded full-width
-    * argmins, which differ from the half distances by a row constant,
-    * so ties and order match the oracle's 32-dim halves exactly — and
-    * the within-cell prune is the exact double cosine. Gate q240
-    * replays both half Lloyds (q238's CTEs), the composite assignment,
-    * and the prune.
+  /** [[semDedupTrainedImi]] over the [[IntKernel]] — the q236
+    * fixed-point discipline on the PRODUCT grid, so the trained
+    * past-the-ceiling geometry is hash-replayable too. Gate q240
+    * replays both half Lloyds (q238's CTEs), the composite assignment
+    * (padded full-width argmins differ from the 32-dim half distances
+    * by a row constant, so ties and order match the oracle), and the
+    * prune.
     */
   def semDedupTrainedImiPortable(df: DataFrame, idCol: String, vecCol: String,
                                  kPerHalf: Int = 0, threshold: Double = 0.95,
                                  iters: Int = 3,
                                  targetClusterSize: Long = ImiTargetClusterSize,
                                  maxTrainRows: Long = MaxTrainRows): DataFrame = {
-    val c0 = df.select(col(idCol).cast("long").as("id"), asDouble(col(vecCol)).as("v"))
-      .withColumn("vi", toIntVec(col("v")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = c0.count()
-    val k = if (kPerHalf > 0) kPerHalf else imiHalfCentroids(n, targetClusterSize)
-    val (cb1, cb2) = intImiHalfCodebooks(c0.select(col("id"), col("vi")),
-      k, iters, n, maxTrainRows)
-    val dim = cb1.head.length + cb2.head.length
-    val cb1p = intImiPad(cb1, dim, padHead = false)
-    val cb2p = intImiPad(cb2, dim, padHead = true)
-    val vecs = c0
-      .select(col("id").as("vec_id"), col("v").as("__v"),
-        (intNearestCid(cb1p, col("vi")).cast("long") * cb2.length +
-          intNearestCid(cb2p, col("vi")).cast("long")).as("cluster_id"))
-      .localCheckpoint(true)
-    c0.unpersist()
-    semDedupWithin(vecs, threshold)
+    val c0 = corpusOf(IntKernel, df, idCol, vecCol)
+    semDedupOn(c0, imiOrFrozen(IntKernel, c0, kPerHalf, iters,
+      targetClusterSize, maxTrainRows, None), threshold)
   }
 
   /** Margin-based neighbor scoring (Artetxe & Schwenk, ACL 2019 — the
@@ -1460,8 +1363,11 @@ object Similarity {
   /** Margin-based top-k ([[marginTopKBrute]] semantics) with the leg
     * implementation AUTO-SELECTED by corpus size: exact brute force up
     * to `maxBrute` vectors (the oracle-gated form, q169), IVF-candidate
-    * legs ([[marginTopKAnn]]) beyond — recall-floor-pinned by
-    * MarginAnnSpec, timed as b169_margin_ann.
+    * legs ([[marginTopKAnn]]) beyond, and the IMI grid
+    * ([[marginTopKImi]]) past `imiCutoverRows`, where the √n legs'
+    * candidate volume n·nProbe·(n/4096) would grow quadratically. The
+    * corpus is counted ONCE; the ANN routes train over a relation
+    * persisted after that count.
     */
   def marginTopK(queries: DataFrame, corpus: DataFrame, k: Int, knn: Int = 4,
                  qId: String = "query_id", qVec: String = "query_vec",
@@ -1471,165 +1377,171 @@ object Similarity {
     val n = corpus.count()
     if (n <= maxBrute)
       marginTopKBrute(queries, corpus, k, knn, qId, qVec, cId, cVec)
-    else if (n > imiCutoverRows)
-      // past the single-level list cap the sqrt(n) IVF legs' candidate
-      // volume n·nProbe·(n/4096) grows quadratically — the IMI grid
-      // keeps cell size (and so the self-kNN volume per row) constant
-      marginTopKImi(queries, corpus, k, knn,
-        kPerHalf = imiHalfCentroids(n, ImiTargetClusterSize),
-        qId = qId, qVec = qVec, cId = cId, cVec = cVec)
-    else
-      marginTopKAnn(queries, corpus, k, knn, qId = qId, qVec = qVec,
-        cId = cId, cVec = cVec)
+    else {
+      val c0 = corpusOf(FloatKernel, corpus, cId, cVec, fanOut = true)
+      val imi = n > imiCutoverRows
+      marginOn(queries, c0, trainCoarse(FloatKernel, c0, n, imi,
+          if (imi) imiHalfCentroids(n, ImiTargetClusterSize) else autoCentroidsTable(n),
+          iters = 3, MaxTrainRows),
+        k, knn, nProbe = 8, qId, qVec, portable = None)
+    }
   }
 
   /** The corpus-scale margin path: BOTH brute legs replaced by IVF
-    * candidates from ONE k-means training —
-    *
-    *  - the per-vector kNN-sum leg probes each corpus vector's `nProbe`
-    *    nearest lists through a SHUFFLED equi-join on the list id (never
-    *    the brute form's full-corpus broadcast): the scored pair volume
-    *    n·nProbe·(n/nCentroids) ≈ n^1.5-ish vs the brute n² is consumed
-    *    IN-STAGE by the cosine + bounded top-k partial aggregation —
-    *    shuffle volume is ~(1+nProbe)× the corpus, the pair stream
-    *    itself never materializes;
-    *  - past [[MaxLiteralCentroids]] derived lists, every argmin/probe
-    *    step switches from the chained literal tree to the MATRIX form
-    *    (one typedLit centroid array + codegen DotProduct in the
-    *    lambda — round 9's fastest measured float shape at every probed
-    *    geometry), so the √n sizing runs uncapped to
-    *    [[MaxTableCentroids]] at O(1) plan size;
-    *  - the pair-scoring leg is the standard broadcast-query IVF probe
-    *    ([[ivfTopK]]'s shape) over the same assignment;
-    *  - margin arithmetic is unchanged except the a-sum becomes a MEAN
-    *    over however many (≤ knn) neighbors the probed lists held, so an
-    *    isolated vector degrades gracefully instead of erroring.
-    *
-    * The assignment is localCheckpoint'd (eager) — two probe legs
-    * consume it, and the blocks release with the DataFrame (the
-    * Hits/q212 discipline, no persist leak). Approximation is
-    * candidate-recall only: scores of returned candidates are exact
-    * cosine over exact a-means of the ANN kNN sets.
+    * candidates from ONE k-means training over √n lists (uncapped by
+    * the literal tree — the matrix form takes over past
+    * [[MaxLiteralCentroids]]; MarginSpec pins it bit-identical to the
+    * chained tree). Recall-floor-pinned by MarginAnnSpec, timed as
+    * b169_margin_ann. Approximation is candidate-recall only: scores of
+    * returned candidates are exact cosine over exact a-means of the ANN
+    * kNN sets; the a-mean is a MEAN over however many (≤ knn) neighbors
+    * the probed lists held, so an isolated vector degrades gracefully.
     */
   def marginTopKAnn(queries: DataFrame, corpus: DataFrame, k: Int, knn: Int = 4,
                     nCentroids: Int = 0, nProbe: Int = 8, iters: Int = 3,
                     qId: String = "query_id", qVec: String = "query_vec",
                     cId: String = "vec_id", cVec: String = "embedding",
                     maxTrainRows: Long = MaxTrainRows): DataFrame = {
-    val c0 = corpus.select(col(cId).cast("long").as("id"), asDouble(col(cVec)).as("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val c0 = corpusOf(FloatKernel, corpus, cId, cVec, fanOut = true)
     val n = c0.count()
-    // √n UNCAPPED-by-the-literal-tree: list size — and the self-join's
-    // pair volume n·nProbe·(n/nC) — keeps shrinking per the √n rule
-    // instead of saturating at the literal cap (200k vectors: 448
-    // lists, not 256). Past [[MaxLiteralCentroids]] the literal helpers
-    // take the MATRIX form with the codegen dot (round 9 — fastest
-    // measured float shape; MarginSpec pins it bit-identical to the
-    // chained tree at nC=150).
-    val nC = if (nCentroids > 0) nCentroids else autoCentroidsTable(n)
-    val centroids = lloydFloat(trainSample(c0, n, maxTrainRows),
-      lowestIdSeeds[Double](c0, col("v"), nC), iters)
-    val assigned = c0.withColumn("cid", floatNearestCid(centroids, col("v")))
-      .withColumn("__cn", l2norm(col("v")))
-      .localCheckpoint(true)
+    marginOn(queries, c0, trainCoarse(FloatKernel, c0, n, imi = false,
+      if (nCentroids > 0) nCentroids else autoCentroidsTable(n), iters, maxTrainRows),
+      k, knn, nProbe, qId, qVec, portable = None)
+  }
+
+  /** The margin legs over the IMI PRODUCT grid: cells derive as
+    * ceil(n / targetClusterSize), so the self-kNN leg's candidate
+    * volume n·nProbe·cellSize is LINEAR in the corpus at any size the
+    * grid reaches (~1.7·10¹⁰ vectors at the defaults). Recall floor
+    * pinned by MarginImiSpec against the brute gold; `codebooksOpt`
+    * runs against FROZEN half codebooks (the at-rest [[MarginIndex]]
+    * parity seam).
+    */
+  def marginTopKImi(queries: DataFrame, corpus: DataFrame, k: Int, knn: Int = 4,
+                    kPerHalf: Int = 0, nProbe: Int = 8, iters: Int = 3,
+                    qId: String = "query_id", qVec: String = "query_vec",
+                    cId: String = "vec_id", cVec: String = "embedding",
+                    targetClusterSize: Long = ImiTargetClusterSize,
+                    maxTrainRows: Long = MaxTrainRows,
+                    codebooksOpt: Option[(Array[Array[Double]], Array[Array[Double]])] = None): DataFrame = {
+    val c0 = corpusOf(FloatKernel, corpus, cId, cVec, fanOut = true)
+    marginOn(queries, c0, imiOrFrozen(FloatKernel, c0, kPerHalf, iters,
+      targetClusterSize, maxTrainRows, codebooksOpt), k, knn, nProbe, qId, qVec,
+      portable = None)
+  }
+
+  /** ENGINE-PORTABLE ANN margin: [[marginTopKAnn]] over the
+    * [[IntKernel]] with the brute form's fixed knn = 4 — every step
+    * replayable by a SQL oracle, which is how q225 hash-gates the ANN
+    * path end to end (recall vs the brute gold, the q216 pattern).
+    */
+  def marginTopKAnnPortable(queries: DataFrame, corpus: DataFrame, k: Int,
+                            knn: Int = 4, nCentroids: Int = 0, nProbe: Int = 8,
+                            iters: Int = 3,
+                            qId: String = "query_id", qVec: String = "query_vec",
+                            cId: String = "vec_id", cVec: String = "embedding",
+                            maxTrainRows: Long = MaxTrainRows): DataFrame = {
+    require(knn == 4, s"margin fold is unrolled for knn = 4, got $knn")
+    val c0 = corpusOf(IntKernel, corpus, cId, cVec, fanOut = true)
+    val n = c0.count()
+    marginOn(queries, c0, trainCoarse(IntKernel, c0, n, imi = false,
+      if (nCentroids > 0) nCentroids else autoCentroids(n), iters, maxTrainRows),
+      k, knn, nProbe, qId, qVec, portable = Some("marginTopKAnnPortable"))
+  }
+
+  /** [[marginTopKAnnPortable]] on the INTEGER IMI grid — the
+    * past-the-ceiling margin geometry under the full oracle (gate q241,
+    * the q225 pattern at the q238 grid). The exact top-`nProbe` cells by
+    * d1+d2 equal ranking all k1·k2 cells by the full integer distance to
+    * the concatenated cell centroid (ties to the lowest composite cid
+    * both ways), so the oracle replays the probe as one rank over its
+    * `cells` relation.
+    */
+  def marginTopKImiPortable(queries: DataFrame, corpus: DataFrame, k: Int,
+                            knn: Int = 4, kPerHalf: Int = 0, nProbe: Int = 8,
+                            iters: Int = 3,
+                            qId: String = "query_id", qVec: String = "query_vec",
+                            cId: String = "vec_id", cVec: String = "embedding",
+                            targetClusterSize: Long = ImiTargetClusterSize,
+                            maxTrainRows: Long = MaxTrainRows): DataFrame = {
+    require(knn == 4, s"margin fold is unrolled for knn = 4, got $knn")
+    val c0 = corpusOf(IntKernel, corpus, cId, cVec, fanOut = true)
+    marginOn(queries, c0, imiOrFrozen(IntKernel, c0, kPerHalf, iters,
+      targetClusterSize, maxTrainRows, None), k, knn, nProbe, qId, qVec,
+      portable = Some("marginTopKImiPortable"))
+  }
+
+  /** The one margin body: [[marginTopKBrute]]'s two legs over IVF
+    * candidates of one trained quantizer.
+    *
+    *  - The assignment (cell, norm, probe staging) is localCheckpoint'd
+    *    — both legs consume it, and the blocks release with the
+    *    DataFrame (the Hits/q212 discipline, no persist leak).
+    *  - The self-kNN leg ([[imiSelfKnnAMeans]]) probes each corpus
+    *    vector's `nProbe` nearest cells through a SHUFFLED equi-join on
+    *    the cell id (never the brute form's full-corpus broadcast);
+    *    cosine + the bounded [[KnnAMeanFold]] consume the pair stream
+    *    in-stage, so shuffle volume is ~(1+nProbe)× the corpus.
+    *  - The pair-scoring leg is the broadcast-query probe
+    *    ([[queryProbes]]) over the same assignment, normalized by both
+    *    endpoints' a-means ([[marginNormalizeTopK]]).
+    *  - `portable` names an oracle-gated entry point, which keeps the
+    *    brute form's contract that every fold sees all `knn`
+    *    neighbours. Its `cos·8/(s_q+s_c)` tree over ascending k = 4
+    *    sums equals `cos·2/(a_q+a_c)` bit for bit — a = s/4 is exact —
+    *    which KnnAMeanFoldSpec pins.
+    */
+  private def marginOn(queries: DataFrame, c0: DataFrame, quant: Coarse[_], k: Int,
+                       knn: Int, nProbe: Int, qId: String, qVec: String,
+                       portable: Option[String]): DataFrame = {
+    require(knn >= 1 && knn <= 64,
+      s"margin a-means fold knn in 1..64 (fixed-width fold slots); got $knn.")
+    val assigned = probeAssigned(c0, quant, nProbe).localCheckpoint(true)
     c0.unpersist()
-
-    // self-kNN leg: each vector's nProbe probe rows CARRY its vector
-    // (nProbe×520B per vector — bounded) into the shuffled equi-join on
-    // the list id, and the cosine + bounded top-k partial aggregation
-    // consume the join output IN-STAGE. IVF probe pairs are already
-    // unique (every corpus vector lives in exactly ONE list), so there
-    // is no dedup step and — unlike a pairs-then-reattach shape — the
-    // n·nProbe·(n/nC) pair stream never materializes or shuffles (the
-    // reattach form sorted pair+vector rows: ~380 GB of spill at 200k
-    // vectors; this shape shuffles ~nProbe× the corpus, full stop)
-    val probesV = assigned
-      .select(col("id").as("__qid"), col("v").as("__qv"),
-        col("__cn").as("__qn"),
-        explode_outer(floatProbeCids(centroids, col("v"), nProbe)).as("cid"))
-      .filter(col("cid").isNotNull)
-    // cell-partitioned pair join (the imiKnnAMeansOver idiom, r13):
-    // AQE's bytes-proxy coalescing serializes this small-input/
-    // huge-output join otherwise
-    val selfParts = math.min(4096,
-      math.max(assigned.sparkSession.sessionState.conf.numShufflePartitions, nC))
-    val selfScored = assigned.repartition(selfParts, col("cid"))
-      .join(probesV.repartition(selfParts, col("cid")), Seq("cid"))
-      .filter(col("__qid") =!= col("id"))
-      .select(col("__qid").as(qId), col("id").as("neighbor_id"),
-        cosineWithNorms(col("__qv"), col("v"), col("__qn"), col("__cn")).as("cos"))
-    // a = mean of the ascending-folded top-knn cosines (deterministic:
-    // sorted array, left fold); tolerant to < knn probed neighbors.
-    // Checkpointed: BOTH margin join sides consume it, and its lineage
-    // is the whole self-kNN leg (the recomputed-subplan audit's find)
-    val nnMean = topkOf(selfScored, knn, qId)
-      .groupBy(col(qId).as("id"))
-      .agg(sort_array(collect_list(col("cos"))).as("cs"))
-      .select(col("id"),
-        (aggregate(col("cs"), lit(0.0d), (acc, x) => acc + x)
-          / size(col("cs"))).as("a"))
-      .localCheckpoint(true)
-
-    // pair-scoring leg: broadcast-query IVF probe over the same assignment
-    val q = queries.select(col(qId).cast("long").as(qId), asDouble(col(qVec)).as("__qv"))
-      .withColumn("__qn", l2norm(col("__qv")))
-      .withColumn("cid", explode_outer(floatProbeCids(centroids, col("__qv"), nProbe)))
-      .filter(col("cid").isNotNull)
-    val candScored = assigned.join(broadcast(q), Seq("cid"))
+    val fold = imiSelfKnnAMeans(assigned, quant, nProbe, knn)
+    val nnMean = portable.fold(fold)(who => fold.select(col("id"),
+        when(col("nk") === knn, col("a")).otherwise(raise_error(lit(
+          s"$who: every corpus vector must probe > $knn neighbors — raise nProbe")))
+          .as("a")))
+      .localCheckpoint(true) // both margin join sides consume it
+    val q = queryProbes(quant, queries, nProbe, qId, qVec)
+    val scored = assigned.join(broadcast(q), Seq("cid"))
       .filter(col(qId) =!= col("id"))
       .select(col(qId), col("id").as("neighbor_id"),
         cosineWithNorms(col("__qv"), col("v"), col("__qn"), col("__cn")).as("cos"))
-    val scored = candScored
       .join(nnMean.select(col("id").as(qId), col("a").as("__aq")), Seq(qId))
       .join(nnMean.select(col("id").as("neighbor_id"), col("a").as("__ac")),
         Seq("neighbor_id"))
-      .select(col(qId), col("neighbor_id"),
-        (col("cos") * lit(2.0d) / (col("__aq") + col("__ac"))).as("cos"))
-    topkOf(scored, k, qId)
-      .select(col(qId), col("neighbor_id").as("match_id"),
-        round(col("cos"), 4).as("margin_r"))
+    marginNormalizeTopK(scored, k, qId)
   }
 
-  /** The margin legs over the IMI PRODUCT grid — [[marginTopKAnn]]'s
-    * exact two-leg shape (self-kNN a-means + broadcast-query probe,
-    * same margin arithmetic) with assignment and probing against the
-    * k1 x k2 cell grid instead of a single centroid array:
-    *
-    *  - cells derive as ceil(n / targetClusterSize), so the self-kNN
-    *    leg's candidate volume n·nProbe·cellSize is ~n·nProbe·target —
-    *    LINEAR in the corpus at any size the grid reaches (~1.7·10¹⁰
-    *    vectors at the defaults), where the sqrt(n) single-level legs
-    *    degrade to n²·nProbe/4096 past their cap;
-    *  - probing is the EXACT top-nProbe cells by d1+d2 (multi-sequence
-    *    property: the per-half top-nProbe grid contains them), each
-    *    probe row an equi-join key on the composite cell id — shuffle
-    *    volume stays ~(1+nProbe)x the corpus, as in the IVF form;
-    *  - the per-half sorted probe slices are computed ONCE into the
-    *    checkpointed assignment (`__s1`/`__s2`), so the grid lambda
-    *    reads materialized attributes.
-    *
-    * Approximation is candidate-recall only (scores exact), same
-    * contract as [[marginTopKAnn]]; recall floor pinned by
-    * MarginImiSpec against the brute gold.
+  /** `c0` (id, v, the kernel vector) with its cell `cid`, norm `__cn`
+    * and the quantizer's probe staging — the relation a self-kNN leg
+    * probes from. A flat quantizer probes from the kernel vector, so it
+    * is kept; a staged grid drops it. Callers materialize the result.
     */
-  /** The IMI self-kNN a-mean leg, SHARED by [[marginTopKImi]] and the
-    * at-rest [[MarginIndex.build]] (one definition — the bit-parity the
-    * spec pins is structural, not copy-discipline): probe rows carry
-    * the prober's vector into the shuffled equi-join on the cell id,
-    * cosine + bounded top-k consume the pair stream IN-STAGE, then the
-    * ascending-sorted mean. `assigned` must be the MATERIALIZED
-    * (id, v, cid, __cn, __s1, __s2) relation. Output (id, a).
-    */
-  private[functions] def imiSelfKnnAMeans(assigned: DataFrame, k2: Int,
-                                          nProbe: Int, knn: Int,
-                                          nCells: Int): DataFrame =
-    imiKnnAMeansOver(assigned,
-      assigned.select(col("cid"), col("id"), col("v"), col("__cn")),
-      k2, nProbe, knn, nCells)
+  private[functions] def probeAssigned(c0: DataFrame, quant: Coarse[_], nProbe: Int): DataFrame = {
+    val kv = col(quant.kernel.vec)
+    val stage = quant.probeStage(kv, nProbe)
+    val base = if (stage.isEmpty) c0.columns.toSeq.map(col) else Seq(col("id"), col("v"))
+    c0.select(base ++ Seq(quant.cellId(kv).as("cid"), l2norm(col("v")).as("__cn")) ++ stage: _*)
+  }
 
-  /** The a-mean leg with an ASYMMETRIC candidate relation: `probeSide`
-    * = the rows needing an a-mean (id, v, __cn, __s1, __s2 — probe
-    * slices STAGED, the lambda-audit rule), `members` = the candidate
+  /** The self-kNN a-mean leg, SHARED by every in-session margin form
+    * and the at-rest [[MarginIndex.build]] (one definition — the
+    * bit-parity the specs pin is structural): [[imiKnnAMeansOver]] with
+    * the assigned relation as both sides. `assigned` must be the
+    * MATERIALIZED [[probeAssigned]] relation. Output (id, a, ck, nk).
+    */
+  private[functions] def imiSelfKnnAMeans(assigned: DataFrame, quant: Coarse[_],
+                                          nProbe: Int, knn: Int): DataFrame =
+    imiKnnAMeansOver(assigned, assigned.select(col("cid"), col("id"), col("v"), col("__cn")),
+      quant.probeCells(col(quant.kernel.vec), nProbe), knn, quant.nCells)
+
+  /** The a-mean leg with an ASYMMETRIC candidate relation (named for
+    * the grid it was written for; it serves both layouts): `probeSide`
+    * = the rows needing an a-mean (id, v, __cn and whatever `cells` —
+    * their probed cells — reads, staged), `members` = the candidate
     * pool (cid, id, v, __cn). [[imiSelfKnnAMeans]] is the symmetric
     * special case; [[MarginIndex.append]] recomputes a-means for the
     * TOUCHED rows only by restricting `probeSide` while keeping
@@ -1646,12 +1558,11 @@ object Similarity {
     * ∝ everyone-who-probes-a-touched-cell.
     */
   private[functions] def imiKnnAMeansOver(probeSide: DataFrame, members: DataFrame,
-                                          k2: Int, nProbe: Int, knn: Int,
-                                          nCells: Int): DataFrame = {
+                                          cells: Column, knn: Int,
+                                          nCells: Long): DataFrame = {
     val probesV = probeSide
       .select(col("id").as("__qid"), col("v").as("__qv"), col("__cn").as("__qn"),
-        explode_outer(imiProbeCellsOf(col("__s1"), col("__s2"), k2,
-          nProbe)).as("cid"))
+        explode_outer(cells).as("cid"))
       .filter(col("cid").isNotNull)
     // (A shuffled-hash hint on the members side was A/B'd in round 12 —
     // 49.2 vs 48.5 s at the 198k build, appends slightly worse: the
@@ -1664,11 +1575,13 @@ object Similarity {
     // of n·nProbe/shufflePartitions — at the 2M deck with the default
     // 32 partitions that is ~500k groups per map, and the per-pair
     // hash-map probe (cache misses) dominated the build (SCALE.md r12;
-    // the 2048-partition A/B read 392 → 307 s). The clamp keeps
+    // the 2048-partition A/B read 392 → 307 s). An explicit count is
+    // also AQE-exempt: bytes-proxy coalescing would serialize this
+    // small-input/huge-output join onto 1-2 tasks. The clamp keeps
     // gate-scale decks on the session default (no empty-task tax) and
     // caps task count at the IMI codebook ceiling.
     val sessionParts = members.sparkSession.sessionState.conf.numShufflePartitions
-    val nPart = math.min(4096, math.max(sessionParts, nCells))
+    val nPart = math.min(4096L, math.max(sessionParts.toLong, nCells)).toInt
     val selfScored = members
       .repartition(nPart, col("cid"))
       .join(probesV.repartition(nPart, col("cid")), Seq("cid"))
@@ -1691,34 +1604,9 @@ object Similarity {
         col("__f").getField("ck").as("ck"), col("__f").getField("nk").as("nk"))
   }
 
-  /** Query-side IMI probe rows, SHARED by [[marginTopKImi]],
-    * [[ivfTopKImi]] and [[MarginIndex.search]]: per-half sorted probe
-    * slices STAGED + eagerly materialized (broadcast-small by
-    * contract; the lambda audit rejects a half-sort re-evaluated per
-    * outer element), then the exact top-nProbe product cells exploded
-    * to (qId, __qv, __qn, cid) rows.
-    */
-  private[functions] def imiQueryProbes(queries: DataFrame,
-      cb1p: Array[Array[Double]], cb2p: Array[Array[Double]], nProbe: Int,
-      qId: String, qVec: String): DataFrame = {
-    val qStaged = queries
-      .select(col(qId).cast("long").as(qId), asDouble(col(qVec)).as("__qv"))
-      .select(col(qId), col("__qv"), l2norm(col("__qv")).as("__qn"),
-        imiHalfProbes(cb1p, col("__qv"), nProbe).as("__s1"),
-        imiHalfProbes(cb2p, col("__qv"), nProbe).as("__s2"))
-      .localCheckpoint(true)
-    qStaged
-      .select(col(qId), col("__qv"), col("__qn"),
-        explode_outer(imiProbeCellsOf(col("__s1"), col("__s2"),
-          cb2p.length, nProbe)).as("cid"))
-      .filter(col("cid").isNotNull)
-  }
-
   /** Margin normalization + bounded top-k, SHARED by every margin
     * variant's tail: `cand` = (qId, neighbor_id, cos, __aq, __ac) with
-    * the endpoints' a-MEANS — the `cos·2/(a_x+a_y)` mean form (the
-    * brute/portable forms fold SUMS and absorb /knn/2 into the /8
-    * literal; identical value).
+    * the endpoints' a-MEANS — the `cos·2/(a_x+a_y)` mean form.
     */
   private[functions] def marginNormalizeTopK(cand: DataFrame, k: Int,
                                              qId: String): DataFrame =
@@ -1726,261 +1614,6 @@ object Similarity {
         (col("cos") * lit(2.0d) / (col("__aq") + col("__ac"))).as("cos")), k, qId)
       .select(col(qId), col("neighbor_id").as("match_id"),
         round(col("cos"), 4).as("margin_r"))
-
-  def marginTopKImi(queries: DataFrame, corpus: DataFrame, k: Int, knn: Int = 4,
-                    kPerHalf: Int = 0, nProbe: Int = 8, iters: Int = 3,
-                    qId: String = "query_id", qVec: String = "query_vec",
-                    cId: String = "vec_id", cVec: String = "embedding",
-                    targetClusterSize: Long = ImiTargetClusterSize,
-                    maxTrainRows: Long = MaxTrainRows,
-                    codebooksOpt: Option[(Array[Array[Double]], Array[Array[Double]])] = None): DataFrame = {
-    require(knn >= 1 && knn <= 64,
-      s"marginTopKImi supports knn in 1..64 (fixed-width a-mean fold slots); got $knn.")
-    val c0 = corpus.select(col(cId).cast("long").as("id"), asDouble(col(cVec)).as("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = c0.count()
-    val kH = if (kPerHalf > 0) kPerHalf else imiHalfCentroids(n, targetClusterSize)
-    // codebooksOpt: run against FROZEN half codebooks (the at-rest
-    // [[MarginIndex]] parity seam) instead of training in-session
-    val (cb1, cb2) = codebooksOpt.getOrElse(
-      imiTrainedHalfCodebooks(c0, kH, iters, n, maxTrainRows))
-    val dim = cb1.head.length + cb2.head.length
-    val cb1p = imiPad(cb1, dim, padHead = false)
-    val cb2p = imiPad(cb2, dim, padHead = true)
-    val assigned = c0
-      .select(col("id"), col("v"),
-        imiCellIdFrom(cb1p, cb2p, col("v")).as("cid"),
-        l2norm(col("v")).as("__cn"),
-        imiHalfProbes(cb1p, col("v"), nProbe).as("__s1"),
-        imiHalfProbes(cb2p, col("v"), nProbe).as("__s2"))
-      .localCheckpoint(true)
-    c0.unpersist()
-
-    val members = assigned.select(col("cid"), col("id"), col("v"), col("__cn"))
-    val nnMean = imiSelfKnnAMeans(assigned, cb2p.length, nProbe, knn,
-        nCells = cb1p.length * cb2p.length)
-      .localCheckpoint(true) // both margin join sides consume it
-    val q = imiQueryProbes(queries, cb1p, cb2p, nProbe, qId, qVec)
-    val candScored = members.join(broadcast(q), Seq("cid"))
-      .filter(col(qId) =!= col("id"))
-      .select(col(qId), col("id").as("neighbor_id"),
-        cosineWithNorms(col("__qv"), col("v"), col("__qn"), col("__cn")).as("cos"))
-    val scored = candScored
-      .join(nnMean.select(col("id").as(qId), col("a").as("__aq")), Seq(qId))
-      .join(nnMean.select(col("id").as("neighbor_id"), col("a").as("__ac")),
-        Seq("neighbor_id"))
-    marginNormalizeTopK(scored, k, qId)
-  }
-
-  /** ENGINE-PORTABLE ANN margin: [[marginTopKAnn]]'s two-leg shape with
-    * the IVF pieces in exact integer arithmetic ([[ivfTopKPortable]]'s
-    * discipline) and the brute form's unrolled knn=4 ascending fold +
-    * `cos·8/(s_x+s_y)` literal margin tree — every step replayable by a
-    * SQL oracle, which is how q225 hash-gates the ANN path end to end
-    * (recall vs the brute gold, the q216 pattern).
-    */
-  def marginTopKAnnPortable(queries: DataFrame, corpus: DataFrame, k: Int,
-                            knn: Int = 4, nCentroids: Int = 0, nProbe: Int = 8,
-                            iters: Int = 3,
-                            qId: String = "query_id", qVec: String = "query_vec",
-                            cId: String = "vec_id", cVec: String = "embedding",
-                            maxTrainRows: Long = MaxTrainRows): DataFrame = {
-    require(knn == 4, s"margin fold is unrolled for knn = 4, got $knn")
-    // FanOut: the per-row matrix argmin/probe-slice assignment and every
-    // downstream leg inherit this relation's parallelism — a one-file
-    // corpus otherwise runs the whole path on one task (measured r13)
-    val c0 = graft.util.FanOut(
-        corpus.select(col(cId).cast("long").as("id"), asDouble(col(cVec)).as("v")))
-      .withColumn("vi", toIntVec(col("v")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = c0.count()
-    val nC = if (nCentroids > 0) nCentroids else autoCentroids(n)
-    val init = lowestIdSeeds[Long](c0, col("vi"), nC)
-    val centroids = lloydInt(trainSample(c0, n, maxTrainRows), init, iters)
-    // vi is a MATERIALIZED checkpoint column, so the probe leg reads it
-    // instead of re-quantizing per centroid (the q61 staging rule)
-    val assigned = c0.withColumn("cid", intNearestCid(centroids, col("vi")))
-      .withColumn("__cn", l2norm(col("v")))
-      .localCheckpoint(true)
-    c0.unpersist()
-
-    // probe rows carry the prober's vector; scoring fuses into the cid
-    // join and the pair stream flows straight into the bounded top-k
-    // partial agg (see marginTopKAnn — the reattach shape spilled)
-    val probesV = assigned
-      .select(col("id").as("__qid"), col("v").as("__qv"),
-        col("__cn").as("__qn"),
-        explode_outer(intProbeCids(centroids, col("vi"), nProbe)).as("cid"))
-      .filter(col("cid").isNotNull)
-    // pair join partitioned by CELL at ~one cell per partition (the
-    // imiKnnAMeansOver idiom, r13): AQE's bytes-proxy coalescing would
-    // re-serialize this small-input/huge-output join onto 1-2 tasks
-    val selfParts = math.min(4096,
-      math.max(assigned.sparkSession.sessionState.conf.numShufflePartitions, nC))
-    val selfScored = assigned.repartition(selfParts, col("cid"))
-      .join(probesV.repartition(selfParts, col("cid")), Seq("cid"))
-      .filter(col("__qid") =!= col("id"))
-      .select(col("__qid").as(qId), col("id").as("neighbor_id"),
-        cosineWithNorms(col("__qv"), col("v"), col("__qn"), col("__cn")).as("cos"))
-    // checkpointed: both margin join sides consume it, and its lineage
-    // is the whole self-kNN leg (the recomputed-subplan audit's find)
-    val nnSum = topkOf(selfScored, knn, qId)
-      .groupBy(col(qId).as("id"))
-      .agg(sort_array(collect_list(col("cos"))).as("cs"))
-      .select(col("id"),
-        when(size(col("cs")) === knn,
-          element_at(col("cs"), 1) + element_at(col("cs"), 2) +
-            element_at(col("cs"), 3) + element_at(col("cs"), 4))
-          .otherwise(raise_error(
-            lit(s"marginTopKAnnPortable: every corpus vector must probe " +
-              s"> $knn neighbors — raise nProbe")))
-          .as("s"))
-      .localCheckpoint(true)
-
-    val q = queries.select(col(qId).cast("long").as(qId), asDouble(col(qVec)).as("__qv"))
-      .withColumn("__qn", l2norm(col("__qv")))
-      .withColumn("__qvi", toIntVec(col("__qv")))
-      .withColumn("cid", explode_outer(intProbeCids(centroids, col("__qvi"), nProbe)))
-      .filter(col("cid").isNotNull)
-    val candScored = assigned.join(broadcast(q), Seq("cid"))
-      .filter(col(qId) =!= col("id"))
-      .select(col(qId), col("id").as("neighbor_id"),
-        cosineWithNorms(col("__qv"), col("v"), col("__qn"), col("__cn")).as("cos"))
-    val scored = candScored
-      .join(nnSum.select(col("id").as(qId), col("s").as("__sq")), Seq(qId))
-      .join(nnSum.select(col("id").as("neighbor_id"), col("s").as("__sc")),
-        Seq("neighbor_id"))
-      .select(col(qId), col("neighbor_id"),
-        (col("cos") * lit(8.0) / (col("__sq") + col("__sc"))).as("cos"))
-    topkOf(scored, k, qId)
-      .select(col(qId), col("neighbor_id").as("match_id"),
-        round(col("cos"), 4).as("margin_r"))
-  }
-
-  /** [[marginTopKAnnPortable]] with the coarse quantizer the INTEGER
-    * IMI product grid — the past-the-ceiling margin geometry under the
-    * full oracle (gate q241, the q225 pattern at the q238 grid): both
-    * half codebooks train with the exact integer Lloyd, assignment is
-    * the separable composite cell, and PROBING is the exact
-    * top-`nProbe` cells by d1+d2 — which equals ranking all k1·k2
-    * cells by the full 64-dim integer distance to the concatenated
-    * cell centroid (the padded half distances differ by a row
-    * constant; ties to the lowest composite cid both ways, and the
-    * multi-sequence containment holds under that tie order), so the
-    * oracle replays the probe as one rank over the `cells` relation.
-    * The margin arithmetic is the brute form's literal tree verbatim.
-    */
-  def marginTopKImiPortable(queries: DataFrame, corpus: DataFrame, k: Int,
-                            knn: Int = 4, kPerHalf: Int = 0, nProbe: Int = 8,
-                            iters: Int = 3,
-                            qId: String = "query_id", qVec: String = "query_vec",
-                            cId: String = "vec_id", cVec: String = "embedding",
-                            targetClusterSize: Long = ImiTargetClusterSize,
-                            maxTrainRows: Long = MaxTrainRows): DataFrame = {
-    require(knn == 4, s"margin fold is unrolled for knn = 4, got $knn")
-    // FanOut: same input-parallelism floor as marginTopKAnnPortable
-    val c0 = graft.util.FanOut(
-        corpus.select(col(cId).cast("long").as("id"), asDouble(col(cVec)).as("v")))
-      .withColumn("vi", toIntVec(col("v")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = c0.count()
-    val kH = if (kPerHalf > 0) kPerHalf else imiHalfCentroids(n, targetClusterSize)
-    val (cb1, cb2) = intImiHalfCodebooks(c0.select(col("id"), col("vi")),
-      kH, iters, n, maxTrainRows)
-    val dim = cb1.head.length + cb2.head.length
-    val cb1p = intImiPad(cb1, dim, padHead = false)
-    val cb2p = intImiPad(cb2, dim, padHead = true)
-    // assignment + the per-half probe slices staged and MATERIALIZED
-    // once (the marginTopKImi discipline: the grid lambda must read
-    // attributes, never re-sort the codebook distances per element)
-    val assigned = c0
-      .select(col("id"), col("v"),
-        (intNearestCid(cb1p, col("vi")).cast("long") * cb2.length +
-          intNearestCid(cb2p, col("vi")).cast("long")).as("cid"),
-        l2norm(col("v")).as("__cn"),
-        slice(array_sort(intDistStructsMatrix(cb1p, col("vi"))), 1, nProbe).as("__s1"),
-        slice(array_sort(intDistStructsMatrix(cb2p, col("vi"))), 1, nProbe).as("__s2"))
-      .localCheckpoint(true)
-    c0.unpersist()
-
-    // self-kNN leg: probe rows carry the prober's vector into the
-    // cell-id equi-join; cosine + bounded top-k consume the pair stream
-    // in-stage (the marginTopKAnnPortable shape, composite-cell keyed)
-    val probesV = assigned
-      .select(col("id").as("__qid"), col("v").as("__qv"), col("__cn").as("__qn"),
-        explode_outer(imiProbeCellsOf(col("__s1"), col("__s2"), cb2.length,
-          nProbe)).as("cid"))
-      .filter(col("cid").isNotNull)
-    val members = assigned.select(col("cid"), col("id"), col("v"), col("__cn"))
-    // cell-partitioned pair join (the imiKnnAMeansOver idiom, r13)
-    val selfParts = math.min(4096,
-      math.max(assigned.sparkSession.sessionState.conf.numShufflePartitions,
-        kH * kH))
-    val selfScored = members.repartition(selfParts, col("cid"))
-      .join(probesV.repartition(selfParts, col("cid")), Seq("cid"))
-      .filter(col("__qid") =!= col("id"))
-      .select(col("__qid").as(qId), col("id").as("neighbor_id"),
-        cosineWithNorms(col("__qv"), col("v"), col("__qn"), col("__cn")).as("cos"))
-    val nnSum = topkOf(selfScored, knn, qId)
-      .groupBy(col(qId).as("id"))
-      .agg(sort_array(collect_list(col("cos"))).as("cs"))
-      .select(col("id"),
-        when(size(col("cs")) === knn,
-          element_at(col("cs"), 1) + element_at(col("cs"), 2) +
-            element_at(col("cs"), 3) + element_at(col("cs"), 4))
-          .otherwise(raise_error(
-            lit(s"marginTopKImiPortable: every corpus vector must probe " +
-              s"> $knn neighbors — raise nProbe")))
-          .as("s"))
-      .localCheckpoint(true)
-
-    // pair-scoring leg: broadcast-query probe over the same cells, the
-    // query side's slices staged + materialized like the corpus side's
-    val qStaged = queries
-      .select(col(qId).cast("long").as(qId), asDouble(col(qVec)).as("__qv"))
-      .select(col(qId), col("__qv"), l2norm(col("__qv")).as("__qn"),
-        toIntVec(col("__qv")).as("__qvi"))
-      .select(col(qId), col("__qv"), col("__qn"),
-        slice(array_sort(intDistStructsMatrix(cb1p, col("__qvi"))), 1, nProbe).as("__s1"),
-        slice(array_sort(intDistStructsMatrix(cb2p, col("__qvi"))), 1, nProbe).as("__s2"))
-      .localCheckpoint(true) // broadcast-small
-    val q = qStaged
-      .select(col(qId), col("__qv"), col("__qn"),
-        explode_outer(imiProbeCellsOf(col("__s1"), col("__s2"),
-          cb2.length, nProbe)).as("cid"))
-      .filter(col("cid").isNotNull)
-    val candScored = members.join(broadcast(q), Seq("cid"))
-      .filter(col(qId) =!= col("id"))
-      .select(col(qId), col("id").as("neighbor_id"),
-        cosineWithNorms(col("__qv"), col("v"), col("__qn"), col("__cn")).as("cos"))
-    val scored = candScored
-      .join(nnSum.select(col("id").as(qId), col("s").as("__sq")), Seq(qId))
-      .join(nnSum.select(col("id").as("neighbor_id"), col("s").as("__sc")),
-        Seq("neighbor_id"))
-      .select(col(qId), col("neighbor_id"),
-        (col("cos") * lit(8.0) / (col("__sq") + col("__sc"))).as("cos"))
-    topkOf(scored, k, qId)
-      .select(col(qId), col("neighbor_id").as("match_id"),
-        round(col("cos"), 4).as("margin_r"))
-  }
-
-  /** Literal lookup cid → centroid array: chained when below
-    * [[MaxLiteralCentroids]] (the oracle-replayed gate form), one
-    * element_at into the matrix literal past it (O(1) plan size). No
-    * centroids (an empty corpus) is a typed null.
-    */
-  private[functions] def intCentroidOf(coarse: Array[Array[Long]], cid: Column): Column =
-    if (coarse.isEmpty) lit(null).cast("array<bigint>")
-    else if (coarse.length > MaxLiteralCentroids)
-      element_at(intCentroidMatrix(coarse), cid.cast("int") + 1)
-    else {
-      val cases = coarse.zipWithIndex.map { case (cA, i) =>
-        (lit(i), lit(cA))
-      }
-      cases.tail.foldLeft(when(cid === cases.head._1, cases.head._2)) {
-        case (acc, (i, cA)) => acc.when(cid === i, cA)
-      }
-    }
 
   /** (qId, neighbor_id, valCol) → bounded per-query top-k by LOWEST
     * value (ties → lowest id): negate for the aggregator's highest-wins
@@ -2047,74 +1680,53 @@ object Similarity {
                         qId: String = "query_id", qVec: String = "query_vec",
                         cId: String = "vec_id", cVec: String = "embedding",
                         maxTrainRows: Long = MaxTrainRows): DataFrame = {
-    val (index, coarse, codebooks) = ivfPqBuildIndex(corpus, dim, m,
-      kCentroids, nCentroids, coarseIters, pqIters, cId, cVec, maxTrainRows)
-    topkByLowest(adcProbeScore(toQInt(queries, qId, qVec), index, coarse,
+    val (index, quant, codebooks) = ivfPqBuildIndex(corpus, dim, m, kCentroids,
+      coarseIters, pqIters, cId, cVec, maxTrainRows, imi = false,
+      n => if (nCentroids > 0) nCentroids else autoCentroidsTable(n))
+    topkByLowest(adcProbeScore(toQInt(queries, qId, qVec), index, quant,
       codebooks, dim, m, nProbe, qId), k, qId, "adc_q")
   }
 
   /** INDEX CONSTRUCTION — the train+encode half of IVFADC, shared by the
     * in-session search paths and [[AnnIndex]]'s at-rest
-    * materialization. Returns `(index, coarse, codebooks)` where `index`
+    * materialization. Returns `(index, quant, codebooks)` where `index`
     * is the relation (id, cid, ri, __c0..__c{m-1}): the checkpointed
     * residual rows with their PQ codes projected on lazily — this
-    * relation IS the index's storage (`vi = ri + coarse(cid)`
+    * relation IS the index's storage (`vi = ri + centroidOf(cid)`
     * reconstructs every exact integer vector from it, losslessly).
-    * Both quantizers train on the bounded [[MaxTrainRows]] hash sample;
-    * the one full-corpus pass is the assign+residual job that lands in
-    * the checkpoint.
+    * The coarse quantizer is the [[IntKernel]] over either layout
+    * (`cells` derives its size from the row count); both quantizers
+    * train on the bounded [[MaxTrainRows]] hash sample, and the one
+    * full-corpus pass is the assign+residual job that lands in the
+    * checkpoint.
     */
   private[functions] def ivfPqBuildIndex(corpus: DataFrame, dim: Int, m: Int,
-      kCentroids: Int, nCentroids: Int, coarseIters: Int, pqIters: Int,
-      cId: String, cVec: String,
-      maxTrainRows: Long): (DataFrame, Array[Array[Long]], Array[Array[Array[Long]]]) = {
+      kCentroids: Int, coarseIters: Int, pqIters: Int, cId: String, cVec: String,
+      maxTrainRows: Long, imi: Boolean,
+      cells: Long => Int): (DataFrame, Coarse[Long], Array[Array[Array[Long]]]) = {
     require(m >= 1 && dim % m == 0, s"m=$m must divide dim=$dim")
-    val c0 = corpus.select(col(cId).cast("long").as("id"),
-        asDouble(col(cVec)).as("v"))
-      .withColumn("vi", toIntVec(col("v")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // √n list sizing when unset, UNCAPPED by the chained literal tree:
-    // past [[MaxLiteralCentroids]] derived lists the literal helpers
-    // (intNearestCid/intProbeCids/intCentroidOf) switch to the MATRIX
-    // form — one typedLit centroid array, O(1) plan size, zero shuffle
-    // — so the √n rule runs to [[MaxTableCentroids]] (SCALE.md round 8
-    // bake-off: the fastest measured coarse shape at 20k×142 and 200k×448).
+    val c0 = corpusOf(IntKernel, corpus, cId, cVec)
     val n = c0.count()
-    val nC = if (nCentroids > 0) nCentroids else autoCentroidsTable(n)
-    val coarse = lloydInt(trainSample(c0, n, maxTrainRows),
-      lowestIdSeeds[Long](c0, col("vi"), nC), coarseIters)
+    val quant = trainCoarse(IntKernel, c0, n, imi, cells(n), coarseIters, maxTrainRows)
     // the residual relation feeds m·pqIters training aggregates plus
     // the encode pass → checkpointed once
-    val res = intAssignResidual(c0, coarse).localCheckpoint(true)
+    val res = assignResidual(c0, quant).localCheckpoint(true)
     c0.unpersist()
-    val (index, codebooks) = pqOnResiduals(res, m, dim / m, kCentroids,
-      pqIters, n, maxTrainRows)
-    (index, coarse, codebooks)
-  }
-
-  /** Coarse-list assignment + residual over (…, vi): adds the nearest
-    * list `cid` and ri = vi − coarse(cid) — the shared encode step of
-    * [[ivfPqBuildIndex]] and [[AnnIndex]]'s frozen-quantizer append
-    * (the single-level twin of [[intImiAssignResidual]]).
-    */
-  private[functions] def intAssignResidual(df: DataFrame,
-                                           coarse: Array[Array[Long]]): DataFrame =
-    df.withColumn("cid", intNearestCid(coarse, col("vi")))
-      .select(col("id"), col("cid"),
-        zip_with(col("vi"), intCentroidOf(coarse, col("cid")), (a, b) => a - b).as("ri"))
-
-  /** Residual-codebook training + code assignment, shared by the
-    * single-level ([[ivfPqBuildIndex]]) and IMI ([[ivfPqBuildIndexImi]])
-    * coarse forms — the coarse quantizer only changes WHICH residuals
-    * arrive here. `res` = (id, cid, ri), checkpointed by the caller.
-    */
-  private def pqOnResiduals(res: DataFrame, m: Int, subDim: Int,
-                            kCentroids: Int, pqIters: Int, n: Long,
-                            maxTrainRows: Long): (DataFrame, Array[Array[Array[Long]]]) = {
-    val codebooks = pqCodebooks(res, "ri", m, subDim, kCentroids, pqIters,
+    val codebooks = pqCodebooks(res, "ri", m, dim / m, kCentroids, pqIters,
       n, maxTrainRows)
-    (pqIndexRows(res, codebooks, subDim), codebooks)
+    (pqIndexRows(res, codebooks, dim / m), quant, codebooks)
   }
+
+  /** Cell assignment + residual over (…, vi): adds the cell `cid` and
+    * ri = vi − centroidOf(cid) — the encode step of [[ivfPqBuildIndex]]
+    * and [[AnnIndex]]'s frozen-quantizer append. The cell id is staged
+    * (it feeds the output AND the centroid lookup — a heavy argmin
+    * referenced twice keeps its own Project).
+    */
+  private[functions] def assignResidual(df: DataFrame, quant: Coarse[Long]): DataFrame =
+    df.withColumn("cid", quant.cellId(col("vi")))
+      .select(col("id"), col("cid"),
+        zip_with(col("vi"), quant.centroidOf(col("cid")), (a, b) => a - b).as("ri"))
 
   /** (id, cid, ri) → (id, cid, ri, __c0..__c{m-1}): the index row
     * shape, shared by the in-session builds and [[AnnIndex]]'s append.
@@ -2124,165 +1736,6 @@ object Similarity {
                                      subDim: Int): DataFrame =
     res.select(col("id") +: col("cid") +: col("ri") +:
       pqCodes(col("ri"), codebooks, subDim): _*)
-
-  // ---- integer IMI coarse for the IVFADC family: the [[semDedupImi]]
-  // product grid in EXACT integer arithmetic, so the at-rest ADC index
-  // ([[graft.functions.AnnIndex]]) escapes the same min(√n, 4096) list
-  // ceiling — past it, a single-level index's per-query candidate
-  // volume n·nProbe/4096 grows linearly, while the grid holds cell
-  // size at the target. Everything is engine-replayable: per-half
-  // integer Lloyd (the lloydInt recipe on 32-dim halves), separable
-  // assignment (argmin of d1+d2 IS (argmin d1, argmin d2) — the sum
-  // decomposes over disjoint coordinates, ties per half to the lowest
-  // cid, which equals the lowest composite cid), residuals against
-  // the CONCATENATED cell centroid, probing by exact top-nProbe cells
-  // (padded integer distances differ from the half distances by the
-  // row-constant Σvᵢ² of the other half, so cell ORDER is exact).
-
-  private def intImiPad(cb: Array[Array[Long]], dim: Int,
-                        padHead: Boolean): Array[Array[Long]] =
-    cb.map { c =>
-      val pad = Array.fill(dim - c.length)(0L)
-      if (padHead) pad ++ c else c ++ pad
-    }
-
-  /** Product-cell assignment + residual over (…, vi): adds
-    * cid = c1·k2 + c2 and ri = vi − (c1 ‖ c2), the shared encode step
-    * of [[ivfPqBuildIndexImi]] and [[AnnIndex]]'s frozen-quantizer
-    * IMI append. c1/c2 are staged (each feeds the composite id AND the
-    * centroid lookup — a heavy argmin referenced twice keeps its own
-    * Project).
-    */
-  private[functions] def intImiAssignResidual(df: DataFrame,
-      cb1: Array[Array[Long]], cb2: Array[Array[Long]],
-      dim: Int): DataFrame = {
-    val cb1p = intImiPad(cb1, dim, padHead = false)
-    val cb2p = intImiPad(cb2, dim, padHead = true)
-    val cb1Lit = typedLit(cb1.map(_.toSeq).toSeq)
-    val cb2Lit = typedLit(cb2.map(_.toSeq).toSeq)
-    df.withColumn("c1", intNearestCid(cb1p, col("vi")))
-      .withColumn("c2", intNearestCid(cb2p, col("vi")))
-      .select(col("id"),
-        (col("c1").cast("long") * cb2.length + col("c2")).as("cid"),
-        zip_with(col("vi"),
-          concat(element_at(cb1Lit, col("c1") + 1),
-            element_at(cb2Lit, col("c2") + 1)),
-          (a, b) => a - b).as("ri"))
-  }
-
-  /** Trained integer half codebooks: lowest-id seeds, one bounded-
-    * sample [[lloydInt]] per half over eagerly-checkpointed half
-    * projections. `c0` = (id, vi).
-    */
-  private[functions] def intImiHalfCodebooks(c0: DataFrame, k: Int, iters: Int,
-                                             n: Long, maxTrainRows: Long): (Array[Array[Long]], Array[Array[Long]]) = {
-    val rows = lowestIdSeeds[Long](c0, col("vi"), k)
-    require(rows.nonEmpty, "int imi codebooks: empty corpus")
-    val h = (rows.head.length + 1) / 2
-    val h2 = rows.head.length - h
-    val train = trainSample(c0, n, maxTrainRows)
-      .select(col("id"), slice(col("vi"), 1, h).as("vi"),
-        slice(col("vi"), h + 1, h2).as("vi2"))
-      .localCheckpoint(true)
-    // independent half-Lloyds over the checkpointed sample — overlap
-    // (guide §2.6 via graft.util.Par; same rule as the float halves)
-    graft.util.Par.both(
-      lloydInt(train.select(col("id"), col("vi")), rows.map(_.take(h)), iters),
-      lloydInt(train.select(col("id"), col("vi2").as("vi")),
-        rows.map(_.drop(h)), iters))
-  }
-
-  /** IMI-coarse IVFADC build: product-cell assignment, residuals
-    * against the concatenated cell centroid (c1 ‖ c2 — an O(1)
-    * two-lookup expression; the k1·k2 cell centroids are never
-    * materialized), then the SAME residual-PQ training/encode as the
-    * single-level build. Returns (index(id, cid, ri, __c*), cb1, cb2,
-    * codebooks); cid = c1·k2 + c2.
-    */
-  private[functions] def ivfPqBuildIndexImi(corpus: DataFrame, dim: Int, m: Int,
-      kCentroids: Int, kPerHalf: Int, coarseIters: Int, pqIters: Int,
-      cId: String, cVec: String, maxTrainRows: Long,
-      targetCellSize: Long = ImiTargetClusterSize): (DataFrame, Array[Array[Long]], Array[Array[Long]], Array[Array[Array[Long]]]) = {
-    require(m >= 1 && dim % m == 0, s"m=$m must divide dim=$dim")
-    val subDim = dim / m
-    val c0 = corpus.select(col(cId).cast("long").as("id"),
-        asDouble(col(cVec)).as("v"))
-      .withColumn("vi", toIntVec(col("v")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = c0.count()
-    val kH = if (kPerHalf > 0) kPerHalf else imiHalfCentroids(n, targetCellSize)
-    val (cb1, cb2) = intImiHalfCodebooks(c0.select(col("id"), col("vi")),
-      kH, coarseIters, n, maxTrainRows)
-    val res = intImiAssignResidual(c0, cb1, cb2, dim).localCheckpoint(true)
-    c0.unpersist()
-    val (index, codebooks) = pqOnResiduals(res, m, subDim, kCentroids,
-      pqIters, n, maxTrainRows)
-    (index, cb1, cb2, codebooks)
-  }
-
-  /** The probe+score half of IMI-coarse IVFADC — [[adcProbeScore]]'s
-    * shape with the probe list the exact top-`nProbe` product cells
-    * and the residual base the concatenated cell centroid. The query
-    * relation is broadcast-small; its per-half probe slices are staged
-    * and eagerly materialized so the grid lambda reads attributes.
-    */
-  private[functions] def adcProbeScoreImi(qint: DataFrame, index: DataFrame,
-      cb1: Array[Array[Long]], cb2: Array[Array[Long]],
-      codebooks: Array[Array[Array[Long]]],
-      dim: Int, m: Int, nProbe: Int, qId: String): DataFrame = {
-    val cb1p = intImiPad(cb1, dim, padHead = false)
-    val cb2p = intImiPad(cb2, dim, padHead = true)
-    val k2 = cb2.length
-    val qStaged = qint
-      .select(col(qId), col("__qvi"),
-        slice(array_sort(intDistStructsMatrix(cb1p, col("__qvi"))), 1, nProbe).as("__s1"),
-        slice(array_sort(intDistStructsMatrix(cb2p, col("__qvi"))), 1, nProbe).as("__s2"))
-      .localCheckpoint(true)
-    val qResid = qStaged
-      .select(col(qId), col("__qvi"),
-        explode_outer(imiProbeCellsOf(col("__s1"), col("__s2"), k2, nProbe)).as("pcid"))
-      .filter(col("pcid").isNotNull)
-      .select(col(qId), col("pcid"),
-        zip_with(col("__qvi"), intImiCellCentroid(cb1, cb2, col("pcid")),
-          (a, b) => a - b).as("qri"))
-    val q = qResid
-      .select(col(qId) +: col("pcid") +: adcTables(col("qri"), codebooks, dim / m): _*)
-    index.join(broadcast(q), col("cid") === col("pcid"))
-      .filter(col(qId) =!= col("id"))
-      .select(col(qId), col("id").as("neighbor_id"), adcLookup(m).as("adc_q"))
-  }
-
-  /** The concatenated centroid of a product cell — two O(1) lookups
-    * into the half-codebook literals, never a k1·k2 materialization.
-    * cid must be the composite c1·k2 + c2.
-    */
-  private[functions] def intImiCellCentroid(cb1: Array[Array[Long]],
-      cb2: Array[Array[Long]], cid: Column): Column = {
-    val k2 = cb2.length
-    concat(
-      element_at(typedLit(cb1.map(_.toSeq).toSeq),
-        (cid.cast("long") / k2).cast("int") + 1),
-      element_at(typedLit(cb2.map(_.toSeq).toSeq),
-        pmod(cid.cast("long"), lit(k2.toLong)).cast("int") + 1))
-  }
-
-  /** The distinct probe CELLS of a (broadcast-small) integer query
-    * relation against an IMI grid — the pruning key for the at-rest
-    * index ([[AnnIndex.probedCids]]'s IMI form). qint = (…, __qvi).
-    */
-  private[functions] def intImiQueryProbeCells(qint: DataFrame,
-      cb1: Array[Array[Long]], cb2: Array[Array[Long]], dim: Int,
-      nProbe: Int): DataFrame = {
-    val cb1p = intImiPad(cb1, dim, padHead = false)
-    val cb2p = intImiPad(cb2, dim, padHead = true)
-    qint.select(
-        slice(array_sort(intDistStructsMatrix(cb1p, col("__qvi"))), 1, nProbe).as("__s1"),
-        slice(array_sort(intDistStructsMatrix(cb2p, col("__qvi"))), 1, nProbe).as("__s2"))
-      .localCheckpoint(true) // broadcast-small; grid lambda reads attributes
-      .select(explode_outer(
-        imiProbeCellsOf(col("__s1"), col("__s2"), cb2.length, nProbe)).as("cid"))
-      .filter(col("cid").isNotNull)
-  }
 
   /** In-session IMI-coarse IVFADC top-k — [[ivfPqTopKPortable]]'s
     * engine-portable contract (every step exact integer arithmetic,
@@ -2301,32 +1754,29 @@ object Similarity {
                    cId: String = "vec_id", cVec: String = "embedding",
                    maxTrainRows: Long = MaxTrainRows,
                    targetCellSize: Long = ImiTargetClusterSize): DataFrame = {
-    val (index, cb1, cb2, codebooks) = ivfPqBuildIndexImi(corpus, dim, m,
-      kCentroids, kPerHalf, coarseIters, pqIters, cId, cVec, maxTrainRows,
-      targetCellSize)
-    topkByLowest(adcProbeScoreImi(toQInt(queries, qId, qVec), index,
-      cb1, cb2, codebooks, dim, m, nProbe, qId), k, qId, "adc_q")
+    val (index, quant, codebooks) = ivfPqBuildIndex(corpus, dim, m, kCentroids,
+      coarseIters, pqIters, cId, cVec, maxTrainRows, imi = true,
+      n => if (kPerHalf > 0) kPerHalf else imiHalfCentroids(n, targetCellSize))
+    topkByLowest(adcProbeScore(toQInt(queries, qId, qVec), index, quant,
+      codebooks, dim, m, nProbe, qId), k, qId, "adc_q")
   }
 
-  /** The probe+score half of IVFADC, literal/matrix coarse form:
-    * queries probe their `nProbe` nearest coarse lists, each (query,
-    * list) row carries the m per-codebook ADC tables (distance of the
-    * query RESIDUAL to every codebook entry — k·m integers, all
-    * broadcast), and candidates score by m `element_at` lookups.
-    * `index` is any relation carrying (id, cid, __c0..__c{m-1}) —
+  /** The probe+score half of IVFADC: queries probe their `nProbe`
+    * nearest cells, each (query, cell) row carries the m per-codebook
+    * ADC tables (distance of the query RESIDUAL against the cell
+    * centroid to every codebook entry — k·m integers, all broadcast),
+    * and candidates score by m `element_at` lookups. `index` is any
+    * relation carrying (id, cid, __c0..__c{m-1}) —
     * [[ivfPqBuildIndex]]'s in-session checkpoint or [[AnnIndex]]'s
     * pruned at-rest read; columns beyond the code set (ri) are pruned
     * by the projection.
     */
   private[functions] def adcProbeScore(qint: DataFrame, index: DataFrame,
-      coarse: Array[Array[Long]], codebooks: Array[Array[Array[Long]]],
+      quant: Coarse[Long], codebooks: Array[Array[Array[Long]]],
       dim: Int, m: Int, nProbe: Int, qId: String): DataFrame = {
-    val qResid = qint
-      .withColumn("pcid", explode_outer(intProbeCids(coarse, col("__qvi"), nProbe)))
-      .filter(col("pcid").isNotNull)
+    val q = quant.probeRows(qint, "__qvi", nProbe, Seq(qId, "__qvi"), "pcid")
       .select(col(qId), col("pcid"),
-        zip_with(col("__qvi"), intCentroidOf(coarse, col("pcid")), (a, b) => a - b).as("qri"))
-    val q = qResid
+        zip_with(col("__qvi"), quant.centroidOf(col("pcid")), (a, b) => a - b).as("qri"))
       .select(col(qId) +: col("pcid") +: adcTables(col("qri"), codebooks, dim / m): _*)
     index.join(broadcast(q), col("cid") === col("pcid"))
       .filter(col(qId) =!= col("id"))
@@ -2360,11 +1810,12 @@ object Similarity {
     // convert ONCE, eagerly — the query side is broadcast-small by
     // contract and feeds two branches (ADC probes + re-rank scoring)
     val qint = toQInt(queries, qId, qVec).localCheckpoint(true)
-    val (index, coarse, codebooks) = ivfPqBuildIndex(corpus, dim, m,
-      kCentroids, nCentroids, coarseIters, pqIters, cId, cVec, maxTrainRows)
+    val (index, quant, codebooks) = ivfPqBuildIndex(corpus, dim, m, kCentroids,
+      coarseIters, pqIters, cId, cVec, maxTrainRows, imi = false,
+      n => if (nCentroids > 0) nCentroids else autoCentroidsTable(n))
     rerankTopK(qint, index,
-      adcProbeScore(qint, index, coarse, codebooks, dim, m, nProbe, qId),
-      k, rerank, qId, intCentroidOf(coarse, _))
+      adcProbeScore(qint, index, quant, codebooks, dim, m, nProbe, qId),
+      k, rerank, qId, quant.centroidOf)
   }
 
   /** The exact re-rank of IVFADC+R, SHARED by [[ivfPqRerankTopK]] and

@@ -50,6 +50,8 @@ object VecIndex {
     */
   final case class Meta(cb1: Array[Array[Double]], cb2: Array[Array[Double]]) {
     def dim: Int = cb1.head.length + cb2.head.length
+    private[functions] def quant: Similarity.Coarse[Double] =
+      Similarity.Imi(Similarity.FloatKernel, cb1, cb2)
   }
 
   private[functions] def renderMeta(m: Meta): String =
@@ -80,15 +82,12 @@ object VecIndex {
     * (build tail, append encoder, dedup batch side) shares.
     */
   private def assignWith(meta: Meta, rows: DataFrame,
-                         cId: String, cVec: String): DataFrame = {
-    val cb1p = Similarity.imiPad(meta.cb1, meta.dim, padHead = false)
-    val cb2p = Similarity.imiPad(meta.cb2, meta.dim, padHead = true)
+                         cId: String, cVec: String): DataFrame =
     rows.select(col(cId).cast("long").as("id"),
         Similarity.asDouble(col(cVec)).as("v"))
       .select(col("id"), col("v"),
         Similarity.l2norm(col("v")).as("cn"),
-        Similarity.imiCellIdFrom(cb1p, cb2p, col("v")).as("cid"))
-  }
+        meta.quant.cellId(col("v")).as("cid"))
 
   /** Derive/train the codebooks, assign, and land the corpus as ONE
     * replacing TxTable commit: rows under `cid=` Hive dirs with
@@ -114,11 +113,13 @@ object VecIndex {
         Similarity.asDouble(col(cVec)).as("v"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val n = c0.count()
+    // an index with no rows carries no codebook tag in its commit
+    // stats, so nothing could ever read it back
+    require(n > 0, s"VecIndex.build: empty corpus, nothing to index at $table")
     val kH = if (kPerHalf > 0) kPerHalf
       else Similarity.imiHalfCentroids(n, targetClusterSize)
-    val (cb1, cb2) =
-      if (iters <= 0) Similarity.imiFixedHalfCodebooks(c0, kH)
-      else Similarity.imiTrainedHalfCodebooks(c0, kH, iters, n, maxTrainRows)
+    val (cb1, cb2) = Similarity.trainCoarse(Similarity.FloatKernel, c0, n,
+      imi = true, kH, iters, maxTrainRows).parts
     c0.unpersist() // the assign pass below re-reads the source once
     val meta = Meta(cb1, cb2)
     val head = TxTable.headVersion(spark, table)
@@ -256,7 +257,7 @@ object VecIndex {
     * (listing-time pruning from the commit log's cid stats), exact
     * cosine over the candidates, bounded top-k. Bit-identical to
     * [[Similarity.ivfTopKImi]] run with this index's frozen codebooks
-    * (VecIndexSpec): the probe staging ([[Similarity.imiQueryProbes]])
+    * (VecIndexSpec): the probe staging ([[Similarity.queryProbes]])
     * and the scoring tail are the same definitions — the one
     * divergence is WHERE the corpus assignment comes from (the pruned
     * read instead of an in-session pass).
@@ -264,10 +265,8 @@ object VecIndex {
   def search(spark: SparkSession, table: String, queries: DataFrame, k: Int,
              nProbe: Int = 8, qId: String = "query_id",
              qVec: String = "query_vec"): DataFrame = {
-    val meta = readMeta(spark, table)
-    val cb1p = Similarity.imiPad(meta.cb1, meta.dim, padHead = false)
-    val cb2p = Similarity.imiPad(meta.cb2, meta.dim, padHead = true)
-    val q = Similarity.imiQueryProbes(queries, cb1p, cb2p, nProbe, qId, qVec)
+    val q = Similarity.queryProbes(readMeta(spark, table).quant, queries,
+      nProbe, qId, qVec)
     val probed = q.select(col("cid")).distinct().collect()
       .map(_.getLong(0)).toSet // <= |queries|·nProbe ids, the pruning key
     if (probed.isEmpty) return emptyResult(spark, qId)

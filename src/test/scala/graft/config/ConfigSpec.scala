@@ -6,7 +6,6 @@ import graft.SparkSpec
 import graft.model.PartitionSpec
 
 class ConfigSpec extends SparkSpec {
-  import spark.implicits._
 
   test("SpecStore parses CSV with JSON partition config, filters active + groups") {
     val dir = java.nio.file.Files.createTempDirectory("graft-cfg")

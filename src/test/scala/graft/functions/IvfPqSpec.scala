@@ -147,8 +147,8 @@ class IvfPqSpec extends SparkSpec {
     val seeds = intSeeds(16)
     val cents = seeds :+ seeds(3)
     val vi = Similarity.toIntVec($"embedding")
-    val chained = Similarity.intDistStructs(cents, $"vi")
-    val matrix = Similarity.intDistStructsMatrix(cents, $"vi")
+    val chained = Similarity.IntKernel.chained(cents, $"vi")
+    val matrix = Similarity.IntKernel.matrix(cents, $"vi")
     val rows = emb.select($"vec_id".cast("long").as("id"), vi.as("vi"))
       .select($"id",
         (-greatest(chained: _*).getField("negcid")).as("a_chained"),
@@ -169,7 +169,7 @@ class IvfPqSpec extends SparkSpec {
   }
 
   test("centroid-TABLE coarse leg is bit-identical to the literal tree (re-rank)") {
-    // intCentroidOf — the re-rank's cid → centroid lookup — as the
+    // Flat.centroidOf — the re-rank's cid → centroid lookup — as the
     // one-Literal matrix (130 centroids, past MaxLiteralCentroids) and
     // as the chained tree (the first 128 of them): both must return the
     // same arrays, including the duplicated centroid at cid 100
@@ -178,8 +178,8 @@ class IvfPqSpec extends SparkSpec {
     val chainedCents = cents.take(Similarity.MaxLiteralCentroids)
     val rows = spark.range(cents.length).select($"id".cast("int").as("cid"))
       .select($"cid",
-        Similarity.intCentroidOf(cents, $"cid").as("m"),
-        Similarity.intCentroidOf(chainedCents, $"cid").as("c"))
+        Similarity.Flat(Similarity.IntKernel, cents).centroidOf($"cid").as("m"),
+        Similarity.Flat(Similarity.IntKernel, chainedCents).centroidOf($"cid").as("c"))
       .collect()
     rows.foreach { r =>
       val cid = r.getInt(0)
@@ -200,12 +200,19 @@ class IvfPqSpec extends SparkSpec {
     assert(Similarity.pqAdcTopK(queries, empty, k = 10, dim = 64).count() === 0)
     assert(Similarity.pqEncodePortable(empty, "vec_id", "embedding", dim = 64)
       .count() === 0)
-    // an index with no rows could never be read back: build refuses it
+    // the IMI grid forms: no half codebooks means typed-null cells
+    assert(Similarity.ivfTopKImi(queries, empty, k = 10).count() === 0)
+    assert(Similarity.ivfPqTopKImi(queries, empty, k = 10, dim = 64).count() === 0)
+    // an index with no rows could never be read back: both builds refuse it
     val table = java.nio.file.Files.createTempDirectory("graft-empty-ann").toString + "/idx"
     val e = intercept[IllegalArgumentException] {
       AnnIndex.build(spark, empty, table, dim = 64)
     }
     assert(e.getMessage.contains("empty corpus"))
+    val eImi = intercept[IllegalArgumentException] {
+      AnnIndex.buildImi(spark, empty, table, dim = 64)
+    }
+    assert(eImi.getMessage.contains("empty corpus"))
   }
 
   test("ADC distances are deterministic across runs") {

@@ -76,4 +76,36 @@ class KnnAMeanFoldSpec extends SparkSpec {
     assert(!plan.contains("ObjectHashAggregate") && !plan.contains("SortAggregate"),
       s"the fold must stay on HashAggregate (the whole point):\n$plan")
   }
+
+  test("knn = 4 margin tail: cos·2/(a_q+a_c) from the fold equals cos·8/(s_q+s_c)") {
+    // the oracle-gated margin forms used to fold an unrolled ascending
+    // k = 4 SUM s and normalize cos·8/(s_q+s_c); they now share the
+    // fold's MEAN a. a = s/4 is exact (a power-of-two scale), so the
+    // two tails must agree to the bit — ties and negatives included
+    val rnd = new scala.util.Random(7)
+    val pool = Array(0.5, -0.5, 0.25, 1.0, -1.0, 0.1, -0.3, 0.7071067811865476)
+    def cos(): Double =
+      if (rnd.nextInt(4) == 0) pool(rnd.nextInt(pool.length)) // ties
+      else rnd.nextDouble() * 2 - 1
+    val groups = (0 until 400).map(g => (g.toLong, Seq.fill(4)(cos())))
+    val scored = groups.flatMap { case (g, cs) =>
+      cs.zipWithIndex.map { case (c, i) => (g, i.toLong, c) }
+    }.toDF("__mq", "neighbor_id", "cos").repartition(8)
+    val a = newShape(scored, 4).select($"id", $"a").as[(Long, Double)]
+      .collect().toMap
+    // the replaced unrolled sum: ((c1 + c2) + c3) + c4, ascending
+    val s = groups.map { case (g, cs) =>
+      val x = cs.sorted
+      g -> (((x(0) + x(1)) + x(2)) + x(3))
+    }.toMap
+    assert(a.size === groups.size)
+    for (_ <- 0 until 2000) {
+      val (q, c) = (rnd.nextInt(groups.size).toLong, rnd.nextInt(groups.size).toLong)
+      val cs = cos()
+      val viaMean = cs * 2.0 / (a(q) + a(c))
+      val viaSum = cs * 8.0 / (s(q) + s(c))
+      assert(java.lang.Double.doubleToRawLongBits(viaMean) ===
+        java.lang.Double.doubleToRawLongBits(viaSum), s"q=$q c=$c cos=$cs")
+    }
+  }
 }

@@ -130,14 +130,14 @@ class MarginSpec extends SparkSpec {
       col("embedding").cast("array<double>").as("v"))
     val seeds = c0.orderBy(col("id")).limit(150).select(col("v")).collect()
       .map(_.getSeq[Double](0).toArray)
-    val trained = Similarity.lloydFloat(c0, seeds, 3)
+    val trained = Similarity.lloyd(Similarity.FloatKernel, c0, seeds, 3)
     val v = col("v")
     val j = c0.filter(col("id") === 0)
-      .select(array_min(Similarity.floatDistStructsMatrix(trained, v)).getField("cid"))
+      .select(array_min(Similarity.FloatKernel.matrix(trained, v)).getField("cid"))
       .head().getInt(0)
     val cents = trained :+ trained(j)
-    val chained = Similarity.floatScoredStructs(cents, v)
-    val matrix = Similarity.floatDistStructsMatrix(cents, v)
+    val chained = Similarity.FloatKernel.chained(cents, v)
+    val matrix = Similarity.FloatKernel.matrix(cents, v)
     val rows = c0.select(col("id"),
         (-greatest(chained: _*).getField("negcid")).as("a_chained"),
         array_min(matrix).getField("cid").as("a_matrix"),

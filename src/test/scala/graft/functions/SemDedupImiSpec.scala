@@ -128,4 +128,26 @@ class SemDedupImiSpec extends SparkSpec {
       imiCutoverRows = 10L).select($"vec_id").as[Long].collect().toSet
     assert(survivors == again, "handed-off trained IMI must be deterministic")
   }
+
+  test("an empty corpus gives empty IMI SemDeDup and margin results; IMI index builds refuse it") {
+    val empty = emb.filter(lit(false))
+    val queries = emb.filter($"vec_id" <= 9)
+      .select($"vec_id".as("query_id"), $"embedding".as("query_vec"))
+    assert(Similarity.semDedupImi(empty, "vec_id", "embedding").count() === 0)
+    assert(Similarity.semDedupTrainedImi(empty, "vec_id", "embedding").count() === 0)
+    assert(Similarity.semDedupTrainedImiPortable(empty, "vec_id", "embedding").count() === 0)
+    assert(Similarity.marginTopKImi(queries, empty, k = 5).count() === 0)
+    assert(Similarity.marginTopKImiPortable(queries, empty, k = 5).count() === 0)
+    // an index with no rows carries no codebook tag, so it could never
+    // be read back: the at-rest builds fail fast instead
+    val dir = java.nio.file.Files.createTempDirectory("graft-empty-imi").toString
+    val eVec = intercept[IllegalArgumentException] {
+      VecIndex.build(spark, empty, s"$dir/vec")
+    }
+    assert(eVec.getMessage.contains("empty corpus"))
+    val eMargin = intercept[IllegalArgumentException] {
+      MarginIndex.build(spark, empty, s"$dir/margin")
+    }
+    assert(eMargin.getMessage.contains("empty corpus"))
+  }
 }

@@ -35,7 +35,7 @@ class GroupedPercentilesSpec extends SparkSpec {
     hit.unionByName(allNull)
   }
 
-  private def check(df: DataFrame, pBp: Seq[Int], coarse: Int = 1024): Unit = {
+  private def check(df: DataFrame, pBp: Seq[Int], coarse: Int): Unit = {
     val got = GroupedPercentiles.percentilesByRange(df, $"v", $"g", pBp, coarse)
     val want = reference(df, pBp)
     assert(got.columns.toSeq == Seq("g", "p_bp", "v"))

@@ -1,7 +1,5 @@
 package graft.sink
 
-import org.apache.spark.sql.functions._
-
 import graft.SparkSpec
 import graft.sources.Tables
 

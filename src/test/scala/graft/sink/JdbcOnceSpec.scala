@@ -2,8 +2,6 @@ package graft.sink
 
 import java.sql.DriverManager
 
-import org.scalatest.funsuite.AnyFunSuite
-
 import graft.SparkSpec
 
 /** upsertBatchOnce: exactly-once guard, atomicity under mid-batch

@@ -88,7 +88,6 @@ class SinkSpec extends SparkSpec {
   }
 
   test("a source that changes mid-run (non-repeatable read) fails validation and rolls back") {
-    import org.apache.spark.sql.functions._
     import graft.model._
     val dir = java.nio.file.Files.createTempDirectory("graft-rbrun").toString
     val store = new graft.state.LogStore(spark, s"$dir/logs")
@@ -128,7 +127,6 @@ class SinkSpec extends SparkSpec {
   }
 
   test("with the default cached slice, a mid-run source mutation is snapshot-isolated away") {
-    import org.apache.spark.sql.functions._
     import graft.model._
     val dir = java.nio.file.Files.createTempDirectory("graft-snap").toString
     val store = new graft.state.LogStore(spark, s"$dir/logs")

@@ -1,7 +1,6 @@
 package graft.sink
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** Snapshot clone (cloneAt): zero-copy on local FS via hardlinks, full
   * independence of the two tables afterward.

@@ -1,7 +1,5 @@
 package graft.sink
 
-import org.apache.spark.sql.functions._
-
 import graft.SparkSpec
 
 /** Metadata-only restore: file re-pointing, history, vacuum safety. */

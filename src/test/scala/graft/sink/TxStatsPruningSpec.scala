@@ -1,7 +1,5 @@
 package graft.sink
 
-import org.apache.hadoop.fs.Path
-
 import graft.SparkSpec
 
 /** Per-file column stats in the commit log: selective reads must skip

@@ -36,7 +36,7 @@ import graft.sink.HostileFileSystem
   */
 class LogStoreHostileSpec extends SparkSpec {
 
-  private def log(status: String, end: String, at: Long = 0L): RunLog =
+  private def log(status: String, end: String, at: Long): RunLog =
     RunLog(1L, status, "x", end, 10L, 10L, "r", new Timestamp(at))
 
   private def fsFor(p: String) =

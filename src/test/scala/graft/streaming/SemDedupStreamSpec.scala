@@ -1,7 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.functions._
-
 import graft.SparkSpec
 import graft.functions.{Similarity, VecIndex}
 import graft.sink.TxTable
