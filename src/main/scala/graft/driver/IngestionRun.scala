@@ -157,11 +157,11 @@ final class IngestionRun(spark: SparkSession, lakeRoot: String, logStore: LogSto
       else graft.sink.Rollback.listFiles(spark, lakePath(spec))
     // overwritePartitions: idempotent re-runs — replace exactly the
     // partitions this run touches instead of appending (the at-scale
-    // alternative to delete-rollback; needs derived partition columns)
+    // alternative to delete-rollback; needs derived partition columns).
+    // Dynamic mode is the write's own option, never a session setting:
+    // concurrent specs and later writes in the session keep their mode.
     val mode =
       if (overwritePartitions && partCols.nonEmpty) SaveMode.Overwrite else SaveMode.Append
-    if (mode == SaveMode.Overwrite)
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
     // Validation invariant: lake_window_after == pre_window + slice_window,
     // every count over ONE shared predicate (Validation.windowPredicate —
@@ -228,6 +228,7 @@ final class IngestionRun(spark: SparkSession, lakeRoot: String, logStore: LogSto
       else {
         val writer = observed.write
           .mode(mode)
+          .option("partitionOverwriteMode", "dynamic")
           .option("compression", "snappy")
           .option("maxRecordsPerFile", 5000000)
         (if (partCols.nonEmpty) writer.partitionBy(partCols: _*) else writer)

@@ -91,7 +91,7 @@ final class Orchestrator(spark: SparkSession, lakeRoot: String, logStore: LogSto
       b.count() }
     logStore.append(Seq(RunLog(logId, RunStatus.Started, tick.toString,
       tick.toString, n, 0L, "semantic-tick", LogStore.now())))
-    def vecRows(): Long = Orchestrator.statRowCount(spark, vecTable)
+    def vecRows(): Long = TxTable.rowCount(spark, vecTable)
     val vecBefore = vecRows()
 
     // the verdict rule is the streaming maintainer's, ONE definition
@@ -150,22 +150,6 @@ final class Orchestrator(spark: SparkSession, lakeRoot: String, logStore: LogSto
 }
 
 object Orchestrator {
-  /** Current row count of a [[TxTable]]: zero data IO when every current
-    * file carries [[TxTable.RowCountStat]] in the commit log; one COUNTED
-    * read otherwise. The fallback matters because `fileStats` is
-    * keep-safe — on a listing/URI mismatch it emits NO stats for a file
-    * rather than guessing — and a stat-less file silently deflating the
-    * sum would make the tick's count validation report a spurious
-    * ValidationFailure for a tick that actually landed (r12 ADVICE).
-    */
-  def statRowCount(spark: SparkSession, table: String): Long = {
-    import graft.sink.TxTable
-    val perFile = TxTable.currentFilesWithStats(spark, table)
-      .map(_._2.find(_.col == TxTable.RowCountStat).map(_.lo.toLong))
-    if (perFile.forall(_.isDefined)) perFile.flatten.sum
-    else TxTable.read(spark, table).count()
-  }
-
   /** What one [[Orchestrator.semanticTick]] did — sink by sink, plus the
     * zero-IO count validation and the drift signal.
     */

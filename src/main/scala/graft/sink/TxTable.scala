@@ -17,9 +17,11 @@ import org.apache.spark.sql.functions.{col, lit, when}
   * }}}
   *
   * Every commit lists files `added` and files `removed` (table-relative
-  * paths). The CURRENT table state = replay of all commits in version
-  * order. Writers stage data files first — readers never see them — then
-  * publish with ONE filesystem operation: a rename of the commit JSON
+  * paths). A table state — current, historical, or the next checkpoint
+  * — is ONE fold of commits in version order onto a checkpoint base
+  * ([[fold]], reached through [[replay]]). Writers stage data files
+  * first — readers never see them — then publish with ONE filesystem
+  * operation: a rename of the commit JSON
   * into `_graft_txn/<next-version>.json` (racing writers are resolved by
   * a per-table JVM lock plus no-replace-rename detection — see
   * [[commit]] for the exact guarantees per layer; conflict-checked
@@ -46,10 +48,13 @@ import org.apache.spark.sql.functions.{col, lit, when}
   * planning from the log is safe on any store.
   *
   * Read planning is CHECKPOINTED: every `checkpointEvery` commits the
-  * live file set snapshots to `<version>.ckpt`, and replay is snapshot +
-  * commit suffix — O(interval) opens however old the table is, so a
-  * commit-per-micro-batch stream can run for months without planning
-  * degradation. [[vacuum]] reclaims the replay-redundant log prefix.
+  * committing writer folds its own commit onto the prior state and
+  * snapshots the result to `<version>.ckpt`; replay is that snapshot +
+  * the commit suffix through the same fold — O(interval) opens however
+  * old the table is, so a commit-per-micro-batch stream can run for
+  * months without planning degradation. The head version needs no
+  * replay: it is the highest version named in one log listing.
+  * [[vacuum]] reclaims the replay-redundant log prefix.
   *
   * Deliberately out of scope (this is parity engineering, not a table
   * format): schema evolution in the log, multi-table transactions,
@@ -96,8 +101,9 @@ object TxTable {
       s"stats must align with added (${stats.size} vs ${added.size})")
   }
 
-  /** Snapshot of the LIVE file set as of `version` — replay shortcut.
-    * Written every `checkpointEvery` commits so read planning opens one
+  /** Snapshot of the LIVE file set as of `version` — replay shortcut,
+    * and the shape of every replayed state ([[fold]]'s result). Written
+    * every `checkpointEvery` commits so read planning opens one
     * snapshot + a bounded commit suffix instead of every JSON since v1
     * (a commit-per-micro-batch stream would otherwise grow planning
     * without bound — the exact failure the log exists to prevent).
@@ -146,56 +152,83 @@ object TxTable {
     listLog(fs, table)._1.map { case (_, p) => parse(slurp(fs, p)) }
   }
 
-  /** (head version, live (file, stats) entries): latest checkpoint +
-    * commit-suffix replay. FS opens are 1 checkpoint + (commits since
-    * it) — bounded by `checkpointEvery` regardless of table age.
+  /** The one head rule: the highest version any commit or checkpoint
+    * NAME in the listing carries (0 = never committed). No file opens.
     */
-  private def currentFull(fs: FileSystem, table: String)
-      : (Long, Seq[(String, Seq[ColStat])], Map[String, Long]) = {
-    val (cs, ks) = listLog(fs, table)
-    val base = ks.lastOption.map { case (_, p) => parseCkpt(slurp(fs, p)) }
-    val baseV = base.map(_.version).getOrElse(0L)
-    val suffix = cs.filter(_._1 > baseV).map { case (_, p) => parse(slurp(fs, p)) }
+  private def headOf(log: (Seq[(Long, Path)], Seq[(Long, Path)])): Long =
+    (0L +: (log._1.map(_._1) ++ log._2.map(_._1))).max
+
+  /** THE replay fold — the only place commits become a live set: apply
+    * `commits` in order onto `base`. Adds land at the end of the live
+    * order (a re-add of a still-live file keeps its place, a re-add of a
+    * removed one moves to the end) and a file's stats are the ones its
+    * latest adding commit carried; removes drop the file. Writer-txn
+    * watermarks max-merge, so idempotence memory survives log cleaning
+    * through the checkpoint exactly like the live set. The result is
+    * the checkpoint of the state after the last commit — stats aligned
+    * one-per-live-file. Live order decides [[readFiles]]' union column
+    * order, so it must never depend on how the state was reached.
+    */
+  private def fold(base: Checkpoint, commits: Seq[Commit]): Checkpoint = {
     val live = scala.collection.mutable.LinkedHashMap[String, Seq[ColStat]]()
-    def fold(files: Seq[String], stats: Seq[Seq[ColStat]], removed: Seq[String]): Unit = {
-      val st = if (stats.isEmpty) files.map(_ => Seq.empty[ColStat]) else stats
-      files.zip(st).foreach { case (f, s) => live(f) = s }
-      removed.foreach(live.remove)
-    }
-    // writer-txn watermarks survive log cleaning through the checkpoint,
-    // exactly like the live set — idempotence memory must not expire
     val txns = scala.collection.mutable.LinkedHashMap[String, Long]()
-    base.foreach { k =>
-      fold(k.live, k.stats, Nil)
-      k.txns.foreach { case (a, v) => txns(a) = math.max(v, txns.getOrElse(a, Long.MinValue)) }
+    def add(files: Seq[String], stats: Seq[Seq[ColStat]]): Unit =
+      files.zip(if (stats.isEmpty) files.map(_ => Seq.empty[ColStat]) else stats)
+        .foreach { case (f, st) => live(f) = st }
+    def mark(app: String, v: Long): Unit =
+      txns(app) = math.max(v, txns.getOrElse(app, Long.MinValue))
+    add(base.live, base.stats)
+    base.txns.foreach { case (a, v) => mark(a, v) }
+    commits.foreach { c =>
+      add(c.added, c.stats)
+      c.removed.foreach(live.remove)
+      c.txn.foreach { case (a, v) => mark(a, v) }
     }
-    suffix.foreach { c =>
-      fold(c.added, c.stats, c.removed)
-      c.txn.foreach { case (a, v) => txns(a) = math.max(v, txns.getOrElse(a, Long.MinValue)) }
-    }
-    val head = (baseV +: cs.map(_._1)).max
-    (head, live.toSeq, txns.toMap)
+    Checkpoint(commits.lastOption.fold(base.version)(_.version),
+      live.keys.toSeq, live.values.toSeq, txns.toSeq)
   }
 
-  private def currentEntries(fs: FileSystem, table: String): (Long, Seq[(String, Seq[ColStat])]) = {
-    val (h, e, _) = currentFull(fs, table)
-    (h, e)
+  /** The replayed state at `upTo` (None = head): the newest checkpoint
+    * at or below it plus the commit suffix up to it, through [[fold]].
+    * FS opens are 1 checkpoint + (commits since it) — bounded by
+    * `checkpointEvery` regardless of table age. An EXPLICIT version must
+    * lie in [0, head] and its suffix must be contiguous: the `require`
+    * catches both holes — commits cleaned by [[vacuum]]'s log cleaning
+    * (the target predates the earliest usable checkpoint) and a
+    * corrupt/partial log. Version 0 is the empty table.
+    */
+  private def replay(fs: FileSystem, table: String, upTo: Option[Long]): Checkpoint = {
+    val (cs, ks) = listLog(fs, table)
+    val head = headOf((cs, ks))
+    upTo.foreach { v =>
+      require(v >= 0, s"version must be >= 0, got $v")
+      require(v <= head, s"version $v is past head $head of $table")
+    }
+    val at = upTo.getOrElse(head)
+    val base = ks.filter(_._1 <= at).lastOption
+      .map { case (_, p) => parseCkpt(slurp(fs, p)) }.getOrElse(Checkpoint(0L, Nil))
+    val suffix = cs.filter(t => t._1 > base.version && t._1 <= at)
+      .map { case (_, p) => parse(slurp(fs, p)) }
+    if (upTo.isDefined)
+      require(suffix.map(_.version) == (base.version + 1 to at),
+        s"cannot reconstruct version $at of $table: commits " +
+          s"(${base.version + 1}..$at] are not contiguous in the log " +
+          "(cleaned by vacuum, or corrupt)")
+    fold(base, suffix)
   }
 
-  private def currentState(fs: FileSystem, table: String): (Long, Seq[String]) = {
-    val (h, e) = currentEntries(fs, table)
-    (h, e.map(_._1))
-  }
+  /** A replayed state's (file, stats) entries, in live order. */
+  private def liveEntries(k: Checkpoint): Seq[(String, Seq[ColStat])] = k.live.zip(k.stats)
 
   /** Live file set after replaying the log (table-relative paths). */
   def currentFiles(spark: SparkSession, table: String): Seq[String] =
-    currentState(fsFor(spark, table), table)._2
+    replay(fsFor(spark, table), table, None).live
 
   /** Live files with their per-file column stats (empty per file when the
     * committing writer collected none).
     */
   def currentFilesWithStats(spark: SparkSession, table: String): Seq[(String, Seq[ColStat])] =
-    currentEntries(fsFor(spark, table), table)._2
+    liveEntries(replay(fsFor(spark, table), table, None))
 
   /** Read the committed state. Planning comes from the log — uncommitted
     * staging files are invisible by construction.
@@ -205,37 +238,11 @@ object TxTable {
 
   // --------------------------------------------------------- time travel
 
-  /** File set as of historical `version` — replay from the newest
-    * checkpoint at-or-below it plus the commit suffix up to it. The
-    * contiguity `require` catches BOTH holes: commits cleaned by
-    * [[vacuum]]'s log cleaning (target predates the earliest usable
-    * checkpoint) and a corrupt/partial log. version 0 = the empty table.
+  /** File set as of historical `version` — the [[replay]] at it, with
+    * its range and contiguity checks. Version 0 = the empty table.
     */
-  def filesAt(spark: SparkSession, table: String, version: Long): Seq[String] = {
-    require(version >= 0, s"version must be >= 0, got $version")
-    if (version == 0) return Nil
-    val fs = fsFor(spark, table)
-    val (cs, ks) = listLog(fs, table)
-    val head = (0L +: cs.map(_._1) ++: ks.map(_._1)).max
-    require(version <= head, s"version $version is past head $head of $table")
-    ks.filter(_._1 == version).lastOption match {
-      case Some((_, p)) => parseCkpt(slurp(fs, p)).live // exact snapshot
-      case None =>
-        val base = ks.filter(_._1 < version).lastOption
-          .map { case (_, p) => parseCkpt(slurp(fs, p)) }
-        val baseV = base.map(_.version).getOrElse(0L)
-        val suffix = cs.filter(t => t._1 > baseV && t._1 <= version)
-          .map { case (_, p) => parse(slurp(fs, p)) }
-        require(suffix.map(_.version) == (baseV + 1 to version),
-          s"cannot reconstruct version $version of $table: commits " +
-            s"(${baseV + 1}..$version] are not contiguous in the log " +
-            "(cleaned by vacuum, or corrupt)")
-        val live = scala.collection.mutable.LinkedHashSet[String]()
-        base.foreach(live ++= _.live)
-        suffix.foreach { c => live ++= c.added; live --= c.removed.toSet }
-        live.toSeq
-    }
-  }
+  def filesAt(spark: SparkSession, table: String, version: Long): Seq[String] =
+    replay(fsFor(spark, table), table, Some(version)).live
 
   /** Time travel: the table exactly as of `version`. Data-file GC caveat
     * (same as any log-structured format): [[vacuum]] deletes
@@ -245,44 +252,6 @@ object TxTable {
     */
   def readAt(spark: SparkSession, table: String, version: Long): DataFrame =
     readFiles(spark, table, filesAt(spark, table, version))
-
-  /** [[filesAt]] with each file's committed column stats — the planning
-    * input for [[readAtOverlapping]]. Same checkpoint replay and
-    * contiguity rules; stats fold exactly like the live set does in
-    * [[currentFull]] (a file's stats are fixed at its adding commit).
-    */
-  private def entriesAt(fs: FileSystem, table: String,
-                        version: Long): Seq[(String, Seq[ColStat])] = {
-    require(version >= 0, s"version must be >= 0, got $version")
-    if (version == 0) return Nil
-    val (cs, ks) = listLog(fs, table)
-    val head = (0L +: cs.map(_._1) ++: ks.map(_._1)).max
-    require(version <= head, s"version $version is past head $head of $table")
-    val live = scala.collection.mutable.LinkedHashMap[String, Seq[ColStat]]()
-    def fold(files: Seq[String], stats: Seq[Seq[ColStat]],
-             removed: Seq[String]): Unit = {
-      val st = if (stats.isEmpty) files.map(_ => Seq.empty[ColStat]) else stats
-      files.zip(st).foreach { case (f, s) => live(f) = s }
-      removed.foreach(live.remove)
-    }
-    ks.filter(_._1 == version).lastOption match {
-      case Some((_, p)) =>
-        val k = parseCkpt(slurp(fs, p)); fold(k.live, k.stats, Nil)
-      case None =>
-        val base = ks.filter(_._1 < version).lastOption
-          .map { case (_, p) => parseCkpt(slurp(fs, p)) }
-        val baseV = base.map(_.version).getOrElse(0L)
-        val suffix = cs.filter(t => t._1 > baseV && t._1 <= version)
-          .map { case (_, p) => parse(slurp(fs, p)) }
-        require(suffix.map(_.version) == (baseV + 1 to version),
-          s"cannot reconstruct version $version of $table: commits " +
-            s"(${baseV + 1}..$version] are not contiguous in the log " +
-            "(cleaned by vacuum, or corrupt)")
-        base.foreach(k => fold(k.live, k.stats, Nil))
-        suffix.foreach(c => fold(c.added, c.stats, c.removed))
-    }
-    live.toSeq
-  }
 
   /** Time travel pruned to the files whose committed `key` [min, max]
     * overlaps the distinct values of `keys`' first column — the
@@ -301,17 +270,20 @@ object TxTable {
     val fs = fsFor(spark, table)
     val keysDf = keys.select(keys.columns.head).na.drop().distinct()
       .toDF("__k").select(col("__k").cast("string").as("__k"))
-    val touched = overlappingFiles(spark, entriesAt(fs, table, version), keysDf, key)
+    val at = replay(fs, table, Some(version))
+    val touched = overlappingFiles(spark, liveEntries(at), keysDf, key)
     if (touched.isEmpty) {
-      val all = filesAt(spark, table, version)
+      val all = at.live
       if (all.isEmpty) spark.emptyDataFrame
       else readFiles(spark, table, all).limit(0) // keep the schema
     } else readFiles(spark, table, touched)
   }
 
-  /** Current head version (0 = never committed). */
+  /** Current head version (0 = never committed): [[headOf]] over one
+    * log listing, no commit opened.
+    */
   def headVersion(spark: SparkSession, table: String): Long =
-    currentState(fsFor(spark, table), table)._1
+    headOf(listLog(fsFor(spark, table), table))
 
   // ---------------------------------------------------------- change feed
 
@@ -437,7 +409,7 @@ object TxTable {
     * job reads this and continues from the next un-landed batch.
     */
   def txnVersion(spark: SparkSession, table: String, appId: String): Option[Long] =
-    currentFull(fsFor(spark, table), table)._3.get(appId)
+    replay(fsFor(spark, table), table, None).txns.toMap.get(appId)
 
   /** Idempotent append — exactly-once under writer retries. The commit
     * records `(appId, writerVersion)`; a re-run of an already-landed
@@ -799,27 +771,20 @@ object TxTable {
     listFilesCkpts(fs, table).lastOption.flatMap { case (v, p) =>
       val (cs, _) = listLog(fs, table)
       val suffixIdx = cs.filter(_._1 > v)
-      val head = (v +: suffixIdx.map(_._1)).max
-      if (suffixIdx.map(_._1) != (v + 1 to head)) None
+      if (suffixIdx.map(_._1) != (v + 1 to v + suffixIdx.size)) None
       else scala.util.Try {
         val suffix = suffixIdx.map { case (_, cp) => parse(slurp(fs, cp)) }
-        val delta = scala.collection.mutable.LinkedHashMap[String, Seq[ColStat]]()
-        val gone = scala.collection.mutable.LinkedHashSet[String]()
-        suffix.foreach { c =>
-          val st = if (c.stats.isEmpty) c.added.map(_ => Seq.empty[ColStat])
-            else c.stats
-          c.added.zip(st).foreach { case (f, s) => delta(f) = s; gone -= f }
-          c.removed.foreach { f => delta.remove(f); gone += f }
-        }
+        val touched = suffix.flatMap(c => c.added ++ c.removed).distinct
         val base = spark.read.schema(EntriesSchema).parquet(p.toString)
-        if (delta.isEmpty && gone.isEmpty) base
+        if (touched.isEmpty) base
         else {
           import org.apache.spark.sql.functions.broadcast
-          val excluded = entriesToDF(spark,
-            (delta.keys ++ gone).toSeq.map(_ -> Seq.empty[ColStat]))
+          // every file the suffix touched leaves the base; the suffix
+          // folded over an empty base puts back the ones still live
+          val excluded = entriesToDF(spark, touched.map(_ -> Seq.empty[ColStat]))
             .select(col("f"))
           base.join(broadcast(excluded), Seq("f"), "left_anti")
-            .unionByName(entriesToDF(spark, delta.toSeq))
+            .unionByName(entriesToDF(spark, liveEntries(fold(Checkpoint(v, Nil), suffix))))
         }
       }.toOption
     }
@@ -958,9 +923,9 @@ object TxTable {
     * would merge two "full" states into a doubled table).
     */
   def overwrite(spark: SparkSession, df: DataFrame, table: String): Long = {
-    val (head, live) = currentState(fsFor(spark, table), table)
+    val k = replay(fsFor(spark, table), table, None)
     val files = stage(spark, df, table)
-    commit(spark, table, added = files, removed = live, expectedHead = Some(head))
+    commit(spark, table, added = files, removed = k.live, expectedHead = Some(k.version))
   }
 
   /** [[overwrite]] with [[appendOnce]]'s writer-txn idempotence — the
@@ -973,10 +938,10 @@ object TxTable {
                     appId: String, writerVersion: Long): Option[Long] = {
     require(writerVersion >= 0, s"writerVersion must be >= 0, got $writerVersion")
     if (txnVersion(spark, table, appId).exists(_ >= writerVersion)) return None
-    val (head, live) = currentState(fsFor(spark, table), table)
+    val k = replay(fsFor(spark, table), table, None)
     val files = stage(spark, df, table)
-    val out = commitOpt(spark, table, added = files, removed = live,
-      expectedHead = Some(head), txn = Some((appId, writerVersion)))
+    val out = commitOpt(spark, table, added = files, removed = k.live,
+      expectedHead = Some(k.version), txn = Some((appId, writerVersion)))
     if (out.isEmpty) deleteStaged(spark, table, files)
     out
   }
@@ -1048,8 +1013,8 @@ object TxTable {
   def merge(spark: SparkSession, updates: DataFrame, table: String,
             key: String, orderCols: Seq[String]): Long = {
     import org.apache.spark.sql.functions.lit
-    val fs = fsFor(spark, table)
-    val (head, entries) = currentEntries(fs, table)
+    val k = replay(fsFor(spark, table), table, None)
+    val (head, entries) = (k.version, liveEntries(k))
     val keysDf = updates.select(col(key).cast("string").as("__k"))
       .na.drop().distinct()
     if (keysDf.isEmpty) return head // empty/all-null-key batch: no-op
@@ -1086,8 +1051,8 @@ object TxTable {
   def delete(spark: SparkSession, keys: DataFrame, table: String,
              key: String): Long = {
     import org.apache.spark.sql.functions.broadcast
-    val fs = fsFor(spark, table)
-    val (head, entries) = currentEntries(fs, table)
+    val k = replay(fsFor(spark, table), table, None)
+    val (head, entries) = (k.version, liveEntries(k))
     val keysDf = keys.select(keys.columns.head).na.drop().distinct()
       .toDF("__k").select(col("__k").cast("string").as("__k"))
     if (keysDf.isEmpty) return head
@@ -1120,7 +1085,8 @@ object TxTable {
   def foldSmallFiles(spark: SparkSession, table: String,
                      targetRowsPerFile: Long = 5000000L,
                      minFilesToFold: Int = 2): Long = {
-    val (head, entries) = currentEntries(fsFor(spark, table), table)
+    val k = replay(fsFor(spark, table), table, None)
+    val (head, entries) = (k.version, liveEntries(k))
     val small = entries.filter { case (_, stats) =>
       stats.find(_.col == RowCountStat).forall(_.lo.toLong < targetRowsPerFile)
     }
@@ -1147,11 +1113,24 @@ object TxTable {
     if (per.forall(_.isDefined)) Some(per.flatten.sum) else None
   }
 
+  /** Current row count: the [[RowCountStat]] sum — zero data IO — when
+    * every live file carries one; one COUNTED read of the live files
+    * otherwise. [[fileStats]] is keep-safe (a listing/URI mismatch
+    * emits NO stats for a file rather than guessing), and a stat-less
+    * file silently deflating the sum would fail a count validation —
+    * the semantic tick's — for a commit that actually landed.
+    */
+  def rowCount(spark: SparkSession, table: String): Long = {
+    val entries = currentFilesWithStats(spark, table)
+    statRowSum(entries).getOrElse(readFiles(spark, table, entries.map(_._1)).count())
+  }
+
   def compact(spark: SparkSession, table: String,
               targetRowsPerFile: Long = 5000000L,
               clusterBy: Option[String] = None,
               partitionBy: Seq[String] = Nil): Long = {
-    val (head, entries) = currentEntries(fsFor(spark, table), table)
+    val k = replay(fsFor(spark, table), table, None)
+    val (head, entries) = (k.version, liveEntries(k))
     val before = entries.map(_._1)
     if (before.isEmpty) return -1L
     // readFiles, NOT a raw parquet read: Hive partition columns nested in
@@ -1215,7 +1194,7 @@ object TxTable {
     require(headVersion(spark, dst) == 0L, s"clone target $dst is not empty")
     val v = if (version == 0L) headVersion(spark, src) else version
     require(v > 0L, s"clone source $src has no committed version")
-    val entries = entriesAt(sfs, src, v)
+    val entries = liveEntries(replay(sfs, src, Some(v)))
     val batch = "batch-clone-" + java.util.UUID.randomUUID().toString.take(12)
     dfs.mkdirs(new Path(s"$dst/$batch"))
     val added = entries.map { case (rel, _) =>
@@ -1254,8 +1233,8 @@ object TxTable {
     val head = headVersion(spark, table)
     require(toVersion >= 1L && toVersion <= head,
       s"restore target v$toVersion outside [1, $head]")
-    val target = entriesAt(fs, table, toVersion)
-    val current = entriesAt(fs, table, head)
+    val target = liveEntries(replay(fs, table, Some(toVersion)))
+    val current = liveEntries(replay(fs, table, Some(head)))
     val targetSet = target.map(_._1).toSet
     val curSet = current.map(_._1).toSet
     val added = target.filterNot(e => curSet.contains(e._1))
@@ -1463,39 +1442,30 @@ object TxTable {
       var attempt = 1
       while (true) {
         // head from ONE name listing — no per-commit opens in the hot path
-        val (cs, ks) = listLog(fs, table)
-        val head = (0L +: (cs.map(_._1) ++ ks.map(_._1))).max
+        val head = headOf(listLog(fs, table))
         expectedHead.filter(_ != head).foreach { e =>
           throw new java.util.ConcurrentModificationException(
             s"$table advanced to v$head (expected v$e): restage against the current state")
         }
         val version = head + 1L
         val target = new Path(f"${logDir(table)}/$version%08d.json")
-        // read the prior live set BEFORE publishing (checkpoint versions
+        // read the prior state BEFORE publishing (checkpoint versions
         // only): if our publish wins, the log at `version` is exactly
         // (prior state + this commit) — no racer can slot in below us
         val wantCkpt = checkpointEvery > 0 && version % checkpointEvery == 0
-        val prior = if (wantCkpt || txn.isDefined) Some(currentFull(fs, table)) else None
+        val prior = if (wantCkpt || txn.isDefined) Some(replay(fs, table, None)) else None
         txn.foreach { case (app, wv) =>
-          if (prior.exists(_._3.get(app).exists(_ >= wv))) return None
+          if (prior.exists(_.txns.exists { case (a, v) => a == app && v >= wv })) return None
         }
-        val bytes = render(Commit(version, added, removed, stats, txn)).getBytes("UTF-8")
-        if (coordinator.putIfAbsent(fs, target, bytes)) {
-          if (wantCkpt) prior.foreach { case (_, priorLive, priorTxns) =>
-            val live = scala.collection.mutable.LinkedHashMap[String, Seq[ColStat]]()
-            priorLive.foreach { case (f, s) => live(f) = s }
-            val st = if (stats.isEmpty) added.map(_ => Seq.empty[ColStat]) else stats
-            added.zip(st).foreach { case (f, s) => live(f) = s }
-            removed.foreach(live.remove)
-            val allTxns = scala.collection.mutable.LinkedHashMap[String, Long]()
-            priorTxns.foreach { case (a, v) => allTxns(a) = v }
-            txn.foreach { case (a, v) =>
-              allTxns(a) = math.max(v, allTxns.getOrElse(a, Long.MinValue)) }
-            writeCheckpoint(fs, table,
-              Checkpoint(version, live.keys.toSeq, live.values.toSeq, allTxns.toSeq))
+        val c = Commit(version, added, removed, stats, txn)
+        if (coordinator.putIfAbsent(fs, target, render(c).getBytes("UTF-8"))) {
+          if (wantCkpt) prior.foreach { k =>
+            // the checkpoint is this commit folded onto the prior state
+            val ckpt = fold(k, Seq(c))
+            writeCheckpoint(fs, table, ckpt)
             // parquet twin of the live set, for relational listing —
             // same entries, already in hand, best-effort like the JSON
-            writeFilesCheckpoint(spark, table, version, live.toSeq)
+            writeFilesCheckpoint(spark, table, version, liveEntries(ckpt))
           }
           return Some(version)
         }

@@ -4,7 +4,7 @@ import java.sql.Timestamp
 import java.time.LocalDateTime
 import java.time.format.DateTimeFormatter
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model.{ReasonCode, RunLog, RunStatus}
@@ -37,6 +37,12 @@ final class LogStore(spark: SparkSession, path: String) {
     * copy+delete store still fails the next read loudly (pinned by the
     * hostile spec — recovery never proceeds on partial state). The
     * JVM-wide per-path lock stays as a cheap same-process serializer.
+    *
+    * The part file is written on the DRIVER by the log's one codec,
+    * [[LogStore.writeRowsParquet]] — a log append is a handful of rows,
+    * and a Spark job per append was one job per lifecycle run. Null
+    * fields are fine: the codec's string and timestamp columns are
+    * OPTIONAL.
     */
   def append(rows: Seq[RunLog]): Unit = LogStore.lockFor(path).synchronized {
     val p = new org.apache.hadoop.fs.Path(path)
@@ -45,32 +51,8 @@ final class LogStore(spark: SparkSession, path: String) {
     val id = java.util.UUID.randomUUID().toString
     val stage = new org.apache.hadoop.fs.Path(p, s".stage-$id")
     try {
-      // DRIVER-side parquet write (r14, guide §1.2): a log append is a
-      // handful of rows, but `createDataset(rows).write` scheduled a
-      // full Spark job for it — one per lifecycle run across every
-      // ingestion fixture (job count × driver latency is that family's
-      // wall clock). The staging/rename publication protocol is
-      // unchanged; only the producer of the part file moved off the
-      // cluster. Timestamps land as INT64 TIMESTAMP(MICROS, UTC) —
-      // Spark reads them (and mixes them with INT96 files from the
-      // Spark-written compaction path) natively.
-      val nullFree = rows.forall(r => r.executionStatus != null &&
-        r.startValue != null && r.endValue != null && r.reasonCode != null &&
-        r.insertDatetime != null)
-      val part =
-        if (nullFree) {
-          val p0 = new org.apache.hadoop.fs.Path(stage, "part-0.snappy.parquet")
-          LogStore.writeRowsParquet(spark, p0, rows)
-          p0
-        } else {
-          // null fields need parquet OPTIONAL columns — rare enough that
-          // the Spark writer (whose schema is nullable) stays the writer
-          spark.createDataset(rows).coalesce(1)
-            .write.mode(SaveMode.Overwrite).parquet(stage.toString)
-          fs.listStatus(stage).map(_.getPath)
-            .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-            .getOrElse(sys.error(s"log append: no part file staged under $stage"))
-        }
+      val part = new org.apache.hadoop.fs.Path(stage, "part-0.snappy.parquet")
+      LogStore.writeRowsParquet(spark, part, rows)
       val dst = new org.apache.hadoop.fs.Path(p, s"part-$id.snappy.parquet")
       require(fs.rename(part, dst), s"log append: rename $part -> $dst failed")
     } finally fs.delete(stage, true)
@@ -92,38 +74,41 @@ final class LogStore(spark: SparkSession, path: String) {
     * rule is a complete, duplicate-free row set.
     */
   def read(): Dataset[RunLog] = {
+    val files = visible()
+    if (files.isEmpty) spark.emptyDataset[RunLog]
+    else try sparkRead(files)
+    catch { case _: org.apache.spark.sql.AnalysisException => spark.emptyDataset[RunLog] }
+  }
+
+  /** The visible files (Nil when the log dir does not exist). */
+  private def visible(): Seq[String] = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) spark.emptyDataset[RunLog]
-    else {
-      val files = LogStore.visibleFiles(fs, p)
-      if (files.isEmpty) spark.emptyDataset[RunLog]
-      else try spark.read.parquet(files: _*).as[RunLog]
-      catch { case _: org.apache.spark.sql.AnalysisException => spark.emptyDataset[RunLog] }
-    }
+    if (fs.exists(p)) LogStore.visibleFiles(fs, p) else Nil
   }
+
+  private def sparkRead(files: Seq[String]): Dataset[RunLog] =
+    spark.read.parquet(files: _*).as[RunLog]
 
   def forIngestion(id: Long): Dataset[RunLog] =
     read().filter(_.lakeIngestionId == id)
 
   /** The visible rows as a DRIVER-side Seq — the watermark-recovery read
-    * (a few rows per spec) without a Spark job per lifecycle run (r14;
-    * same motivation as the driver-side [[append]]). Reads INT64-
-    * timestamp files (this writer's own output) with the parquet Group
-    * API; the moment any visible file carries a different timestamp
-    * encoding (the Spark-written [[compact]] output is INT96) it falls
-    * back to the always-correct Spark read — equality of the two paths
-    * is spec-pinned (LogStoreSpec).
+    * (a few rows per spec) with no Spark job, through the log's one
+    * codec ([[LogStore.readRowsParquet]]). Every file this store writes
+    * — appends and [[compact]] outputs alike — is in the codec's format,
+    * so the Spark read runs only for files the codec refuses, and over
+    * the same file list: a legacy Spark-written part (INT96 timestamps)
+    * reads there, and a torn or vanished file fails there, loudly —
+    * recovery never proceeds on partial state. Equality of the two
+    * paths is spec-pinned (LogStoreDriverIoSpec).
     */
-  def readRows(): Seq[RunLog] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return Nil
-    val files = LogStore.visibleFiles(fs, p)
-    if (files.isEmpty) return Nil
-    LogStore.readRowsParquet(spark, files)
-      .getOrElse(read().collect().toSeq)
-  }
+  def readRows(): Seq[RunLog] = rowsOf(visible())
+
+  private def rowsOf(files: Seq[String]): Seq[RunLog] =
+    if (files.isEmpty) Nil
+    else LogStore.readRowsParquet(spark, files)
+      .getOrElse(sparkRead(files).collect().toSeq)
 
   def forIngestionRows(id: Long): Seq[RunLog] =
     readRows().filter(_.lakeIngestionId == id)
@@ -133,9 +118,11 @@ final class LogStore(spark: SparkSession, path: String) {
     * of runs listed thousands of tiny files). The switch is ATOMIC for
     * readers and the old files stay readable until [[vacuumCompacted]]:
     *
-    *  1. the visible rows are rewritten into a hidden staging dir and
-    *     published as `cpart-<uuid>.parquet` — INVISIBLE, because a
-    *     cpart only counts once a manifest references it;
+    *  1. the visible rows are read on the driver and rewritten by the
+    *     log's one codec (the [[readRows]] path: no Spark job unless a
+    *     legacy file needs the fallback read) into a hidden staging dir,
+    *     then published as `cpart-<uuid>.parquet` — INVISIBLE, because
+    *     a cpart only counts once a manifest references it;
     *  2. `_compact-<uuid>.json` (compacted name + the replaced names)
     *     is temp-written and RENAMED in — the one atomic step. A
     *     listing before it sees exactly the old files; a listing after
@@ -164,11 +151,8 @@ final class LogStore(spark: SparkSession, path: String) {
     val id = java.util.UUID.randomUUID().toString
     val stage = new org.apache.hadoop.fs.Path(p, s".stage-c-$id")
     try {
-      spark.read.parquet(victims: _*).coalesce(1)
-        .write.mode(SaveMode.Overwrite).parquet(stage.toString)
-      val part = fs.listStatus(stage).map(_.getPath)
-        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-        .getOrElse(sys.error(s"log compact: no part file staged under $stage"))
+      val part = new org.apache.hadoop.fs.Path(stage, "part-0.snappy.parquet")
+      LogStore.writeRowsParquet(spark, part, rowsOf(victims))
       val cpart = new org.apache.hadoop.fs.Path(p, s"cpart-$id.snappy.parquet")
       require(fs.rename(part, cpart), s"log compact: rename $part -> $cpart failed")
       val victimNames = victims.map(v => new org.apache.hadoop.fs.Path(v).getName)
@@ -318,10 +302,11 @@ object LogStore {
       newest
     } catch { case _: java.io.FileNotFoundException => st.getModificationTime }
 
-  /** [[RunLog]]'s parquet schema for the driver-side writer: the same
-    * column names/order the Spark writer produced, timestamps as INT64
-    * TIMESTAMP(MICROS, UTC) — the encoding Spark both writes (with
-    * outputTimestampType=TIMESTAMP_MICROS) and reads natively.
+  /** [[RunLog]]'s parquet schema — the log's one codec: the column
+    * names/order the Spark writer produced, timestamps as INT64
+    * TIMESTAMP(MICROS, UTC) (an encoding Spark reads natively), and the
+    * string and timestamp columns OPTIONAL so a null field is stored as
+    * null, not refused.
     */
   private val RunLogSchema: org.apache.parquet.schema.MessageType = {
     import org.apache.parquet.schema.{LogicalTypeAnnotation, Types}
@@ -331,13 +316,13 @@ object LogStore {
       LogicalTypeAnnotation.TimeUnit.MICROS)
     Types.buildMessage()
       .required(INT64).named("lakeIngestionId")
-      .required(BINARY).as(str).named("executionStatus")
-      .required(BINARY).as(str).named("startValue")
-      .required(BINARY).as(str).named("endValue")
+      .optional(BINARY).as(str).named("executionStatus")
+      .optional(BINARY).as(str).named("startValue")
+      .optional(BINARY).as(str).named("endValue")
       .required(INT64).named("sourceCount")
       .required(INT64).named("targetCount")
-      .required(BINARY).as(str).named("reasonCode")
-      .required(INT64).as(tsMicros).named("insertDatetime")
+      .optional(BINARY).as(str).named("reasonCode")
+      .optional(INT64).as(tsMicros).named("insertDatetime")
       .named("spark_schema")
   }
 
@@ -351,8 +336,10 @@ object LogStore {
     t
   }
 
-  /** One driver-side snappy parquet file of `rows` at `part` — the
-    * [[LogStore.append]] producer (no Spark job; see append's note).
+  /** The codec's writer: one driver-side snappy parquet file of `rows`
+    * at `part`, no Spark job — the producer of every [[LogStore.append]]
+    * part and every [[LogStore.compact]] cpart. A null field is left
+    * unset (stored as null).
     */
   private[state] def writeRowsParquet(spark: SparkSession,
                                       part: org.apache.hadoop.fs.Path,
@@ -370,25 +357,29 @@ object LogStore {
       .build()
     try rows.foreach { r =>
       val g = new SimpleGroup(RunLogSchema)
+      def str(field: String, v: String): Unit = if (v != null) g.add(field, v)
       g.add("lakeIngestionId", r.lakeIngestionId)
-      g.add("executionStatus", r.executionStatus)
-      g.add("startValue", r.startValue)
-      g.add("endValue", r.endValue)
+      str("executionStatus", r.executionStatus)
+      str("startValue", r.startValue)
+      str("endValue", r.endValue)
       g.add("sourceCount", r.sourceCount)
       g.add("targetCount", r.targetCount)
-      g.add("reasonCode", r.reasonCode)
-      g.add("insertDatetime", tsToMicros(r.insertDatetime))
+      str("reasonCode", r.reasonCode)
+      if (r.insertDatetime != null) g.add("insertDatetime", tsToMicros(r.insertDatetime))
       w.write(g)
     } finally w.close()
   }
 
-  /** Driver-side Group read of `files` into [[RunLog]]s. None when any
-    * file's schema diverges from [[RunLogSchema]]'s physical shape
-    * (INT96-timestamp Spark compaction output, a schema-evolved log) —
-    * the caller falls back to the Spark read.
+  /** The codec's reader: a driver-side Group read of `files` into
+    * [[RunLog]]s, an unset field read back as null. None when any file
+    * is not in the codec's physical shape (a legacy Spark-written part
+    * with INT96 timestamps, a schema-evolved log) or cannot be read (a
+    * torn file) — the caller falls back to the Spark read of the same
+    * files.
     */
   private[state] def readRowsParquet(spark: SparkSession,
                                      files: Seq[String]): Option[Seq[RunLog]] = {
+    import org.apache.parquet.example.data.Group
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.ParquetReader
     import org.apache.parquet.hadoop.example.GroupReadSupport
@@ -396,6 +387,8 @@ object LogStore {
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
     val conf = new org.apache.hadoop.conf.Configuration(
       spark.sparkContext.hadoopConfiguration)
+    def str(g: Group, field: String): String =
+      if (g.getFieldRepetitionCount(field) == 0) null else g.getString(field, 0)
     try {
       val out = scala.collection.mutable.ListBuffer[RunLog]()
       files.foreach { f =>
@@ -417,13 +410,14 @@ object LogStore {
           while (g != null) {
             out += RunLog(
               g.getLong("lakeIngestionId", 0),
-              g.getString("executionStatus", 0),
-              g.getString("startValue", 0),
-              g.getString("endValue", 0),
+              str(g, "executionStatus"),
+              str(g, "startValue"),
+              str(g, "endValue"),
               g.getLong("sourceCount", 0),
               g.getLong("targetCount", 0),
-              g.getString("reasonCode", 0),
-              microsToTs(g.getLong("insertDatetime", 0)))
+              str(g, "reasonCode"),
+              if (g.getFieldRepetitionCount("insertDatetime") == 0) null
+              else microsToTs(g.getLong("insertDatetime", 0)))
             g = r.read()
           }
         } finally r.close()

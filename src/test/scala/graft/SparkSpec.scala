@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -7,6 +8,32 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   val SfDir = "/root/testdata/sf0.001"
+
+  /** `body`'s result and the number of Spark jobs it ran: it runs under
+    * a unique job group, and the listener bus is drained before the
+    * count is read, so a job-count claim ("no Spark job per append") is
+    * a check.
+    */
+  def jobsRan[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"jobs-ran-${java.util.UUID.randomUUID()}"
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val counter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          n.incrementAndGet()
+    }
+    sc.addSparkListener(counter)
+    sc.setJobGroup(group, "jobsRan")
+    val out =
+      try body
+      finally {
+        sc.clearJobGroup()
+        org.apache.spark.testbus.Bus.drain(sc)
+        sc.removeSparkListener(counter)
+      }
+    (out, n.get)
+  }
 }
 
 object SparkSpec {

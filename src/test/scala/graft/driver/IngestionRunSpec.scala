@@ -192,6 +192,8 @@ class IngestionRunSpec extends SparkSpec {
   test("overwritePartitions mode makes same-window re-runs idempotent") {
     val dir = java.nio.file.Files.createTempDirectory("graft-e2e-ow").toString
     val storeA = new graft.state.LogStore(spark, s"$dir/logsA")
+    val modeKey = "spark.sql.sources.partitionOverwriteMode"
+    val sessionMode = spark.conf.getOption(modeKey)
     val run = new IngestionRun(spark, s"$dir/lake", storeA, overwritePartitions = true)
     val spec = mkSpec(Seq(PartitionSpec(1, PartitionSpec.TimeBased, "mtime", "YYYYMM")))
     val batch = srcRows(Seq(
@@ -203,6 +205,8 @@ class IngestionRunSpec extends SparkSpec {
     val redo = new IngestionRun(spark, s"$dir/lake", storeB, overwritePartitions = true)
     assert(redo.run(spec, batch).last.executionStatus == RunStatus.Success)
     assert(spark.read.parquet(s"$dir/lake/testdb/events_src").count() == 2)
+    // dynamic overwrite is the write's own option: the session is untouched
+    assert(spark.conf.getOption(modeKey) == sessionMode)
   }
 
   test("coalesce delta expression drives watermark and slice") {

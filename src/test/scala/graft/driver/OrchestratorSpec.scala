@@ -101,12 +101,12 @@ class OrchestratorSpec extends SparkSpec {
     val t = java.nio.file.Files.createTempDirectory("graft-src").toString + "/tbl"
     // statted commit (fileStats always rides RowCountStat along)
     TxTable.append(spark, (1L to 5L).toDF("id"), t, statsCols = Seq("id"))
-    assert(Orchestrator.statRowCount(spark, t) == 5L)
+    assert(TxTable.rowCount(spark, t) == 5L)
     // stat-LESS commit — fileStats' keep-safe fallback shape; the count
     // must fall back to a read instead of silently deflating (the
     // deflation turned into spurious ValidationFailures in the tick's
     // count validation, r12 ADVICE)
     TxTable.append(spark, (6L to 8L).toDF("id"), t)
-    assert(Orchestrator.statRowCount(spark, t) == 8L)
+    assert(TxTable.rowCount(spark, t) == 8L)
   }
 }

@@ -101,4 +101,13 @@ class FileStatsFooterSpec extends SparkSpec {
     assert(TxTable.fileStats(spark, tbl, files, cols) ==
       TxTable.jobFileStats(spark, tbl, files, cols))
   }
+
+  test("fileStats on long and string columns runs no Spark job (the footer path)") {
+    val tbl = tmp()
+    val df = Seq((5L, "b"), (1L, "a"), (9L, "c")).toDF("id", "name")
+    val files = TxTable.stageBatch(spark, df.repartition(2), tbl)
+    val (stats, jobs) = jobsRan(TxTable.fileStats(spark, tbl, files, Seq("id", "name")))
+    assert(jobs == 0)
+    assert(stats == TxTable.jobFileStats(spark, tbl, files, Seq("id", "name")))
+  }
 }

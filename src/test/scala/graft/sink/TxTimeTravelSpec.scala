@@ -65,4 +65,48 @@ class TxTimeTravelSpec extends SparkSpec {
     assert(ids(t, 12) == (1L to 12L).toSet)
     assert(ids(t, 11) == (1L to 11L).toSet)
   }
+
+  test("filesAt(v) is the live set right after commit v, order included, across restores and checkpoints") {
+    val t = mk()
+    val snaps = scala.collection.mutable.ArrayBuffer[Seq[String]](Nil) // v0
+    def step(commitV: => Long): Unit = {
+      val v = commitV
+      assert(v == snaps.size.toLong)
+      snaps += TxTable.currentFiles(spark, t)
+    }
+    var next = 0L
+    def add(): Unit = step {
+      next += 1; TxTable.append(spark, Seq(next).toDF("id"), t, statsCols = Seq("id"))
+    }
+    // the live set vs the relational listing (needs a files-checkpoint)
+    def entriesAgree(): Unit = {
+      val want = TxTable.currentFilesWithStats(spark, t).flatMap { case (f, st) =>
+        (f, None, None, None, None) +:
+          st.map(c => (f, Some(c.col), Some(c.typ), Some(c.lo), Some(c.hi)))
+      }.toSet
+      val got = TxTable.liveEntriesDF(spark, t).get.collect().map(r =>
+        (r.getString(0), Option(r.getString(1)), Option(r.getString(2)),
+          Option(r.getString(3)), Option(r.getString(4)))).toSet
+      assert(got == want)
+    }
+    (1 to 5).foreach(_ => add())                                // v1-v5
+    step(TxTable.restore(spark, t, 2L))                         // v6: drops 3-5
+    (1 to 3).foreach(_ => add())                                // v7-v9
+    step(TxTable.restore(spark, t, 4L))                         // v10: re-adds 3, 4; checkpoint
+    (1 to 4).foreach(_ => add())                                // v11-v14
+    step(TxTable.compact(spark, t, targetRowsPerFile = 1000000L)) // v15
+    (1 to 4).foreach(_ => add())                                // v16-v19
+    step(TxTable.restore(spark, t, 12L))                        // v20: re-adds; checkpoint
+    entriesAgree()
+    (1 to 4).foreach { _ => add(); entriesAgree() }             // v21-v24
+    step(TxTable.overwrite(spark, Seq(99L).toDF("id"), t))      // v25
+    entriesAgree()
+    assert(TxTable.headVersion(spark, t) == 25L)
+    (0 to 25).foreach { v =>
+      assert(TxTable.filesAt(spark, t, v.toLong) == snaps(v), s"version $v")
+    }
+    // the restores really re-added files a prior commit had removed
+    assert(snaps(10).toSet.diff(snaps(9).toSet).nonEmpty)
+    assert(snaps(20).toSet.diff(snaps(19).toSet).nonEmpty)
+  }
 }
