@@ -1,6 +1,6 @@
 package graft.driver
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model._
@@ -47,17 +47,38 @@ final class IngestionRun(spark: SparkSession, lakeRoot: String, logStore: LogSto
   def lakePath(spec: IngestionSpec): String =
     s"$lakeRoot/${spec.databasename}/${spec.tablename}"
 
-  /** Committed lake state: the transactional log's file list in txLake
-    * mode (from a snapshot taken ONCE per run — replaying the log per
-    * read would pay a LIST + per-commit GET up to five times per run on
-    * an object store), a plain directory read otherwise.
+  /** Committed lake state, None when the lake holds no data file.
+    *
+    * txLake: the transactional log's file list, from a snapshot taken
+    * ONCE per run (replaying the log per read would pay a LIST +
+    * per-commit GET up to five times per run on an object store); its
+    * batch schemas come from footers, with no Spark job.
+    *
+    * Plain: one directory read, and its file index is the run's ONLY
+    * listing of the lake on the success path — the rollback "before"
+    * set is taken from it ([[graft.sink.Rollback.filesOf]]). Hadoop FS,
+    * not java.io.File: the lake root may be any FileSystem scheme (s3a://,
+    * hdfs://), where a local-only probe would return false, silently
+    * skipping boundary dedup and pre-window accounting → validation
+    * mismatch → rollback loop on exactly the target cluster. A directory
+    * with no data file — what a rolled-back first run leaves (`_SUCCESS`,
+    * empty partition dirs), or a crashed first write (`_temporary` only)
+    * — reads as absent: Spark cannot infer a schema from it, and treating
+    * it as a lake would fail every later run.
     */
-  private def readLake(spec: IngestionSpec, txFiles: Seq[String],
-                       mergeSchema: Boolean = false): DataFrame =
-    if (txLake)
-      graft.sink.TxTable.readFiles(spark, lakePath(spec), txFiles, mergeSchema)
-    else
-      spark.read.option("mergeSchema", mergeSchema.toString).parquet(lakePath(spec))
+  private def readLake(spec: IngestionSpec, txFiles: Seq[String]): Option[DataFrame] =
+    if (txLake) {
+      if (txFiles.isEmpty) None
+      else Some(graft.sink.TxTable.readFiles(spark, lakePath(spec), txFiles))
+    } else {
+      val lakeP = new org.apache.hadoop.fs.Path(lakePath(spec))
+      if (!lakeP.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(lakeP)) None
+      else
+        try Some(spark.read.parquet(lakePath(spec)))
+        catch {
+          case e: AnalysisException if e.getCondition == "UNABLE_TO_INFER_SCHEMA" => None
+        }
+    }
 
   /** Execute one run; returns the RunLog rows appended. */
   def run(spec: IngestionSpec, source: DataFrame): Seq[RunLog] = {
@@ -76,22 +97,22 @@ final class IngestionRun(spark: SparkSession, lakeRoot: String, logStore: LogSto
       case Right(_) => ()
     }
 
-    // Hadoop FS, not java.io.File: the lake root may be any FileSystem
-    // scheme (s3a://, hdfs://). A local-only probe would return false
-    // there, silently skipping boundary dedup and pre-window accounting
-    // → validation mismatch → rollback loop on exactly the target cluster.
     // txLake: existence = "the commit log has live files" (staged orphans
     // from crashed runs do NOT count — they were never committed). The
     // file-list snapshot is taken once and threaded through every lake
     // read this run makes; only the final commit re-reads the head.
     val txFiles: Seq[String] =
       if (txLake) graft.sink.TxTable.currentFiles(spark, lakePath(spec)) else Nil
-    val lakeExists =
-      if (txLake) txFiles.nonEmpty
-      else {
-        val lakeP = new org.apache.hadoop.fs.Path(lakePath(spec))
-        lakeP.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(lakeP)
-      }
+    val lake = readLake(spec, txFiles)
+    val lakeExists = lake.isDefined
+    // plain: the data files before the write, for a failed validation's
+    // rollback — from the lake read's own file index, not a second
+    // listing (a recursive Hadoop listFiles loads every file's
+    // permissions: one shell command per file without native Hadoop).
+    // txLake is commit-or-nothing: no rollback diffing.
+    val filesBefore: Set[String] =
+      if (txLake) Set.empty
+      else lake.fold(Set.empty[String])(graft.sink.Rollback.filesOf(spark, lakePath(spec), _))
     val rawSlice = Incremental.incrementalSlice(source, spec.deltaExpr, start)
     // ONE cached read of the lake's watermark tail serves every
     // committed-lake consumer this run has (boundary dedup AND the
@@ -101,18 +122,17 @@ final class IngestionRun(spark: SparkSession, lakeRoot: String, logStore: LogSto
     // OR-window term (a row with a < start but b inside the window is in
     // the window but NOT in coalesce >= start). The tail is one watermark
     // window of rows — small relative to the lake by construction, so
-    // caching it holds at scale.
-    val lakeTail: Option[DataFrame] =
-      if (!lakeExists) None
-      else {
-        val tailPred = Incremental.parseCoalesceExpr(spec.deltaExpr) match {
-          case Some((a, b)) => col(a) >= lit(start) || col(b) >= lit(start)
-          case None => expr(spec.deltaExpr) >= lit(start)
-        }
-        val d = readLake(spec, txFiles).filter(tailPred)
-        d.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        Some(d)
+    // caching it holds at scale. The cache lives until preWindowCount is
+    // computed and is dropped BEFORE the write: a cached plan that reads
+    // the lake path makes Spark re-list the lake after a plain write
+    // (measured: a 41-path listing job closing every plain benchmark run).
+    val lakeTail: Option[DataFrame] = lake.map { d =>
+      val tailPred = Incremental.parseCoalesceExpr(spec.deltaExpr) match {
+        case Some((a, b)) => col(a) >= lit(start) || col(b) >= lit(start)
+        case None => expr(spec.deltaExpr) >= lit(start)
       }
+      d.filter(tailPred).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    }
     // non-inclusive (`>=` boundary) watermarks re-extract rows already
     // loaded at the boundary instant; drop rows whose (primary key, delta
     // value) BOTH match a lake row, so the boundary second is exactly-once
@@ -152,9 +172,6 @@ final class IngestionRun(spark: SparkSession, lakeRoot: String, logStore: LogSto
     val end = hiOpt.get
 
     val (withParts, partCols) = Transforms.derivePartitions(slice, spec.partitions)
-    val filesBefore =
-      if (txLake) Set.empty[String] // commit-or-nothing: no rollback diffing
-      else graft.sink.Rollback.listFiles(spark, lakePath(spec))
     // overwritePartitions: idempotent re-runs — replace exactly the
     // partitions this run touches instead of appending (the at-scale
     // alternative to delete-rollback; needs derived partition columns).
@@ -195,6 +212,8 @@ final class IngestionRun(spark: SparkSession, lakeRoot: String, logStore: LogSto
           preWindow.join(touched, partCols, "left_anti").count()
         } else preWindow.count()
       }
+    // the tail's last reader has run (see lakeTail)
+    lakeTail.foreach(_.unpersist())
     // cluster rows by the delta field inside each output file: parquet
     // row-group min/max stats on the watermark column then prune most of
     // the file on incremental/validation scans
@@ -264,22 +283,23 @@ final class IngestionRun(spark: SparkSession, lakeRoot: String, logStore: LogSto
         loaded.copy(executionStatus = RunStatus.ValidationFailure, targetCount = target,
           reasonCode = s"${ReasonCode.ValidationFailure}: staged batch discarded, nothing committed")
       } else {
-        // K4 rollback parity: undo this run's files so the lake returns to
-        // its pre-run state and the next run re-extracts the same window
-        // (reference: start_ingestion.py:143-145)
+        // K4 rollback parity: undo this run's data files so the lake
+        // returns to its pre-run state and the next run re-extracts the
+        // same window (reference: start_ingestion.py:143-145). Only this
+        // failure path lists the lake a second time, and it diffs data
+        // files only: `_SUCCESS` and the old files' `.crc`s stay.
         val deleted = graft.sink.Rollback.deleteAdded(spark, lakePath(spec), filesBefore)
         loaded.copy(executionStatus = RunStatus.ValidationFailure, targetCount = target,
           reasonCode = s"${ReasonCode.ValidationFailure}: rolled back ${deleted.size} files")
       }
 
     if (ok && firstTime && spec.viewNeeded == 1 && spec.primaryKeyCols.nonEmpty) {
-      // the view needs the WHOLE table (mergeSchema: sources evolve, the
-      // union schema presents nulls for pre-evolution files) — first-run
+      // the view needs the WHOLE table (sources evolve: the merged/union
+      // schema presents nulls for pre-evolution files) — first-run
       // only, so this full read happens once per table's lifetime
       val fullLake =
         if (txLake)
-          graft.sink.TxTable.readFiles(spark, lakePath(spec), txFiles ++ staged,
-            mergeSchema = true)
+          graft.sink.TxTable.readFiles(spark, lakePath(spec), txFiles ++ staged)
         else spark.read.option("mergeSchema", "true").parquet(lakePath(spec))
       LatestRowView.createView(fullLake, spec.primaryKeyCols,
         Seq(expr(spec.deltaExpr)), spec.viewName)
@@ -289,6 +309,7 @@ final class IngestionRun(spark: SparkSession, lakeRoot: String, logStore: LogSto
     logStore.append(rows)
     rows
     } finally {
+      // the early returns and throws skip the tail's unpersist above
       if (cacheSlice) slice.unpersist()
       lakeTail.foreach(_.unpersist())
     }

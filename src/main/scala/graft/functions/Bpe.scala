@@ -34,14 +34,20 @@ import org.apache.spark.sql.functions._
   * always yields the same merge list; application is a pure function of
   * (pre-token, merges). Both are pinned by BpeSpec.
   *
-  * Rank-order equivalence (why application can iterate the merge list in
-  * learned order instead of re-scanning for the lowest-rank pair): merging
-  * pair r creates only adjacencies that involve the new symbol `ab`, and
-  * any merge rule containing `ab` was necessarily learned AFTER rule r —
-  * so applying ranks in ascending order, each to fixpoint, yields exactly
-  * the classic priority-queue BPE segmentation. The DuckDB oracle replays
-  * the same rank-order loop as a recursive CTE over a separator-delimited
-  * string, which is what makes merged outputs hash-checkable cross-engine.
+  * Application is the classic lowest-rank-pair loop: find the adjacent
+  * pair with the lowest merge rank, merge every left-to-right occurrence
+  * of it in one pass, repeat until no adjacent pair has a rank. Iterating
+  * the merge list in rank order instead (each rule to fixpoint) is NOT
+  * equivalent once two rules produce the same symbol: on the table
+  * (a,a), (a,aa), (aa,b), (aaa,b), (aaab,a), (aa,a) the word "aaab"
+  * segments as [aaab] here, but rank order gives [aaa, b] because the
+  * rank-5 rule (aa,a) creates "aaa" after the rank-3 rule (aaa,b) has
+  * run. On a table whose merge products are all distinct, as in
+  * [[DefaultMerges]], the two give the same segmentation: merging pair r
+  * creates only adjacencies involving its product, and every rule using
+  * that product was learned after r. That is what lets the DuckDB oracle
+  * replay the rank-order loop as a recursive CTE over a
+  * separator-delimited string and stay hash-equal cross-engine.
   */
 object Bpe {
 
@@ -114,22 +120,26 @@ object Bpe {
     train(wf, nMerges)
   }
 
-  /** Apply a learned merge list to one pre-token: ranks in ascending
-    * order, each merged to fixpoint (see the rank-order equivalence note
-    * in the object scaladoc).
+  /** Apply a learned merge list to one pre-token: repeatedly merge the
+    * lowest-rank adjacent pair, every occurrence in one left-to-right
+    * pass (see the object scaladoc). A pair listed twice keeps its first
+    * rank.
     */
   def applyMerges(word: String, merges: IndexedSeq[Merge]): Vector[String] = {
     var syms = word.map(_.toString).toVector
-    var r = 0
-    while (r < merges.length && syms.length > 1) {
-      // fixpoint per rank: a pass merged something iff the length shrank
-      var changed = true
-      while (changed) {
-        val next = mergePass(syms, merges(r))
-        changed = next.length != syms.length
-        syms = next
+    if (syms.length < 2) return syms
+    val rank = collection.mutable.HashMap[Merge, Int]()
+    merges.indices.reverse.foreach(r => rank(merges(r)) = r)
+    var done = false
+    while (!done && syms.length > 1) {
+      var best = Int.MaxValue
+      var i = 0
+      while (i + 1 < syms.length) {
+        best = math.min(best, rank.getOrElse((syms(i), syms(i + 1)), Int.MaxValue))
+        i += 1
       }
-      r += 1
+      if (best == Int.MaxValue) done = true
+      else syms = mergePass(syms, merges(best))
     }
     syms
   }

@@ -341,8 +341,8 @@ object TxTable {
         .limit(0)
     if (removedF.isEmpty) return tag(readFiles(spark, table, addedF), "insert")
     if (addedF.isEmpty) return tag(readFiles(spark, table, removedF), "delete")
-    val addDf = readFiles(spark, table, addedF, mergeSchema = true)
-    val remDf = readFiles(spark, table, removedF, mergeSchema = true)
+    val addDf = readFiles(spark, table, addedF)
+    val remDf = readFiles(spark, table, removedF)
     // align both sides to one column set/order before exceptAll (which
     // is positional): each side gains the other's missing columns as
     // nulls through the zero-row unionByName, then the removed side is
@@ -364,29 +364,74 @@ object TxTable {
     * `unionByName(allowMissingColumns)` — which is also the
     * schema-evolution merge across commits. Partition pruning applies per
     * union child; [[compact]] bounds the union width.
+    *
+    * Footer schemas: every file in a batch dir came from ONE stageBatch
+    * write and shares its schema, so a batch's data schema is read on
+    * the driver from its first file's footer ([[batchSchema]]) and passed
+    * to the reader, instead of letting Spark infer it with a one-task job
+    * per batch (measured: a quarter of an ingest round's jobs). It is the
+    * schema that inference computes — same footer function, same
+    * converter flags — so names, order, types and nullability do not
+    * change. Partition columns still come from partition discovery under
+    * the batch `basePath`. A batch whose footer cannot be read falls back
+    * to inference, so a torn or vanished file fails as it always did.
     */
-  def readFiles(spark: SparkSession, table: String, files: Seq[String],
-                mergeSchema: Boolean = false): DataFrame = {
+  def readFiles(spark: SparkSession, table: String, files: Seq[String]): DataFrame = {
     if (files.isEmpty) return spark.emptyDataFrame
     // preserve the CALLER's order (currentFiles = commit order), not the
     // random batch-uuid sort: the union's column order follows the first
     // batch, and a schema that flaps across equivalent histories breaks
     // positional consumers
     val grouped = files.groupBy(_.split("/", 2)(0))
+    val conf = spark.sessionState.newHadoopConf()
     files.map(_.split("/", 2)(0)).distinct
       .map { batch =>
-        // NO per-file schema merging inside a batch: every file in a
-        // batch dir came from ONE stageBatch write and shares its
-        // schema, so `mergeSchema` here only spawned a distributed
-        // footer-merge job per read (measured: half the lifecycle
-        // fixture's job count). Cross-batch schema evolution — the case
-        // `mergeSchema` exists for — is handled structurally by the
-        // unionByName below.
-        spark.read
-          .option("basePath", s"$table/$batch")
-          .parquet(grouped(batch).map(f => s"$table/$f"): _*)
+        val inBatch = grouped(batch)
+        val reader = spark.read.option("basePath", s"$table/$batch")
+        batchSchema(spark, conf, table, inBatch)
+          .fold(reader)(reader.schema)
+          .parquet(inBatch.map(f => s"$table/$f"): _*)
       }
       .reduce(_.unionByName(_, allowMissingColumns = true))
+  }
+
+  /** A batch's data schema from the footer of its first file, exactly
+    * as Spark's parquet inference derives it
+    * (`ParquetFileFormat.mergeSchemasInParallel`: the same
+    * `readSchemaFromFooter` with the converter flags it reads from the
+    * session conf). None — infer instead — when the footer cannot be
+    * read, or when the footer holds a column that a `col=value` dir of
+    * the batch also names: the reader would then place that column as
+    * a partition column, where inference keeps it at its data position.
+    */
+  private def batchSchema(spark: SparkSession, conf: org.apache.hadoop.conf.Configuration,
+                          table: String, inBatch: Seq[String])
+      : Option[org.apache.spark.sql.types.StructType] = {
+    import org.apache.parquet.format.converter.ParquetMetadataConverter
+    import org.apache.parquet.hadoop.Footer
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.parquet.{
+      ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+    val partKeys = inBatch.flatMap(_.split("/").drop(1).dropRight(1))
+      .filter(_.contains("=")).map(_.takeWhile(_ != '=').toLowerCase(java.util.Locale.ROOT))
+      .toSet
+    try {
+      val p = new Path(s"$table/${inBatch.head}")
+      val meta = ParquetFooterReader.readFooter(HadoopInputFile.fromPath(p, conf),
+        ParquetMetadataConverter.SKIP_ROW_GROUPS)
+      val sql = spark.sessionState.conf
+      val converter = new ParquetToSparkSchemaConverter(
+        assumeBinaryIsString = sql.isParquetBinaryAsString,
+        assumeInt96IsTimestamp = sql.isParquetINT96AsTimestamp,
+        inferTimestampNTZ = sql.parquetInferTimestampNTZEnabled,
+        nanosAsLong = sql.legacyParquetNanosAsLong,
+        respectUnknownTypeAnnotation = sql.parquetReaderRespectUnknownTypeAnnotation)
+      val schema = ParquetFileFormat.readSchemaFromFooter(new Footer(p, meta), converter)
+      if (schema.fieldNames.exists(n => partKeys(n.toLowerCase(java.util.Locale.ROOT)))) None
+      else Some(schema)
+    } catch {
+      case scala.util.control.NonFatal(_) => None
+    }
   }
 
   // -------------------------------------------------------------- writers
@@ -1022,7 +1067,7 @@ object TxTable {
     val upd = updates.toDF().withColumn("__prio", lit(1))
     val combined =
       if (touched.isEmpty) upd
-      else readFiles(spark, table, touched, mergeSchema = true)
+      else readFiles(spark, table, touched)
         .withColumn("__prio", lit(0)).unionByName(upd)
     val merged = graft.operators.LatestRowView.latestPerKey(
         combined, Seq(key), col("__prio") +: orderCols.map(col))
@@ -1058,7 +1103,7 @@ object TxTable {
     if (keysDf.isEmpty) return head
     val touched = overlappingFiles(spark, entries, keysDf, key)
     if (touched.isEmpty) return head
-    val survivors = readFiles(spark, table, touched, mergeSchema = true)
+    val survivors = readFiles(spark, table, touched)
       .join(broadcast(keysDf), col(key).cast("string") === col("__k"),
         "left_anti")
     val files = stageBatch(spark, survivors, table)
@@ -1092,7 +1137,7 @@ object TxTable {
     }
     if (small.size < minFilesToFold) return -1L
     val before = small.map(_._1)
-    val df = readFiles(spark, table, before, mergeSchema = true)
+    val df = readFiles(spark, table, before)
     val rows = statRowSum(small).getOrElse(df.count())
     val nFiles = math.max(1L, (rows + targetRowsPerFile - 1) / targetRowsPerFile).toInt
     val files = stageBatch(spark, df.repartition(nFiles), table)
@@ -1136,7 +1181,7 @@ object TxTable {
     // readFiles, NOT a raw parquet read: Hive partition columns nested in
     // batch dirs and schema-evolved columns must survive the rewrite — a
     // plain leaf-file read would silently drop them from the table
-    val df = readFiles(spark, table, before, mergeSchema = true)
+    val df = readFiles(spark, table, before)
     val rows = statRowSum(entries).getOrElse(df.count())
     val nFiles = math.max(1L, (rows + targetRowsPerFile - 1) / targetRowsPerFile).toInt
     // clusterBy without Hive partitioning → RANGE repartition, so each

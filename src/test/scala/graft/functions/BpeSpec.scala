@@ -91,6 +91,22 @@ class BpeSpec extends SparkSpec {
       assert(Bpe.applyMerges(w, m) == priorityApply(w, m), s"disagree on '$w'")
   }
 
+  test("applyMerges ≡ priority-queue BPE when two rules produce the same symbol") {
+    // (aaa,b) at rank 3 can only fire on an "aaa" made by (a,aa) at rank
+    // 1; the lowest-rank pair then builds "aaab" and never reaches the
+    // rank-5 (aa,a) — rank order, each rule to fixpoint, gives [aaa, b]
+    val m = Vector(("a", "a"), ("a", "aa"), ("aa", "b"), ("aaa", "b"), ("aaab", "a"),
+      ("aa", "a"))
+    assert(Bpe.applyMerges("aaab", m) == Vector("aaab"))
+    for (w <- Seq("aaab", "aaaba", "aaaab", "aaaaab", "abaaab"))
+      assert(Bpe.applyMerges(w, m) == priorityApply(w, m), s"disagree on '$w'")
+  }
+
+  test("DefaultMerges' products are distinct (the oracle's rank-order replay needs it)") {
+    val products = Bpe.DefaultMerges.map { case (a, b) => a + b }
+    assert(products.distinct.length == products.length)
+  }
+
   test("applyMerges: untrained characters pass through as singletons") {
     assert(Bpe.applyMerges("zq!", Bpe.DefaultMerges) == Vector("z", "q", "!"))
   }

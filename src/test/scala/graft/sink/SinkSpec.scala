@@ -98,26 +98,10 @@ class SinkSpec extends SparkSpec {
     val spec = IngestionSpec(9L, "table", "local", "db", "t", "mtime", "", 0, 1,
       "fs", "", "id", "lv", "t_lv", 0, Nil, "g")
     // a source mutating underneath the run: the phantom row materializes
-    // ONLY while a file-write task evaluates the source (FileFormatWriter
-    // on the task stack), so the counting actions see 1 row and the write
-    // lands 2 — both inside the window the counts derived
-    val unstable = spark.range(1).rdd.mapPartitions { _ =>
-      new Iterator[(Long, java.sql.Timestamp)] {
-        private var emitted = 0
-        // write frames only exist while the sink CONSUMES the iterator —
-        // check at hasNext time, not iterator-creation time
-        private def consumedByWriter = Thread.currentThread().getStackTrace.exists(f =>
-          f.getClassName.contains("FileFormat") || f.getClassName.contains("WriteFiles"))
-        override def hasNext: Boolean =
-          emitted == 0 || (emitted == 1 && consumedByWriter)
-        override def next(): (Long, java.sql.Timestamp) = {
-          emitted += 1
-          if (emitted == 1) (1L, java.sql.Timestamp.valueOf("2023-01-10 00:00:00"))
-          else (2L, java.sql.Timestamp.valueOf("2023-01-05 00:00:00"))
-        }
-      }
-    }
-    val src = spark.createDataFrame(unstable).toDF("id", "mtime")
+    // ONLY while a file-write task evaluates the source, so the counting
+    // actions see 1 row and the write lands 2 — both inside the window
+    // the counts derived
+    val src = phantomSource((1L, "2023-01-10 00:00:00"), (2L, "2023-01-05 00:00:00"))
     val logs = run.run(spec, src)
     assert(logs.last.executionStatus == RunStatus.ValidationFailure)
     assert(logs.last.reasonCode.contains("rolled back"))
@@ -136,21 +120,7 @@ class SinkSpec extends SparkSpec {
     // same phantom-while-written source as above: with the slice persisted
     // on first materialization, the write consumes the CACHED snapshot, so
     // the phantom never lands and the run validates clean
-    val unstable = spark.range(1).rdd.mapPartitions { _ =>
-      new Iterator[(Long, java.sql.Timestamp)] {
-        private var emitted = 0
-        private def consumedByWriter = Thread.currentThread().getStackTrace.exists(f =>
-          f.getClassName.contains("FileFormat") || f.getClassName.contains("WriteFiles"))
-        override def hasNext: Boolean =
-          emitted == 0 || (emitted == 1 && consumedByWriter)
-        override def next(): (Long, java.sql.Timestamp) = {
-          emitted += 1
-          if (emitted == 1) (1L, java.sql.Timestamp.valueOf("2023-01-10 00:00:00"))
-          else (2L, java.sql.Timestamp.valueOf("2023-01-05 00:00:00"))
-        }
-      }
-    }
-    val src = spark.createDataFrame(unstable).toDF("id", "mtime")
+    val src = phantomSource((1L, "2023-01-10 00:00:00"), (2L, "2023-01-05 00:00:00"))
     // outside a write, the iterator emits exactly one row per partition —
     // this is the stable row count the snapshot should pin
     val stableCount = src.count()
@@ -159,5 +129,118 @@ class SinkSpec extends SparkSpec {
     // no phantom rows landed: the write consumed the cached snapshot (an
     // uncached write would have doubled every partition)
     assert(spark.read.parquet(s"$dir/lake/db/t").count() == stableCount)
+  }
+
+  /** The mutating-source fixture of the rollback tests: `first`
+    * is the one row every counting action sees; `phantom` materializes
+    * only while a file-write task consumes the iterator, so an uncached
+    * run writes a row its counts never saw and fails validation.
+    */
+  private def phantomSource(first: (Long, String), phantom: (Long, String)) = {
+    val unstable = spark.range(1).rdd.mapPartitions { _ =>
+      new Iterator[(Long, java.sql.Timestamp)] {
+        private var emitted = 0
+        // write frames only exist while the sink CONSUMES the iterator —
+        // check at hasNext time, not iterator-creation time
+        private def consumedByWriter = Thread.currentThread().getStackTrace.exists(f =>
+          f.getClassName.contains("FileFormat") || f.getClassName.contains("WriteFiles"))
+        override def hasNext: Boolean =
+          emitted == 0 || (emitted == 1 && consumedByWriter)
+        override def next(): (Long, java.sql.Timestamp) = {
+          emitted += 1
+          val (id, ts) = if (emitted == 1) first else phantom
+          (id, java.sql.Timestamp.valueOf(ts))
+        }
+      }
+    }
+    spark.createDataFrame(unstable).toDF("id", "mtime")
+  }
+
+  private def plainSpec =
+    graft.model.IngestionSpec(9L, "table", "local", "db", "t", "mtime", "", 0, 1,
+      "fs", "", "id", "lv", "t_lv", 0, Nil, "g")
+
+  private def stableSource(rows: (Long, String)*) = {
+    import org.apache.spark.sql.functions.to_timestamp
+    rows.toDF("id", "s").select($"id", to_timestamp($"s").as("mtime"))
+  }
+
+  /** Every file under `dir`, relative to it, as java.io sees it. */
+  private def filesUnder(dir: String): Set[String] = {
+    val root = java.nio.file.Paths.get(dir)
+    val walk = java.nio.file.Files.walk(root)
+    try {
+      import scala.jdk.CollectionConverters._
+      walk.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+        .map(p => root.relativize(p).toString).toSet
+    } finally walk.close()
+  }
+
+  test("a plain spec whose first run was rolled back loads its window on the next run") {
+    import graft.model._
+    val dir = java.nio.file.Files.createTempDirectory("graft-rbfirst").toString
+    val store = new graft.state.LogStore(spark, s"$dir/logs")
+    val run = new graft.driver.IngestionRun(spark, s"$dir/lake", store, cacheSlice = false)
+    val bad = run.run(plainSpec,
+      phantomSource((1L, "2023-01-10 00:00:00"), (2L, "2023-01-05 00:00:00")))
+    assert(bad.last.executionStatus == RunStatus.ValidationFailure)
+    // the rollback leaves the lake dir behind with no data file in it
+    assert(new java.io.File(s"$dir/lake/db/t").isDirectory)
+    val good = run.run(plainSpec, stableSource((1L, "2023-01-10 00:00:00")))
+    assert(good.last.executionStatus == RunStatus.Success)
+    assert(good.last.targetCount == 1L)
+    assert(spark.read.parquet(s"$dir/lake/db/t").count() == 1L)
+  }
+
+  test("a plain lake dir holding only _SUCCESS or _temporary reads as absent") {
+    import graft.model._
+    for (leftover <- Seq("_SUCCESS", "_temporary/0/_temporary/part-00000.snappy.parquet")) {
+      val dir = java.nio.file.Files.createTempDirectory("graft-leftover").toString
+      val lake = s"$dir/lake/db/t"
+      // a real parquet file under `_temporary`: hidden from Spark's reads
+      Seq((5L, "x")).toDF("id", "v").write.parquet(s"$dir/scratch")
+      val part = new java.io.File(s"$dir/scratch").listFiles()
+        .find(_.getName.endsWith(".parquet")).get.toPath
+      val target = java.nio.file.Paths.get(s"$lake/$leftover")
+      java.nio.file.Files.createDirectories(target.getParent)
+      java.nio.file.Files.copy(part, target)
+      val store = new graft.state.LogStore(spark, s"$dir/logs")
+      val run = new graft.driver.IngestionRun(spark, s"$dir/lake", store)
+      val logs = run.run(plainSpec, stableSource(
+        (1L, "2023-01-10 00:00:00"), (2L, "2023-01-11 00:00:00")))
+      assert(logs.last.executionStatus == RunStatus.Success, leftover)
+      assert(logs.last.targetCount == 2L, leftover)
+      assert(spark.read.parquet(lake).count() == 2L, leftover)
+    }
+  }
+
+  test("a failed plain run under a path with a space deletes exactly its own data files") {
+    import graft.model._
+    val dir = java.nio.file.Files.createTempDirectory("graft rb space").toString
+    val lakeRoot = s"$dir/lake root"
+    val lake = s"$lakeRoot/db/t"
+    val store = new graft.state.LogStore(spark, s"$dir/logs")
+    val first = new graft.driver.IngestionRun(spark, lakeRoot, store)
+    assert(first.run(plainSpec, stableSource(
+      (1L, "2023-01-10 00:00:00"), (2L, "2023-01-11 00:00:00")))
+      .last.executionStatus == RunStatus.Success)
+    val kept = filesUnder(lake)
+    def data(fs: Set[String]) = fs.filter(_.endsWith(".parquet"))
+      .filterNot(f => f.split("/").exists(c => c.startsWith(".") || c.startsWith("_")))
+    assert(data(kept).nonEmpty && kept.contains("_SUCCESS") &&
+      data(kept).forall(f => kept.exists(_.endsWith(s".${f.split("/").last}.crc"))),
+      s"the first run's data files, their .crc files and _SUCCESS: $kept")
+
+    val failing = new graft.driver.IngestionRun(spark, lakeRoot, store, cacheSlice = false)
+    val logs = failing.run(plainSpec,
+      phantomSource((3L, "2023-02-10 00:00:00"), (4L, "2023-02-05 00:00:00")))
+    assert(logs.last.executionStatus == RunStatus.ValidationFailure)
+    val after = filesUnder(lake)
+    assert(kept.subsetOf(after), s"files of the first run went: ${kept -- after}")
+    assert(data(after) == data(kept), "the failed run's data files must all go")
+    assert(spark.read.parquet(lake).as[(Long, java.sql.Timestamp)].collect()
+      .map(_._1).sorted.toSeq == Seq(1L, 2L))
+    assert("rolled back [1-9][0-9]* files".r.findFirstIn(logs.last.reasonCode).nonEmpty,
+      logs.last.reasonCode)
   }
 }
