@@ -639,9 +639,11 @@ object SparkEntry {
     // T — REAL merge-table BPE (Bpe.DefaultMerges, trained by
     // tools.BpeTrain): per-doc pre-token count, merged token count, and
     // the FULL merged segmentation joined with '|'. The oracle replays
-    // the identical rank-order merge loop as a recursive CTE over the
-    // frozen merge list — a hash match pins every token BOUNDARY, not
-    // just counts.
+    // a rank-order merge loop (each rule to fixpoint, in rank order) as
+    // a recursive CTE over the frozen merge list — a hash match pins
+    // every token BOUNDARY, not just counts. Bpe.applyMerges is the
+    // lowest-rank-pair loop; the two agree here only because
+    // DefaultMerges' merge products are distinct, which BpeSpec pins.
     Entry("q92_bpe_merged", (s, dir) => {
       functions.Bpe.mergedTokensPerDoc(t(s, dir, "documents"),
           col("doc_id"), col("text"), functions.Bpe.DefaultMerges)
@@ -9088,8 +9090,10 @@ object SparkEntry {
     * vocabulary, and a RECURSIVE rank-order merge loop over a
     * chr(30)-delimited symbol string — one `replace()` call is exactly
     * one left-to-right non-overlapping merge pass, iterated to fixpoint
-    * per rank (the same loop Bpe.applyMerges runs; see the rank-order
-    * equivalence note there). Yields `bpe(doc_id, n_pre, n_tok, toks)`.
+    * per rank. That is NOT the loop Bpe.applyMerges runs (lowest-rank
+    * pair first); the two agree only on a table whose merge products are
+    * distinct, as DefaultMerges' are (BpeSpec pins it; see the
+    * rank-order note in Bpe). Yields `bpe(doc_id, n_pre, n_tok, toks)`.
     * Use under `WITH RECURSIVE`.
     */
   private val bpeCtes: String = {

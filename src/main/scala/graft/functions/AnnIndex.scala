@@ -724,12 +724,8 @@ object AnnIndex {
   def probedFiles(spark: SparkSession, table: String,
                   probed: Set[Long]): Seq[String] =
     // One definition for every index family ([[TxTable.prunedFilesIn]]):
-    // a driver scan with one hash lookup per Hive-statted file at small
-    // scale, and — past [[TxTable.RelationalListingBytesKey]] — a
-    // RELATIONAL plan over the parquet files-checkpoint that collects
-    // only the matched paths, so driver memory is ∝ |probed files|,
-    // never ∝ |files| (the fourth-decade commit-log-listing wall,
-    // SCALE.md r12 → r13).
+    // a driver scan of the replayed live set, one hash lookup per
+    // Hive-statted file.
     TxTable.prunedFilesIn(spark, table, "cid", probed)
 
   /** ADC top-k against the at-rest index: prune files to the probed

@@ -2,7 +2,7 @@ package graft.sink
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, lit, when}
+import org.apache.spark.sql.functions.{col, lit}
 
 /** Minimal transactional table: a versioned commit log over parquet —
   * the smallest useful form of the Delta/Iceberg core idea, built to
@@ -47,14 +47,17 @@ import org.apache.spark.sql.functions.{col, lit, when}
   * racing-writer spec drives both in-tree coordinators. READ-side
   * planning from the log is safe on any store.
   *
-  * Read planning is CHECKPOINTED: every `checkpointEvery` commits the
-  * committing writer folds its own commit onto the prior state and
-  * snapshots the result to `<version>.ckpt`; replay is that snapshot +
-  * the commit suffix through the same fold — O(interval) opens however
-  * old the table is, so a commit-per-micro-batch stream can run for
-  * months without planning degradation. The head version needs no
-  * replay: it is the highest version named in one log listing.
-  * [[vacuum]] reclaims the replay-redundant log prefix.
+  * Read planning is CHECKPOINTED: every 10th commit (a fixed cadence)
+  * the committing writer folds its own commit onto the prior state and
+  * snapshots the result to `<version>.ckpt` — one JSON file, no Spark
+  * job. Replay is that snapshot + the commit suffix
+  * through the same fold — O(interval) opens however old the table is,
+  * so a commit-per-micro-batch stream can run for months without
+  * planning degradation. The head version needs no replay: it is the
+  * highest version named in one log listing. File pruning
+  * ([[prunedFiles]], [[prunedFilesIn]]) is one driver scan of that
+  * replayed state's per-file stats. [[vacuum]] reclaims the
+  * replay-redundant log prefix.
   *
   * Deliberately out of scope (this is parity engineering, not a table
   * format): schema evolution in the log, multi-table transactions,
@@ -103,7 +106,7 @@ object TxTable {
 
   /** Snapshot of the LIVE file set as of `version` — replay shortcut,
     * and the shape of every replayed state ([[fold]]'s result). Written
-    * every `checkpointEvery` commits so read planning opens one
+    * every [[CheckpointEvery]] commits so read planning opens one
     * snapshot + a bounded commit suffix instead of every JSON since v1
     * (a commit-per-micro-batch stream would otherwise grow planning
     * without bound — the exact failure the log exists to prevent).
@@ -191,7 +194,7 @@ object TxTable {
   /** The replayed state at `upTo` (None = head): the newest checkpoint
     * at or below it plus the commit suffix up to it, through [[fold]].
     * FS opens are 1 checkpoint + (commits since it) — bounded by
-    * `checkpointEvery` regardless of table age. An EXPLICIT version must
+    * [[CheckpointEvery]] regardless of table age. An EXPLICIT version must
     * lie in [0, head] and its suffix must be contiguous: the `require`
     * catches both holes — commits cleaned by [[vacuum]]'s log cleaning
     * (the target predates the earliest usable checkpoint) and a
@@ -332,7 +335,6 @@ object TxTable {
     */
   def readChanges(spark: SparkSession, table: String,
                   fromVersion: Long, toVersion: Long): DataFrame = {
-    import org.apache.spark.sql.functions.lit
     val (addedF, removedF) = changedFiles(spark, table, fromVersion, toVersion)
     def tag(df: DataFrame, t: String): DataFrame =
       df.withColumn("_change_type", lit(t))
@@ -443,7 +445,7 @@ object TxTable {
     */
   def append(spark: SparkSession, df: DataFrame, table: String,
              statsCols: Seq[String] = Nil): Long = {
-    val files = stage(spark, df, table)
+    val files = stageBatch(spark, df, table)
     val stats =
       if (statsCols.isEmpty) Nil else fileStats(spark, table, files, statsCols)
     commit(spark, table, added = files, removed = Nil, stats = stats)
@@ -479,7 +481,7 @@ object TxTable {
                  statsCols: Seq[String] = Nil): Option[Long] = {
     require(writerVersion >= 0, s"writerVersion must be >= 0, got $writerVersion")
     if (txnVersion(spark, table, appId).exists(_ >= writerVersion)) return None
-    val files = stage(spark, df, table)
+    val files = stageBatch(spark, df, table)
     val stats =
       if (statsCols.isEmpty) Nil else fileStats(spark, table, files, statsCols)
     val out = commitOpt(spark, table, added = files, removed = Nil,
@@ -549,8 +551,7 @@ object TxTable {
     val aggs = typed.flatMap { case (c, t) =>
       val base = if (t == "S") col(c).cast("string") else col(c)
       Seq(min(base).as(s"__lo_$c"), max(base).as(s"__hi_$c"))
-    } :+ org.apache.spark.sql.functions.count(
-      org.apache.spark.sql.functions.lit(1)).as("__nrows")
+    } :+ org.apache.spark.sql.functions.count(lit(1)).as("__nrows")
     val rows = df.groupBy(input_file_name().as("__file"))
       .agg(aggs.head, aggs.tail: _*)
       .collect()
@@ -731,185 +732,22 @@ object TxTable {
   private object FooterBail
     extends scala.util.control.ControlThrowable("footer stats not provably exact")
 
-  // ------------------------------------------- relational listing (scale)
-
-  /** Conf key: JSON-checkpoint byte size past which set-membership
-    * pruning ([[prunedFilesIn]]) plans RELATIONALLY from the parquet
-    * files-checkpoint instead of materializing every live file's stats
-    * on the driver. Default 8 MiB ≈ low-millions of files; at the IMI
-    * ceiling decade the listing is ~GBs (SCALE.md r12 math), where the
-    * driver Seq is the wall the relational path removes.
-    */
-  val RelationalListingBytesKey = "spark.graft.relationalListingBytes"
-  private val RelationalListingBytesDefault: Long = 8L * 1024 * 1024
-
-  private val FilesCkptName = """^(\d{8})\.files$""".r
-  private def listFilesCkpts(fs: FileSystem, table: String): Seq[(Long, Path)] = {
-    val dir = new Path(logDir(table))
-    if (!fs.exists(dir)) return Nil
-    fs.listStatus(dir).toSeq.map(_.getPath).flatMap(p => p.getName match {
-      case FilesCkptName(v) => Some(v.toLong -> p); case _ => None
-    }).sortBy(_._1)
-  }
-
-  private val EntriesSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("f", org.apache.spark.sql.types.StringType, nullable = false),
-    org.apache.spark.sql.types.StructField("scol", org.apache.spark.sql.types.StringType, nullable = true),
-    org.apache.spark.sql.types.StructField("styp", org.apache.spark.sql.types.StringType, nullable = true),
-    org.apache.spark.sql.types.StructField("lo", org.apache.spark.sql.types.StringType, nullable = true),
-    org.apache.spark.sql.types.StructField("hi", org.apache.spark.sql.types.StringType, nullable = true)))
-
-  private def entriesToDF(spark: SparkSession,
-                          entries: Seq[(String, Seq[ColStat])]): DataFrame = {
-    import org.apache.spark.sql.Row
-    // long form: one PRESENCE row (scol null) per file — a file's
-    // membership never depends on it having stats — plus one row per
-    // stat, so ANY stat column prunes relationally, not just cid
-    val rows = entries.flatMap { case (f, stats) =>
-      Row(f, null, null, null, null) +:
-        stats.map(st => Row(f, st.col, st.typ, st.lo, st.hi))
-    }
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows,
-        math.max(1, rows.size / 2000000 + 1)), EntriesSchema)
-  }
-
-  /** Snapshot the live (file, stats) entries as a PARQUET relation at
-    * `_graft_txn/<version>.files/` — the commit-log listing an executor
-    * job can PRUNE (row groups sorted by (scol, lo); predicate pushdown
-    * on the stat column) instead of the driver scanning it. Best-effort
-    * like the JSON checkpoint: content is a deterministic function of
-    * the log at `version`, so a lost write or racer costs nothing.
-    * The entries are in hand at checkpoint time (the JSON checkpoint
-    * materializes them anyway); once a table outgrows the JSON render
-    * itself, the successor derives `<v+k>.files` from `<v>.files` MINUS
-    * the suffix's removals PLUS its additions — pure DataFrame algebra,
-    * no driver materialization (the recorded next seam, SCALE.md r13).
-    */
-  private def writeFilesCheckpoint(spark: SparkSession, table: String,
-                                   version: Long,
-                                   entries: Seq[(String, Seq[ColStat])]): Unit =
-    try {
-      val fs = fsFor(spark, table)
-      val target = new Path(f"${logDir(table)}/$version%08d.files")
-      if (fs.exists(target)) return // a racer's content is identical
-      val tmp = new Path(
-        s"${logDir(table)}/.tmpfiles-${java.util.UUID.randomUUID().toString.take(8)}")
-      entriesToDF(spark, entries)
-        .sortWithinPartitions("scol", "lo")
-        .write.mode("overwrite").option("compression", "snappy")
-        .parquet(tmp.toString)
-      if (!fs.rename(tmp, target)) fs.delete(tmp, true)
-    } catch { case _: Exception => () /* acceleration only */ }
-
-  /** The live (file, stats) entries as a DataFrame — `(f, scol, styp,
-    * lo, hi)` long form — planned from the newest parquet
-    * files-checkpoint plus the commit SUFFIX folded driver-side (the
-    * suffix is bounded by the checkpoint cadence; the base relation is
-    * never materialized on the driver). None when no parquet checkpoint
-    * exists or the suffix is non-contiguous (log cleaned past the
-    * parquet's version after a lost best-effort write) — callers fall
-    * back to the driver path, which is always correct.
-    */
-  def liveEntriesDF(spark: SparkSession, table: String): Option[DataFrame] = {
-    val fs = fsFor(spark, table)
-    listFilesCkpts(fs, table).lastOption.flatMap { case (v, p) =>
-      val (cs, _) = listLog(fs, table)
-      val suffixIdx = cs.filter(_._1 > v)
-      if (suffixIdx.map(_._1) != (v + 1 to v + suffixIdx.size)) None
-      else scala.util.Try {
-        val suffix = suffixIdx.map { case (_, cp) => parse(slurp(fs, cp)) }
-        val touched = suffix.flatMap(c => c.added ++ c.removed).distinct
-        val base = spark.read.schema(EntriesSchema).parquet(p.toString)
-        if (touched.isEmpty) base
-        else {
-          import org.apache.spark.sql.functions.broadcast
-          // every file the suffix touched leaves the base; the suffix
-          // folded over an empty base puts back the ones still live
-          val excluded = entriesToDF(spark, touched.map(_ -> Seq.empty[ColStat]))
-            .select(col("f"))
-          base.join(broadcast(excluded), Seq("f"), "left_anti")
-            .unionByName(entriesToDF(spark, liveEntries(fold(Checkpoint(v, Nil), suffix))))
-        }
-      }.toOption
-    }
-  }
-
   /** Files whose `statCol` stat MAY hold one of `wanted` (set
-    * membership — the index families' probed-cell pruning). Stat-less
-    * files are kept (missing stats cost opens, never rows). Two plans,
-    * same result set:
-    *
-    *  - DRIVER (small tables): scan [[currentFilesWithStats]] — one
-    *    hash lookup per Hive-statted file (lo == hi), a range test
-    *    otherwise.
-    *  - RELATIONAL (past [[RelationalListingBytesKey]]): prune the
-    *    parquet files-checkpoint as an executor job and collect only
-    *    the MATCHED paths — driver memory ∝ |result|, not ∝ |files|,
-    *    which is what survives the decade where the listing itself is
-    *    ~GBs (the fourth-decade wall named by SCALE.md r12).
+    * membership — the index families' probed-cell pruning): one scan
+    * of [[currentFilesWithStats]], a hash lookup per Hive-statted file
+    * (lo == hi) and a range test otherwise. Stat-less files are kept
+    * (missing stats cost opens, never rows).
     */
-  /** The shared relational-dispatch half of [[prunedFilesIn]] and
-    * [[prunedFiles]]: None below the size threshold or without a
-    * parquet files-checkpoint (callers run the driver scan, always
-    * correct); otherwise the pruned file set, where `hitsOf` maps the
-    * `statCol` stat rows to the matching ones and stat-less files are
-    * always kept (missing stats cost opens, never rows).
-    */
-  private def relationalPruneOpt(spark: SparkSession, table: String,
-                                 statCol: String,
-                                 hitsOf: DataFrame => DataFrame): Option[Seq[String]] = {
-    val fs = fsFor(spark, table)
-    val thr = scala.util.Try(
-        spark.conf.get(RelationalListingBytesKey).toLong)
-      .getOrElse(RelationalListingBytesDefault)
-    val big = listLog(fs, table)._2.lastOption.exists { case (_, p) =>
-      scala.util.Try(fs.getFileStatus(p).getLen).getOrElse(0L) >= thr
-    }
-    if (!big) None
-    else liveEntriesDF(spark, table).map { live =>
-      val statRows = live.filter(col("scol") === statCol)
-      val hits = hitsOf(statRows).select(col("f"))
-      val statless = live.filter(col("scol").isNull).select(col("f"))
-        .join(statRows.select(col("f")).distinct(), Seq("f"), "left_anti")
-      hits.unionByName(statless)
-        .distinct().sort("f")
-        .collect().map(_.getString(0)).toSeq
-    }
-  }
 
   def prunedFilesIn(spark: SparkSession, table: String, statCol: String,
-                    wanted: Set[Long]): Seq[String] = {
-    val relational = relationalPruneOpt(spark, table, statCol, statRows => {
-      import org.apache.spark.sql.functions.broadcast
-      val wantedStr = wanted.map(_.toString).toSeq
-      // Hive layout (lo == hi): sargable string-equality IN — parquet
-      // row-group pruning does the work. Range-statted files (legacy
-      // or multi-cell) go through a broadcast semi-join on the cast.
-      val eqHits = statRows
-        .filter(col("lo") === col("hi") && col("lo").isin(wantedStr: _*))
-        .select(col("f"))
-      val wantedDF = {
-        import spark.implicits._
-        wanted.toSeq.toDF("__pc")
-      }
-      val rngHits = statRows.filter(col("lo") =!= col("hi"))
-        .join(broadcast(wantedDF),
-          col("lo").cast("long") <= col("__pc") &&
-            col("__pc") <= col("hi").cast("long"), "left_semi")
-        .select(col("f"))
-      eqHits.unionByName(rngHits)
-    })
-    relational.getOrElse {
-      currentFilesWithStats(spark, table).collect {
-        case (f, stats) if stats.find(_.col == statCol).forall { st =>
-          val (lo, hi) = (st.lo.toLong, st.hi.toLong)
-          if (lo == hi) wanted.contains(lo)
-          else wanted.exists(c => lo <= c && c <= hi)
-        } => f
-      }
+                    wanted: Set[Long]): Seq[String] =
+    currentFilesWithStats(spark, table).collect {
+      case (f, stats) if stats.find(_.col == statCol).forall { st =>
+        val (lo, hi) = (st.lo.toLong, st.hi.toLong)
+        if (lo == hi) wanted.contains(lo)
+        else wanted.exists(c => lo <= c && c <= hi)
+      } => f
     }
-  }
 
   /** Files that MAY hold rows with `colName` in [lo, hi] (inclusive;
     * None = unbounded): a file is skipped only when its committed stats
@@ -920,33 +758,17 @@ object TxTable {
     */
   def prunedFiles(spark: SparkSession, table: String, colName: String,
                   lo: Option[String], hi: Option[String]): Seq[String] = {
-    // RELATIONAL dispatch past the listing threshold (the incremental
-    // watermark-read twin of [[prunedFilesIn]]'s probed-cell pruning —
-    // ingestion tables hit the same fourth-decade listing wall): the
-    // typed [min, max]-overlap test runs as a stat-typ-dispatched
-    // Column predicate over the parquet files-checkpoint. "S" stats
-    // (strings/ISO timestamps) compare lexicographically in both plans.
-    val relational = relationalPruneOpt(spark, table, colName, statRows => {
-      def leq(a: Column, b: Column): Column =
-        when(col("styp") === "L", a.cast("long") <= b.cast("long"))
-          .when(col("styp") === "D", a.cast("double") <= b.cast("double"))
-          .otherwise(a <= b)
-      val keepHi = hi.map(h => leq(col("lo"), lit(h))).getOrElse(lit(true))
-      val keepLo = lo.map(l => leq(lit(l), col("hi"))).getOrElse(lit(true))
-      statRows.filter(keepHi && keepLo)
-    })
-    relational.getOrElse {
-      def cmp(typ: String, a: String, b: String): Int = typ match {
-        case "L" => java.lang.Long.compare(a.toLong, b.toLong)
-        case "D" => java.lang.Double.compare(a.toDouble, b.toDouble)
-        case _ => a.compareTo(b)
-      }
-      currentFilesWithStats(spark, table).collect {
-        case (f, stats) if stats.find(_.col == colName).forall { st =>
-          hi.forall(h => cmp(st.typ, st.lo, h) <= 0) &&
-            lo.forall(l => cmp(st.typ, st.hi, l) >= 0)
-        } => f
-      }
+    // "S" stats (strings/ISO timestamps) compare lexicographically
+    def cmp(typ: String, a: String, b: String): Int = typ match {
+      case "L" => java.lang.Long.compare(a.toLong, b.toLong)
+      case "D" => java.lang.Double.compare(a.toDouble, b.toDouble)
+      case _ => a.compareTo(b)
+    }
+    currentFilesWithStats(spark, table).collect {
+      case (f, stats) if stats.find(_.col == colName).forall { st =>
+        hi.forall(h => cmp(st.typ, st.lo, h) <= 0) &&
+          lo.forall(l => cmp(st.typ, st.hi, l) >= 0)
+      } => f
     }
   }
 
@@ -969,7 +791,7 @@ object TxTable {
     */
   def overwrite(spark: SparkSession, df: DataFrame, table: String): Long = {
     val k = replay(fsFor(spark, table), table, None)
-    val files = stage(spark, df, table)
+    val files = stageBatch(spark, df, table)
     commit(spark, table, added = files, removed = k.live, expectedHead = Some(k.version))
   }
 
@@ -984,41 +806,13 @@ object TxTable {
     require(writerVersion >= 0, s"writerVersion must be >= 0, got $writerVersion")
     if (txnVersion(spark, table, appId).exists(_ >= writerVersion)) return None
     val k = replay(fsFor(spark, table), table, None)
-    val files = stage(spark, df, table)
+    val files = stageBatch(spark, df, table)
     val out = commitOpt(spark, table, added = files, removed = k.live,
       expectedHead = Some(k.version), txn = Some((appId, writerVersion)))
     if (out.isEmpty) deleteStaged(spark, table, files)
     out
   }
 
-  /** Transactional compaction: rewrite the current state at a target file
-    * granularity and swap file sets in one commit. A crash at ANY point
-    * leaves either the old state (no commit yet) or the new (commit
-    * renamed) — never neither, unlike the `.__precompact` rename dance.
-    */
-  /** Stats-pruned partial-rewrite MERGE (the Delta-style batch upsert):
-    * rewrite ONLY the files whose committed `key` min/max range overlaps
-    * the update batch's key range — every other file survives the commit
-    * untouched. This is what makes upsert viable at 100 TB: a day's
-    * update batch against a key-clustered table touches the handful of
-    * files its keys land in, not the table (the full-table
-    * read-union-overwrite alternative is the streaming upsert's shape,
-    * correct but O(table) per batch).
-    *
-    * Semantics per key: the update row wins unconditionally over the
-    * base row (an explicit precedence column — NOT an orderCols tie,
-    * which `max_by` would break arbitrarily); among duplicate update
-    * keys, last-writer-wins by `orderCols`. Insert keys (no base match)
-    * land in the rewrite. Null update keys are the caller's bug — they
-    * merge into one null group like any groupBy.
-    *
-    * Files without a committed stat for `key` are conservatively
-    * rewritten (pruning default "keep" — missing stats cost rewrites,
-    * never correctness). Pair with `compact(clusterBy = key)` so file
-    * ranges are disjoint and tight. Conflict-checked like overwrite:
-    * a commit landing between the state read and the publish throws
-    * rather than resurrecting or double-applying files.
-    */
   /** Files whose committed `key` [min, max] range contains SOME key of
     * `keysDf` (single `__k` string column) — per-file set overlap, not
     * one envelope over the whole batch (an envelope would rewrite the
@@ -1055,9 +849,31 @@ object TxTable {
     (noStat ++ overlapped).distinct
   }
 
+  /** Stats-pruned partial-rewrite MERGE (the Delta-style batch upsert):
+    * rewrite ONLY the files whose committed `key` min/max range overlaps
+    * the update batch's key range — every other file survives the commit
+    * untouched. This is what makes upsert viable at 100 TB: a day's
+    * update batch against a key-clustered table touches the handful of
+    * files its keys land in, not the table (the full-table
+    * read-union-overwrite alternative is the streaming upsert's shape,
+    * correct but O(table) per batch).
+    *
+    * Semantics per key: the update row wins unconditionally over the
+    * base row (an explicit precedence column — NOT an orderCols tie,
+    * which `max_by` would break arbitrarily); among duplicate update
+    * keys, last-writer-wins by `orderCols`. Insert keys (no base match)
+    * land in the rewrite. Null update keys are the caller's bug — they
+    * merge into one null group like any groupBy.
+    *
+    * Files without a committed stat for `key` are conservatively
+    * rewritten (pruning default "keep" — missing stats cost rewrites,
+    * never correctness). Pair with `compact(clusterBy = key)` so file
+    * ranges are disjoint and tight. Conflict-checked like overwrite:
+    * a commit landing between the state read and the publish throws
+    * rather than resurrecting or double-applying files.
+    */
   def merge(spark: SparkSession, updates: DataFrame, table: String,
             key: String, orderCols: Seq[String]): Long = {
-    import org.apache.spark.sql.functions.lit
     val k = replay(fsFor(spark, table), table, None)
     val (head, entries) = (k.version, liveEntries(k))
     val keysDf = updates.select(col(key).cast("string").as("__k"))
@@ -1170,6 +986,11 @@ object TxTable {
     statRowSum(entries).getOrElse(readFiles(spark, table, entries.map(_._1)).count())
   }
 
+  /** Transactional compaction: rewrite the current state at a target file
+    * granularity and swap file sets in one commit. A crash at ANY point
+    * leaves either the old state (no commit yet) or the new (commit
+    * renamed) — never neither, unlike the `.__precompact` rename dance.
+    */
   def compact(spark: SparkSession, table: String,
               targetRowsPerFile: Long = 5000000L,
               clusterBy: Option[String] = None,
@@ -1365,21 +1186,19 @@ object TxTable {
           deleted += s"_graft_txn/${p.getName}"
       }
     }
-    // superseded parquet files-checkpoints: keep the newest (the
-    // relational-listing base), reap older ones past the grace window
-    listFilesCkpts(fs, table).dropRight(1).foreach { case (_, p) =>
-      val reaped = scala.util.Try {
-        fs.getFileStatus(p).getModificationTime < cutoff && fs.delete(p, true)
-      }.getOrElse(false)
-      if (reaped) deleted += s"_graft_txn/${p.getName}"
+    // a DIRECTORY in the log is metadata that older TxTable versions
+    // left: parquet twins of the checkpoint (`<v>.files/`) and their
+    // staging dirs. TxTable now writes only files there and no reader
+    // opens a dir, so each one is reaped once past the grace window.
+    val logPath = new Path(logDir(table))
+    if (fs.exists(logPath)) fs.listStatus(logPath).filter(_.isDirectory).foreach { st =>
+      if (st.getModificationTime < cutoff && fs.delete(st.getPath, true))
+        deleted += s"_graft_txn/${st.getPath.getName}"
     }
     deleted.toList
   }
 
   // ------------------------------------------------------------ internals
-
-  private def stage(spark: SparkSession, df: DataFrame, table: String): Seq[String] =
-    stageBatch(spark, df, table)
 
   /** Write `df` into a fresh staging batch dir WITHOUT committing; return
     * the table-relative parquet paths (nested under partition dirs when
@@ -1438,11 +1257,9 @@ object TxTable {
   def commit(spark: SparkSession, table: String,
              added: Seq[String], removed: Seq[String],
              expectedHead: Option[Long] = None,
-             checkpointEvery: Int = 10,
              stats: Seq[Seq[ColStat]] = Nil,
              coordinator: CommitCoordinator = RenameCommitCoordinator): Long =
-    commitOpt(spark, table, added, removed, expectedHead, checkpointEvery,
-      stats, coordinator, txn = None)
+    commitOpt(spark, table, added, removed, expectedHead, stats, coordinator, txn = None)
       .getOrElse(throw new IllegalStateException(
         "unreachable: a txn-less commit never skips"))
 
@@ -1477,7 +1294,6 @@ object TxTable {
   private[sink] def commitOpt(spark: SparkSession, table: String,
              added: Seq[String], removed: Seq[String],
              expectedHead: Option[Long] = None,
-             checkpointEvery: Int = 10,
              stats: Seq[Seq[ColStat]] = Nil,
              coordinator: CommitCoordinator = RenameCommitCoordinator,
              txn: Option[(String, Long)] = None): Option[Long] =
@@ -1497,21 +1313,15 @@ object TxTable {
         // read the prior state BEFORE publishing (checkpoint versions
         // only): if our publish wins, the log at `version` is exactly
         // (prior state + this commit) — no racer can slot in below us
-        val wantCkpt = checkpointEvery > 0 && version % checkpointEvery == 0
+        val wantCkpt = version % CheckpointEvery == 0
         val prior = if (wantCkpt || txn.isDefined) Some(replay(fs, table, None)) else None
         txn.foreach { case (app, wv) =>
           if (prior.exists(_.txns.exists { case (a, v) => a == app && v >= wv })) return None
         }
         val c = Commit(version, added, removed, stats, txn)
         if (coordinator.putIfAbsent(fs, target, render(c).getBytes("UTF-8"))) {
-          if (wantCkpt) prior.foreach { k =>
-            // the checkpoint is this commit folded onto the prior state
-            val ckpt = fold(k, Seq(c))
-            writeCheckpoint(fs, table, ckpt)
-            // parquet twin of the live set, for relational listing —
-            // same entries, already in hand, best-effort like the JSON
-            writeFilesCheckpoint(spark, table, version, liveEntries(ckpt))
-          }
+          // the checkpoint is this commit folded onto the prior state
+          if (wantCkpt) prior.foreach(k => writeCheckpoint(fs, table, fold(k, Seq(c))))
           return Some(version)
         }
         // lost a cross-process race (coordinator cleaned up its own temp)
@@ -1525,6 +1335,11 @@ object TxTable {
       }
       throw new IllegalStateException("unreachable")
     }
+
+  /** Commits between checkpoints: replay opens one checkpoint plus at
+    * most this many commits.
+    */
+  private val CheckpointEvery = 10
 
   /** Snapshot the live set to `<version>.ckpt`. Best-effort: the
     * checkpoint is pure replay acceleration — its content is a

@@ -2,9 +2,9 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
 
 /** Structured Streaming re-expression of the reference's micro-batch
   * incremental semantics (SURVEY.md §2.10): the persisted-watermark +
@@ -234,7 +234,6 @@ object EventsStream {
     */
   def runForeachBatchUpsert(spark: SparkSession, dir: String, targetPath: String,
                             keys: Seq[String], orderCols: Seq[String]): Unit = {
-    import org.apache.spark.sql.Row
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
     val q = readEvents(spark, dir).writeStream
       .outputMode("append")
@@ -286,7 +285,6 @@ object EventsStream {
     */
   def runForeachBatchUpsertTx(spark: SparkSession, dir: String, tablePath: String,
                               keys: Seq[String], orderCols: Seq[String]): Unit = {
-    import org.apache.spark.sql.Row
     val q = readEvents(spark, dir).writeStream
       .outputMode("append")
       .foreachBatch { (batch: Dataset[Row], _: Long) =>
@@ -346,7 +344,6 @@ object EventsStream {
                             indexTable: String, checkpointDir: String,
                             appId: String = "ann-maintainer",
                             maxFilesPerList: Double = 3.0): Unit = {
-    import org.apache.spark.sql.Row
     val q = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1)
       .parquet(stagingDir)
@@ -419,7 +416,6 @@ object EventsStream {
                             threshold: Double = 0.95,
                             maxFilesPerList: Double = 3.0,
                             maxVerdictFiles: Int = 8): Unit = {
-    import org.apache.spark.sql.Row
     val q = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1)
       .parquet(stagingDir)
@@ -466,7 +462,6 @@ object EventsStream {
   def runStreamingNearDupTx(spark: SparkSession, stagingDir: String,
                             schema: org.apache.spark.sql.types.StructType,
                             sigTable: String, maxHamming: Int = 3): Unit = {
-    import org.apache.spark.sql.Row
     val q = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1)
       .parquet(stagingDir)
@@ -525,7 +520,6 @@ object EventsStream {
                         baseTable: String, derivedTable: String,
                         keyCols: Seq[String], sumCols: Seq[String],
                         appId: String = "ivm-stream"): Unit = {
-    import org.apache.spark.sql.Row
     val q = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1)
       .parquet(stagingDir)
@@ -550,10 +544,6 @@ object EventsStream {
     try { q.processAllAvailable() } finally q.stop()
   }
 
-  /** Run a streaming query over `dir` into an in-memory table and block
-    * until all available files are processed — the local smoke harness
-    * (AvailableNow semantics without an external trigger loop).
-    */
   /** Drain a streaming query through foreachBatch — the external-sink
     * twin of [[runToMemory]] (same conf/checkpoint discipline); `f`
     * receives each micro-batch DataFrame and its batch id.
@@ -561,42 +551,25 @@ object EventsStream {
   def runForeachBatch(spark: SparkSession, dir: String,
                       transform: DataFrame => DataFrame,
                       f: (DataFrame, Long) => Unit,
-                      outputMode: String = "update"): Unit = {
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    val prevNoData =
-      spark.conf.getOption("spark.sql.streaming.noDataMicroBatches.enabled").getOrElse("true")
-    spark.conf.set("spark.sql.shuffle.partitions",
-      math.min(8, prevParts.toInt).toString)
-    if (outputMode == "update")
-      spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    val shm = new java.io.File("/dev/shm")
-    val ckDir =
-      if (shm.isDirectory && shm.canWrite)
-        Some(java.nio.file.Files.createTempDirectory(shm.toPath, "graft-ck"))
-      else None
-    try {
-      var w = transform(readEvents(spark, dir))
-        .writeStream.outputMode(outputMode)
-        .foreachBatch(f)
-      ckDir.foreach(d => w = w.option("checkpointLocation", d.toString))
-      val q = w.start()
-      try { q.processAllAvailable() } finally q.stop()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prevNoData)
-      ckDir.foreach { d =>
-        def rm(file: java.io.File): Unit = {
-          if (file.isDirectory) file.listFiles().foreach(rm)
-          file.delete()
-        }
-        rm(d.toFile)
-      }
-    }
-  }
+                      outputMode: String = "update"): Unit =
+    drain(spark, dir, transform, outputMode)(_.foreachBatch(f))
 
+  /** Run a streaming query over `dir` into an in-memory table and block
+    * until all available files are processed — the local smoke harness
+    * (AvailableNow semantics without an external trigger loop).
+    */
   def runToMemory(spark: SparkSession, dir: String, queryName: String,
                   transform: DataFrame => DataFrame,
-                  outputMode: String = "append"): Unit = {
+                  outputMode: String = "append"): Unit =
+    drain(spark, dir, transform, outputMode)(_.format("memory").queryName(queryName))
+
+  /** The one finite drain behind [[runToMemory]] and [[runForeachBatch]]:
+    * `transform` over the events stream at `dir`, written through `sink`,
+    * run until every available file is processed.
+    */
+  private def drain(spark: SparkSession, dir: String,
+                    transform: DataFrame => DataFrame, outputMode: String)(
+                    sink: DataStreamWriter[Row] => DataStreamWriter[Row]): Unit = {
     // Stateful-query overhead on a small finite drain is dominated by
     // per-partition state-store commits (numStateStores = shuffle
     // partitions at query start) and checkpoint fsyncs — not by data.
@@ -618,9 +591,7 @@ object EventsStream {
         Some(java.nio.file.Files.createTempDirectory(shm.toPath, "graft-ck"))
       else None
     try {
-      var w = transform(readEvents(spark, dir))
-        .writeStream.outputMode(outputMode)
-        .format("memory").queryName(queryName)
+      var w = sink(transform(readEvents(spark, dir)).writeStream.outputMode(outputMode))
       ckDir.foreach(d => w = w.option("checkpointLocation", d.toString))
       val q = w.start()
       try { q.processAllAvailable() } finally q.stop()

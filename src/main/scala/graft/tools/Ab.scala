@@ -8,14 +8,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * for a speed claim on this engine (single-shot timings swing ±40% on
   * the trainer paths; cross-JVM totals drift ±10%).
   *
-  * A side is a registry entry name, optionally followed by
-  * `,prop=value` JVM system properties that are set only while that
-  * side runs. Usage:
-  * `runMain graft.tools.Ab <sfDir> <sideA> <sideB> [pairs]`, e.g.
-  *  - what [[graft.util.Par]]'s overlap is worth on identical code:
-  *    `Ab <sf> q232_ivfpq_topk,graft.par.sequential=true q232_ivfpq_topk`
-  *  - a gate against its production twin:
-  *    `Ab <sf> q153_prefix_jaccard b153_prefix_fast`
+  * A side is a registry entry name. Usage:
+  * `runMain graft.tools.Ab <sfDir> <entryA> <entryB> [pairs]`, e.g. a
+  * gate against its production twin:
+  * `Ab <sf> q153_prefix_jaccard b153_prefix_fast`
   *
   * Each side runs once untimed (JIT, file listing); then `pairs`
   * (default 10) timed pairs alternate which side runs first. A sample is
@@ -23,21 +19,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * baseline: its quartile spread is the noise a gap must clear.
   */
 object Ab {
-  final case class Side(entry: String, props: Map[String, String]) {
-    override def toString: String =
-      (entry +: props.toSeq.sorted.map { case (k, v) => s"$k=$v" }).mkString(" ")
-  }
-
-  def parseSide(spec: String): Side = {
-    val parts = spec.split(",").toSeq
-    Side(parts.head, parts.tail.map { kv =>
-      kv.split("=", 2) match {
-        case Array(k, v) => k -> v
-        case _ => sys.error(s"side property '$kv' is not prop=value")
-      }
-    }.toMap)
-  }
-
   final case class Quartiles(q1: Double, median: Double, q3: Double) {
     def spread: Double = q3 - q1
   }
@@ -80,40 +61,32 @@ object Ab {
     Result(qa, qb, winsA, winsB, pairs.size - winsA - winsB, verdict)
   }
 
-  /** Seconds for one sample of `build` with `side`'s properties set. */
-  private def timeOnce(spark: SparkSession, side: Side,
+  /** Seconds for one sample of `build`. */
+  private def timeOnce(spark: SparkSession,
       build: (SparkSession, String) => DataFrame, sfDir: String): Double = {
-    val prev = side.props.keys.map(k => k -> Option(System.getProperty(k)))
-    side.props.foreach { case (k, v) => System.setProperty(k, v) }
     try {
       val t0 = System.nanoTime()
       build(spark, sfDir).write.mode("overwrite").format("noop").save()
       (System.nanoTime() - t0) / 1e9
-    } finally {
-      prev.foreach {
-        case (k, Some(v)) => System.setProperty(k, v)
-        case (k, None) => System.clearProperty(k)
-      }
-      spark.catalog.clearCache()
-    }
+    } finally spark.catalog.clearCache()
   }
 
   def main(args: Array[String]): Unit = {
-    require(args.length >= 3, "usage: Ab <sfDir> <sideA> <sideB> [pairs]")
+    require(args.length >= 3, "usage: Ab <sfDir> <entryA> <entryB> [pairs]")
     val sfDir = args(0)
-    val sides = Seq(parseSide(args(1)), parseSide(args(2)))
+    val sides = Seq(args(1), args(2))
     val pairs = args.lift(3).map(_.toInt).getOrElse(10)
     require(pairs >= 2, "need at least two pairs")
     val builds = sides.map { s =>
-      graft.SparkEntry.entries.find(_.name == s.entry)
-        .getOrElse(sys.error(s"unknown registry entry ${s.entry}")).build
+      graft.SparkEntry.entries.find(_.name == s)
+        .getOrElse(sys.error(s"unknown registry entry $s")).build
     }
     val spark = graft.util.LocalSession()
     spark.sparkContext.setLogLevel("WARN")
-    sides.indices.foreach(i => timeOnce(spark, sides(i), builds(i), sfDir))
+    builds.foreach(timeOnce(spark, _, sfDir))
     val times = Seq(ArrayBuffer[Double](), ArrayBuffer[Double]())
     for (p <- 0 until pairs; i <- if (p % 2 == 0) Seq(0, 1) else Seq(1, 0))
-      times(i) += timeOnce(spark, sides(i), builds(i), sfDir)
+      times(i) += timeOnce(spark, builds(i), sfDir)
     val r = compare(times(0).toSeq, times(1).toSeq)
     Seq(("A", sides(0), r.a, r.winsA), ("B", sides(1), r.b, r.winsB)).foreach {
       case (label, side, q, wins) =>

@@ -21,17 +21,7 @@ package graft.util
   */
 object Par {
 
-  /** `-Dgraft.par.sequential=true` degrades both/all to plain
-    * sequential evaluation — the measurement escape hatch that lets a
-    * one-JVM A/B ([[graft.tools.Ab]]) alternate overlapped vs serial
-    * execution of IDENTICAL code, and a falsification lever should an
-    * overlap ever need to be backed out in production config.
-    */
-  private def sequential: Boolean =
-    java.lang.Boolean.getBoolean("graft.par.sequential")
-
   def both[A, B](a: => A, b: => B): (A, B) = {
-    if (sequential) { val ra = a; return (ra, b) }
     @volatile var outB: Either[Throwable, B] = null
     val t = new Thread(() => {
       outB =
@@ -61,7 +51,7 @@ object Par {
     */
   def all[A](thunks: Seq[() => A]): Seq[A] = {
     if (thunks.isEmpty) return Seq.empty
-    if (thunks.size == 1 || sequential) return thunks.map(_())
+    if (thunks.size == 1) return thunks.map(_())
     val out = new Array[Either[Throwable, A]](thunks.size)
     val ts = thunks.zipWithIndex.drop(1).map { case (f, i) =>
       val t = new Thread(() => {

@@ -32,26 +32,35 @@ class RunJobCountSpec extends SparkSpec {
         (d * 10L + 1, "b", f"2023-01-$d%02d 09:00:00")))
       .toDF("id", "v", "s").select($"id", $"v", to_timestamp($"s").as("mtime"))
 
-  /** Jobs of the run after 2 and after 6 committed runs. */
-  private def jobsAfter2And6(txLake: Boolean, id: Long): (Int, Int) = {
+  /** Jobs of each of `runs` daily runs on a fresh lake, and the lake's
+    * table path for `spec(id)`.
+    */
+  private def jobsPerRun(txLake: Boolean, id: Long, runs: Int): (Seq[Int], String) = {
     val dir = java.nio.file.Files.createTempDirectory("graft-jobs").toString
     val run = new IngestionRun(spark, s"$dir/lake", new LogStore(spark, s"$dir/logs"),
       txLake = txLake)
-    val counts = (1 to 7).map { day =>
+    val counts = (1 to runs).map { day =>
       val (logs, jobs) = jobsRan(run.run(spec(id), upTo(day)))
       assert(logs.last.executionStatus == RunStatus.Success, s"day $day")
       jobs
     }
-    (counts(2), counts(6))
+    (counts, run.lakePath(spec(id)))
   }
 
   test("a steady-state tx run schedules as many jobs after 6 prior runs as after 2") {
-    val (after2, after6) = jobsAfter2And6(txLake = true, 31L)
-    assert(after6 == after2, s"jobs grew with the lake: $after2 → $after6")
+    val counts = jobsPerRun(txLake = true, 31L, 7)._1
+    assert(counts(6) == counts(2), s"jobs grew with the lake: ${counts(2)} → ${counts(6)}")
   }
 
   test("a steady-state plain run schedules as many jobs after 6 prior runs as after 2") {
-    val (after2, after6) = jobsAfter2And6(txLake = false, 32L)
-    assert(after6 == after2, s"jobs grew with the lake: $after2 → $after6")
+    val counts = jobsPerRun(txLake = false, 32L, 7)._1
+    assert(counts(6) == counts(2), s"jobs grew with the lake: ${counts(2)} → ${counts(6)}")
+  }
+
+  test("a tx run whose commit lands on a checkpoint version schedules as many jobs as the run before it") {
+    val (counts, lake) = jobsPerRun(txLake = true, 33L, 10)
+    // one commit per run: run 10 publishes v10, a checkpoint version
+    assert(graft.sink.TxTable.headVersion(spark, lake) == 10L)
+    assert(counts(9) == counts(8), s"the checkpointing run: ${counts(8)} → ${counts(9)} jobs")
   }
 }

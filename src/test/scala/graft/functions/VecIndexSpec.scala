@@ -95,6 +95,31 @@ class VecIndexSpec extends SparkSpec {
     assert(incr.size <= batchIds.size - 30)
   }
 
+  test("dedupBatch parity holds after ten appends roll a commit-log checkpoint") {
+    // the probed-cell pruning then reads a checkpoint plus a commit
+    // suffix; the batch plants exact twins of corpus rows (ids +9000)
+    val ev = emb.select($"vec_id", $"embedding")
+    val dir = tmp("ckpt")
+    VecIndex.build(spark, ev.filter($"vec_id" < 300), dir, kPerHalf = 4, iters = 0)
+    (0 until 10).foreach { i =>
+      VecIndex.appendOnce(spark,
+        ev.filter($"vec_id" >= 300 + 10 * i && $"vec_id" < 310 + 10 * i), dir, "ckpt-spec", i.toLong)
+    }
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$dir/_graft_txn/00000010.ckpt")))
+    val batch = ev.filter($"vec_id" >= 400 && $"vec_id" < 430)
+      .unionByName(ev.filter($"vec_id" < 10)
+        .select(($"vec_id" + 9000L).as("vec_id"), $"embedding"))
+    val meta = VecIndex.readMeta(spark, dir)
+    val incr = keepSet(VecIndex.dedupBatch(spark, dir, batch))
+    val fullRun = Similarity.semDedupImi(ev.filter($"vec_id" < 400).unionByName(batch),
+      "vec_id", "embedding", codebooksOpt = Some((meta.cb1, meta.cb2)))
+    val batchIds = batch.select($"vec_id".cast("long")).as[Long].collect().toSet
+    assert(incr == keepSet(fullRun).filter(t => batchIds.contains(t._1)))
+    assert(incr.nonEmpty && incr.forall(_._1 < 9000L), "planted twins must drop")
+  }
+
   test("dedupBatch parity holds with TRAINED codebooks and interleaved ids") {
     // batch ids interleave BELOW corpus ids: the loser rule compares
     // ids explicitly, so parity must not depend on monotone arrival —

@@ -70,14 +70,19 @@ class TxCheckpointSpec extends SparkSpec {
     def logNames = fs.listStatus(new Path(s"$t/_graft_txn")).map(_.getPath.getName)
       .filterNot(_.startsWith(".tmp")).sorted.toSeq
     assert(logNames.count(_.endsWith(".ckpt")) == 2, s"ckpts at v10, v20: $logNames")
+    // a parquet files dir as older TxTable versions left one beside each
+    // checkpoint: metadata no reader opens, reaped like the dead log
+    val legacy = new Path(s"$t/_graft_txn/00000010.files")
+    Seq((1L, "x")).toDF("f", "scol").write.parquet(legacy.toString)
+    assert(TxTable.read(spark, t).count() == 25, "readers ignore the legacy dir")
+    Thread.sleep(5)
 
     val gone = TxTable.vacuum(spark, t, minAgeMs = 0L)
     assert(gone.exists(_.contains("00000001.json")), "pre-checkpoint commits reclaimed")
-    // retained: commits 21..25 + the latest JSON checkpoint + its
-    // parquet files-checkpoint twin (the relational-listing base —
-    // vacuum keeps the newest, r13)
-    assert(logNames == Seq("00000020.ckpt", "00000020.files") ++
-        (21 to 25).map(v => f"$v%08d.json"),
+    assert(gone.contains("_graft_txn/00000010.files") && !fs.exists(legacy),
+      s"legacy files dir reaped: $gone")
+    // retained: commits 21..25 + the latest checkpoint, nothing else
+    assert(logNames == "00000020.ckpt" +: (21 to 25).map(v => f"$v%08d.json"),
       s"retained: $logNames")
 
     // state is intact from snapshot + suffix, and the log keeps working
@@ -88,6 +93,20 @@ class TxCheckpointSpec extends SparkSpec {
     intercept[java.util.ConcurrentModificationException] {
       TxTable.commit(spark, t, added = Nil, removed = Nil, expectedHead = Some(3L))
     }
+  }
+
+  test("a commit that lands on a checkpoint version runs no Spark job") {
+    val t = mk()
+    (1 to 9).foreach(i => TxTable.append(spark, Seq(i.toLong).toDF("id"), t,
+      statsCols = Seq("id")))
+    val staged = TxTable.stageBatch(spark, Seq(10L).toDF("id"), t)
+    val stats = TxTable.fileStats(spark, t, staged, Seq("id"))
+    val (v, jobs) = jobsRan(TxTable.commit(spark, t, added = staged, removed = Nil,
+      stats = stats))
+    assert(v == 10L)
+    val fs = new Path(t).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.exists(new Path(s"$t/_graft_txn/00000010.ckpt")), "v10 is a checkpoint")
+    assert(jobs == 0, s"the checkpointing commit ran $jobs Spark jobs")
   }
 
   test("checkpoints are acceleration only: replay survives without them") {

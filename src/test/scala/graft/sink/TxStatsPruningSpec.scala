@@ -1,5 +1,7 @@
 package graft.sink
 
+import org.apache.spark.sql.DataFrame
+
 import graft.SparkSpec
 
 /** Per-file column stats in the commit log: selective reads must skip
@@ -17,6 +19,13 @@ class TxStatsPruningSpec extends SparkSpec {
       TxTable.append(spark, (a to b).map(i => (i, s"v$i")).toDF("id", "v"), t,
         statsCols = Seq("id", "v"))
     }
+
+  /** Append `df` to `t`, returning the files that commit added. */
+  private def appended(t: String, df: DataFrame, statsCols: Seq[String]): Set[String] = {
+    val before = TxTable.currentFiles(spark, t).toSet
+    TxTable.append(spark, df, t, statsCols = statsCols)
+    TxTable.currentFiles(spark, t).toSet -- before
+  }
 
   test("selective read opens fewer files; result identical to the full scan") {
     val t = mk()
@@ -139,5 +148,59 @@ class TxStatsPruningSpec extends SparkSpec {
     val plain = TxTable.Commit(1L, Seq("batch-b/p.parquet"), Nil)
     assert(!TxTable.render(plain).contains("stats"))
     assert(TxTable.parse(TxTable.render(plain)) == plain)
+  }
+
+  test("set-membership pruning through a checkpoint, its suffix, compaction, stat-less and range stats") {
+    val t = mk()
+    def pruned(cells: Long*): Set[String] =
+      TxTable.prunedFilesIn(spark, t, "cid", cells.toSet).toSet
+    // 12 single-cell commits (lo == hi stats): the checkpoint lands at
+    // v10, so v11-v12 are the commit suffix replayed onto it
+    val hive = (1 to 12).map(i => i.toLong ->
+      appended(t, Seq((i.toLong, s"x$i")).toDF("cid", "s"), Seq("cid"))).toMap
+    // a range-statted batch (cid 40..45) and a stat-less file
+    val range = appended(t, (40L to 45L).map(c => (c, "r")).toDF("cid", "s"), Seq("cid"))
+    val statless = appended(t, Seq((99L, "z")).toDF("cid", "s"), Nil)
+    assert(statless.size == 1)
+    assert(pruned(12345L) == statless, "no cid matches: only the stat-less file")
+    assert(pruned() == statless, "empty probe set keeps only the stat-less file")
+    val rangeHit = pruned(42L) -- statless
+    assert(rangeHit.nonEmpty && rangeHit.subsetOf(range), s"42 ∈ [40, 45]: $rangeHit")
+    // Hive hits 1 and 5 from the checkpoint, 11 from the suffix
+    assert(pruned(1L, 5L, 11L, 42L) == hive(1L) ++ hive(5L) ++ hive(11L) ++ rangeHit ++ statless)
+    assert(pruned((1L to 45L) :+ 99L: _*) == TxTable.currentFiles(spark, t).toSet)
+
+    // compaction removes every file and rewrites range-clustered files
+    TxTable.compact(spark, t, targetRowsPerFile = 4L, clusterBy = Some("cid"))
+    val afterAll = TxTable.currentFiles(spark, t).toSet
+    assert(afterAll.intersect(hive.values.flatten.toSet ++ range ++ statless).isEmpty)
+    assert(pruned((1L to 99L): _*) == afterAll)
+    val some = pruned(2L)
+    assert(some.nonEmpty && some.subsetOf(afterAll) && some != afterAll,
+      s"post-compaction range stats must prune: $some of $afterAll")
+
+    // ten more commits roll a checkpoint that holds the compaction's removals
+    val late = (101 to 110).map(i => i.toLong ->
+      appended(t, Seq((i.toLong, s"y$i")).toDF("cid", "s"), Seq("cid"))).toMap
+    assert(TxTable.headVersion(spark, t) == 25L)
+    assert(pruned(105L) == late(105L))
+    assert(pruned((1L to 110L): _*) == TxTable.currentFiles(spark, t).toSet)
+  }
+
+  test("watermark range pruning keeps every overlapping batch and the stat-less file") {
+    val t = mk()
+    // batch i holds wm = 10i and 10i + 5
+    val batches = (1 to 11).map { i =>
+      appended(t, Seq((i * 10L, s"r$i"), (i * 10L + 5L, s"s$i")).toDF("wm", "s"), Seq("wm"))
+    }
+    val statless = appended(t, Seq((999L, "nostat")).toDF("wm", "s"), Nil)
+    def pruned(lo: Option[String], hi: Option[String]): Set[String] =
+      TxTable.prunedFiles(spark, t, "wm", lo, hi).toSet
+    // batches 3, 4, 5 overlap [30, 55]
+    assert(pruned(Some("30"), Some("55")) == batches(2) ++ batches(3) ++ batches(4) ++ statless)
+    assert(pruned(None, None) == TxTable.currentFiles(spark, t).toSet)
+    assert(pruned(Some("2000"), None) == statless, "past the max: stat-less only")
+    // half-open from a watermark, the incremental-scan shape: batches 10, 11
+    assert(pruned(Some("100"), None) == batches(9) ++ batches(10) ++ statless)
   }
 }

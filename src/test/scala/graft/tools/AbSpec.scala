@@ -45,11 +45,4 @@ class AbSpec extends AnyFunSuite {
     assert(r.winsB == 10 && r.a.spread > 0.5)
     assert(r.verdict == "no gain shown")
   }
-
-  test("a side spec is an entry name plus prop=value pairs") {
-    assert(parseSide("q232_ivfpq_topk") == Side("q232_ivfpq_topk", Map.empty))
-    assert(parseSide("q232_ivfpq_topk,graft.par.sequential=true") ==
-      Side("q232_ivfpq_topk", Map("graft.par.sequential" -> "true")))
-    intercept[RuntimeException](parseSide("q1,novalue"))
-  }
 }

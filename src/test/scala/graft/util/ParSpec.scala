@@ -79,16 +79,4 @@ class ParSpec extends AnyFunSuite {
     assert(x.getSuppressed.exists(_.getMessage == "i2"))
     assert(ran.get === 2, "surviving thunks must be awaited, not abandoned")
   }
-
-  test("graft.par.sequential degrades both and all to sequential evaluation") {
-    System.setProperty("graft.par.sequential", "true")
-    try {
-      val order = new java.util.concurrent.CopyOnWriteArrayList[Int]()
-      val (a, b) = Par.both({ order.add(1); 1 }, { order.add(2); 2 })
-      assert((a, b) === ((1, 2)))
-      val out = Par.all(Seq(() => { order.add(3); 3 }, () => { order.add(4); 4 }))
-      assert(out === Seq(3, 4))
-      assert(order.toArray.toSeq === Seq(1, 2, 3, 4))
-    } finally System.clearProperty("graft.par.sequential")
-  }
 }
