@@ -8021,8 +8021,7 @@ object SparkEntry {
         }.mkString("", "\nUNION ALL\n", "")
       }, Fixture),
 
-    // E2E — object listing over a freshly staged lake write (S6, the
-    // around-the-write listing that powers rollback): events written
+    // E2E — object listing over a freshly staged lake write (S6): events written
     // partitioned by day (one task per day via hash repartition on the
     // partition column → exactly one file per partition), the staging
     // dir listed through Rollback.listFiles, partition values parsed

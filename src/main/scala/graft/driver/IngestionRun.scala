@@ -1,10 +1,12 @@
 package graft.driver
 
-import org.apache.spark.sql.{AnalysisException, DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model._
 import graft.operators.{LatestRowView, Transforms, Validation}
+import graft.sink.TxTable
 import graft.sources.Incremental
 import graft.state.LogStore
 
@@ -13,36 +15,41 @@ import graft.state.LogStore
   * (start_ingestion.py §3.1 + IngestTable.extract_and_load_table §3.2):
   *
   *   watermark recovery → incremental slice → partition derivation →
-  *   partitioned parquet append → count validation → log append →
-  *   (first run + view_needed) latest-row view.
+  *   staged partitioned parquet write → count validation → publish or
+  *   discard → log append → (first run + view_needed) latest-row view.
   *
   * The chunk loop, thread pool, crawler poll and Athena round-trips of the
   * reference all collapse into Spark jobs: the slice is ONE declarative
-  * plan (filter pushed to the scan), the write is one partitioned job, the
-  * validation one filter+count over the just-written files, and the
-  * catalog is the SparkSession's own.
+  * plan (filter pushed to the scan), the write is one partitioned job
+  * whose observed row count is the validation, and the catalog is the
+  * SparkSession's own.
   *
   * Scale: the source scan parallelism comes from the source itself (file
   * splits or partitioned JDBC); derived partition columns keep the lake
   * prunable; `maxRecordsPerFile` bounds small-file explosion that the
   * reference's per-400k-chunk appends cause (SURVEY.md §7.4).
   *
-  * `txLake = true` runs the lifecycle COMMIT-OR-NOTHING on a
-  * [[graft.sink.TxTable]] lake: the slice is STAGED (invisible to
-  * readers), validation reads committed + staged files as the would-be
-  * state, and only a passing validation publishes the commit. A failing
-  * validation just drops the staged batch — K4's delete-rollback (and
-  * its crash windows) disappears, and a crash at ANY point leaves the
-  * last committed state readable. This is the at-scale mode; the
-  * append+rollback path remains for reference-layout parity.
+  * Both lake modes run one sequence: the slice is STAGED with
+  * [[graft.sink.TxTable.stageBatch]] where readers cannot see it,
+  * validated, then published — or, on a failed validation, discarded
+  * with [[graft.sink.TxTable.deleteStaged]]. K4's delete-rollback (the
+  * reference deletes its just-written objects) is gone: no reader ever
+  * sees an unvalidated row. Only the publish differs:
+  *  - `txLake = true`: the batch stages inside the [[graft.sink.TxTable]]
+  *    and one commit publishes it; a crash at any point leaves the last
+  *    committed state readable. This is the at-scale mode.
+  *  - plain (the reference layout): the batch stages under the hidden
+  *    `<lake>/_graft_stage/` dir and each file is renamed into its
+  *    partition dir. The renames are not one atomic step: a reader
+  *    racing the publish, or a crash inside it, sees part of a VALIDATED
+  *    batch. A rename that fails moves the published files back and
+  *    throws. On a copy-on-rename store (S3A) every rename is a
+  *    server-side copy of the file — use tx mode there.
   */
 final class IngestionRun(spark: SparkSession, lakeRoot: String, logStore: LogStore,
                          inclusiveBump: Boolean = true,
-                         overwritePartitions: Boolean = false,
                          cacheSlice: Boolean = true,
                          txLake: Boolean = false) {
-  require(!(txLake && overwritePartitions),
-    "txLake replaces overwritePartitions: commits are already all-or-nothing")
 
   def lakePath(spec: IngestionSpec): String =
     s"$lakeRoot/${spec.databasename}/${spec.tablename}"
@@ -54,24 +61,23 @@ final class IngestionRun(spark: SparkSession, lakeRoot: String, logStore: LogSto
     * per-commit GET up to five times per run on an object store); its
     * batch schemas come from footers, with no Spark job.
     *
-    * Plain: one directory read, and its file index is the run's ONLY
-    * listing of the lake on the success path — the rollback "before"
-    * set is taken from it ([[graft.sink.Rollback.filesOf]]). Hadoop FS,
-    * not java.io.File: the lake root may be any FileSystem scheme (s3a://,
-    * hdfs://), where a local-only probe would return false, silently
-    * skipping boundary dedup and pre-window accounting → validation
-    * mismatch → rollback loop on exactly the target cluster. A directory
-    * with no data file — what a rolled-back first run leaves (`_SUCCESS`,
-    * empty partition dirs), or a crashed first write (`_temporary` only)
-    * — reads as absent: Spark cannot infer a schema from it, and treating
-    * it as a lake would fail every later run.
+    * Plain: one directory read, the run's only listing of the lake.
+    * Hadoop FS, not java.io.File: the lake root may be any FileSystem
+    * scheme (s3a://, hdfs://), where a local-only probe would return
+    * false, silently skipping boundary dedup and pre-window accounting →
+    * validation mismatch on every run on exactly the target cluster. A
+    * directory with no data file — what a discarded first run leaves (an
+    * empty `_graft_stage`), or a crash before any publish (a staged batch,
+    * `_temporary`) — reads as absent: Spark's reads skip `_`-prefixed
+    * paths, so it cannot infer a schema from it, and treating it as a
+    * lake would fail every later run.
     */
   private def readLake(spec: IngestionSpec, txFiles: Seq[String]): Option[DataFrame] =
     if (txLake) {
       if (txFiles.isEmpty) None
-      else Some(graft.sink.TxTable.readFiles(spark, lakePath(spec), txFiles))
+      else Some(TxTable.readFiles(spark, lakePath(spec), txFiles))
     } else {
-      val lakeP = new org.apache.hadoop.fs.Path(lakePath(spec))
+      val lakeP = new Path(lakePath(spec))
       if (!lakeP.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(lakeP)) None
       else
         try Some(spark.read.parquet(lakePath(spec)))
@@ -102,17 +108,9 @@ final class IngestionRun(spark: SparkSession, lakeRoot: String, logStore: LogSto
     // file-list snapshot is taken once and threaded through every lake
     // read this run makes; only the final commit re-reads the head.
     val txFiles: Seq[String] =
-      if (txLake) graft.sink.TxTable.currentFiles(spark, lakePath(spec)) else Nil
+      if (txLake) TxTable.currentFiles(spark, lakePath(spec)) else Nil
     val lake = readLake(spec, txFiles)
     val lakeExists = lake.isDefined
-    // plain: the data files before the write, for a failed validation's
-    // rollback — from the lake read's own file index, not a second
-    // listing (a recursive Hadoop listFiles loads every file's
-    // permissions: one shell command per file without native Hadoop).
-    // txLake is commit-or-nothing: no rollback diffing.
-    val filesBefore: Set[String] =
-      if (txLake) Set.empty
-      else lake.fold(Set.empty[String])(graft.sink.Rollback.filesOf(spark, lakePath(spec), _))
     val rawSlice = Incremental.incrementalSlice(source, spec.deltaExpr, start)
     // ONE cached read of the lake's watermark tail serves every
     // committed-lake consumer this run has (boundary dedup AND the
@@ -122,10 +120,9 @@ final class IngestionRun(spark: SparkSession, lakeRoot: String, logStore: LogSto
     // OR-window term (a row with a < start but b inside the window is in
     // the window but NOT in coalesce >= start). The tail is one watermark
     // window of rows — small relative to the lake by construction, so
-    // caching it holds at scale. The cache lives until preWindowCount is
-    // computed and is dropped BEFORE the write: a cached plan that reads
-    // the lake path makes Spark re-list the lake after a plain write
-    // (measured: a 41-path listing job closing every plain benchmark run).
+    // caching it holds at scale. The staged write goes to its own
+    // path, so it does not make Spark refresh this cache by re-listing
+    // the lake.
     val lakeTail: Option[DataFrame] = lake.map { d =>
       val tailPred = Incremental.parseCoalesceExpr(spec.deltaExpr) match {
         case Some((a, b)) => col(a) >= lit(start) || col(b) >= lit(start)
@@ -172,17 +169,10 @@ final class IngestionRun(spark: SparkSession, lakeRoot: String, logStore: LogSto
     val end = hiOpt.get
 
     val (withParts, partCols) = Transforms.derivePartitions(slice, spec.partitions)
-    // overwritePartitions: idempotent re-runs — replace exactly the
-    // partitions this run touches instead of appending (the at-scale
-    // alternative to delete-rollback; needs derived partition columns).
-    // Dynamic mode is the write's own option, never a session setting:
-    // concurrent specs and later writes in the session keep their mode.
-    val mode =
-      if (overwritePartitions && partCols.nonEmpty) SaveMode.Overwrite else SaveMode.Append
 
     // Validation invariant: lake_window_after == pre_window + slice_window,
     // every count over ONE shared predicate (Validation.windowPredicate —
-    // mixed predicates mean spurious mismatches and rollback loops):
+    // mixed predicates mean spurious mismatches and failure loops):
     //  - sliceWindowCount: slice rows INSIDE the claimed window. With a
     //    coalesce delta, a long-ago-created recently-modified row can
     //    exceed the conservative `least(max,max)` end — it is written but
@@ -190,9 +180,7 @@ final class IngestionRun(spark: SparkSession, lakeRoot: String, logStore: LogSto
     //    must not inflate this run's expectation.
     //  - preWindowCount: lake rows already inside the window before this
     //    run (boundary re-extraction in non-inclusive mode, re-extracted
-    //    over-the-end rows from a prior coalesce run). Under dynamic
-    //    overwrite the run's touched partitions are REPLACED, so pre rows
-    //    inside them don't survive and are excluded from the expectation.
+    //    over-the-end rows from a prior coalesce run).
     // plain-column delta: end IS max(delta) over this slice and every
     // slice row is >= start, so the window count equals n by construction
     // — skip the extra count job. Only a coalesce delta can place rows
@@ -200,20 +188,10 @@ final class IngestionRun(spark: SparkSession, lakeRoot: String, logStore: LogSto
     val sliceWindowCount =
       if (Incremental.parseCoalesceExpr(spec.deltaExpr).isEmpty) n
       else Validation.windowCount(slice, spec.deltaExpr, start, end)
-    val preWindowCount =
-      if (!lakeExists) 0L
-      else {
-        // from the cached tail: windowPredicate ⊆ the tail's per-column
-        // `>= start` superset, so this is the same count with no new scan
-        val preWindow = lakeTail.get
-          .filter(Validation.windowPredicate(spec.deltaExpr, start, end))
-        if (mode == SaveMode.Overwrite) {
-          val touched = withParts.select(partCols.map(col): _*).distinct()
-          preWindow.join(touched, partCols, "left_anti").count()
-        } else preWindow.count()
-      }
-    // the tail's last reader has run (see lakeTail)
-    lakeTail.foreach(_.unpersist())
+    // from the cached tail: windowPredicate ⊆ the tail's per-column
+    // `>= start` superset, so this is the same count with no new scan
+    val preWindowCount = lakeTail.fold(0L)(
+      _.filter(Validation.windowPredicate(spec.deltaExpr, start, end)).count())
     // cluster rows by the delta field inside each output file: parquet
     // row-group min/max stats on the watermark column then prune most of
     // the file on incremental/validation scans
@@ -229,7 +207,7 @@ final class IngestionRun(spark: SparkSession, lakeRoot: String, logStore: LogSto
     // processes — exactly the rows that land in the new files (the write
     // throws rather than partially landing, accumulator updates from
     // failed/retried tasks are not double-counted, and the staged batch
-    // is invisible until the commit below) — so the invariant
+    // is invisible until the publish below) — so the invariant
     // new_files_window == slice_window is checked against the same row
     // stream the old read-back counted, without re-opening the batch.
     // The recompute-on-executor-loss safety net is unchanged: a slice
@@ -240,29 +218,25 @@ final class IngestionRun(spark: SparkSession, lakeRoot: String, logStore: LogSto
     val observed = clustered.observe(winObs,
       count(when(Validation.windowPredicate(spec.deltaExpr, start, end), 1L))
         .as("win"))
-    val staged: Seq[String] =
-      if (txLake)
-        graft.sink.TxTable.stageBatch(spark, observed, lakePath(spec),
-          partitionBy = partCols, maxRecordsPerFile = 5000000L)
-      else {
-        val writer = observed.write
-          .mode(mode)
-          .option("partitionOverwriteMode", "dynamic")
-          .option("compression", "snappy")
-          .option("maxRecordsPerFile", 5000000)
-        (if (partCols.nonEmpty) writer.partitionBy(partCols: _*) else writer)
-          .parquet(lakePath(spec))
-        Nil
-      }
+    // tx: the batch stages inside the table, unseen until committed;
+    // plain: under the hidden `_graft_stage` dir, which first loses any
+    // batch a crashed run left (one writer per spec)
+    val stageRoot = if (txLake) lakePath(spec) else s"${lakePath(spec)}/_graft_stage"
+    if (!txLake) {
+      val p = new Path(stageRoot)
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+    }
+    val staged = TxTable.stageBatch(spark, observed, stageRoot,
+      partitionBy = partCols, maxRecordsPerFile = 5000000L)
     val loaded = RunLog(spec.lakeIngestionId, RunStatus.DataLoaded, start, end, n, 0L,
       reason, LogStore.now())
 
-    // The files this run produced (tx: the staged batch; plain: the
-    // write above): the invariant lake_window_after == pre_window +
-    // slice_window decomposes as new_files_window == slice_window,
-    // because the committed/pre-run files are immutable within a run
-    // (tx: log-guaranteed; plain: single-writer-per-spec) and were
-    // already counted into preWindowCount FROM the actual lake files.
+    // The files this run produced (the staged batch): the invariant
+    // lake_window_after == pre_window + slice_window decomposes as
+    // new_files_window == slice_window, because the committed/pre-run
+    // files are immutable within a run (tx: log-guaranteed; plain:
+    // single-writer-per-spec) and were already counted into
+    // preWindowCount FROM the actual lake files.
     // Re-scanning the whole lake per run was the fixture-dominating cost
     // VERDICT r3 flagged — and at 100 TB it would make validation
     // O(lake) instead of O(run); the observed write (above) makes it
@@ -271,26 +245,25 @@ final class IngestionRun(spark: SparkSession, lakeRoot: String, logStore: LogSto
     val target = preWindowCount + newFilesWindowCount
     val ok = target == sliceWindowCount + preWindowCount
     val validated =
-      if (ok) {
-        if (txLake)
-          graft.sink.TxTable.commit(spark, lakePath(spec), added = staged, removed = Nil)
-        loaded.copy(executionStatus = RunStatus.Success, targetCount = target,
-          reasonCode = ReasonCode.ValidationSuccess)
-      } else if (txLake) {
-        // commit-or-nothing: the staged batch was never visible; dropping
-        // it IS the rollback (no file diffing, no partially-deleted state)
-        graft.sink.TxTable.deleteStaged(spark, lakePath(spec), staged)
-        loaded.copy(executionStatus = RunStatus.ValidationFailure, targetCount = target,
-          reasonCode = s"${ReasonCode.ValidationFailure}: staged batch discarded, nothing committed")
-      } else {
-        // K4 rollback parity: undo this run's data files so the lake
-        // returns to its pre-run state and the next run re-extracts the
-        // same window (reference: start_ingestion.py:143-145). Only this
-        // failure path lists the lake a second time, and it diffs data
-        // files only: `_SUCCESS` and the old files' `.crc`s stay.
-        val deleted = graft.sink.Rollback.deleteAdded(spark, lakePath(spec), filesBefore)
-        loaded.copy(executionStatus = RunStatus.ValidationFailure, targetCount = target,
-          reasonCode = s"${ReasonCode.ValidationFailure}: rolled back ${deleted.size} files")
+      try {
+        if (ok) {
+          if (txLake) TxTable.commit(spark, lakePath(spec), added = staged, removed = Nil)
+          else publish(stageRoot, lakePath(spec), staged)
+          loaded.copy(executionStatus = RunStatus.Success, targetCount = target,
+            reasonCode = ReasonCode.ValidationSuccess)
+        } else {
+          // the staged batch was never visible: discarding it (below) is
+          // the whole rollback, and the next run re-extracts the window
+          // (K4, reference: start_ingestion.py:143-145)
+          val nothing = if (txLake) "nothing committed" else "nothing published"
+          loaded.copy(executionStatus = RunStatus.ValidationFailure, targetCount = target,
+            reasonCode = s"${ReasonCode.ValidationFailure}: staged batch discarded, $nothing")
+        }
+      } finally {
+        // the one discard: a failed batch in either mode; in plain mode
+        // also what a publish leaves (`_SUCCESS`, emptied partition dirs)
+        // or, after a failed publish, the moved-back batch
+        if (!ok || !txLake) TxTable.deleteStaged(spark, stageRoot, staged)
       }
 
     if (ok && firstTime && spec.viewNeeded == 1 && spec.primaryKeyCols.nonEmpty) {
@@ -299,7 +272,7 @@ final class IngestionRun(spark: SparkSession, lakeRoot: String, logStore: LogSto
       // only, so this full read happens once per table's lifetime
       val fullLake =
         if (txLake)
-          graft.sink.TxTable.readFiles(spark, lakePath(spec), txFiles ++ staged)
+          TxTable.readFiles(spark, lakePath(spec), txFiles ++ staged)
         else spark.read.option("mergeSchema", "true").parquet(lakePath(spec))
       LatestRowView.createView(fullLake, spec.primaryKeyCols,
         Seq(expr(spec.deltaExpr)), spec.viewName)
@@ -309,9 +282,26 @@ final class IngestionRun(spark: SparkSession, lakeRoot: String, logStore: LogSto
     logStore.append(rows)
     rows
     } finally {
-      // the early returns and throws skip the tail's unpersist above
       if (cacheSlice) slice.unpersist()
       lakeTail.foreach(_.unpersist())
+    }
+  }
+
+  /** Plain publish: rename each staged file (`<batch>/<partition
+    * dirs>/<part file>`) to its partition path under `lake`, making
+    * partition dirs as needed. If a rename fails, the files already
+    * published move back, newest first, and the run throws — the lake
+    * holds exactly its pre-run files and the batch is discarded.
+    */
+  private def publish(stageRoot: String, lake: String, staged: Seq[String]): Unit = {
+    val fs = new Path(lake).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val moves = staged.map(f => (new Path(s"$stageRoot/$f"), new Path(s"$lake/${f.split("/", 2)(1)}")))
+    moves.map(_._2.getParent).distinct.foreach(fs.mkdirs)
+    val published = moves.takeWhile { case (from, to) => fs.rename(from, to) }
+    if (published.size < moves.size) {
+      published.reverse.foreach { case (from, to) => fs.rename(to, from) }
+      throw new java.io.IOException(
+        s"publish into $lake failed at ${moves(published.size)._1}; published files moved back")
     }
   }
 }

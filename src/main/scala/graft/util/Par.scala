@@ -1,51 +1,34 @@
 package graft.util
 
-/** Overlap two INDEPENDENT driver-side actions (guide §2.6: Spark's
+/** Overlap INDEPENDENT driver-side actions (guide §2.6: Spark's
   * scheduler happily runs several jobs at once inside one application —
   * actions are only sequential because the driver code calls them
-  * sequentially). The second action runs on its own thread, so its
-  * jobs' tasks back-fill executors freed by the first action's stage
-  * tails AND the two actions' between-job driver latencies overlap —
+  * sequentially). Every action but the first runs on its own thread, so
+  * their jobs' tasks back-fill executors freed by each other's stage
+  * tails AND their between-job driver latencies overlap —
   * the dominant cost of the designed multi-commit lifecycle gates at
   * bench scale, and genuine idle capacity at cluster scale.
   *
   * Caller contract (the FanOut discipline — a titled review rule):
-  *   - the two thunks must share NO ordering dependency and no mutable
+  *   - the thunks must share NO ordering dependency and no mutable
   *     state (separate output tables, read-only shared inputs);
   *   - each thunk must be safe on a non-main thread — Spark job
   *     submission is thread-safe, and job-group/description properties
   *     are inherited via InheritableThreadLocal at thread creation.
   *
-  * An exception in either thunk rethrows on the caller's thread (the
-  * other side is still awaited first, so no work leaks past the call).
+  * An exception in any thunk rethrows on the caller's thread (the others
+  * are still awaited first, so no work leaks past the call).
   */
 object Par {
 
+  /** [[all]] over two legs: `a` on the caller's thread, `b` on its own. */
   def both[A, B](a: => A, b: => B): (A, B) = {
-    @volatile var outB: Either[Throwable, B] = null
-    val t = new Thread(() => {
-      outB =
-        try Right(b)
-        catch { case x: Throwable => Left(x) }
-    }, "graft-par-both")
-    t.setDaemon(true)
-    t.start()
-    val outA =
-      try Right(a)
-      catch { case x: Throwable => Left(x) }
-    t.join()
-    (outA, outB) match {
-      case (Right(ra), Right(rb)) => (ra, rb)
-      case (Left(xa), eb) =>
-        eb.left.foreach(xa.addSuppressed); throw xa
-      case (_, Left(xb)) => throw xb
-    }
+    val Seq(ra, rb) = all[Any](Seq(() => a, () => b))
+    (ra.asInstanceOf[A], rb.asInstanceOf[B])
   }
 
-  /** Ordered N-way [[both]]: every thunk runs concurrently (the first
-    * on the caller's thread, the rest on daemon threads), results
-    * return in input order. Same caller contract as [[both]] —
-    * independent, no shared mutable state, thread-safe thunks. The
+  /** Every thunk runs concurrently (the first on the caller's thread,
+    * the rest on daemon threads); results return in input order. The
     * lowest-index failure rethrows on the caller's thread with the
     * others suppressed, after every thread has been joined.
     */

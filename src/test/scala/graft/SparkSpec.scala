@@ -34,6 +34,31 @@ trait SparkSpec extends AnyFunSuite {
       }
     (out, n.get)
   }
+
+  /** The mutating-source fixture of the validation-failure tests: `first`
+    * is the one row every counting action sees; `phantom` materializes
+    * only while a file-write task consumes the iterator, so an uncached
+    * run writes a row its counts never saw and fails validation.
+    */
+  def phantomSource(first: (Long, String), phantom: (Long, String)) = {
+    val unstable = spark.range(1).rdd.mapPartitions { _ =>
+      new Iterator[(Long, java.sql.Timestamp)] {
+        private var emitted = 0
+        // write frames only exist while the sink CONSUMES the iterator —
+        // check at hasNext time, not iterator-creation time
+        private def consumedByWriter = Thread.currentThread().getStackTrace.exists(f =>
+          f.getClassName.contains("FileFormat") || f.getClassName.contains("WriteFiles"))
+        override def hasNext: Boolean =
+          emitted == 0 || (emitted == 1 && consumedByWriter)
+        override def next(): (Long, java.sql.Timestamp) = {
+          emitted += 1
+          val (id, ts) = if (emitted == 1) first else phantom
+          (id, java.sql.Timestamp.valueOf(ts))
+        }
+      }
+    }
+    spark.createDataFrame(unstable).toDF("id", "mtime")
+  }
 }
 
 object SparkSpec {

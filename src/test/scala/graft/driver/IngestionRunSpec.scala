@@ -189,26 +189,6 @@ class IngestionRunSpec extends SparkSpec {
     assert(latest.count() == 3)
   }
 
-  test("overwritePartitions mode makes same-window re-runs idempotent") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-e2e-ow").toString
-    val storeA = new graft.state.LogStore(spark, s"$dir/logsA")
-    val modeKey = "spark.sql.sources.partitionOverwriteMode"
-    val sessionMode = spark.conf.getOption(modeKey)
-    val run = new IngestionRun(spark, s"$dir/lake", storeA, overwritePartitions = true)
-    val spec = mkSpec(Seq(PartitionSpec(1, PartitionSpec.TimeBased, "mtime", "YYYYMM")))
-    val batch = srcRows(Seq(
-      (1L, "a", "2023-01-10 10:00:00"), (2L, "b", "2023-02-10 10:00:00")))
-    assert(run.run(spec, batch).last.executionStatus == RunStatus.Success)
-    // simulate a redo of the same window with fresh state (e.g. log loss):
-    // dynamic overwrite replaces the touched partitions, so no duplicates
-    val storeB = new graft.state.LogStore(spark, s"$dir/logsB")
-    val redo = new IngestionRun(spark, s"$dir/lake", storeB, overwritePartitions = true)
-    assert(redo.run(spec, batch).last.executionStatus == RunStatus.Success)
-    assert(spark.read.parquet(s"$dir/lake/testdb/events_src").count() == 2)
-    // dynamic overwrite is the write's own option: the session is untouched
-    assert(spark.conf.getOption(modeKey) == sessionMode)
-  }
-
   test("coalesce delta expression drives watermark and slice") {
     val dir = java.nio.file.Files.createTempDirectory("graft-e2e-coal").toString
     val store = new LogStore(spark, s"$dir/logs")

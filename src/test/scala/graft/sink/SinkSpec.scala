@@ -5,21 +5,8 @@ import graft.SparkSpec
 class SinkSpec extends SparkSpec {
   import spark.implicits._
 
-  test("Rollback diff-deletes only the files a write added") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-rb").toString + "/t"
-    Seq((1L, "a")).toDF("id", "v").write.parquet(dir)
-    val before = Rollback.listFiles(spark, dir)
-    assert(before.nonEmpty)
-    Seq((2L, "b")).toDF("id", "v").write.mode("append").parquet(dir)
-    assert(spark.read.parquet(dir).count() == 2)
-    val deleted = Rollback.deleteAdded(spark, dir, before)
-    assert(deleted.nonEmpty)
-    assert(spark.read.parquet(dir).as[(Long, String)].collect().toSeq == Seq((1L, "a")))
-  }
-
   test("Rollback on a missing dir is a no-op") {
     assert(Rollback.listFiles(spark, "/tmp/graft-definitely-missing").isEmpty)
-    assert(Rollback.deleteAdded(spark, "/tmp/graft-definitely-missing", Set.empty).isEmpty)
   }
 
   test("upsertSql golden text") {
@@ -104,8 +91,8 @@ class SinkSpec extends SparkSpec {
     val src = phantomSource((1L, "2023-01-10 00:00:00"), (2L, "2023-01-05 00:00:00"))
     val logs = run.run(spec, src)
     assert(logs.last.executionStatus == RunStatus.ValidationFailure)
-    assert(logs.last.reasonCode.contains("rolled back"))
-    // rollback removed the phantom write; the lake dir holds no data files
+    assert(logs.last.reasonCode.contains("staged batch discarded, nothing published"))
+    // the phantom write was staged, never published, and is gone
     assert(Rollback.listFiles(spark, s"$dir/lake/db/t")
       .count(_.endsWith(".parquet")) == 0)
   }
@@ -129,31 +116,6 @@ class SinkSpec extends SparkSpec {
     // no phantom rows landed: the write consumed the cached snapshot (an
     // uncached write would have doubled every partition)
     assert(spark.read.parquet(s"$dir/lake/db/t").count() == stableCount)
-  }
-
-  /** The mutating-source fixture of the rollback tests: `first`
-    * is the one row every counting action sees; `phantom` materializes
-    * only while a file-write task consumes the iterator, so an uncached
-    * run writes a row its counts never saw and fails validation.
-    */
-  private def phantomSource(first: (Long, String), phantom: (Long, String)) = {
-    val unstable = spark.range(1).rdd.mapPartitions { _ =>
-      new Iterator[(Long, java.sql.Timestamp)] {
-        private var emitted = 0
-        // write frames only exist while the sink CONSUMES the iterator —
-        // check at hasNext time, not iterator-creation time
-        private def consumedByWriter = Thread.currentThread().getStackTrace.exists(f =>
-          f.getClassName.contains("FileFormat") || f.getClassName.contains("WriteFiles"))
-        override def hasNext: Boolean =
-          emitted == 0 || (emitted == 1 && consumedByWriter)
-        override def next(): (Long, java.sql.Timestamp) = {
-          emitted += 1
-          val (id, ts) = if (emitted == 1) first else phantom
-          (id, java.sql.Timestamp.valueOf(ts))
-        }
-      }
-    }
-    spark.createDataFrame(unstable).toDF("id", "mtime")
   }
 
   private def plainSpec =
@@ -184,7 +146,7 @@ class SinkSpec extends SparkSpec {
     val bad = run.run(plainSpec,
       phantomSource((1L, "2023-01-10 00:00:00"), (2L, "2023-01-05 00:00:00")))
     assert(bad.last.executionStatus == RunStatus.ValidationFailure)
-    // the rollback leaves the lake dir behind with no data file in it
+    // the discarded batch leaves the lake dir behind with no data file in it
     assert(new java.io.File(s"$dir/lake/db/t").isDirectory)
     val good = run.run(plainSpec, stableSource((1L, "2023-01-10 00:00:00")))
     assert(good.last.executionStatus == RunStatus.Success)
@@ -194,10 +156,12 @@ class SinkSpec extends SparkSpec {
 
   test("a plain lake dir holding only _SUCCESS or _temporary reads as absent") {
     import graft.model._
-    for (leftover <- Seq("_SUCCESS", "_temporary/0/_temporary/part-00000.snappy.parquet")) {
+    for (leftover <- Seq("_SUCCESS", "_temporary/0/_temporary/part-00000.snappy.parquet",
+        "_graft_stage/batch-x/part-0.parquet")) {
       val dir = java.nio.file.Files.createTempDirectory("graft-leftover").toString
       val lake = s"$dir/lake/db/t"
-      // a real parquet file under `_temporary`: hidden from Spark's reads
+      // a real parquet file under `_temporary` or `_graft_stage`: hidden
+      // from Spark's reads
       Seq((5L, "x")).toDF("id", "v").write.parquet(s"$dir/scratch")
       val part = new java.io.File(s"$dir/scratch").listFiles()
         .find(_.getName.endsWith(".parquet")).get.toPath
@@ -214,6 +178,30 @@ class SinkSpec extends SparkSpec {
     }
   }
 
+  test("a plain lake's crashed staged batch is neither counted nor published by the next run") {
+    import graft.model._
+    val dir = java.nio.file.Files.createTempDirectory("graft-stale").toString
+    val lake = s"$dir/lake/db/t"
+    val store = new graft.state.LogStore(spark, s"$dir/logs")
+    val run = new graft.driver.IngestionRun(spark, s"$dir/lake", store)
+    assert(run.run(plainSpec, stableSource((1L, "2023-01-10 00:00:00")))
+      .last.executionStatus == RunStatus.Success)
+    // a run that crashed after staging: its batch holds rows inside the
+    // next run's window
+    stableSource((7L, "2023-01-11 06:00:00"), (8L, "2023-01-11 12:00:00"))
+      .write.parquet(s"$lake/_graft_stage/batch-crashed")
+    val logs = run.run(plainSpec, stableSource((1L, "2023-01-10 00:00:00"),
+      (2L, "2023-01-11 00:00:00"), (3L, "2023-01-12 00:00:00")))
+    assert(logs.last.executionStatus == RunStatus.Success, logs.last.reasonCode)
+    // the stale rows sit inside this run's window: had the lake read
+    // seen them, the pre-window count would make the target 4
+    assert(logs.last.targetCount == 2L)
+    assert(!new java.io.File(s"$lake/_graft_stage/batch-crashed").exists,
+      "the run clears _graft_stage before it stages")
+    assert(spark.read.parquet(lake).as[(Long, java.sql.Timestamp)].collect()
+      .map(_._1).sorted.toSeq == Seq(1L, 2L, 3L))
+  }
+
   test("a failed plain run under a path with a space deletes exactly its own data files") {
     import graft.model._
     val dir = java.nio.file.Files.createTempDirectory("graft rb space").toString
@@ -227,20 +215,19 @@ class SinkSpec extends SparkSpec {
     val kept = filesUnder(lake)
     def data(fs: Set[String]) = fs.filter(_.endsWith(".parquet"))
       .filterNot(f => f.split("/").exists(c => c.startsWith(".") || c.startsWith("_")))
-    assert(data(kept).nonEmpty && kept.contains("_SUCCESS") &&
+    assert(data(kept).nonEmpty &&
       data(kept).forall(f => kept.exists(_.endsWith(s".${f.split("/").last}.crc"))),
-      s"the first run's data files, their .crc files and _SUCCESS: $kept")
+      s"the first run's data files and their .crc files: $kept")
 
     val failing = new graft.driver.IngestionRun(spark, lakeRoot, store, cacheSlice = false)
     val logs = failing.run(plainSpec,
       phantomSource((3L, "2023-02-10 00:00:00"), (4L, "2023-02-05 00:00:00")))
     assert(logs.last.executionStatus == RunStatus.ValidationFailure)
     val after = filesUnder(lake)
-    assert(kept.subsetOf(after), s"files of the first run went: ${kept -- after}")
-    assert(data(after) == data(kept), "the failed run's data files must all go")
+    assert(after == kept, s"gone: ${kept -- after}, added: ${after -- kept}")
     assert(spark.read.parquet(lake).as[(Long, java.sql.Timestamp)].collect()
       .map(_._1).sorted.toSeq == Seq(1L, 2L))
-    assert("rolled back [1-9][0-9]* files".r.findFirstIn(logs.last.reasonCode).nonEmpty,
+    assert(logs.last.reasonCode.endsWith("staged batch discarded, nothing published"),
       logs.last.reasonCode)
   }
 }
