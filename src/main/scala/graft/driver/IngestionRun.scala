@@ -1,14 +1,23 @@
 package graft.driver
 
+import java.io.FileNotFoundException
+import java.time.LocalDateTime
+import java.time.format.DateTimeFormatter
+
+import scala.util.Try
+
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
 
 import graft.model._
 import graft.operators.{LatestRowView, Transforms, Validation}
 import graft.sink.TxTable
 import graft.sources.Incremental
 import graft.state.LogStore
+import graft.util.JobLabel
 
 /** One incremental-ingestion run for one spec — the Spark-native
   * re-expression of the reference's whole table lifecycle
@@ -28,6 +37,13 @@ import graft.state.LogStore
   * splits or partitioned JDBC); derived partition columns keep the lake
   * prunable; `maxRecordsPerFile` bounds small-file explosion that the
   * reference's per-400k-chunk appends cause (SURVEY.md §7.4).
+  *
+  * The lake side of a run is its watermark tail, not the lake: like the
+  * reference's one-window Athena count (validators/base_validator.py),
+  * a run reads only the partitions a row at or after `start` can sit in
+  * (a spec partitioned by a time format of its own delta column; see
+  * [[readTail]]), planned from the commit log or one root listing and a
+  * footer — no listing or schema-inference job in a steady-state run.
   *
   * Both lake modes run one sequence: the slice is STAGED with
   * [[graft.sink.TxTable.stageBatch]] where readers cannot see it,
@@ -54,40 +70,96 @@ final class IngestionRun(spark: SparkSession, lakeRoot: String, logStore: LogSto
   def lakePath(spec: IngestionSpec): String =
     s"$lakeRoot/${spec.databasename}/${spec.tablename}"
 
-  /** Committed lake state, None when the lake holds no data file.
+  /** The run's lake tail before its row filter: the committed lake cut
+    * to the first-level partitions `keeps` admits ([[tailKeeps]]). None
+    * when no data file is kept — no dedup probe, and nothing counted
+    * before the window. Either way no listing or schema job plans it:
     *
-    * txLake: the transactional log's file list, from a snapshot taken
-    * ONCE per run (replaying the log per read would pay a LIST +
-    * per-commit GET up to five times per run on an object store); its
-    * batch schemas come from footers, with no Spark job.
+    * txLake: the kept files of the transactional log's file list, from a
+    * snapshot taken ONCE per run (replaying the log per read would pay a
+    * LIST + per-commit GET up to five times per run on an object store);
+    * each file's first partition segment decides. [[TxTable.readFiles]]
+    * takes batch schemas from footers, and the kept set stays below the
+    * driver-side listing threshold however many files a batch holds.
     *
-    * Plain: one directory read, the run's only listing of the lake.
-    * Hadoop FS, not java.io.File: the lake root may be any FileSystem
-    * scheme (s3a://, hdfs://), where a local-only probe would return
-    * false, silently skipping boundary dedup and pre-window accounting →
-    * validation mismatch on every run on exactly the target cluster. A
-    * directory with no data file — what a discarded first run leaves (an
-    * empty `_graft_stage`), or a crash before any publish (a staged batch,
-    * `_temporary`) — reads as absent: Spark's reads skip `_`-prefixed
-    * paths, so it cannot infer a schema from it, and treating it as a
-    * lake would fail every later run.
+    * Plain: ONE non-recursive listing of the lake root (one delimiter
+    * LIST on S3A, never one LIST per partition dir); the kept dirs are
+    * read under the lake's `basePath` with the data schema of one of
+    * their footers. Hadoop FS, not java.io.File: the lake root may be any
+    * FileSystem scheme (s3a://, hdfs://). Hidden entries — a discarded
+    * or crashed run's `_graft_stage`, `_temporary`, `_SUCCESS` — are
+    * skipped as Spark's reads skip them, and kept dirs holding no data
+    * file read as absent.
     */
-  private def readLake(spec: IngestionSpec, txFiles: Seq[String]): Option[DataFrame] =
+  private def readTail(spec: IngestionSpec, keeps: String => Boolean,
+                       txFiles: Seq[String]): Option[DataFrame] =
     if (txLake) {
-      if (txFiles.isEmpty) None
-      else Some(TxTable.readFiles(spark, lakePath(spec), txFiles))
+      // batch-x/<first partition dir>/…/part.parquet
+      val kept = txFiles.filter(_.split("/").init.lift(1).forall(keeps))
+      if (kept.isEmpty) None else Some(TxTable.readFiles(spark, lakePath(spec), kept))
     } else {
-      val lakeP = new Path(lakePath(spec))
-      if (!lakeP.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(lakeP)) None
-      else
-        try Some(spark.read.parquet(lakePath(spec)))
-        catch {
-          case e: AnalysisException if e.getCondition == "UNABLE_TO_INFER_SCHEMA" => None
-        }
+      val conf = spark.sessionState.newHadoopConf()
+      val lake = new Path(lakePath(spec))
+      val fs = lake.getFileSystem(conf)
+      val root = fs.makeQualified(lake)
+      val kept = (try fs.listStatus(root).toSeq catch { case _: FileNotFoundException => Nil })
+        .filter { st =>
+          val name = st.getPath.getName
+          !TxTable.hiddenName(name) && keeps(name)
+        }.sortBy(_.getPath.getName)
+      // the newest kept partition's footer: the lake's latest schema
+      kept.reverseIterator.flatMap(TxTable.firstDataFile(fs, _)).nextOption().map { f =>
+        val reader = spark.read.option("basePath", root.toString)
+        TxTable.footerSchema(spark, conf, root.toString, Seq(root.toUri.relativize(f.toUri).getPath))
+          .fold(reader)(reader.schema)
+          .parquet(kept.map(_.getPath.toString): _*)
+      }
     }
 
-  /** Execute one run; returns the RunLog rows appended. */
-  def run(spec: IngestionSpec, source: DataFrame): Seq[RunLog] = {
+  /** Which first-level partition dirs (`key=value`) can hold a lake row
+    * at or after `start`. Pruning applies when the spec's first partition
+    * level (lowest `seqNo`) is time-based on the delta column itself — a
+    * plain timestamp column, not a coalesce — and the watermark is a
+    * datetime: `date_format` preserves order, so the tail keeps only
+    * values `v >= cut`, `cut` being the partition format of `start − 26 h`
+    * (computed on the driver, no Spark job). 26 h is the widest gap
+    * between two session zones (UTC+14 to UTC−12), so a lake written
+    * under another zone than the run's still keeps every row `>= start`.
+    * Dirs of another key and values that are not same-width digit
+    * strings (the null partition) are kept. Any other spec keeps
+    * everything.
+    */
+  private def tailKeeps(spec: IngestionSpec, start: String,
+                        source: DataFrame): String => Boolean = {
+    val cut = spec.partitions.sortBy(_.seqNo).headOption.filter { p =>
+      p.columnType == PartitionSpec.TimeBased && spec.dateNotAvailable == 0 &&
+        p.column.equalsIgnoreCase(spec.deltaExpr.trim) &&
+        source.schema.find(_.name.equalsIgnoreCase(p.column))
+          .exists(f => f.dataType == TimestampType || f.dataType == TimestampNTZType)
+    }.flatMap { p =>
+      Try(LocalDateTime.parse(start, LogStore.TsFmt).minusHours(26)
+        .format(DateTimeFormatter.ofPattern(Transforms.timePattern(p.format))))
+        .toOption.map(c => (Transforms.partitionColName(p), c))
+    }
+    cut.fold((_: String) => true) { case (key, c) => dir =>
+      dir.split("=", 2) match {
+        case Array(k, v) if ExternalCatalogUtils.unescapePathName(k).equalsIgnoreCase(key) &&
+            v.length == c.length && v.forall(_.isDigit) => v >= c
+        case _ => true
+      }
+    }
+  }
+
+  /** Execute one run; returns the RunLog rows appended. Every Spark job
+    * it schedules carries the job description `ingest <db>.<table>`, so
+    * a trace shows which spec owns each job.
+    */
+  def run(spec: IngestionSpec, source: DataFrame): Seq[RunLog] =
+    JobLabel(spark.sparkContext, s"ingest ${spec.databasename}.${spec.tablename}") {
+      runLabelled(spec, source)
+    }
+
+  private def runLabelled(spec: IngestionSpec, source: DataFrame): Seq[RunLog] = {
     // driver-side Group read (r14): watermark recovery is a few rows per
     // spec; the Spark read scheduled one job per lifecycle run for it
     val prior = logStore.forIngestionRows(spec.lakeIngestionId)
@@ -103,49 +175,50 @@ final class IngestionRun(spark: SparkSession, lakeRoot: String, logStore: LogSto
       case Right(_) => ()
     }
 
-    // txLake: existence = "the commit log has live files" (staged orphans
-    // from crashed runs do NOT count — they were never committed). The
-    // file-list snapshot is taken once and threaded through every lake
-    // read this run makes; only the final commit re-reads the head.
+    // txLake: the commit log's live files (staged orphans from crashed
+    // runs do NOT count — they were never committed). The file-list
+    // snapshot is taken once and threaded through every lake read this
+    // run makes; only the final commit re-reads the head.
     val txFiles: Seq[String] =
       if (txLake) TxTable.currentFiles(spark, lakePath(spec)) else Nil
-    val lake = readLake(spec, txFiles)
-    val lakeExists = lake.isDefined
     val rawSlice = Incremental.incrementalSlice(source, spec.deltaExpr, start)
     // ONE cached read of the lake's watermark tail serves every
     // committed-lake consumer this run has (boundary dedup AND the
-    // pre-window count — measured: they were two full lake scans). The
-    // superset predicate is per-COLUMN `>= start` so that for a coalesce
-    // delta it covers both the dedup filter (coalesce >= start) and every
+    // pre-window count — measured: they were two full lake scans). It
+    // reads only the partitions the watermark can reach; the row
+    // predicate is per-COLUMN `>= start` so that for a coalesce delta it
+    // covers both the dedup filter (coalesce >= start) and every
     // OR-window term (a row with a < start but b inside the window is in
     // the window but NOT in coalesce >= start). The tail is one watermark
     // window of rows — small relative to the lake by construction, so
     // caching it holds at scale. The staged write goes to its own
     // path, so it does not make Spark refresh this cache by re-listing
     // the lake.
-    val lakeTail: Option[DataFrame] = lake.map { d =>
-      val tailPred = Incremental.parseCoalesceExpr(spec.deltaExpr) match {
-        case Some((a, b)) => col(a) >= lit(start) || col(b) >= lit(start)
-        case None => expr(spec.deltaExpr) >= lit(start)
+    val lakeTail: Option[DataFrame] =
+      readTail(spec, tailKeeps(spec, start, source), txFiles).map { d =>
+        val tailPred = Incremental.parseCoalesceExpr(spec.deltaExpr) match {
+          case Some((a, b)) => col(a) >= lit(start) || col(b) >= lit(start)
+          case None => expr(spec.deltaExpr) >= lit(start)
+        }
+        d.filter(tailPred).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       }
-      d.filter(tailPred).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
     // non-inclusive (`>=` boundary) watermarks re-extract rows already
     // loaded at the boundary instant; drop rows whose (primary key, delta
     // value) BOTH match a lake row, so the boundary second is exactly-once
     // while UPDATED versions of boundary rows (same pk, newer delta) still
     // load. (The +1s reference mode can't overlap by construction — and
     // silently loses late boundary rows.)
-    val slice =
-      if (!inclusiveBump && lakeExists && spec.primaryKeyCols.nonEmpty) {
+    val slice = lakeTail match {
+      case Some(tail) if !inclusiveBump && spec.primaryKeyCols.nonEmpty =>
         val dedupKeys = spec.primaryKeyCols :+ "__graft_delta"
-        val existing = lakeTail.get
+        val existing = tail
           .filter(expr(spec.deltaExpr) >= lit(start))
           .select(spec.primaryKeyCols.map(col) :+ expr(spec.deltaExpr).as("__graft_delta"): _*)
         rawSlice.withColumn("__graft_delta", expr(spec.deltaExpr))
           .join(existing, dedupKeys, "left_anti")
           .drop("__graft_delta")
-      } else rawSlice
+      case _ => rawSlice
+    }
     // The slice feeds four plan branches (bounds, window count, write,
     // boundary dedup's probe side) — persist it once instead of re-running
     // the source scan + anti-join per branch. Incremental slices are small

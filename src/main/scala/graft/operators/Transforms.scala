@@ -48,19 +48,22 @@ object Transforms {
     * ingest_mysql_data.py:471-477 — here a codegen'd expression, not a UDF).
     */
   def partitionColExpr(spec: PartitionSpec): Column = spec.columnType match {
-    case PartitionSpec.TimeBased =>
-      val fmt = spec.format match {
-        case "YYYYMMDD" => "yyyyMMdd"
-        case "YYYYMM"   => "yyyyMM"
-        case "YYYY"     => "yyyy"
-        case other => throw new IllegalArgumentException(
-          s"unsupported time partition format: $other")
-      }
-      date_format(col(spec.column), fmt)
+    case PartitionSpec.TimeBased => date_format(col(spec.column), timePattern(spec.format))
     case PartitionSpec.NonTimeBased =>
       floor(col(spec.column) / lit(bucketWidth(spec.format)))
     case other =>
       throw new IllegalArgumentException(s"unsupported partition type: $other")
+  }
+
+  /** The datetime pattern of a time-based partition format — the same
+    * letters in Spark's `date_format` and `java.time.DateTimeFormatter`.
+    */
+  def timePattern(format: String): String = format match {
+    case "YYYYMMDD" => "yyyyMMdd"
+    case "YYYYMM"   => "yyyyMM"
+    case "YYYY"     => "yyyy"
+    case other => throw new IllegalArgumentException(
+      s"unsupported time partition format: $other")
   }
 
   /** `1M` → 1,000,000; `100K` → 100,000; plain integers pass through. */

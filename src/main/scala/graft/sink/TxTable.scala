@@ -1,6 +1,6 @@
 package graft.sink
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
 
@@ -369,7 +369,7 @@ object TxTable {
     *
     * Footer schemas: every file in a batch dir came from ONE stageBatch
     * write and shares its schema, so a batch's data schema is read on
-    * the driver from its first file's footer ([[batchSchema]]) and passed
+    * the driver from its first file's footer ([[footerSchema]]) and passed
     * to the reader, instead of letting Spark infer it with a one-task job
     * per batch (measured: a quarter of an ingest round's jobs). It is the
     * schema that inference computes — same footer function, same
@@ -377,6 +377,13 @@ object TxTable {
     * change. Partition columns still come from partition discovery under
     * the batch `basePath`. A batch whose footer cannot be read falls back
     * to inference, so a torn or vanished file fails as it always did.
+    *
+    * Listing: Spark lists the given paths itself, on the driver up to
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32) paths
+    * per batch and with a Spark job above it. Callers that need only part
+    * of a table pass only those files: IngestionRun's lake tail keeps the
+    * files under the partitions its watermark can reach, so a 42-file
+    * backfill batch no longer costs a listing job per run.
     */
   def readFiles(spark: SparkSession, table: String, files: Seq[String]): DataFrame = {
     if (files.isEmpty) return spark.emptyDataFrame
@@ -390,35 +397,39 @@ object TxTable {
       .map { batch =>
         val inBatch = grouped(batch)
         val reader = spark.read.option("basePath", s"$table/$batch")
-        batchSchema(spark, conf, table, inBatch)
+        footerSchema(spark, conf, table, inBatch)
           .fold(reader)(reader.schema)
           .parquet(inBatch.map(f => s"$table/$f"): _*)
       }
       .reduce(_.unionByName(_, allowMissingColumns = true))
   }
 
-  /** A batch's data schema from the footer of its first file, exactly
-    * as Spark's parquet inference derives it
-    * (`ParquetFileFormat.mergeSchemasInParallel`: the same
-    * `readSchemaFromFooter` with the converter flags it reads from the
-    * session conf). None — infer instead — when the footer cannot be
-    * read, or when the footer holds a column that a `col=value` dir of
-    * the batch also names: the reader would then place that column as
-    * a partition column, where inference keeps it at its data position.
+  /** The data schema Spark's parquet inference derives from the footer
+    * of `files.head` (table-relative under `root`), read on the driver
+    * with no Spark job: the same `readSchemaFromFooter`
+    * (`ParquetFileFormat.mergeSchemasInParallel`) with the converter
+    * flags it reads from the session conf, `nanosAsLong` included. The
+    * one footer-schema helper: [[readFiles]] (a batch), IngestionRun's
+    * plain lake tail (one kept partition dir) and
+    * [[graft.sources.Tables.load]] (one table file) plan through it.
+    * None — infer instead — when the footer cannot be read, or when it
+    * holds a column that a `col=value` dir of any of `files` also
+    * names: the reader would then place that column as a partition
+    * column, where inference keeps it at its data position.
     */
-  private def batchSchema(spark: SparkSession, conf: org.apache.hadoop.conf.Configuration,
-                          table: String, inBatch: Seq[String])
+  def footerSchema(spark: SparkSession, conf: org.apache.hadoop.conf.Configuration,
+                   root: String, files: Seq[String])
       : Option[org.apache.spark.sql.types.StructType] = {
     import org.apache.parquet.format.converter.ParquetMetadataConverter
     import org.apache.parquet.hadoop.Footer
     import org.apache.parquet.hadoop.util.HadoopInputFile
     import org.apache.spark.sql.execution.datasources.parquet.{
       ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
-    val partKeys = inBatch.flatMap(_.split("/").drop(1).dropRight(1))
+    val partKeys = files.flatMap(_.split("/").dropRight(1))
       .filter(_.contains("=")).map(_.takeWhile(_ != '=').toLowerCase(java.util.Locale.ROOT))
       .toSet
     try {
-      val p = new Path(s"$table/${inBatch.head}")
+      val p = new Path(s"$root/${files.head}")
       val meta = ParquetFooterReader.readFooter(HadoopInputFile.fromPath(p, conf),
         ParquetMetadataConverter.SKIP_ROW_GROUPS)
       val sql = spark.sessionState.conf
@@ -435,6 +446,23 @@ object TxTable {
       case scala.util.control.NonFatal(_) => None
     }
   }
+
+  /** Spark's hidden-path rule for file-source reads: `_`/`.` names,
+    * except `_`-names holding `=` (a partition dir of a `_`-column).
+    */
+  def hiddenName(name: String): Boolean =
+    (name.startsWith("_") && !name.contains("=")) || name.startsWith(".")
+
+  /** The first visible data file at or under `st`, descending
+    * depth-first in name order with one non-recursive listing per level:
+    * the footer to plan a read of `st` from. None when it holds no
+    * visible file.
+    */
+  def firstDataFile(fs: FileSystem, st: FileStatus): Option[Path] =
+    if (!st.isDirectory) Some(st.getPath)
+    else fs.listStatus(st.getPath).filterNot(s => hiddenName(s.getPath.getName))
+      .sortBy(_.getPath.getName).iterator
+      .flatMap(firstDataFile(fs, _)).nextOption()
 
   // -------------------------------------------------------------- writers
 

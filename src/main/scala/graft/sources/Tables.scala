@@ -1,7 +1,10 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.sink.TxTable
 
 /** Parquet table loader for the lake.
   *
@@ -20,10 +23,10 @@ object Tables {
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     val nanoCols = NanoTsCols.getOrElse(name, Nil)
-    if (nanoCols.isEmpty) spark.read.parquet(s"$dir/$name.parquet")
+    if (nanoCols.nonEmpty) spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val df = read(spark, s"$dir/$name.parquet")
+    if (nanoCols.isEmpty) df
     else {
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val df = spark.read.parquet(s"$dir/$name.parquet")
       // re-written copies of the table (lake output, ScaleGen) carry a
       // normal µs TIMESTAMP — only convert columns that actually read
       // back as raw nano longs
@@ -41,5 +44,25 @@ object Tables {
         }
       }
     }
+  }
+
+  /** Read `path` (one parquet file, or a dir of them) with the data
+    * schema of its first data file's footer
+    * ([[TxTable.footerSchema]], under the session's
+    * `nanosAsLong`), so planning runs no schema-inference job; inference
+    * only when no footer is readable, so a missing or torn table fails as
+    * it always did.
+    */
+  private def read(spark: SparkSession, path: String): DataFrame = {
+    val conf = spark.sessionState.newHadoopConf()
+    val schema = scala.util.Try {
+      val fs = new Path(path).getFileSystem(conf)
+      val root = fs.makeQualified(new Path(path))
+      val parent = root.getParent
+      TxTable.firstDataFile(fs, fs.getFileStatus(root)).flatMap(f =>
+        TxTable.footerSchema(spark, conf, parent.toString,
+          Seq(parent.toUri.relativize(f.toUri).getPath)))
+    }.toOption.flatten
+    schema.fold(spark.read)(spark.read.schema).parquet(path)
   }
 }

@@ -15,13 +15,26 @@ trait SparkSpec extends AnyFunSuite {
     * a check.
     */
   def jobsRan[T](body: => T): (T, Int) = {
+    val (out, jobs) = jobsSeen(body)
+    (out, jobs.size)
+  }
+
+  /** [[jobsRan]] with each job's names, in job-id order, so a claim
+    * about WHICH jobs a body runs ("no listing job") is a check too.
+    */
+  def jobsSeen[T](body: => T): (T, Seq[SparkSpec.Job]) = {
     val sc = spark.sparkContext
     val group = s"jobs-ran-${java.util.UUID.randomUUID()}"
-    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Int, SparkSpec.Job)]()
     val counter = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          n.incrementAndGet()
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val props = Option(e.properties)
+        def prop(k: String) = props.flatMap(p => Option(p.getProperty(k)))
+        if (prop("spark.jobGroup.id").contains(group))
+          seen.add(e.jobId -> SparkSpec.Job(prop("spark.job.description").getOrElse(""),
+            e.stageInfos.sortBy(_.stageId).lastOption.map(_.name).getOrElse(""),
+            prop("spark.sql.execution.id").isDefined))
+      }
     }
     sc.addSparkListener(counter)
     sc.setJobGroup(group, "jobsRan")
@@ -32,7 +45,7 @@ trait SparkSpec extends AnyFunSuite {
         org.apache.spark.testbus.Bus.drain(sc)
         sc.removeSparkListener(counter)
       }
-    (out, n.get)
+    (out, seen.toArray(Array.empty[(Int, SparkSpec.Job)]).toSeq.sortBy(_._1).map(_._2))
   }
 
   /** The mutating-source fixture of the validation-failure tests: `first`
@@ -62,6 +75,18 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
+  /** One job [[SparkSpec.jobsSeen]] saw: the description it ran under
+    * (a `JobLabel`, Spark's own "Listing leaf files and directories for
+    * N paths: …", or "jobsRan"), the call site of its result stage
+    * ("parquet at IngestionRun.scala:83"), and whether it ran inside a
+    * SQL execution — the plan-time jobs of a read (listing, schema
+    * inference) run outside one.
+    */
+  final case class Job(description: String, site: String, inSql: Boolean) {
+    def isListing: Boolean = description.startsWith("Listing leaf files")
+    def isParquetSchema: Boolean = !isListing && !inSql && site.startsWith("parquet at")
+  }
+
   lazy val session: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")

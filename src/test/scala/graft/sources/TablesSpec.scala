@@ -13,12 +13,25 @@ import graft.SparkSpec
   * (isAdjustedToUTC=false — the round-5 silent breaker), and a plain µs
   * instant TIMESTAMP. All three must come back as an instant TIMESTAMP
   * with identical values so event-time operators (withWatermark,
-  * unix_micros, window) never see a type they can't take.
+  * unix_micros, window) never see a type they can't take. Each load
+  * also plans with no Spark job, from the footer, to the schema that
+  * inference gives.
   */
 class TablesSpec extends SparkSpec {
   import spark.implicits._
 
-  private def load(dir: String) = Tables.load(spark, dir, "events")
+  /** `Tables.load`, checked to plan from the footer: it runs no Spark
+    * job, and the relation it reads has the schema parquet inference
+    * gives the same file under the same `nanosAsLong` flag.
+    */
+  private def load(dir: String) = {
+    val (got, jobs) = jobsRan(Tables.load(spark, dir, "events"))
+    assert(jobs == 0, "load planned with a Spark job")
+    val read = got.queryExecution.analyzed.collectLeaves().map(_.schema)
+    assert(read == Seq(spark.read.parquet(s"$dir/events.parquet").schema),
+      "footer schema differs from inference")
+    got
+  }
 
   test("raw nano-long ts is truncated to a µs instant timestamp") {
     val dir = Files.createTempDirectory("graft-tables-ns").toString
